@@ -97,7 +97,9 @@ object BronzeToSilver {
   /** Full stage: read bronze JSON for `date`, flatten, profile in ONE
     * aggregate pass (vs the reference's ~105-job print loop, SURVEY.md
     * §3.2), and write silver partitioned by approach_date.
-    * Returns the profile row for the caller's logs.
+    * Returns the profile of the day's flattened rows for the caller's
+    * logs (the reference profiles the day's frame,
+    * bronze_to_silver.py:127-143).
     */
   def run(spark: SparkSession, layout: Layout, date: String): DataFrame = {
     val feed = spark.read
@@ -114,6 +116,6 @@ object BronzeToSilver {
       .partitionBy("approach_date")
       .parquet(layout.silverAsteroids)
 
-    DataProfiler.profile(spark.read.parquet(layout.silverAsteroids))
+    DataProfiler.profile(silver)
   }
 }

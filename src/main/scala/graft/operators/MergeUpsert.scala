@@ -87,67 +87,30 @@ object MergeUpsert {
       .drop(rn, prio)
   }
 
-  private val TMP_SUFFIX = "__tmp_swap"
-  private val OLD_SUFFIX = "__old_swap"
-
-  /** Swap-artifact paths are DOT-PREFIXED siblings of the target (see
-    * [[DirSwap.hiddenSibling]]) so crash leftovers stay invisible to
-    * partition discovery when the target is a partition directory.
-    */
-  private def tmpOf(path: String) =
-    DirSwap.hiddenSibling(new org.apache.hadoop.fs.Path(path), TMP_SUFFIX)
-  private def oldOf(path: String) =
-    DirSwap.hiddenSibling(new org.apache.hadoop.fs.Path(path), OLD_SUFFIX)
-
   /** Reference `save_or_update_table`: read existing parquet at `path` if
-    * present, merge, write back.
+    * present, merge, write back — as a `retain = 0`
+    * [[VersionedTable.merge]], the library's one table commit.
     *
-    * The write path is a four-step swap — write-new(tmp), rename-old-away,
-    * rename-new-in, delete-old — so some complete table version exists on
-    * disk at every instant except the rename-to-rename window, and THAT
-    * window is recoverable: [[recover]] (called on entry) finishes or
-    * rolls back an interrupted swap by inspecting which of the three
-    * sibling dirs survive. The reference instead lazily overwrites the
-    * path it is still reading (bucket.py:69-87) — a data-loss hazard.
+    * The commit writes the new version to a temp sibling and swaps it
+    * in, so some complete table version exists on disk at every instant
+    * except the rename-to-rename window, and THAT window is recoverable:
+    * the next writer on `path` (of any kind) finishes or rolls back the
+    * interrupted swap on entry. The reference instead lazily overwrites
+    * the path it is still reading (bucket.py:69-87) — a data-loss
+    * hazard.
     *
     * This is a parquet-directory stand-in for a Delta/Iceberg
     * transactional commit; those jars are not available offline in this
     * build (BASELINE.md names them as the declared approach), and the
     * swap keeps the same merge plan a MERGE INTO would lower to for a
     * full-table rewrite. The commit-protocol slice it does reproduce:
-    * a single-writer lock (concurrent saveOrUpdate/compact on one path
-    * fail fast instead of interleaving renames), a monotonic version
-    * stamped through the swap, and a last-writer check at commit — see
+    * a single-writer lock (concurrent writers on one path fail fast
+    * instead of interleaving renames), a monotonic version stamped
+    * through the swap, and a last-writer check at commit — see
     * [[DirSwap]].
     */
   def saveOrUpdate(spark: SparkSession, incoming: DataFrame, path: String,
                    keys: Seq[String],
-                   lockStaleMs: Long = 10L * 60 * 1000,
-                   tiebreak: Seq[Column] = Nil): Unit = {
-    val fsPath = new org.apache.hadoop.fs.Path(path)
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    DirSwap.acquireLock(fs, fsPath, lockStaleMs)
-    try {
-      recover(spark, path) // finish/roll back any interrupted prior swap
-      val v0 = DirSwap.readVersion(fs, fsPath)
-      val result =
-        if (fs.exists(fsPath))
-          merge(spark.read.parquet(path), incoming, keys, tiebreak)
-        else incoming
-      val tmp = tmpOf(path)
-      val old = oldOf(path)
-      result.write.mode("overwrite").parquet(tmp.toString) // 1. write-new
-      DirSwap.writeVersion(fs, tmp, v0 + 1)
-      DirSwap.commit(fs, fsPath, tmp, old, expectedVersion = v0) // 2-4. swap
-    } finally DirSwap.releaseLock(fs, fsPath)
-  }
-
-  /** Repair an interrupted [[saveOrUpdate]] swap — see
-    * [[DirSwap.recover]] for the state machine.
-    */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val fsPath = new org.apache.hadoop.fs.Path(path)
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    DirSwap.recover(fs, fsPath, tmpOf(path), oldOf(path))
-  }
+                   tiebreak: Seq[Column] = Nil): Unit =
+    VersionedTable(spark, path, retain = 0).merge(incoming, keys, tiebreak)
 }

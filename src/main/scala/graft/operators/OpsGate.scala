@@ -158,9 +158,9 @@ object OpsGate {
 
     // ── small-files compaction under the hash gate ─────────────────────
     // The ops surface that was spec-only through round 11: stage the
-    // events table as 64 deliberate small files, run the crash-safe
-    // compaction swap (same lock/version/recover protocol as the
-    // merge), and gate that (a) CONTENT survives byte-exactly — the
+    // events table as 64 deliberate small files, run the compaction as
+    // a retain = 0 VersionedTable.optimize (the one table commit the
+    // merge also runs), and gate that (a) CONTENT survives byte-exactly — the
     // per-type rollup equals the oracle's over the source parquet —
     // and (b) the file counts are the deterministic least(64, n_rows) →
     // 1 (round-robin repartition writes no file for an empty partition,
@@ -168,7 +168,7 @@ object OpsGate {
     // of pinning a literal 64 that a sub-64-row fixture would break;
     // targetBytes is sized so the planner picks one file, and parquet
     // byte sizes never enter the projection). Crash windows/locks stay
-    // spec-pinned (CompactionSpec + CrashRecoveryScaleSpec cover them).
+    // spec-pinned (TableCommitCrashSpec + OpsSpec cover them).
     "q_compaction" -> { (s, dir) =>
       val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val path = s"$STAGE_BASE/$key/events_small"
@@ -197,7 +197,8 @@ object OpsGate {
           }
         }.toLong
       val before = parts()
-      Compaction.compact(s, path, targetBytes = Long.MaxValue / 4)
+      VersionedTable(s, path, retain = 0)
+        .optimize(targetBytes = Long.MaxValue / 4)
       val after = parts()
       s.read.parquet(path)
         .groupBy(col("event_type"))

@@ -6,36 +6,41 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.not
 
-/** Delta-flavored table surface over the [[DirSwap]] commit protocol:
+/** Delta-flavored table surface and the library's ONE table commit:
   * `merge` / `delete` / `optimize` / `history` / time-travel reads on a
-  * plain parquet directory.
+  * plain parquet directory. Every table write — these mutations,
+  * [[MergeUpsert.saveOrUpdate]] (a `retain = 0` merge) and the
+  * compaction gate (a `retain = 0` optimize) — runs the same
+  * transaction: lock → recover → read version v → transform → write
+  * tmp → stamp v+1 → last-writer-checked swap → unlock, over the
+  * [[DirSwap]] protocol.
   *
   * BASELINE.json declares "Spark SQL + Delta/Iceberg table operations"
   * as the reference's approach; those jars are unavailable in this
   * offline build, so this class exposes the same USER surface over the
-  * hand-rolled transaction slice DirSwap already provides — single-
-  * writer lock, monotonic `_graft_version`, last-writer check,
-  * crash-safe swap with `_SUCCESS`-gated recovery. Reference
-  * consumption pattern: src/utils/bucket.py:63-89 (read-merge-
-  * overwrite, no versioning, no lock).
+  * hand-rolled transaction slice DirSwap provides — single-writer lock,
+  * monotonic `_graft_version`, last-writer check, crash-safe swap with
+  * `_SUCCESS`-gated recovery. Reference consumption pattern:
+  * src/utils/bucket.py:63-89 (read-merge-overwrite, no versioning, no
+  * lock).
   *
   * Versioning model (the Delta analogy, directory-shaped):
   *   - the LIVE version is the target directory itself, stamped with
   *     `_graft_version` (Delta: the latest snapshot);
-  *   - every commit renames the displaced version to a dot-prefixed
-  *     sibling `.{name}__v{N}` — a metadata-only move, invisible to
-  *     partition discovery (Delta: retained snapshots in the log);
+  *   - at `retain > 0` every commit renames the displaced version to a
+  *     dot-prefixed sibling `.{name}__v{N}` — a metadata-only move,
+  *     invisible to partition discovery (Delta: retained snapshots in
+  *     the log); at `retain = 0` it is deleted;
   *   - [[readAt]] reads a retained (or the live) version by number
   *     (Delta: `VERSION AS OF`);
   *   - at most `retain` displaced versions are kept; older ones are
   *     pruned at commit (Delta: `VACUUM`, here eager with a bounded
   *     window — [[vacuum]] tightens it further on demand).
   *
-  * Every mutation runs under the single-writer lock and re-checks the
-  * version it read at commit, so two concurrent writers serialize or
-  * abort cleanly (OpsSpec pins the abort). Reads are lock-free: the
-  * swap keeps a complete table at the target at every recoverable
-  * instant.
+  * Two concurrent writers serialize or abort cleanly (OpsSpec pins the
+  * abort), and any writer recovers any other's interrupted commit
+  * (TableCommitCrashSpec). Reads are lock-free: the swap keeps a
+  * complete table at the target at every recoverable instant.
   *
   * Scale: all mutations are full-snapshot rewrites — the plan a
   * MERGE INTO lowers to when touched-file pruning cannot help; the
@@ -47,8 +52,7 @@ final class VersionedTable private (spark: SparkSession, path: String,
   private val target = new Path(path)
   private val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def retainedPath(v: Long): Path =
-    DirSwap.hiddenSibling(target, s"__v$v")
+  private def retainedPath(v: Long): Path = DirSwap.retainedPath(target, v)
 
   /** Current committed version (0 = unversioned or absent). */
   def version(): Long = DirSwap.readVersion(fs, target)
@@ -89,15 +93,7 @@ final class VersionedTable private (spark: SparkSession, path: String,
   }
 
   /** Versions currently retained on disk (ascending), live excluded. */
-  def retainedVersions(): Seq[Long] = {
-    val prefix = "." + target.getName + "__v"
-    if (!fs.exists(target.getParent)) Seq.empty
-    else fs.listStatus(target.getParent).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .flatMap(n => n.stripPrefix(prefix).toLongOption)
-      .sorted
-  }
+  def retainedVersions(): Seq[Long] = DirSwap.retainedVersions(fs, target)
 
   /** Commit log view: one row per readable version —
     * (version, timestamp_ms, bytes, is_live) — newest first. Driver-side
@@ -116,12 +112,14 @@ final class VersionedTable private (spark: SparkSession, path: String,
     rows.toDF("version", "timestamp_ms", "bytes", "is_live")
   }
 
-  /** MERGE INTO: upsert `incoming` by `keys` (incoming wins per key —
-    * [[MergeUpsert.merge]] semantics, deterministic survivor).
+  /** MERGE INTO: upsert `incoming` by `keys` — [[MergeUpsert.merge]]
+    * semantics: `tiebreak` orders the candidate survivors, then incoming
+    * wins per key, so the survivor is deterministic.
     */
-  def merge(incoming: DataFrame, keys: Seq[String]): Unit =
+  def merge(incoming: DataFrame, keys: Seq[String],
+            tiebreak: Seq[Column] = Nil): Unit =
     mutate { existing =>
-      existing.map(MergeUpsert.merge(_, incoming, keys))
+      existing.map(MergeUpsert.merge(_, incoming, keys, tiebreak))
         .getOrElse(incoming)
     }
 
@@ -202,37 +200,32 @@ final class VersionedTable private (spark: SparkSession, path: String,
     * `vacuum()` did (Delta's VACUUM guards zero retention the same
     * way).
     */
-  def vacuum(keepLast: Int): Unit = {
-    val vs = retainedVersions()
-    vs.dropRight(keepLast).foreach(v => fs.delete(retainedPath(v), true))
-  }
+  def vacuum(keepLast: Int): Unit = DirSwap.prune(fs, target, keepLast)
 
-  /** The shared transaction shape: lock → recover → read v → transform
-    * → write tmp(v+1) → last-writer-checked swap retaining v → prune.
+  /** The one transaction: lock → recover → read v → transform → write
+    * tmp(v+1) → last-writer-checked swap that drops or parks v per
+    * `retain`.
     */
   private def mutate(f: Option[DataFrame] => DataFrame): Unit = {
-    val tmp = DirSwap.hiddenSibling(target, "__tmp_swap")
-    val old = DirSwap.hiddenSibling(target, "__old_swap")
     DirSwap.acquireLock(fs, target)
     try {
-      // retainDisplaced: a crash between commit's renames must park the
-      // displaced version under its own retained name, not delete it
-      DirSwap.recover(fs, target, tmp, old, retainDisplaced = true)
+      DirSwap.recover(fs, target, retain)
       val v0 = DirSwap.readVersion(fs, target)
       val result =
         f(if (fs.exists(target)) Some(spark.read.parquet(path)) else None)
+      val tmp = DirSwap.tmpPath(target)
       result.write.mode("overwrite").parquet(tmp.toString)
       DirSwap.writeVersion(fs, tmp, v0 + 1)
-      DirSwap.commit(fs, target, tmp, old, expectedVersion = v0,
-        retainOldAs = if (fs.exists(target)) Some(retainedPath(v0)) else None)
-      vacuum(retain)
+      DirSwap.commit(fs, target, v0, retain)
     } finally DirSwap.releaseLock(fs, target)
   }
 }
 
 object VersionedTable {
   /** Open (or create-on-first-write) the versioned table at `path`,
-    * keeping up to `retain` displaced versions for time travel.
+    * keeping up to `retain` displaced versions for time travel
+    * (`retain = 0`: no time travel, each commit deletes the displaced
+    * copy).
     */
   def apply(spark: SparkSession, path: String,
             retain: Int = 3): VersionedTable =

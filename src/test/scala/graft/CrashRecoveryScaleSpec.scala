@@ -29,14 +29,8 @@ class CrashRecoveryScaleSpec extends AnyFunSuite with SparkSpec {
   private val fs =
     new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def tmpOf(p: String) = {
-    val hp = new Path(p)
-    new Path(hp.getParent, "." + hp.getName + "__tmp_swap")
-  }
-  private def oldOf(p: String) = {
-    val hp = new Path(p)
-    new Path(hp.getParent, "." + hp.getName + "__old_swap")
-  }
+  private def tmpOf(p: String) = DirSwap.tmpPath(new Path(p))
+  private def oldOf(p: String) = DirSwap.oldPath(new Path(p))
 
   /** (row count, changed-row count, id checksum) — a content signature
     * strong enough that promoting a torso or a stale version fails the
@@ -71,7 +65,7 @@ class CrashRecoveryScaleSpec extends AnyFunSuite with SparkSpec {
     // ── crash window A: after write-new, before ANY rename ────────────
     merged.write.parquet(tmpOf(p).toString)
     DirSwap.writeVersion(fs, tmpOf(p), 2L)
-    MergeUpsert.recover(spark, p)
+    DirSwap.recover(fs, new Path(p), retain = 0)
     // main was never touched: v1 intact, torso dropped, version fixed
     assert(signature(p) === v1Sig)
     assert(DirSwap.readVersion(fs, new Path(p)) === 1L)
@@ -82,7 +76,7 @@ class CrashRecoveryScaleSpec extends AnyFunSuite with SparkSpec {
     merged.write.parquet(tmpOf(p).toString)
     DirSwap.writeVersion(fs, tmpOf(p), 2L)
     assert(fs.rename(new Path(p), oldOf(p)))
-    MergeUpsert.recover(spark, p)
+    DirSwap.recover(fs, new Path(p), retain = 0)
     // tmp was complete (committer marker present): promoted, version 2
     val v2Sig = signature(p)
     assert(v2Sig._1 === 100000L && v2Sig._2 === 50000L)
@@ -97,7 +91,7 @@ class CrashRecoveryScaleSpec extends AnyFunSuite with SparkSpec {
     DirSwap.writeVersion(fs, tmpOf(p), 3L)
     assert(fs.delete(new Path(tmpOf(p), "_SUCCESS"), false))
     assert(fs.rename(new Path(p), oldOf(p)))
-    MergeUpsert.recover(spark, p)
+    DirSwap.recover(fs, new Path(p), retain = 0)
     assert(signature(p) === v2Sig)
     assert(DirSwap.readVersion(fs, new Path(p)) === 2L)
     assert(!fs.exists(tmpOf(p)))

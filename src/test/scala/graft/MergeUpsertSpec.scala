@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.MergeUpsert
+import graft.operators.{DirSwap, MergeUpsert}
 
 /** Merge-upsert semantics (reference: src/utils/bucket.py:63-89) plus
   * the SURVEY.md §5.3 properties: idempotence and key-order
@@ -15,15 +15,9 @@ class MergeUpsertSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   // swap artifacts are dot-prefixed siblings (invisible to partition
-  // discovery) — mirror MergeUpsert's naming here
-  private def tmpOf(p: String) = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    new org.apache.hadoop.fs.Path(hp.getParent, "." + hp.getName + "__tmp_swap")
-  }
-  private def oldOf(p: String) = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    new org.apache.hadoop.fs.Path(hp.getParent, "." + hp.getName + "__old_swap")
-  }
+  // discovery) — DirSwap owns their naming
+  private def tmpOf(p: String) = DirSwap.tmpPath(new org.apache.hadoop.fs.Path(p))
+  private def oldOf(p: String) = DirSwap.oldPath(new org.apache.hadoop.fs.Path(p))
 
   test("incoming rows win on key collision by default") {
     val existing = Seq((1, "old"), (2, "keep")).toDF("k", "v")
@@ -70,7 +64,7 @@ class MergeUpsertSpec extends AnyFunSuite with SparkSpec {
     Seq((1, "A"), (2, "b")).toDF("k", "v")
       .write.parquet(tmpOf(p1).toString)
     assert(fs.rename(new Path(p1), oldOf(p1)))
-    MergeUpsert.recover(spark, p1)
+    DirSwap.recover(fs, new Path(p1), retain = 0)
     assert(rows(p1) === Set((1, "A"), (2, "b")))
     assert(!fs.exists(oldOf(p1)))
     assert(!fs.exists(tmpOf(p1)))
@@ -78,14 +72,14 @@ class MergeUpsertSpec extends AnyFunSuite with SparkSpec {
     // crash right after rename-old-away with tmp lost → old restored
     val p2 = freshTable()
     assert(fs.rename(new Path(p2), oldOf(p2)))
-    MergeUpsert.recover(spark, p2)
+    DirSwap.recover(fs, new Path(p2), retain = 0)
     assert(rows(p2) === Set((1, "a")))
 
     // crash after write-new but before any rename → main intact,
     // leftovers dropped
     val p3 = freshTable()
     Seq((9, "z")).toDF("k", "v").write.parquet(tmpOf(p3).toString)
-    MergeUpsert.recover(spark, p3)
+    DirSwap.recover(fs, new Path(p3), retain = 0)
     assert(rows(p3) === Set((1, "a")))
     assert(!fs.exists(tmpOf(p3)))
 
@@ -109,7 +103,7 @@ class MergeUpsertSpec extends AnyFunSuite with SparkSpec {
     Seq((9, "junk")).toDF("k", "v").write.parquet(tmpOf(p).toString)
     fs.delete(new Path(tmpOf(p), "_SUCCESS"), false)
     assert(fs.rename(new Path(p), oldOf(p)))
-    MergeUpsert.recover(spark, p)
+    DirSwap.recover(fs, new Path(p), retain = 0)
     // old (the last complete version) wins; the torso is gone
     assert(spark.read.parquet(p).as[(Int, String)].collect().toSet ===
       Set((1, "a")))
@@ -152,8 +146,7 @@ class MergeUpsertSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.parquet(p).count() === 2)
     // last-writer check: committing against a version that moved aborts
     val e = intercept[java.io.IOException] {
-      DirSwap.commit(fs, new Path(p), tmpOf(p),
-        oldOf(p), expectedVersion = 1L)
+      DirSwap.commit(fs, new Path(p), expectedVersion = 1L, retain = 0)
     }
     assert(e.getMessage.contains("lost update"))
   }

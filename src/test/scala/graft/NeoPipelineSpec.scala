@@ -18,16 +18,23 @@ class NeoPipelineSpec extends AnyFunSuite with SparkSpec {
     Files.createTempDirectory("graft-neo").toString
   private lazy val layout = Layout(base)
 
-  private def runDay(date: String, doc: String): Unit = {
+  /** Runs the three stages for `date`; returns the `n_rows` of the
+    * profile the silver stage returned, read before the next day runs.
+    */
+  private def runDay(date: String, doc: String): Long = {
     BronzeIngest.writeRaw(spark, layout, date, doc)
-    BronzeToSilver.run(spark, layout, date)
+    val profiled =
+      BronzeToSilver.run(spark, layout, date).first().getAs[Long]("n_rows")
     SilverToGold.run(spark, layout, date)
+    profiled
   }
 
-  private lazy val pipelineRan: Unit = {
-    runDay(NeoFixture.day1Date, NeoFixture.day1)
-    runDay(NeoFixture.day2Date, NeoFixture.day2)
-  }
+  // day 1's and day 2's profiled n_rows
+  private lazy val profiledRows: (Long, Long) =
+    (runDay(NeoFixture.day1Date, NeoFixture.day1),
+      runDay(NeoFixture.day2Date, NeoFixture.day2))
+
+  private def pipelineRan: Unit = { profiledRows; () }
 
   private def gold(name: String) = {
     pipelineRan
@@ -82,6 +89,16 @@ class NeoPipelineSpec extends AnyFunSuite with SparkSpec {
     val eros = silver.filter(col("id") === 2000433 &&
       col("orbiting_body").isNull)
     assert(eros.count() === 1)                           // "Null" sentinel
+  }
+
+  test("bronze_to_silver profiles the day it flattened, not all of silver") {
+    val day2Rows = profiledRows._2
+    val day2Flat = BronzeToSilver.flatten(
+      spark.read.schema(graft.sources.NeoSchema.feed)
+        .option("multiLine", "true")
+        .json(layout.bronzeFile(NeoFixture.day2Date))).count()
+    assert(day2Rows === day2Flat)
+    assert(day2Flat < spark.read.parquet(layout.silverAsteroids).count())
   }
 
   test("gold dims: dedup by natural key across days") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Compaction, Dedup}
+import graft.operators.{Dedup, VersionedTable}
 import graft.functions.TextFunctions
 import graft.sources.{BronzeIngest, Layout, NeoSchema}
 
@@ -44,7 +44,7 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     val before = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(before >= 30)
-    Compaction.compact(spark, dir, targetBytes = 1L << 30)
+    VersionedTable(spark, dir, retain = 0).optimize(targetBytes = 1L << 30)
     val after = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(after === 1)
@@ -175,8 +175,8 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     t.overwrite(Seq((2L, "b"), (3L, "c")).toDF("id", "v")) // v2
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = graft.operators.DirSwap.hiddenSibling(target, "__tmp_swap")
-    val old = graft.operators.DirSwap.hiddenSibling(target, "__old_swap")
+    val tmp = graft.operators.DirSwap.tmpPath(target)
+    val old = graft.operators.DirSwap.oldPath(target)
     // simulate a writer that crashed mid-commit: it wrote a COMPLETE v3
     // tmp (committer _SUCCESS present), renamed target→old, and died
     // before promoting tmp — the displaced v2 lives only in `old`

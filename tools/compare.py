@@ -5,7 +5,11 @@ Runs each oracle_sql.json query in DuckDB over the sf parquet tables and
 compares to the Verify-dumped Spark parquet: schema (column names), row
 count, and a hash over values with columns sorted by name and rows sorted.
 
-Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
+Usage: python3 tools/compare.py <sfDir> <verifyOutDir> [onlyCsv]
+
+The optional third argument is a comma-list of query names, the same as
+Verify's: only those are compared, and a listed name missing from
+oracle_sql.json or from the dump is a FAIL.
 """
 import sys, json, glob, os
 import duckdb
@@ -32,13 +36,17 @@ def table_hash(df: pd.DataFrame):
         h.update(("|".join(cell(v) for v in row) + "\n").encode())
     return h.hexdigest()
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=None):
     con = duckdb.connect()
     for p in glob.glob(f"{sf_dir}/*.parquet"):
         name = os.path.basename(p)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     ok = fail = 0
+    if only is not None:
+        for name in sorted(only - oracle.keys()):
+            print(f"FAIL {name}: not in oracle_sql.json"); fail += 1
+        oracle = {k: v for k, v in oracle.items() if k in only}
     for name, sql in sorted(oracle.items()):
         spark_dir = f"{out_dir}/{name}"
         try:
@@ -72,4 +80,5 @@ def main(sf_dir, out_dir):
     return 1 if fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
+    sys.exit(main(sys.argv[1], sys.argv[2], only))
