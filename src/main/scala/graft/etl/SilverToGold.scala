@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -117,17 +118,35 @@ object SilverToGold {
     ("fact_asteroid_approach", factApproach _,
       Seq("sk_asteroid", "sk_approach_date")))
 
-  /** Full stage: read one silver partition (partition-pruned scan),
-    * build the four gold tables, merge-upsert each
-    * (reference call sites: silver_to_gold.py:153-167).
+  /** The day's silver rows, read by path from the one partition directory
+    * `silver/asteroids/approach_date=<date>` as the reference does
+    * (silver_to_gold.py:34-37). `basePath` keeps `approach_date` as the
+    * last column, inferred as a date, so the frame equals the whole-table
+    * read filtered to the day. Reading the table root and filtering would
+    * prune the scan too, but its discovery lists every partition, one
+    * Spark task each, so each day would cost O(lake). `None` when the day
+    * has no partition (a feed day with no approaches).
     */
-  def run(spark: SparkSession, layout: Layout, date: String): Unit = {
-    val silver = spark.read.parquet(layout.silverAsteroids)
-      .filter(col("approach_date") === date)
-    tables.foreach { case (name, build, keys) =>
-      MergeUpsert.saveOrUpdate(spark, build(silver), layout.gold(name), keys)
-    }
+  private[graft] def silverDay(spark: SparkSession, layout: Layout,
+                               date: String): Option[DataFrame] = {
+    val day = new Path(layout.silverPartition(date))
+    if (!day.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(day))
+      None
+    else Some(spark.read.option("basePath", layout.silverAsteroids)
+      .parquet(day.toString))
   }
+
+  /** Full stage: read the day's silver partition by path ([[silverDay]],
+    * silver_to_gold.py:34-37), build the four gold tables, merge-upsert
+    * each (reference call sites: silver_to_gold.py:153-167). A day with no
+    * partition commits nothing.
+    */
+  def run(spark: SparkSession, layout: Layout, date: String): Unit =
+    silverDay(spark, layout, date).foreach { silver =>
+      tables.foreach { case (name, build, keys) =>
+        MergeUpsert.saveOrUpdate(spark, build(silver), layout.gold(name), keys)
+      }
+    }
 
   /** Serving surface (reference: src/streamlit_app.py:35-53): register
     * each gold table as a temp view so plain `spark.sql` works over it.

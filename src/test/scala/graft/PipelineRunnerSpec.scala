@@ -1,10 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.etl.SilverToGold
+import graft.operators.DirSwap
 import graft.sources.{FeedFetcher, Layout, NeoFixture}
 import graft.tools.PipelineRunner
 
@@ -21,6 +24,26 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkSpec {
       case d => fail(s"unexpected fetch date $d")
     }
   }
+
+  // a feed day with no approaches: bronze holds the document, silver
+  // gains no partition
+  private val emptyDate = "2026-08-20"
+
+  private object WithEmptyDay extends FeedFetcher {
+    def fetch(start: String, end: String): String =
+      if (start == emptyDate) NeoFixture.feedJson(Seq(emptyDate -> Seq()))
+      else StubFetcher.fetch(start, end)
+  }
+
+  /** Each gold table's `_graft_version` and (name, length, mtime) listing. */
+  private def goldState(layout: Layout): Map[String, (Long, Seq[String])] =
+    SilverToGold.tables.map { case (name, _, _) =>
+      val dir = new Path(layout.gold(name))
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      name -> (DirSwap.readVersion(fs, dir), fs.listStatus(dir).toSeq
+        .map(f => s"${f.getPath.getName} ${f.getLen} ${f.getModificationTime}")
+        .sorted)
+    }.toMap
 
   test("dateRange: inclusive, ordered, single-day") {
     assert(PipelineRunner.dateRange("2026-08-12", "2026-08-13") ===
@@ -53,6 +76,26 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.parquet(layout.gold("dim_asteroid")).count() === 4)
     assert(spark.read.parquet(layout.gold("fact_asteroid_approach"))
       .count() === 7)
+  }
+
+  test("runRange: a day with no approaches on a fresh lake writes no gold") {
+    val layout = Layout(Files.createTempDirectory("graft-empty").toString)
+    PipelineRunner.runRange(spark, layout, Seq(emptyDate), WithEmptyDay,
+      PipelineRunner.RetryPolicy(retries = 0))
+    assert(Files.exists(Paths.get(layout.bronzeFile(emptyDate))))
+    assert(!Files.exists(Paths.get(layout.silverPartition(emptyDate))))
+    assert(!Files.exists(Paths.get(layout.base, "gold")))
+  }
+
+  test("runRange: a day with no approaches leaves existing gold untouched") {
+    val layout = Layout(Files.createTempDirectory("graft-empty-day").toString)
+    val once = PipelineRunner.RetryPolicy(retries = 0)
+    PipelineRunner.runRange(spark, layout, Seq(NeoFixture.day1Date),
+      WithEmptyDay, once)
+    val before = goldState(layout)
+    assert(before.values.map(_._1).toSet === Set(1L))
+    PipelineRunner.runRange(spark, layout, Seq(emptyDate), WithEmptyDay, once)
+    assert(goldState(layout) === before)
   }
 
   test("withRetries: retries with the reference's flat delay, then " +

@@ -1,0 +1,126 @@
+#!/usr/bin/env python3
+"""Interleaved A/B run of the lakehouse benchmark: a parent revision
+against the working tree.
+
+    python3 tools/bench_ab.py --workload lake_daily --seeds 1-6 [--parent HEAD]
+
+Stops with an error when the working tree has no diff against the parent
+(after committing a change, pass `--parent HEAD~1`). Exports the parent
+revision with `git archive` into a temporary directory, then for each
+seed runs
+
+    perfbench/run.py --workload W --seed i --seconds S --trace 0
+
+(S is BENCHMARK.json's `run_seconds`) once in the parent tree and once
+in the working tree, swapping which side goes first from one seed to the next, so drift in the host's load falls
+on both sides alike. Each tree builds its own classes on its first run.
+Prints every pair, then for each end-to-end metric in BENCHMARK.json each
+side's median, the parent's quartile distance (Q3 - Q1, the yardstick of
+a gain claim), the change/parent ratio of the medians, the metric's
+bound, and the number of pairs in which the change was better; and each
+side's failed and attempted op counts. `seeds` and the quartile spread
+come from perfbench/spread.py. Reads BENCHMARK.json and
+perfbench/ without changing them. `--out FILE` also writes every run as
+JSON.
+"""
+
+import argparse
+import json
+import shutil
+import statistics
+import subprocess
+import sys
+import tempfile
+import time
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+sys.dont_write_bytecode = True  # import perfbench/spread.py without writing under perfbench/
+sys.path.insert(0, str(ROOT / "perfbench"))
+from spread import seeds, spread  # noqa: E402
+
+
+def export(rev, into):
+    """The committed tree of `rev`, unpacked under `into`."""
+    archive = subprocess.run(["git", "archive", rev], cwd=ROOT,
+                             capture_output=True, check=True).stdout
+    subprocess.run(["tar", "-x", "-C", str(into)], input=archive, check=True)
+
+
+def run_once(tree, workload, seed, seconds):
+    """One benchmark run in `tree`: its result object, or None on failure."""
+    out = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload,
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+        cwd=tree, capture_output=True, text=True)
+    if out.returncode != 0:
+        print(f"  {tree}: exit {out.returncode}\n{out.stderr[-2000:]}", flush=True)
+        return None
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", default="1-6")
+    ap.add_argument("--parent", default="HEAD",
+                    help="git revision to compare against (default HEAD)")
+    ap.add_argument("--out", help="write every run to this JSON file")
+    args = ap.parse_args()
+    spec = json.loads((ROOT / "BENCHMARK.json").read_text())
+    seconds = spec["run_seconds"]
+    metrics = spec["end_to_end"]
+    if subprocess.run(["git", "diff", "--quiet", args.parent], cwd=ROOT).returncode == 0:
+        sys.exit(f"bench_ab: the working tree has no diff against {args.parent}; "
+                 "after a commit pass --parent HEAD~1")
+
+    parent_dir = Path(tempfile.mkdtemp(prefix="bench_ab-"))
+    try:
+        export(args.parent, parent_dir)
+        trees = {"parent": parent_dir, "change": ROOT}
+        runs = []
+        for i, seed in enumerate(seeds(args.seeds)):
+            order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+            pair = {}
+            for side in order:
+                t0 = time.monotonic()
+                pair[side] = run_once(trees[side], args.workload, seed, seconds)
+                if pair[side]:
+                    print(f"seed {seed} {side:<6} ({time.monotonic() - t0:.0f}s) "
+                          f"failed={pair[side]['failed']}/{pair[side]['attempted']} "
+                          + " ".join(f"{k}={v['value']:.4g}"
+                                     for k, v in pair[side]["metrics"].items()),
+                          flush=True)
+            runs.append({"seed": seed, **pair})
+    finally:
+        shutil.rmtree(parent_dir, ignore_errors=True)
+
+    pairs = [r for r in runs if r["parent"] and r["change"]]
+    print(f"\n{args.workload}: {len(pairs)} complete pairs of {len(runs)}, "
+          f"parent {args.parent}")
+    print(f"{'metric':<14} {'parent':>10} {'p Q3-Q1':>10} {'change':>10} {'ratio':>7} "
+          f"{'bound':>6}  better")
+    for m in metrics if pairs else []:
+        name = m["name"]
+        a = [r["parent"]["metrics"][name]["value"] for r in pairs]
+        b = [r["change"]["metrics"][name]["value"] for r in pairs]
+        pa, pb = statistics.median(a), statistics.median(b)
+        sign = 1 if m["better"] == "lower" else -1
+        better = sum(1 for x, y in zip(a, b) if sign * (y - x) < 0)
+        ratio = pb / pa if pa else float("nan")
+        iqr = spread(a) * pa if len(a) >= 2 and pa else float("nan")
+        print(f"{name:<14} {pa:>10.4g} {iqr:>10.4g} {pb:>10.4g} {ratio:>7.3f} "
+              f"{m['bound']:>6}  {better}/{len(pairs)}")
+    for side in ("parent", "change"):
+        done = [r[side] for r in runs if r[side]]
+        print(f"{side}: failed ops {sum(r['failed'] for r in done)} of "
+              f"{sum(r['attempted'] for r in done)}; failed runs "
+              f"{len(runs) - len(done)} of {len(runs)}")
+    if args.out:
+        Path(args.out).write_text(json.dumps(
+            {"workload": args.workload, "parent": args.parent,
+             "seconds": seconds, "runs": runs}, indent=1) + "\n")
+
+
+if __name__ == "__main__":
+    main()
