@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Output: ONE JSON line `{"metric":"total","value":<sum of medians>,
   * "unit":"sec","queries":{name:median},"sf":...}` (the driver's
-  * contract), plus diagnostic keys `reps`, `rep_totals`, and the
+  * contract), plus diagnostic keys `cpus`, `reps`, `rep_totals`, and the
   * rep-hygiene pair `calib`/`noisy_reps` (per-rep fixed-probe times;
   * a rep whose calibration reads >1.5× the best one ran under
   * external load — discount its rep_total when adjudicating
@@ -33,14 +33,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val reverse = sys.env.get("SPARK_GRAFT_ORDER").contains("reverse")
-    // r17: the session builder is SHARED with every measurement probe
-    // (tools.BenchSession) so probe sessions can never drift from the
-    // bench posture again (ADVICE r16). Conf-identical to the r16
-    // builder; see BenchSession for the per-conf rationale.
-    val spark = tools.BenchSession.builder(cpus).getOrCreate()
+    // Graft.sessionConf plus the bench-only additions, shared with the
+    // measurement probes (tools.BenchSession)
+    val spark = tools.BenchSession.builder(cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     warmup(spark, sfDir)
 
@@ -117,7 +115,7 @@ object Bench {
     val noisyReps =
       if (calibs.isEmpty) 0
       else calibs.count(_ > calibs.min * 1.5)
-    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"rep_totals":$rt,"calib":$calibJson,"noisy_reps":$noisyReps$errJson}"""
+    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus,"reps":$reps,"rep_totals":$rt,"calib":$calibJson,"noisy_reps":$noisyReps$errJson}"""
     // The driver keeps only a ~2 KB TAIL of stdout and parses the last
     // JSON line it finds there. A 337-query map is ~10 KB, so printing
     // the full record decapitated it and BENCH_r08..r10 recorded
@@ -140,7 +138,7 @@ object Bench {
       if (errors.isEmpty) ""
       else s""","n_errors":${errors.size},"failed":${errors.keys.toSeq.sorted
         .map("\"" + _ + "\"").mkString("[", ",", "]")}"""
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qsShort,"n_queries":${med.size},"sf":"$sfDir","reps":$reps,"rep_totals":$rtShort,"calib":$calibJson,"noisy_reps":$noisyReps,"full":"BENCH_FULL.json"$errShort}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qsShort,"n_queries":${med.size},"sf":"$sfDir","cpus":$cpus,"reps":$reps,"rep_totals":$rtShort,"calib":$calibJson,"noisy_reps":$noisyReps,"full":"BENCH_FULL.json"$errShort}""")
     // Persist the FULL record (every per-query median, every structured
     // error) to a file the judge reads directly. A dev run filtered by
     // SPARK_GRAFT_ONLY must never clobber the official whole-board
@@ -209,7 +207,7 @@ object Bench {
       .collect()
     // PQ family: the nested transform→array_min(struct)→aggregate HOF
     // encode and the dtab[m][codes[m]] ADC lookup pay ~10 s on first
-    // touch (PqProbe) — mostly HOF-interpreter JIT, which transfers
+    // touch (PERF.md) — mostly HOF-interpreter JIT, which transfers
     // across queries (unlike whole-stage codegen, keyed on exact text;
     // the per-query median already discards the residual cold rep).
     // Warm the interpreter classes here, not inside a timed rep

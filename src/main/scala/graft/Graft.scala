@@ -12,98 +12,82 @@ import graft.sources.{FeedFetcher, Layout}
   * reference's capabilities (medallion pipeline + SQL serving) plus the
   * training-data extensions (dedup, similarity, text, multimodal).
   *
-  * Sessions should be built with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
-  * (registers `bounded_topk`, `cosine_sim`, `l2_sq`) — see
-  * [[newSession]].
+  * Sessions should come from [[newSession]], which applies the one conf
+  * list [[sessionConf]] (graft extensions registering `bounded_topk`,
+  * `cosine_sim`, `l2_sq`, among others).
   */
 object Graft {
 
-  /** A session configured the way the library expects: UTC, graft
-    * extensions registered, and the InferFiltersFromGenerate exclusion
-    * that keeps expression-built array pipelines off the pathological
-    * pushdown path (PERF.md §1).
+  /** The ONE ordered conf list every graft session is built from —
+    * the library, Verify, Bench, the test suite, the pipeline CLI and
+    * every probe fold exactly this onto their builder, so a plan one of
+    * them inspects is the plan the others run:
+    *   - streaming state: RocksDB provider + join state format v3
+    *     (virtual column families — ONE store per partition for a
+    *     stream-stream join instead of four; measured 2.5× on the
+    *     stream-stream attribution gates, SpotBench 7.8 → 3.0 s), with
+    *     changelog checkpointing (each commit uploads the batch's
+    *     changelog, not a full snapshot: cumulative state-commit time on
+    *     the dedupe gates −40 %) and no get-before-put row counting for
+    *     the numRowsTotal metric the library never reads. State layout
+    *     never changes emitted rows — the stream gates' oracle hashes
+    *     pin that;
+    *   - UTC session time zone;
+    *   - graft extensions (`bounded_topk`, `cosine_sim`, `l2_sq`);
+    *   - `nanosAsLong`: nanos-era parquet (TIMESTAMP(NANOS)) reads as
+    *     int64 instead of erroring; micros data ignores it, and
+    *     [[Tables.epochMs]] handles both physical shapes downstream;
+    *   - the InferFiltersFromGenerate exclusion: the rule synthesizes
+    *     size(genInput) > 0 filters that pushdown rebuilds below the scan
+    *     with the full generator expression substituted in — for
+    *     expression-built arrays (k-shingles) an O(tokens²) rebuild per
+    *     row on the unparallelized scan, ~10× on those queries (PERF.md
+    *     §1). Explode drops empty arrays regardless;
+    *   - `canChangeCachedPlanOutputPartitioning=false`: cached plans
+    *     expose their output partitioning, so the iterative operators'
+    *     repartition(col).persist() rounds stay co-located instead of
+    *     AQE re-shuffling every consumer (PlanShapeSpec pins the
+    *     one-exchange-per-round shape);
+    *   - for LOCAL masters only, shuffle partitions = the worker-thread
+    *     count: the stock 200 turns every small shuffle into 200
+    *     near-empty tasks (4× on sub-second queries at local[32]). On
+    *     cluster masters AQE coalescing and site config own it.
     *
-    * For LOCAL masters, shuffle partitions default to the core count:
-    * the stock 200 turns every small shuffle into 200 near-empty tasks
-    * (measured 4× on sub-second queries at local[32] — the recurring
-    * benchmarking foot-gun). On cluster masters the setting is left to
-    * the deployment (AQE coalescing + site config own it there).
+    * Deployment settings are NOT here and stay with the caller:
+    * `spark.ui.enabled` (build.sbt's `javaOptions` and perfbench pass
+    * `-Dspark.ui.enabled=false`), heap, local dirs and warehouse path.
     */
-  /** Streaming state-store posture shared by every graft session (r16):
-    * RocksDB provider + join state format v3 (virtual column families —
-    * ONE store per partition for a stream-stream join instead of four).
-    * This is the documented production posture for stateful streaming
-    * (bounded executor memory, fewer per-commit file operations at any
-    * scale); measured locally it cut the stream-stream attribution
-    * gates ~2.5× (SpotBench 7.8 → 3.0 s / 5.5 → 2.6 s — the HDFS
-    * provider spent 45 s of cumulative state-commit time per batch
-    * across 32 partitions × 4 stores). `SPARK_GRAFT_STATE_PROVIDER`
-    * overrides the provider (format v3 is RocksDB-only, so the v3 pin
-    * follows the provider choice). State layout never changes emitted
-    * rows — the stream gates' oracle hashes pin that.
+  def sessionConf(master: String): Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      ("org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider"),
+    "spark.sql.streaming.join.stateFormatVersion" -> "3",
+    "spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled" -> "true",
+    "spark.sql.streaming.stateStore.rocksdb." +
+      "trackTotalNumberOfRows" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "false"
+  ) ++ localWorkerThreads(master).map(n =>
+    "spark.sql.shuffle.partitions" -> n.toString)
+
+  /** [[sessionConf]] on a builder for `master`, before `getOrCreate` —
+    * for an entry point that adds its own confs last (Bench).
     */
-  private[graft] def stateStoreConfs: Seq[(String, String)] = {
-    val provider = sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    val base = Seq(
-      "spark.sql.streaming.stateStore.providerClass" -> provider)
-    if (provider.endsWith("RocksDBStateStoreProvider"))
-      base ++ Seq(
-        "spark.sql.streaming.join.stateFormatVersion" -> "3",
-        // r17: changelog checkpointing — each commit uploads the batch's
-        // CHANGELOG instead of a full store snapshot (snapshots move to
-        // background maintenance). The documented low-commit-latency
-        // production posture; StreamProgressProbe measured cumulative
-        // state-commit time on the dedupe gates drop ~40 % with the pair
-        // of knobs (q_stream_neardup_once batch-0 commit 15.5 → 7.9 s
-        // cumulative across 32 partitions).
-        "spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled" -> "true",
-        // r17: skip the get-before-put RocksDB does per state write just
-        // to keep the numRowsTotal progress metric — a write-path tax
-        // the library never reads (metric reports -1; rowsUpdated and
-        // memoryUsedBytes, the ones the probes print, are unaffected).
-        "spark.sql.streaming.stateStore.rocksdb." +
-          "trackTotalNumberOfRows" -> "false")
-    else base
-  }
+  private[graft] def sessionBuilder(master: String,
+                                    appName: String): SparkSession.Builder =
+    sessionConf(master).foldLeft(
+      SparkSession.builder().master(master).appName(appName)) {
+      case (b, (k, v)) => b.config(k, v) }
 
-  /** Apply [[stateStoreConfs]] to a session builder. */
-  private[graft] def withStateStoreConfs(
-      b: SparkSession.Builder): SparkSession.Builder =
-    stateStoreConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
-
+  /** A session configured the way the library expects: [[sessionConf]]. */
   def newSession(master: String = "local[*]",
-                 appName: String = "graft"): SparkSession = {
-    val b = withStateStoreConfs(SparkSession.builder())
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // nanos-era parquet (TIMESTAMP(NANOS)) reads as int64 under this
-      // flag instead of erroring; micros/real-timestamp data ignores it.
-      // Tables.epochMs handles both physical shapes downstream.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // cached plans EXPOSE their output partitioning (Spark 4 defaults
-      // this to true = AQE may re-partition cached plans, which makes
-      // every consumer of a repartition(col).persist() cache re-shuffle
-      // it): the iterative operators (BFS frontier joins, fixpoints)
-      // rely on persist-with-partitioning for co-located rounds —
-      // PlanShapeSpec pins the one-exchange-per-round shape
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "false")
-    localWorkerThreads(master) match {
-      case Some(cores) =>
-        b.config("spark.sql.shuffle.partitions", cores.toString)
-          .getOrCreate()
-      case None => b.getOrCreate()
-    }
-  }
+                 appName: String = "graft"): SparkSession =
+    sessionBuilder(master, appName).getOrCreate()
 
   /** Worker-thread count of a LOCAL master string, None for cluster
     * masters. Covers every form Spark's `local` family accepts — a

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,24 +11,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.Graft.withStateStoreConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // InferFiltersFromGenerate synthesizes size(genInput)>0 filters
-      // that predicate-pushdown then rebuilds below the scan with the
-      // full generator expression substituted in — for expression-built
-      // arrays (k-shingles) that re-runs an O(tokens²) build per row on
-      // the unparallelized scan. The rule is an optimization only;
-      // explode drops empty arrays regardless.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.newSession(s"local[$cpus]", "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

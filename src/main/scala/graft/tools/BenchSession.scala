@@ -2,46 +2,25 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** ONE bench-protocol session builder, shared by [[graft.Bench]] and
-  * every measurement probe (CanaryProbe, SpotBench, ExplainDump,
-  * StreamProgressProbe, JobCountProbe).
-  *
-  * Why it exists (ADVICE r16): the probes each hand-copied Bench's
-  * conf list and drifted — CanaryProbe missed the codegen-cache size
-  * (its medians re-included Janino compile time Bench excludes),
-  * ExplainDump missed the state-store posture (dumped streaming plans
-  * reflected the HDFS provider, not the RocksDB one the gates run),
-  * and SpotBench folded SPARK_GRAFT_EXTRA_CONF on FIRST so the later
-  * hard-coded `.config` calls silently overrode the A/B hook. One
-  * builder ends the drift class.
-  *
-  * SPARK_GRAFT_EXTRA_CONF="k=v;k=v" (dev-only A/B hook — the driver
-  * never sets it) is folded LAST, after every hard-coded conf, so
-  * env-provided keys always win.
+/** The bench-protocol session, shared by [[graft.Bench]] and the
+  * measurement probes (CanaryProbe, SpotBench, ExplainDump,
+  * StreamProgressProbe, JobCountProbe): [[graft.Graft.sessionConf]] plus
+  * exactly two bench-only additions, applied last:
+  *   - a generated-class cache big enough for the board (r16: the
+  *     default LRU of 100 entries thrashed at 386 queries, so every rep
+  *     re-compiled every whole-stage fragment). Keyed on plan source
+  *     text, never data;
+  *   - SPARK_GRAFT_EXTRA_CONF="k=v;k=v" (dev-only A/B hook; no benchmark
+  *     or gate sets it), folded after everything else so env-provided
+  *     keys always win.
   */
 object BenchSession {
   def builder(cpus: String): SparkSession.Builder = {
     val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.split("=", 2)).collect {
         case Array(k, v) => (k, v) }
-    val base = graft.Graft.withStateStoreConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Verify.scala: avoids pathological inferred-filter pushdown
-      // below Generate for expression-built arrays
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "false")
-      // r16: the default generated-class cache (LRU 100 entries) thrashes
-      // at 386 queries — every rep re-COMPILED every whole-stage fragment.
-      // Compiled-code cache keyed on plan source text — never data.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "20000"))
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val base = graft.Graft.sessionBuilder(s"local[$cpus]", "graft-bench")
+      .config("spark.sql.codegen.cache.maxEntries", "20000")
     extra.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
   }
 }

@@ -1,20 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner mirroring the driver's t1 check: SparkEntry.entry
   * must return rows > 0 on sf0.001. Also prints the formatted plan so
   * plan-shape regressions (lost broadcast, lost pushdown) are visible.
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.newSession("local[8]", "graft-smoke")
     spark.sparkContext.setLogLevel("WARN")
     val df = graft.SparkEntry.entry(spark)
     df.explain("formatted")

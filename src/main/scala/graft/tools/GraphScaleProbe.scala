@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -39,15 +39,7 @@ object GraphScaleProbe {
       .split(",").map(_.trim.toInt).toSeq
     val parts = sys.env.getOrElse("SPARK_GRAFT_PROBE_PARTS", "1,2,3")
       .split(",").map(_.trim.toInt).toSet
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.newSession("local[32]", "graft-graph-scale")
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()
 

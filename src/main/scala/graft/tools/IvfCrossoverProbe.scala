@@ -34,13 +34,7 @@ object IvfCrossoverProbe {
     val ladder = sys.env.getOrElse("SPARK_GRAFT_CELLS",
         "10000,40000,100000,300000,1000000")
       .split(",").map(_.trim.toLong).toSeq
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.newSession(s"local[$cpus]", "graft-ivf-crossover")
     spark.sparkContext.setLogLevel("ERROR")
 
     // deterministic dim-64 float vectors from an id column

@@ -84,10 +84,10 @@ object PipelineRunner {
     val base = args(0)
     val start = args(1)
     val end = if (args.length > 2) args(2) else start
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    // spark-submit sets spark.master; a plain `java`/`sbt runMain` launch
+    // runs local. Cluster masters leave shuffle sizing to the deployment.
+    val spark = graft.Graft.newSession(
+      sys.props.getOrElse("spark.master", "local[*]"), "graft-pipeline")
     try runRange(spark, Layout(base), dateRange(start, end),
       new HttpFeedFetcher(sys.env.getOrElse("NASA_API_KEY", "DEMO_KEY")))
     finally spark.stop()

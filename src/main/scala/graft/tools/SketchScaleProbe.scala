@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -25,15 +24,7 @@ object SketchScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "10").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.newSession("local[32]", "graft-sketch-scale")
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()
 

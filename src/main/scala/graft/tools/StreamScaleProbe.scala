@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -26,12 +26,7 @@ object StreamScaleProbe {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mults = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULTS", "1,10")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = graft.Graft.withStateStoreConfs(SparkSession.builder()).master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.newSession("local[32]", "graft-stream-scale")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

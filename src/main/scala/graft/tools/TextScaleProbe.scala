@@ -24,18 +24,7 @@ package graft.tools
 object TextScaleProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.newSession(s"local[$cpus]", "graft-text-scale")
     spark.sparkContext.setLogLevel("ERROR")
     // q_prefix_filter_pairs / q_dedup_ablation: the exact-pair
     // ground-truth tier. Expected growth is the Σ prefix-posting²

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only ×1/×10/×100 scale rehearsal for the ANN / embedding tier —
@@ -29,16 +28,7 @@ object VectorScaleProbe {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mults = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULTS", "1,10,100")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.newSession("local[32]", "graft-vector-scale")
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()
 

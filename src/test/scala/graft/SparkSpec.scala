@@ -5,20 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One SparkSession shared by every suite in the forked test JVM. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = graft.Graft.withStateStoreConfs(SparkSession.builder())
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Verify.scala: avoids pathological inferred-filter pushdown
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Graft.newSession("local[4]", "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
