@@ -36,7 +36,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val reverse = sys.env.get("SPARK_GRAFT_ORDER").contains("reverse")
-    // Graft.sessionConf plus the bench-only additions, shared with the
+    // Graft.sessionConf plus the bench-only conf fold, shared with the
     // measurement probes (tools.BenchSession)
     val spark = tools.BenchSession.builder(cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

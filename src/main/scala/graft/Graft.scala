@@ -48,6 +48,13 @@ object Graft {
     *     repartition(col).persist() rounds stay co-located instead of
     *     AQE re-shuffling every consumer (PlanShapeSpec pins the
     *     one-exchange-per-round shape);
+    *   - a generated-class cache of 20000 entries: the default LRU of
+    *     100 thrashed both on the driver board (r16: every rep
+    *     re-compiled every whole-stage fragment) and on the daily gold
+    *     stage (16 Janino compiles per day for plans that are the same
+    *     every day). Keyed on generated source text, never data. It is a
+    *     STATIC conf read once into a JVM-wide cache, so the first
+    *     session of the JVM sets it;
     *   - for LOCAL masters only, shuffle partitions = the worker-thread
     *     count: the stock 200 turns every small shuffle into 200
     *     near-empty tasks (4× on sub-second queries at local[32]). On
@@ -71,7 +78,8 @@ object Graft {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.optimizer.excludedRules" ->
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "false"
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "20000"
   ) ++ localWorkerThreads(master).map(n =>
     "spark.sql.shuffle.partitions" -> n.toString)
 

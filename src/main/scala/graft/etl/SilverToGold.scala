@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.MergeUpsert
+import graft.operators.{MergeUpsert, VersionedTable}
 import graft.sources.Layout
 
 /** Silver → gold: derive the star schema (3 dimensions + 1 fact linked
@@ -124,16 +124,19 @@ object SilverToGold {
     * last column, inferred as a date, so the frame equals the whole-table
     * read filtered to the day. Reading the table root and filtering would
     * prune the scan too, but its discovery lists every partition, one
-    * Spark task each, so each day would cost O(lake). `None` when the day
-    * has no partition (a feed day with no approaches).
+    * Spark task each, so each day would cost O(lake). The schema comes
+    * from the partition's parquet footer, read on the driver
+    * ([[VersionedTable.readParquet]]), so opening the day runs no Spark
+    * job. `None` when the day has no partition (a feed day with no
+    * approaches).
     */
   private[graft] def silverDay(spark: SparkSession, layout: Layout,
                                date: String): Option[DataFrame] = {
     val day = new Path(layout.silverPartition(date))
     if (!day.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(day))
       None
-    else Some(spark.read.option("basePath", layout.silverAsteroids)
-      .parquet(day.toString))
+    else Some(VersionedTable.readParquet(spark, day.toString,
+      Some(layout.silverAsteroids)))
   }
 
   /** Full stage: read the day's silver partition by path ([[silverDay]],

@@ -3389,7 +3389,7 @@ object TextQueries {
     // the extra broadcast query-stage job per round cost more than the
     // per-round literal-plan codegen it saved (JobCountProbe: 42 → 56
     // jobs, 3.5 → 4.3 s) — so the literal form stands, and the raised
-    // codegen cache (Bench session) absorbs the recompiles across reps.
+    // codegen cache (Graft.sessionConf) absorbs the recompiles across reps.
     val w = Array.fill(k + 1)(BigInt(0))
     if (logitLocalRows > 0 && n <= logitLocalRows) {
       // r17 size-adaptive driver mirror (the Clusters.graphLocalEdges

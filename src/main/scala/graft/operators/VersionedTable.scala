@@ -2,9 +2,14 @@ package graft.operators
 
 import java.io.IOException
 
-import org.apache.hadoop.fs.Path
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.not
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Delta-flavored table surface and the library's ONE table commit:
   * `merge` / `delete` / `optimize` / `history` / time-travel reads on a
@@ -49,6 +54,8 @@ import org.apache.spark.sql.functions.not
 final class VersionedTable private (spark: SparkSession, path: String,
                                     retain: Int) {
 
+  import VersionedTable.readParquet
+
   private val target = new Path(path)
   private val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -57,8 +64,18 @@ final class VersionedTable private (spark: SparkSession, path: String,
   /** Current committed version (0 = unversioned or absent). */
   def version(): Long = DirSwap.readVersion(fs, target)
 
-  /** The live table. */
-  def read(): DataFrame = spark.read.parquet(path)
+  /** The live table, opened without a Spark job: the schema comes from
+    * a parquet footer read on the driver ([[VersionedTable.readParquet]]).
+    * The footer read and the file listing are two steps, so a commit
+    * landing between them would pair one version's schema with the
+    * next version's files; the version is re-checked after both and the
+    * open repeated when it moved.
+    */
+  def read(): DataFrame = {
+    val v = version()
+    val df = readParquet(spark, path)
+    if (version() == v) df else read()
+  }
 
   /** Time travel: read version `v` — the live version or any retained
     * one. Throws with the available window when `v` was pruned.
@@ -76,12 +93,12 @@ final class VersionedTable private (spark: SparkSession, path: String,
     */
   def readAt(v: Long): DataFrame = {
     val p = retainedPath(v)
-    if (fs.exists(p)) spark.read.parquet(p.toString)
+    if (fs.exists(p)) readParquet(spark, p.toString)
     else if (v == version()) {
       val df = read() // eager file listing happens here
       val now = version()
       if (now == v) df
-      else if (fs.exists(p)) spark.read.parquet(p.toString)
+      else if (fs.exists(p)) readParquet(spark, p.toString)
       else throw new IOException(
         s"version $v of $path was displaced by a concurrent commit " +
           s"(live is now $now) and is not retained; raise `retain`")
@@ -186,7 +203,7 @@ final class VersionedTable private (spark: SparkSession, path: String,
     */
   def restore(v: Long): Unit = mutate { _ =>
     val p = retainedPath(v)
-    if (fs.exists(p)) spark.read.parquet(p.toString)
+    if (fs.exists(p)) readParquet(spark, p.toString)
     else if (v == version()) read()
     else throw new IOException(
       s"restore: version $v of $path is not retained (available: " +
@@ -212,7 +229,7 @@ final class VersionedTable private (spark: SparkSession, path: String,
       DirSwap.recover(fs, target, retain)
       val v0 = DirSwap.readVersion(fs, target)
       val result =
-        f(if (fs.exists(target)) Some(spark.read.parquet(path)) else None)
+        f(if (fs.exists(target)) Some(readParquet(spark, path)) else None)
       val tmp = DirSwap.tmpPath(target)
       result.write.mode("overwrite").parquet(tmp.toString)
       DirSwap.writeVersion(fs, tmp, v0 + 1)
@@ -230,4 +247,56 @@ object VersionedTable {
   def apply(spark: SparkSession, path: String,
             retain: Int = 3): VersionedTable =
     new VersionedTable(spark, path, retain)
+
+  /** `spark.read.parquet(dir)` without its schema-inference job (a
+    * one-task Spark job that ships a Hadoop conf to read one footer).
+    * The footer Spark's non-merging inference would read — a
+    * `_common_metadata` or `_metadata` summary, else the first data file
+    * in path order, over the same hidden-name filter as Spark's listing
+    * — is read on the driver, and the schema Spark stamped into it
+    * becomes the read's schema. Partition columns are still discovered
+    * from the paths (under `basePath` when given), so they stay last and
+    * keep their inferred types. Falls back to the inferring read when
+    * the session merges schemas, when there is no data file, or when
+    * that footer has no Spark schema or it does not parse (files written
+    * by other parquet writers).
+    */
+  private[graft] def readParquet(spark: SparkSession, dir: String,
+                                 basePath: Option[String] = None): DataFrame = {
+    val reader = basePath.foldLeft(spark.read)(_.option("basePath", _))
+    footerSchema(spark, new Path(dir))
+      .fold(reader.parquet(dir))(reader.schema(_).parquet(dir))
+  }
+
+  private val SummaryFiles = Seq("_common_metadata", "_metadata")
+  // the key Spark's parquet writer stores its row schema under
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def footerSchema(spark: SparkSession,
+                           dir: Path): Option[StructType] =
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean)
+      None
+    else Try {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fs = dir.getFileSystem(conf)
+      // Spark's listing filter: `_`/`.` names are hidden, except summaries
+      def hidden(name: String) =
+        ((name.startsWith("_") && !name.contains("=")) ||
+          name.startsWith(".") || name.endsWith("._COPYING_")) &&
+          !SummaryFiles.exists(name.startsWith)
+      def leaves(p: Path): Seq[FileStatus] =
+        fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName))
+          .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+      val files = leaves(dir).sortBy(_.getPath.toString)
+      val (summaries, data) =
+        files.partition(st => SummaryFiles.contains(st.getPath.getName))
+      val footer = SummaryFiles
+        .flatMap(n => summaries.find(_.getPath.getName == n)) ++ data.take(1)
+      footer.headOption.flatMap { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val json = try r.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+          finally r.close()
+        Option(json).map(DataType.fromJson).collect { case s: StructType => s }
+      }
+    }.toOption.flatten
 }

@@ -10,9 +10,9 @@ object CanaryProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Bench's session, by construction: one shared builder
     // (tools.BenchSession) — canary medians are comparable to bench
-    // medians conf-for-conf (ADVICE r16: this file had drifted from
-    // Bench's codegen-cache size, so canaries re-included Janino
-    // compile time the bench excludes).
+    // medians conf-for-conf (ADVICE r16: a hand-built session here had
+    // drifted to a smaller codegen cache, so canaries re-included Janino
+    // compile time the bench excludes; Graft.sessionConf now sets it).
     val spark = BenchSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq

@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,44 +36,6 @@ class SilverDayReadSpec extends AnyFunSuite with SparkSpec {
     layout
   }
 
-  /** Tasks launched by the jobs `body` runs on this thread. A job run
-    * after `body` drains the listener queue: its end event is delivered
-    * after every event `body` posted.
-    */
-  private def tasksLaunched(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"silver-day-read-${System.nanoTime()}"
-    val barrier = s"$group-barrier"
-    def groupOf(props: java.util.Properties) =
-      Option(props).map(_.getProperty("spark.jobGroup.id")).orNull
-    val stages = ConcurrentHashMap.newKeySet[Int]()
-    val tasks = new AtomicInteger()
-    val barrierJobs = ConcurrentHashMap.newKeySet[Int]()
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (groupOf(e.properties) == barrier) barrierJobs.add(e.jobId)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (barrierJobs.contains(e.jobId)) drained.countDown()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (groupOf(e.properties) == group) stages.add(e.stageInfo.stageId)
-      override def onTaskStart(e: SparkListenerTaskStart): Unit =
-        if (stages.contains(e.stageId)) tasks.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobGroup(barrier, "listener barrier")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener never drained")
-      tasks.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   private lazy val lakes = Seq(40, 80).map(n => n -> lake(n))
 
   test("the gold stage launches as many tasks on 80 silver partitions " +
@@ -86,7 +45,7 @@ class SilverDayReadSpec extends AnyFunSuite with SparkSpec {
     assert(spark.conf.get(
       "spark.sql.sources.parallelPartitionDiscovery.threshold") === "32")
     val counts = lakes.map { case (_, layout) =>
-      tasksLaunched(SilverToGold.run(spark, layout, date))
+      launched(SilverToGold.run(spark, layout, date)).tasks
     }
     assert(counts.head > 0)
     assert(counts.head === counts.last, s"tasks at 40 vs 80: $counts")

@@ -17,15 +17,19 @@ on both sides alike. Each tree builds its own classes on its first run.
 Prints every pair, then for each end-to-end metric in BENCHMARK.json each
 side's median, the parent's quartile distance (Q3 - Q1, the yardstick of
 a gain claim), the change/parent ratio of the medians, the metric's
-bound, and the number of pairs in which the change was better; and each
-side's failed and attempted op counts. `seeds` and the quartile spread
-come from perfbench/spread.py. Reads BENCHMARK.json and
-perfbench/ without changing them. `--out FILE` also writes every run as
+bound, the number of pairs in which the change was better, and the exact
+two-sided sign-test p-value of that count over the pairs that differ
+(ties dropped): how often a change with no effect would split the pairs
+at least this unevenly, so 6 pairs cannot go below 0.031 and 8 pairs
+below 0.0078; and each side's failed and attempted op counts. `seeds`
+and the quartile spread come from perfbench/spread.py. Reads
+BENCHMARK.json and perfbench/ without changing them. `--out FILE` also writes every run as
 JSON.
 """
 
 import argparse
 import json
+import math
 import shutil
 import statistics
 import subprocess
@@ -45,6 +49,14 @@ def export(rev, into):
     archive = subprocess.run(["git", "archive", rev], cwd=ROOT,
                              capture_output=True, check=True).stdout
     subprocess.run(["tar", "-x", "-C", str(into)], input=archive, check=True)
+
+
+def sign_test(better, worse):
+    """Exact two-sided sign-test p-value of `better` against `worse` pairs."""
+    n, k = better + worse, min(better, worse)
+    if n == 0:
+        return float("nan")
+    return min(1.0, 2 * sum(math.comb(n, i) for i in range(k + 1)) / 2 ** n)
 
 
 def run_once(tree, workload, seed, seconds):
@@ -99,7 +111,7 @@ def main():
     print(f"\n{args.workload}: {len(pairs)} complete pairs of {len(runs)}, "
           f"parent {args.parent}")
     print(f"{'metric':<14} {'parent':>10} {'p Q3-Q1':>10} {'change':>10} {'ratio':>7} "
-          f"{'bound':>6}  better")
+          f"{'bound':>6}  better  sign-p")
     for m in metrics if pairs else []:
         name = m["name"]
         a = [r["parent"]["metrics"][name]["value"] for r in pairs]
@@ -107,10 +119,11 @@ def main():
         pa, pb = statistics.median(a), statistics.median(b)
         sign = 1 if m["better"] == "lower" else -1
         better = sum(1 for x, y in zip(a, b) if sign * (y - x) < 0)
+        worse = sum(1 for x, y in zip(a, b) if sign * (y - x) > 0)
         ratio = pb / pa if pa else float("nan")
         iqr = spread(a) * pa if len(a) >= 2 and pa else float("nan")
         print(f"{name:<14} {pa:>10.4g} {iqr:>10.4g} {pb:>10.4g} {ratio:>7.3f} "
-              f"{m['bound']:>6}  {better}/{len(pairs)}")
+              f"{m['bound']:>6}  {better}/{len(pairs)}  {sign_test(better, worse):.3g}")
     for side in ("parent", "change"):
         done = [r[side] for r in runs if r[side]]
         print(f"{side}: failed ops {sum(r['failed'] for r in done)} of "
