@@ -60,11 +60,10 @@ object Bench {
     // rep_total should be discounted when adjudicating round-over-round
     // drift (PERF.md §rep-hygiene). Recorded as `calib` + `noisy_reps`
     // in both JSON records.
-    def calibrate(): Double = tools.Calibration.probe(spark)
-    calibrate() // codegen warm — the first probe pays compile cost
+    calibrate(spark) // codegen warm — the first probe pays compile cost
     val calibs = scala.collection.mutable.ArrayBuffer.empty[Double]
     val repTotals = (1 to reps).map { _ =>
-      calibs += calibrate()
+      calibs += calibrate(spark)
       names.map { name =>
         // every run starts cold-cache and post-GC: the timed body owns
         // its fills, and nobody pays a predecessor's garbage
@@ -145,12 +144,9 @@ object Bench {
     // record (that is exactly how the committed BENCH_FULL.json became
     // a single-query dev run in round 10) — partial runs default to a
     // scratch path unless SPARK_GRAFT_BENCH_OUT says otherwise.
-    val outDefault =
-      if (only.isDefined) "/tmp/bench_partial.json"
-      else "/root/repo/BENCH_FULL.json"
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", outDefault)),
+      java.nio.file.Paths.get(fullRecordPath(
+        sys.env.get("SPARK_GRAFT_BENCH_OUT"), only.isDefined)),
       record + "\n")
     catch { case e: Throwable =>
       Console.err.println(s"[bench] full-record write failed: $e") }
@@ -161,6 +157,32 @@ object Bench {
       sys.exit(1)
     }
     spark.stop()
+  }
+
+  /** Where the full record goes: `SPARK_GRAFT_BENCH_OUT` when set, else
+    * `/tmp/bench_partial.json` for a `SPARK_GRAFT_ONLY` run, else
+    * `BENCH_FULL.json` in the working directory (the checkout sbt runs
+    * in, as for [[StageDirs.base]]), never another checkout's record.
+    */
+  private[graft] def fullRecordPath(benchOut: Option[String],
+                                    partial: Boolean): String =
+    benchOut.getOrElse(
+      if (partial) "/tmp/bench_partial.json"
+      else java.nio.file.Paths.get(sys.props("user.dir"), "BENCH_FULL.json")
+        .toString)
+
+  /** The rep-hygiene calibration: one timed run of a fixed cpu-bound
+    * workload, in seconds (PERF.md §rep-hygiene). The first call pays
+    * its codegen compile, so discard it before trusting readings.
+    */
+  private def calibrate(spark: SparkSession): Double = {
+    System.gc()
+    val t0 = System.nanoTime()
+    // bit_xor, not sum: summing 20M full-range xxhash64 values
+    // overflows a long under ANSI arithmetic
+    spark.range(0L, 20_000_000L, 1L, 32)
+      .selectExpr("bit_xor(xxhash64(id))").collect()
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** Warm the executor pool and the JIT/codegen families the suite

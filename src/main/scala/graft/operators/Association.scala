@@ -147,7 +147,7 @@ object Association {
       //     partitions: a keyed repartition without a count is an AQE
       //     hint, and AQE coalesces the one-time fill to advisory-sized
       //     partitions — freezing every later round's parallelism at
-      //     that count (GraphScaleProbe measured 78 s vs 21 s on the CC
+      //     that count (PERF.md records 78 s vs 21 s on the CC
       //     fixpoint at 10⁷ edges before Clusters pinned it; same
       //     contract here).
       //   - DOCUMENTED TRADE: localCheckpoint blocks are executor-local

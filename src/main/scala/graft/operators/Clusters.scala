@@ -56,11 +56,11 @@ object Clusters {
     * source plan alone caches data but leaves the pair-source subtree
     * (typically the whole LSH pipeline; a wide replicated union at
     * rehearsal scale) in every round's logical plan, where per-job
-    * analysis re-walks it — GraphScaleProbe (round 12) measured 316 s
-    * of pure driver plan work for the CC fixpoint on a 240-PAIR graph
-    * at ×100 replication before this truncation, vs ~3 s after. One
-    * pair-bounded write; every round's edge side is a flat parquet
-    * scan afterwards.
+    * analysis re-walks it — the round-12 graph scale probe measured
+    * 316 s of pure driver plan work for the CC fixpoint on a 240-PAIR
+    * graph at ×100 replication before this truncation, vs ~3 s after
+    * (PERF.md §Round 12). One pair-bounded write; every round's edge
+    * side is a flat parquet scan afterwards.
     */
   private def truncateEdges(df: DataFrame, scratch: Path,
                             schema: StructType): (DataFrame, Long) = {
@@ -96,8 +96,9 @@ object Clusters {
     * AQE coalesces the fill to the advisory-size partition count — at
     * 10⁷ synthetic edges that froze the cache at a handful of
     * partitions and every later round's sort/join ran at that
-    * parallelism (GraphScaleProbe measured 78 s vs 21 s for the CC
-    * fixpoint before the count was pinned).
+    * parallelism (the graph scale probe measured 78 s vs 21 s for the
+    * CC fixpoint before the count was pinned; PERF.md §Fixpoint edge
+    * caches co-located).
     */
   private def materializeEdges(df: DataFrame, scratch: Path,
                                schema: StructType,
@@ -117,20 +118,8 @@ object Clusters {
   private def fixpointPartitions(df: DataFrame): Int =
     df.sparkSession.sessionState.conf.numShufflePartitions
 
-  /** Apply the co-location repartition — unless the measurement-only
-    * escape hatch `-Dgraft.fixpoint.colocate=off` is set, which reverts
-    * to the round-12 unpartitioned cache so [[graft.tools
-    * .GraphScaleProbe]] can A/B the two shapes inside one JVM. Not a
-    * user knob: correctness is identical either way; only the
-    * shuffle-per-round accounting differs.
-    */
-  private[graft] def colocateFixpointCaches: Boolean =
-    !sys.props.get("graft.fixpoint.colocate").contains("off")
-
   private def colocated(df: DataFrame, key: String): DataFrame =
-    if (colocateFixpointCaches)
-      df.repartition(fixpointPartitions(df), col(key))
-    else df
+    df.repartition(fixpointPartitions(df), col(key))
 
   private val edgeSchema = StructType(Seq(
     StructField("src", LongType), StructField("dst", LongType)))
@@ -192,8 +181,7 @@ object Clusters {
     * is pinned ≡ the forced-distributed path by ClustersSpec.
     * `graft.graph.local.edges` (sys prop, then
     * SPARK_GRAFT_GRAPH_LOCAL_EDGES) overrides; 0 forces the
-    * distributed path (spec/probe escape hatch, like
-    * `graft.fixpoint.colocate`).
+    * distributed path (the spec escape hatch).
     */
   private[graft] def graphLocalEdges: Long =
     sys.props.get("graft.graph.local.edges")
@@ -541,11 +529,9 @@ object Clusters {
     val edgesByC = graft.CacheRegistry.register(
       colocated(eScan, "c")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val edgesByP =
-      if (colocateFixpointCaches) graft.CacheRegistry.register(
-        colocated(eScan, "p")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else edgesByC // measurement mode: one shared unpartitioned cache
+    val edgesByP = graft.CacheRegistry.register(
+      colocated(eScan, "p")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
     // parquet schema resolution is BY NAME: the read schema must carry
     // this function's own column names, not rankSchema's

@@ -42,7 +42,7 @@ import graft.functions.TextFunctions
   * identical documents puts m colliding rows in every band bucket —
   * m²/2 candidate pairs per cluster — so band-join output is bounded by
   * true NEAR-dup cluster sizes only after exact dups are gone (the 10×
-  * replica ScaleProbe demonstrates the blowup by construction).
+  * replica scale rehearsal in PERF.md shows the blowup by construction).
   */
 object Dedup {
 

@@ -39,8 +39,8 @@ final class DedupPlan private (docs: DataFrame, id: String, text: String,
   /** Per-INSTANCE scratch tag: a shared rotating tag would let
     * StageDirs' two-generation rotation delete the parquet behind a
     * still-live older plan once two newer plans were constructed (three
-    * plans in one session is realistic — cf. GraphScaleProbe's
-    * ×1/×10/×100 loop). Each plan instead owns a unique stable slot,
+    * plans in one session is realistic — cf. the ×1/×10/×100 loop of
+    * PERF.md §Round 12). Each plan instead owns a unique stable slot,
     * registered with [[graft.CacheRegistry]] so
     * [[graft.Graft.releaseCaches]] deletes it together with the
     * persisted intermediates it backs — one lifetime, one hook.
@@ -84,8 +84,8 @@ final class DedupPlan private (docs: DataFrame, id: String, text: String,
     * per-pair exact Jaccard, so removing non-survivor docs changes no
     * surviving pair — but it removes their postings from every band
     * bucket, which is the whole point of the exact-first ordering
-    * contract. The round-12 GraphScaleProbe measured the difference at
-    * worst-case duplication: filtering pairs AFTER banding cost 575 s
+    * contract. The round-12 rehearsal (PERF.md) measured the difference
+    * at worst-case duplication: filtering pairs AFTER banding cost 575 s
     * at ×100 replication (every bucket held 100× postings → ×10⁴
     * candidates); shingling survivors keeps the LSH tier priced at the
     * deduplicated corpus.

@@ -780,8 +780,8 @@ object TextQueries {
     // n_units_corpus counts each merged unit in the final FULL-corpus
     // tokenization (0 when a later merge consumed it) — the corpus-wide
     // apply under the same hash. At 100 TB the slice percentage becomes
-    // an absolute row cap (TextScaleProbe's fixed-size-slice row
-    // measures that posture); the gate pins the mechanism, not the knob.
+    // an absolute row cap (PERF.md's sampled-BPE record measures that
+    // posture); the gate pins the mechanism, not the knob.
     "q_bpe_sampled" -> { (s, dir) =>
       val docs = Tables.load(s, dir, "documents")
         .select(col("doc_id"), lower(col("text")).as("text"))

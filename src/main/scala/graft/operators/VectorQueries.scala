@@ -64,14 +64,14 @@ object VectorQueries {
   private val DBSCAN_MIN_PTS = 3    // q_dbscan minPts (counts the point
                                     // itself ⇒ core ⟺ degree ≥ 2)
 
-  /** Flat-vs-two-level crossover (ScaleProbe, dim 64, 40k rows): the
-    * fused flat argmin WINS at every directly measurable C — 2.5 s vs
-    * 6.1 s even at C = 40 000 — because a native l2_sq eval costs ~100×
-    * less than the descent's per-row HOF machinery. Fitting the
-    * measured marginals (flat linear in C at ~35 ms/1000 cells; descent
-    * ~√C at ~11 ms/√cell) crosses near C ≈ 3·10⁵ — with C = ⌊√n⌋
-    * that is a ~10¹¹-vector corpus, exactly the 100 TB regime this
-    * selector exists for. Production dims (512–4096) cross far
+  /** Flat-vs-two-level crossover (PERF.md §Scale rehearsal, dim 64,
+    * 40k rows): the fused flat argmin WINS at every directly measurable
+    * C — 2.5 s vs 6.1 s even at C = 40 000 — because a native l2_sq
+    * eval costs ~100× less than the descent's per-row HOF machinery.
+    * Fitting the measured marginals (flat linear in C at ~35 ms/1000
+    * cells; descent ~√C at ~11 ms/√cell) crosses near C ≈ 3·10⁵ — with
+    * C = ⌊√n⌋ that is a ~10¹¹-vector corpus, exactly the 100 TB regime
+    * this selector exists for. Production dims (512–4096) cross far
     * earlier: the descent saves distance evals whose cost scales with
     * dim while its dispatch overhead does not.
     */
@@ -79,7 +79,7 @@ object VectorQueries {
     * Re-pinned 3·10⁵ → 10⁴ in round 15: the old value came from a
     * ladder whose `count()` let Catalyst prune the cell projection, so
     * it timed only the broadcast build. The corrected record
-    * (IvfCrossoverProbe, forced evaluation, dim 64, per-batch build
+    * (PERF.md round 15, forced evaluation, dim 64, per-batch build
     * included) has the two-level TOTAL winning from C ≈ 10⁴, the flat
     * form OOMing at C = 10⁶ (per-row C-struct temp array × concurrent
     * tasks), and both in-row broadcast forms topping out between
@@ -158,7 +158,7 @@ object VectorQueries {
     * assignment rather than assuming it. Still a pure projection: one
     * nested broadcast array, zero shuffle, corpus scanned once.
     *
-    * Measured honestly (IvfCrossoverProbe, round 15 — forced
+    * Measured honestly (PERF.md round 15 — forced
     * evaluation; an earlier ladder's `count()` pruned the argmin and
     * timed only broadcast builds): per-ROW assignment the descent wins
     * from C ≈ 2.5·10³, on totals including its per-batch index build
@@ -214,11 +214,11 @@ object VectorQueries {
   }
 
   /** JOIN-based coarse-then-fine cell assignment — the scale path PAST
-    * the in-row broadcast ceiling. IvfCrossoverProbe (round 15)
-    * measured both broadcast forms topping out between C = 3·10⁵ and
-    * 10⁶ in a 24 GB JVM: the flat argmin allocates a C-struct temp
-    * array per row and the two-level descent carries one ~C-sized
-    * nested broadcast row into every task. This form never
+    * the in-row broadcast ceiling. The round-15 crossover ladder
+    * (PERF.md) measured both broadcast forms topping out between
+    * C = 3·10⁵ and 10⁶ in a 24 GB JVM: the flat argmin allocates a
+    * C-struct temp array per row and the two-level descent carries one
+    * ~C-sized nested broadcast row into every task. This form never
     * materializes C anywhere: only the ~C/fanout coarse REPS are
     * broadcast (in-row, √C-sized at fanout = √C); each row explodes to
     * its `probeGroups` nearest group ids; the fine centroid table —
@@ -290,11 +290,9 @@ object VectorQueries {
     * their full column tuple).
     */
   private[graft] def assignCells(df: DataFrame, centroids: DataFrame,
-                                 vec: Column,
-                                 twoLevelMinCells: Int = TWO_LEVEL_MIN_CELLS)
-      : DataFrame = {
+                                 vec: Column): DataFrame = {
     val c = centroids.count()
-    if (c >= twoLevelMinCells)
+    if (c >= TWO_LEVEL_MIN_CELLS)
       withCellJoined(df, centroids, vec, df.columns.toSeq,
         fanout = math.max(2, math.sqrt(c.toDouble).toInt), probeGroups = 2)
     else withCell(df, centroidArray(centroids), vec)

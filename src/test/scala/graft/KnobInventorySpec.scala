@@ -1,0 +1,46 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Pins the settings the library reads: every `SPARK_GRAFT_*` name and
+  * every `graft.*` system property in `src/main/scala`. A new knob has to
+  * be added here and to the README's Settings table; a deleted one has
+  * to leave both.
+  */
+class KnobInventorySpec extends AnyFunSuite {
+
+  private val mainSources: Seq[String] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"$root missing")
+    Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(Files.readString).toList
+  }
+
+  private def scan(pattern: String): Set[String] =
+    mainSources.flatMap(pattern.r.findAllMatchIn(_).map(_.group(1))).toSet
+
+  test("SPARK_GRAFT_* environment names equal the pinned list") {
+    assert(scan("SPARK_GRAFT_([A-Z_]+)") === Set(
+      "BENCH_OUT", "CPUS", "EXTRA_CONF", "GRAPH_LOCAL_EDGES",
+      "LOGIT_LOCAL_ROWS", "ONLY", "ORDER", "REPS", "SF_DIR", "STAGE_DIR"))
+  }
+
+  test("graft.* system properties equal the pinned list") {
+    assert(scan("""sys\.props\.get\("(graft\.[A-Za-z0-9_.]+)"\)""") ===
+      Set("graft.graph.local.edges", "graft.logit.local.rows"))
+  }
+
+  test("Bench's full record defaults to this checkout, partial runs to /tmp") {
+    assert(Bench.fullRecordPath(None, partial = false) ===
+      Paths.get(sys.props("user.dir"), "BENCH_FULL.json").toString)
+    assert(Bench.fullRecordPath(None, partial = true) ===
+      "/tmp/bench_partial.json")
+    assert(Bench.fullRecordPath(Some("/x/out.json"), partial = false) ===
+      "/x/out.json")
+  }
+}

@@ -638,7 +638,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     "consumer plans)") {
     // a persist alone caches data but leaves the corpus subtree in the
     // logical plan, where every consumer job re-analyzes it (316 s of
-    // driver time on a 240-pair graph at x100 — GraphScaleProbe);
+    // driver time on a 240-pair graph at x100 — PERF.md round 12);
     // these two tables must be parquet-scan-rooted
     val plan = operators.DedupPlan(
       spark.read.parquet(s"$sf/documents.parquet"))
@@ -688,7 +688,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       // keyed repartition without one is an AQE hint that coalesces the
       // fill to advisory-sized partitions, freezing every later round's
       // parallelism at that count (78 s vs 21 s on the 10⁷-edge CC
-      // fixpoint, GraphScaleProbe r14)
+      // fixpoint, PERF.md §Fixpoint edge caches co-located)
       val e = ckptOnly.repartition(
         spark.sessionState.conf.numShufflePartitions, col("src")).persist()
       // the cached AQE plan exposes HashPartitioning only once it
