@@ -14,9 +14,10 @@ import java.util.concurrent.atomic.AtomicLong
   *     `SPARK_GRAFT_STAGE_DIR` for cluster runs where scratch must live
   *     on shared storage.
   *   - the iterative graph/BPE operators ([[graft.operators.Clusters]],
-  *     [[graft.operators.Bpe]]) defaulted their parquet-round-trip
-  *     scratch to a FRESH `/tmp` dir per invocation and deleted only
-  *     superseded iteration dirs — Verify plus 3 Bench reps leaked
+  *     [[graft.operators.Bpe]]) defaulted their lineage-truncation
+  *     scratch ([[graft.operators.Fixpoint]]) to a FRESH `/tmp` dir per
+  *     invocation and deleted only superseded iteration dirs —
+  *     Verify plus 3 Bench reps leaked
   *     O(nodes) parquet per rep. [[scratch]] hands out a deterministic
   *     per-operator slot instead and retires old slots itself, bounding
   *     disk at two generations per operator per JVM.

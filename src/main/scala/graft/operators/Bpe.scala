@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 import graft.functions.TextFunctions
 
@@ -28,10 +27,10 @@ import graft.functions.TextFunctions
   * fold (`aggregate` HOF — greedy first-occurrence semantics, exactly
   * the BPE re-tokenization rule) and the token table moves one
   * PERSISTED generation forward (the next round's count job doubles
-  * as the cache fill). Lineage is still truncated by a parquet
-  * round-trip — the [[Clusters]]-fixpoint guard against the plan
-  * growing one nested fold per round — but only every TRUNC rounds,
-  * so the small-merge trainer gates never pay a write job.
+  * as the cache fill). Lineage is still truncated through [[Fixpoint]]
+  * — the plan grows one nested fold per round otherwise — but only
+  * every TRUNC rounds, so the small-merge trainer gates never pay a
+  * write job.
   *
   * 100 TB posture: cost is O(nMerges · corpus) by construction — the
   * standard contract is to train on a bounded sampled slice (tokenizer
@@ -70,10 +69,6 @@ object Bpe {
   def applyMerges(toks: Column, merges: Seq[(String, String)]): Column =
     merges.foldLeft(toks) { case (c, (l, r)) => applyMerge(c, l, r) }
 
-  private val tokSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("toks", ArrayType(StringType))))
-
   /** Train `nMerges` BPE merges over `docs(idCol, textCol)`.
     *
     * @return (rank, left, right, n_occurrences): rank 1 = first merge
@@ -85,9 +80,6 @@ object Bpe {
             nMerges: Int,
             scratchDir: Option[String] = None): DataFrame = {
     val spark = docs.sparkSession
-    val scratch = new Path(scratchDir.getOrElse(
-      graft.StageDirs.scratch("bpe")))
-    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     // r17 (guide §1.2 fixed cost per round): iteration state rides a
     // PERSISTED chain — each round's pair-count job doubles as the
@@ -99,12 +91,8 @@ object Bpe {
     // the parquet scratch — but only every TRUNC rounds instead of
     // every round; the trainer gates (≤ 8 merges) never pay a write.
     val TRUNC = 8
-    def roundTrip(df: DataFrame, iter: Int): DataFrame = {
-      val dir = new Path(scratch, s"toks_$iter")
-      df.write.mode("overwrite").parquet(dir.toString)
-      fs.delete(new Path(scratch, s"toks_${iter - TRUNC}"), true)
-      spark.read.schema(tokSchema).parquet(dir.toString)
-    }
+    val slots = new Fixpoint.Rolling(
+      scratchDir.getOrElse(graft.StageDirs.scratch("bpe")), "toks")
     def persisted(df: DataFrame): DataFrame =
       graft.CacheRegistry.register(df.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -151,13 +139,13 @@ object Bpe {
         // never for the final round — consumed once); the write job
         // materializes eagerly, so its parent cache can be freed here
         if (rank % TRUNC == 0 && rank < nMerges) {
-          toks = persisted(roundTrip(next, rank))
+          toks = persisted(slots(next, rank))
           prevToks.foreach(_.unpersist(blocking = false))
           prevToks = None
         } else toks = persisted(next)
       }
     }
-    fs.delete(scratch, true)
+    slots.close()
 
     import spark.implicits._
     learned.toSeq.toDF("rank", "left", "right", "n_occurrences")

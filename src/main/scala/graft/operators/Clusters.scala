@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Duplicate-cluster resolution: the step between "near-dup PAIRS"
   * (what LSH/SimHash emit) and a deduplicated corpus. A pair list is
@@ -26,20 +24,16 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * adversarial topologies; at dedup workloads its extra per-round cost
   * buys nothing — documented trade-off, not an oversight.)
   *
-  * Iteration state is truncated by a PARQUET ROUND-TRIP per round
-  * (write labels, read them back): the self-referential join would
-  * otherwise double the logical plan per round (2^k leaf scans by
-  * round k — the classic iterative-Catalyst blowup), and unlike the
-  * KMeans centroid table the label table is corpus-sized, so the
-  * driver-collect truncation is not an option, and `localCheckpoint`
-  * leaves persisted RDD blocks no lifecycle owns. On a cluster pass a
-  * `scratchDir` on shared storage (the same requirement as RDD
-  * checkpointing); the default is a generation-rotated slot under
-  * [[graft.StageDirs]] (`target/graft_stage/<op>/run_N`) — correct for
-  * local[*], bounded at two retained generations per operator per JVM
-  * (ADVICE r10: the old fresh-tmp-per-invocation default leaked
-  * O(nodes) parquet per Verify/Bench rep), valid per StageDirs'
-  * caller contract until the same operator runs twice more.
+  * Iteration state is truncated through [[Fixpoint]] every round (the
+  * bounded-lineage contract is stated there). Unlike the KMeans
+  * centroid table the label table is corpus-sized, so the driver-collect
+  * form is not an option. On a cluster pass a `scratchDir` on shared
+  * storage; the default is a generation-rotated slot under
+  * [[graft.StageDirs]] (`target/graft_stage/<op>/run_N`), bounded at two
+  * retained generations per operator per JVM (ADVICE r10: the old
+  * fresh-tmp-per-invocation default leaked O(nodes) parquet per
+  * Verify/Bench rep), valid per StageDirs' caller contract until the
+  * same operator runs twice more.
   *
   * Convergence detection is O(1) per round: labels only ever DECREASE
   * under min-propagation, so the label-sum is strictly monotone and
@@ -48,36 +42,26 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object Clusters {
 
-  private val labelSchema = StructType(Seq(
-    StructField("id", LongType), StructField("lbl", LongType)))
-
-  /** Materialize a fixpoint's edge table to `scratch/edges` and read it
-    * back with an explicit schema (lineage truncation). Persisting the
-    * source plan alone caches data but leaves the pair-source subtree
-    * (typically the whole LSH pipeline; a wide replicated union at
-    * rehearsal scale) in every round's logical plan, where per-job
+  /** Truncate a fixpoint's edge table to `scratch/edges` through
+    * [[Fixpoint]], with its row count observed on the write: the count
+    * prices the driver-mirror dispatch without a second scan. Persisting
+    * the source plan alone caches data but leaves the pair-source
+    * subtree (typically the whole LSH pipeline; a wide replicated union
+    * at rehearsal scale) in every round's logical plan, where per-job
     * analysis re-walks it — the round-12 graph scale probe measured
     * 316 s of pure driver plan work for the CC fixpoint on a 240-PAIR
     * graph at ×100 replication before this truncation, vs ~3 s after
     * (PERF.md §Round 12). One pair-bounded write; every round's edge
     * side is a flat parquet scan afterwards.
     */
-  private def truncateEdges(df: DataFrame, scratch: Path,
-                            schema: StructType): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    val dir = new Path(scratch, "edges")
-    // the edge COUNT rides the (already-eager) truncation write as an
-    // observed metric — it prices the size-adaptive dispatch below
-    // ([[ccLocalEdges]]) without a second scan, the same pattern as
-    // the CC convergence statistic (r16)
-    val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(dir.toString)
-    (spark.read.schema(schema).parquet(dir.toString),
-      obs.get("n").asInstanceOf[Long])
+  private def countedEdges(df: DataFrame, scratch: String)
+      : (DataFrame, Long) = {
+    val (scan, m) = Fixpoint.truncateObserving(df, s"$scratch/edges",
+      count(lit(1)).as("n"))
+    (scan, m("n").asInstanceOf[Long])
   }
 
-  /** [[truncateEdges]], then CO-LOCATE the cache on the per-round join
+  /** [[countedEdges]], then CO-LOCATE the cache on the per-round join
     * key (the q_sssp_hops round-14 contract, PlanShapeSpec-pinned):
     * `repartition(key)` before persist makes the InMemoryRelation
     * expose HashPartitioning(key) — under
@@ -100,10 +84,9 @@ object Clusters {
     * CC fixpoint before the count was pinned; PERF.md §Fixpoint edge
     * caches co-located).
     */
-  private def materializeEdges(df: DataFrame, scratch: Path,
-                               schema: StructType,
+  private def materializeEdges(df: DataFrame, scratch: String,
                                key: String): (DataFrame, Long) = {
-    val (scan, n) = truncateEdges(df, scratch, schema)
+    val (scan, n) = countedEdges(df, scratch)
     (graft.CacheRegistry.register(
       colocated(scan, key)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
@@ -120,9 +103,6 @@ object Clusters {
 
   private def colocated(df: DataFrame, key: String): DataFrame =
     df.repartition(fixpointPartitions(df), col(key))
-
-  private val edgeSchema = StructType(Seq(
-    StructField("src", LongType), StructField("dst", LongType)))
 
   /** Connected components of an undirected pair list.
     *
@@ -160,33 +140,32 @@ object Clusters {
           col(dst).cast("long").as("dst"))
         .union(pairs.select(col(dst).cast("long").as("src"),
           col(src).cast("long").as("dst"))),
-      new Path(scratchDir.map(d => s"$d/symedges").getOrElse(
-        graft.StageDirs.scratch("symedges"))),
-      edgeSchema, key = "src")
+      scratchDir.map(d => s"$d/symedges").getOrElse(
+        graft.StageDirs.scratch("symedges")),
+      key = "src")
 
-  /** Edge-count threshold below which the iterative graph loops (CC,
-    * LPA, PageRank) run their exact DRIVER mirror over the collected
-    * edge list instead of the distributed fixpoint — the broadcast-join
-    * decision applied to graph iteration (r17, guide §1.2 "the
-    * distributed algorithm" + §3.1's size-adaptive strategy pick, and
-    * the same measured-crossover dispatch precedent as the IVF
-    * `assignCells` ladder). 500 000 symmetric edges ≈ 8 MB of
-    * (long, long) — autoBroadcastThreshold territory; a graph that
-    * small gains nothing from O(rounds) distributed iterations whose
-    * per-round fixed cost (write job + observe + re-scan) dominates at
-    * any SF where the graph fits, and its result table comes back as a
-    * LocalRelation every consumer can broadcast. Above the threshold
-    * the fixpoints are untouched. Every driver mirror reproduces the
-    * distributed arithmetic EXACTLY (integer ops, same tie rules) and
-    * is pinned ≡ the forced-distributed path by ClustersSpec.
-    * `graft.graph.local.edges` (sys prop, then
-    * SPARK_GRAFT_GRAPH_LOCAL_EDGES) overrides; 0 forces the
-    * distributed path (the spec escape hatch).
+  /** Driver bytes per edge of a collected edge list (the `Array[Row]`
+    * from `collect` plus its `(Long, Long)` copy), the per-row cost
+    * the graph loops (CC, LPA, PageRank, HITS, kCore) price their exact
+    * DRIVER mirror with: a graph that fits [[Fixpoint.fitsDriver]] gains
+    * nothing from O(rounds) distributed iterations whose per-round fixed
+    * cost (write job + observe + re-scan) dominates at that size, and
+    * its result comes back as a LocalRelation every consumer can
+    * broadcast — the broadcast-join decision applied to graph iteration
+    * (r17, guide §1.2 + §3.1's size-adaptive strategy pick). Every
+    * driver mirror reproduces the distributed arithmetic EXACTLY
+    * (integer ops, same tie rules) and is pinned ≡ the forced-distributed
+    * path by ClustersSpec. Measured on JDK 17 with compressed oops:
+    * 100.8 B for the rows plus 44.0 B for the tuples per edge, over a
+    * 10⁶-edge collect (PERF.md §One Fixpoint module).
     */
-  private[graft] def graphLocalEdges: Long =
-    sys.props.get("graft.graph.local.edges")
-      .orElse(sys.env.get("SPARK_GRAFT_GRAPH_LOCAL_EDGES"))
-      .map(_.toLong).getOrElse(500000L)
+  private val EDGE_BYTES = 145L
+
+  /** The collected `(a, b)` long pairs of a fitting edge table. */
+  private def collectEdges(edges: DataFrame, a: String,
+                           b: String): Array[(Long, Long)] =
+    edges.select(col(a), col(b)).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
 
   /** Driver union-find over a collected symmetric edge list (the
     * below-threshold CC form): union-by-min-root with path compression,
@@ -214,29 +193,23 @@ object Clusters {
 
   /** [[connectedComponents]] over an ALREADY-materialized symmetric
     * edge table ([[sharedSymEdges]]). `edgeCount` (observed on the
-    * edge-truncation write — no extra job) enables the size-adaptive
-    * driver path below [[ccLocalEdges]]; None always runs the
+    * edge-truncation write — no extra job) enables the driver union-find
+    * when the edges fit [[Fixpoint.fitsDriver]]; None always runs the
     * distributed fixpoint.
     */
   private[graft] def connectedComponentsOnEdges(
       edges: DataFrame, scratchDir: Option[String] = None,
       maxIter: Int = 25, edgeCount: Option[Long] = None): DataFrame = {
-    val localThreshold = graphLocalEdges
-    if (edgeCount.exists(n => n > 0 && n <= localThreshold)) {
-      val spark = edges.sparkSession
-      // bounded by the threshold (≈ 8 MB) — the KMeans-centroid /
-      // MMR-selection class of driver-side table, not a data-scale
-      // collect; nodes ≤ 2·edges, returned as a LocalRelation that
-      // downstream consumers broadcast instead of shuffling
-      val collected = edges.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      import spark.implicits._
-      return localComponents(collected).toDF("id", "cluster_id")
-    }
     val spark = edges.sparkSession
-    val scratch = new Path(scratchDir.getOrElse(
-      graft.StageDirs.scratch("cc")))
-    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (edgeCount.exists(Fixpoint.fitsDriver(_, EDGE_BYTES))) {
+      // nodes ≤ 2·edges, returned as a LocalRelation that downstream
+      // consumers broadcast instead of shuffling
+      import spark.implicits._
+      return localComponents(collectEdges(edges, "src", "dst"))
+        .toDF("id", "cluster_id")
+    }
+    val slots = new Fixpoint.Rolling(
+      scratchDir.getOrElse(graft.StageDirs.scratch("cc")), "labels")
 
     // The convergence statistic (label sum + row count) rides the WRITE
     // job as observed metrics (CollectMetrics), so each round is ONE
@@ -246,24 +219,16 @@ object Clusters {
     // the rows streaming INTO the parquet writer is the same sum the
     // old post-write scan computed. Count rides along to replace the
     // old isEmpty probe job on the empty-graph path.
-    def roundTrip(df: DataFrame, iter: Int)
+    def labelRound(df: DataFrame, iter: Int)
         : (DataFrame, java.math.BigDecimal, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val dir = new Path(scratch, s"labels_$iter")
-      df.observe(obs, sum(col("lbl").cast("decimal(38,0)")).as("s"),
-          count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(dir.toString)
-      // the new labels are self-contained on disk — the previous
-      // round's files are dead weight the moment this write commits
-      if (iter > 0) fs.delete(new Path(scratch, s"labels_${iter - 1}"), true)
-      val m = obs.get
+      val (out, m) = slots.observing(df, iter,
+        sum(col("lbl").cast("decimal(38,0)")).as("s"), count(lit(1)).as("n"))
       val s = m("s") match {
         case null => java.math.BigDecimal.ZERO
         case d: java.math.BigDecimal => d
         case d: scala.math.BigDecimal => d.bigDecimal
       }
-      (spark.read.schema(labelSchema).parquet(dir.toString),
-        s, m("n").asInstanceOf[Long])
+      (out, s, m("n").asInstanceOf[Long])
     }
 
     // iteration 0 IS the first propagation round: every node appears as
@@ -271,7 +236,7 @@ object Clusters {
     // node set AND its 1-hop min in the same shuffle the separate
     // distinct() would have cost — diameter-1 clusters (the common
     // near-dup star) arrive converged and pay only the confirming round
-    var (labels, prevSum, n0) = roundTrip(
+    var (labels, prevSum, n0) = labelRound(
       edges.groupBy(col("dst"))
         .agg(min(col("src")).as("m"))
         .select(col("dst").as("id"), least(col("m"), col("dst")).as("lbl")),
@@ -285,7 +250,7 @@ object Clusters {
       val neighborMin = edges.join(labels, col("src") === col("id"))
         .groupBy(col("dst"))
         .agg(min(col("lbl")).as("nmin"))
-      val (nextLabels, s, _) = roundTrip(
+      val (nextLabels, s, _) = labelRound(
         labels.join(neighborMin, col("id") === col("dst"), "left")
           .select(col("id"), least(col("lbl"), col("nmin")).as("lbl")),
         iter)
@@ -337,9 +302,6 @@ object Clusters {
       .select(col("cluster_id"), col("best.id").as("keep_id"),
         col("best.q").as("keep_quality"), col("n_members"))
 
-  private val rankSchema = StructType(Seq(
-    StructField("id", LongType), StructField("rank_ppm", LongType)))
-
   /** Integer PageRank over an undirected pair list: `iters` power
     * iterations at damping 85/100, ranks in ppm of the uniform start
     * (1 000 000 per node). All arithmetic is BIGINT floor division on
@@ -350,10 +312,10 @@ object Clusters {
     * edge list (joined once with its out-degrees) is persisted and each
     * iteration is ONE edges ⋈ ranks join plus ONE dst-keyed sum —
     * shuffles keyed by node id, never corpus-wide — with the rank table
-    * truncated by a parquet round-trip per round (the self-referential
-    * join would otherwise stack every prior round into one plan; the
-    * 122-exchange plan the unchecked loop produced is the measured
-    * failure mode). Iteration count is a CONSTANT, so cost is
+    * truncated through [[Fixpoint]] every second round (the
+    * self-referential join would otherwise stack every prior round into
+    * one plan; the 122-exchange plan the unchecked loop produced is the
+    * measured failure mode). Iteration count is a CONSTANT, so cost is
     * O(iters · |edges|) by construction; on a cluster `scratchDir`
     * goes on shared storage, same as the CC fixpoint.
     */
@@ -361,26 +323,22 @@ object Clusters {
                iters: Int = 5,
                scratchDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
-    val scratch = new Path(scratchDir.getOrElse(
-      graft.StageDirs.scratch("pr")))
-    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val scratch = scratchDir.getOrElse(graft.StageDirs.scratch("pr"))
 
-    val (eScan, nEdges) = truncateEdges(
+    val (eScan, nEdges) = countedEdges(
       pairs.select(col(src).cast("long").as("src"),
           col(dst).cast("long").as("dst"))
         .union(pairs.select(col(dst).cast("long").as("src"),
           col(src).cast("long").as("dst"))),
-      scratch, edgeSchema)
-    // size-adaptive driver mirror (r17, see [[graphLocalEdges]]):
+      scratch)
+    // size-adaptive driver mirror (r17, see [[EDGE_BYTES]]):
     // identical integer arithmetic — contribution rank div out-degree
     // (positive BIGINT floor div), update 150000 + 85·Σ div 100 — on
     // exactly `iters` rounds; pinned ≡ the distributed loop by
     // ClustersSpec
-    if (nEdges > 0 && nEdges <= graphLocalEdges) {
-      val spark2 = pairs.sparkSession
-      import spark2.implicits._
-      val e = eScan.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
+    if (Fixpoint.fitsDriver(nEdges, EDGE_BYTES)) {
+      import spark.implicits._
+      val e = collectEdges(eScan, "src", "dst")
       val outDeg = scala.collection.mutable.LongMap.empty[Long]
       e.foreach { case (s0, _) => outDeg(s0) = outDeg.getOrElse(s0, 0L) + 1L }
       var rank = scala.collection.mutable.LongMap.empty[Long]
@@ -413,14 +371,7 @@ object Clusters {
       colocated(eScan.select(col("src").as("id")).distinct(), "id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-    var lastDir: Option[Path] = None
-    def roundTrip(df: DataFrame, iter: Int): DataFrame = {
-      val dir = new Path(scratch, s"ranks_$iter")
-      df.write.mode("overwrite").parquet(dir.toString)
-      lastDir.foreach(fs.delete(_, true))
-      lastDir = Some(dir)
-      spark.read.schema(rankSchema).parquet(dir.toString)
-    }
+    val slots = new Fixpoint.Rolling(scratch, "ranks")
 
     // lineage is truncated every SECOND iteration: the Catalyst blowup
     // this guards against (see the 122-exchange note in PERF.md) grows
@@ -443,7 +394,7 @@ object Clusters {
       // `iters`, ≤ 2 for even (i = iters-1 is odd and i = iters is
       // final, so both skip the round-trip) — bounded either way,
       // which is all the Catalyst-blowup guard needs (ADVICE r16)
-      ranks = if (i % 2 == 0 && i < iters) roundTrip(next, i) else next
+      ranks = if (i % 2 == 0 && i < iters) slots(next, i) else next
     }
     ranks
   }
@@ -462,7 +413,7 @@ object Clusters {
     * half-steps alternate join keys; each half-step is ONE edges ⋈
     * scores join (edge side exchange-free against its cache) plus a
     * node-keyed sum and a broadcast one-row max attach; the hub table
-    * parquet-round-trips per round (bounded lineage). Σ-headroom:
+    * is truncated through [[Fixpoint]] per round. Σ-headroom:
     * score ≤ 10⁶, so a raw sum stays in int64 up to degree ~9·10¹²
     * before the DECIMAL cast even matters; the ppm product runs in
     * DECIMAL(38,0) regardless.
@@ -473,9 +424,7 @@ object Clusters {
            iters: Int = 2,
            scratchDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
-    val scratch = new Path(scratchDir.getOrElse(
-      graft.StageDirs.scratch("hits")))
-    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val scratch = scratchDir.getOrElse(graft.StageDirs.scratch("hits"))
 
     // The HITS half-steps alternate join keys — auth joins on the hub
     // side (c), hub joins on the authority side (p) — so ONE co-located
@@ -483,21 +432,19 @@ object Clusters {
     // (2× memory, spill-tolerant, each filled by one edge shuffle) buy
     // exchange-free edge sides for BOTH half-steps; the alternative is
     // re-shuffling the corpus-scale edge table 2·iters times.
-    val (eScan, nEdges) = truncateEdges(
+    val (eScan, nEdges) = countedEdges(
       pairs.select(col(src).cast("long").as("c"),
           col(dst).cast("long").as("p"))
         .distinct(),
-      scratch, StructType(Seq(
-        StructField("c", LongType), StructField("p", LongType))))
-    // size-adaptive driver mirror (r17, see [[graphLocalEdges]]):
+      scratch)
+    // size-adaptive driver mirror (r17, see [[EDGE_BYTES]]):
     // identical integer arithmetic — round-1 auth = 10⁶·indegree, Σ of
     // longs, L∞ normalization raw·10⁶ div max in exact big-int floor
     // division on positives — on exactly `iters` rounds; pinned ≡ the
     // distributed loop by ClustersSpec
-    if (nEdges > 0 && nEdges <= graphLocalEdges) {
+    if (Fixpoint.fitsDriver(nEdges, EDGE_BYTES)) {
       import spark.implicits._
-      val e = eScan.select(col("c"), col("p")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
+      val e = collectEdges(eScan, "c", "p")
       def normalize(raw: scala.collection.mutable.LongMap[Long])
           : scala.collection.mutable.LongMap[Long] = {
         val mx = raw.values.max
@@ -533,18 +480,7 @@ object Clusters {
       colocated(eScan, "p")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-    // parquet schema resolution is BY NAME: the read schema must carry
-    // this function's own column names, not rankSchema's
-    val scoreSchema = StructType(Seq(
-      StructField("id", LongType), StructField("score", LongType)))
-    var lastDir: Option[Path] = None
-    def roundTrip(df: DataFrame, iter: Int): DataFrame = {
-      val dir = new Path(scratch, s"hits_$iter")
-      df.write.mode("overwrite").parquet(dir.toString)
-      lastDir.foreach(fs.delete(_, true))
-      lastDir = Some(dir)
-      spark.read.schema(scoreSchema).parquet(dir.toString)
-    }
+    val slots = new Fixpoint.Rolling(scratch, "hits")
 
     def normalized(raw: DataFrame, key: String): DataFrame = {
       val mx = raw.agg(max(col("raw")).as("mx"))
@@ -578,7 +514,7 @@ object Clusters {
       val nextHubs = normalized(
         edgesByP.join(auths, edgesByP("p") === auths("id"))
           .groupBy(col("c")).agg(sum(col("score")).as("raw")), "c")
-      hubs = if (i < iters) roundTrip(nextHubs, i) else nextHubs
+      hubs = if (i < iters) slots(nextHubs, i) else nextHubs
     }
     hubs.select(lit("hub").as("side"), col("id"),
         col("score").as("score_ppm"))
@@ -605,8 +541,8 @@ object Clusters {
     * per-community funnel). `iters` is a CONSTANT (asynchronous LPA
     * converges faster but is order-dependent — non-reproducible across
     * partitionings, which disqualifies it here), so cost is
-    * O(iters · |edges|); the label table round-trips through parquet
-    * every second round, same bounded-lineage contract as the CC loop.
+    * O(iters · |edges|); the label table is truncated through
+    * [[Fixpoint]] every second round and after the last.
     */
   def labelPropagation(pairs: DataFrame, src: String, dst: String,
                        iters: Int = 2,
@@ -645,31 +581,21 @@ object Clusters {
   /** [[labelPropagation]] over an ALREADY-materialized symmetric edge
     * table ([[sharedSymEdges]]) — the shared-cache path composite
     * queries use. `edgeCount` (observed on the truncation write)
-    * enables the size-adaptive driver mirror below [[graphLocalEdges]].
+    * enables the driver mirror when the edges fit
+    * [[Fixpoint.fitsDriver]].
     */
   private[graft] def labelPropagationOnEdges(
       edges: DataFrame, iters: Int = 2,
       scratchDir: Option[String] = None,
       edgeCount: Option[Long] = None): DataFrame = {
     val spark = edges.sparkSession
-    if (edgeCount.exists(n => n > 0 && n <= graphLocalEdges)) {
+    if (edgeCount.exists(Fixpoint.fitsDriver(_, EDGE_BYTES))) {
       import spark.implicits._
-      val collected = edges.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      return localLpa(collected, iters).toDF("id", "community")
+      return localLpa(collectEdges(edges, "src", "dst"), iters)
+        .toDF("id", "community")
     }
-    val scratch = new Path(scratchDir.getOrElse(
-      graft.StageDirs.scratch("lpa")))
-    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    var lastDir: Option[Path] = None
-    def roundTrip(df: DataFrame, iter: Int): DataFrame = {
-      val dir = new Path(scratch, s"lpa_$iter")
-      df.write.mode("overwrite").parquet(dir.toString)
-      lastDir.foreach(fs.delete(_, true))
-      lastDir = Some(dir)
-      spark.read.schema(labelSchema).parquet(dir.toString)
-    }
+    val slots = new Fixpoint.Rolling(
+      scratchDir.getOrElse(graft.StageDirs.scratch("lpa")), "lpa")
 
     // round 0 state: every edge endpoint labeled with itself (the edge
     // list is symmetric, so dst alone covers the node set)
@@ -684,7 +610,7 @@ object Clusters {
         .groupBy(col("dst"))
         .agg(max(struct(col("c"), negate(col("lbl")).as("nl"))).as("best"))
         .select(col("dst").as("id"), negate(col("best.nl")).as("lbl"))
-      labels = if (i % 2 == 0 || i == iters) roundTrip(next, i) else next
+      labels = if (i % 2 == 0 || i == iters) slots(next, i) else next
     }
     labels.toDF("id", "community")
   }
@@ -709,35 +635,27 @@ object Clusters {
     */
   def triangleClustering(pairs: DataFrame, src: String, dst: String,
                          scratchDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    val scratch = new Path(scratchDir.getOrElse(
-      graft.StageDirs.scratch("tri")))
+    val scratch = scratchDir.getOrElse(graft.StageDirs.scratch("tri"))
     // the graph tables are MULTIPLY REFERENCED (canon: degree +
     // orientation + triangle closing; deg: both arrow sides + output;
-    // arrows: both wedge sides), so each is truncated by a parquet
-    // round-trip — the same bounded-lineage contract as the CC/PageRank
-    // loops; a cache-only formulation re-expanded the whole upstream
-    // pair pipeline into the plan per reference (66-exchange audit).
-    // All three are dup-graph-bounded, never corpus-sized.
-    def roundTrip(df: DataFrame, name: String): DataFrame = {
-      val dir = new Path(scratch, name)
-      df.write.mode("overwrite").parquet(dir.toString)
-      spark.read.parquet(dir.toString)
-    }
+    // arrows: both wedge sides), so each is truncated through
+    // [[Fixpoint]]; a cache-only formulation re-expanded the whole
+    // upstream pair pipeline into the plan per reference (66-exchange
+    // audit). All three are dup-graph-bounded, never corpus-sized.
     // canonical id-ordered edges
-    val canon = roundTrip(
+    val canon = Fixpoint.truncate(
       pairs.select(least(col(src), col(dst)).cast("long").as("u"),
           greatest(col(src), col(dst)).cast("long").as("v"))
         .filter(col("u") =!= col("v")).distinct(),
-      "canon")
-    val deg = roundTrip(
+      s"$scratch/canon")
+    val deg = Fixpoint.truncate(
       canon.select(col("u").as("x"))
         .union(canon.select(col("v").as("x")))
         .groupBy(col("x")).agg(count(lit(1)).as("d")),
-      "deg")
+      s"$scratch/deg")
     val du = deg.select(col("x").as("u"), col("d").as("du"))
     val dv = deg.select(col("x").as("v"), col("d").as("dv"))
-    val arrows = roundTrip(
+    val arrows = Fixpoint.truncate(
       canon.join(du, "u").join(dv, "v")
         .select(when(col("du") < col("dv")
             || (col("du") === col("dv") && col("u") < col("v")),
@@ -745,7 +663,7 @@ object Clusters {
           .otherwise(struct(col("v").as("s"), col("u").as("t")))
           .as("a"))
         .select(col("a.s").as("s"), col("a.t").as("t")),
-      "arrows")
+      s"$scratch/arrows")
     val tris = arrows.as("e1")
       .join(arrows.as("e2"), col("e1.s") === col("e2.s")
         && col("e1.t") < col("e2.t"))
@@ -784,29 +702,22 @@ object Clusters {
     */
   def edgeSupport(pairs: DataFrame, src: String, dst: String,
                   scratchDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    val scratch = new Path(scratchDir.getOrElse(
-      graft.StageDirs.scratch("supp")))
-    // multiply-referenced graph tables round-trip through parquet —
-    // the bounded-lineage contract shared with the triangle/CC loops
-    def roundTrip(df: DataFrame, name: String): DataFrame = {
-      val dir = new Path(scratch, name)
-      df.write.mode("overwrite").parquet(dir.toString)
-      spark.read.parquet(dir.toString)
-    }
-    val canon = roundTrip(
+    // multiply-referenced graph tables, truncated as in
+    // [[triangleClustering]]
+    val scratch = scratchDir.getOrElse(graft.StageDirs.scratch("supp"))
+    val canon = Fixpoint.truncate(
       pairs.select(least(col(src), col(dst)).cast("long").as("u"),
           greatest(col(src), col(dst)).cast("long").as("v"))
         .filter(col("u") =!= col("v")).distinct(),
-      "canon")
-    val deg = roundTrip(
+      s"$scratch/canon")
+    val deg = Fixpoint.truncate(
       canon.select(col("u").as("x"))
         .union(canon.select(col("v").as("x")))
         .groupBy(col("x")).agg(count(lit(1)).as("d")),
-      "deg")
+      s"$scratch/deg")
     val du = deg.select(col("x").as("u"), col("d").as("du"))
     val dv = deg.select(col("x").as("v"), col("d").as("dv"))
-    val arrows = roundTrip(
+    val arrows = Fixpoint.truncate(
       canon.join(du, "u").join(dv, "v")
         .select(when(col("du") < col("dv")
             || (col("du") === col("dv") && col("u") < col("v")),
@@ -814,7 +725,7 @@ object Clusters {
           .otherwise(struct(col("v").as("s"), col("u").as("t")))
           .as("a"))
         .select(col("a.s").as("s"), col("a.t").as("t")),
-      "arrows")
+      s"$scratch/arrows")
     val tris = arrows.as("e1")
       .join(arrows.as("e2"), col("e1.s") === col("e2.s")
         && col("e1.t") < col("e2.t"))
@@ -855,8 +766,8 @@ object Clusters {
     * Execution per round is ONE symmetric-edge ⋈ alive semi-join pair
     * plus ONE dst-keyed count — shuffles keyed by node id, never
     * corpus-sized — with the alive set truncated by a parquet
-    * round-trip per round (multiply referenced: both edge endpoints),
-    * the same bounded-lineage contract as the CC fixpoint.
+    * write per round ([[Fixpoint]]; multiply referenced: both edge
+    * endpoints).
     *
     * @return (id, core_degree): survivors of the final round with
     *         their degree within the previous round's subgraph (all
@@ -867,9 +778,7 @@ object Clusters {
             scratchDir: Option[String] = None): DataFrame = {
     require(k >= 1 && rounds >= 1)
     val spark = pairs.sparkSession
-    val scratch = new Path(scratchDir.getOrElse(
-      graft.StageDirs.scratch("kcore")))
-    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val scratch = scratchDir.getOrElse(graft.StageDirs.scratch("kcore"))
 
     // co-located on src: the src-side semi-join is then exchange-free;
     // the dst-side filter + count still shuffle the SURVIVING subgraph
@@ -879,15 +788,14 @@ object Clusters {
           col(dst).cast("long").as("dst"))
         .union(pairs.select(col(dst).cast("long").as("src"),
           col(src).cast("long").as("dst"))),
-      scratch, edgeSchema, key = "src")
-    // size-adaptive driver mirror (r17, see [[graphLocalEdges]]):
+      scratch, key = "src")
+    // size-adaptive driver mirror (r17, see [[EDGE_BYTES]]):
     // identical peel rounds — degree over the surviving subgraph,
     // filter ≥ k, exactly `rounds` times; pinned ≡ the distributed
     // loop by ClustersSpec
-    if (nEdges > 0 && nEdges <= graphLocalEdges) {
+    if (Fixpoint.fitsDriver(nEdges, EDGE_BYTES)) {
       import spark.implicits._
-      val e = edges.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
+      val e = collectEdges(edges, "src", "dst")
       var alive = scala.collection.mutable.LongMap.empty[Long]
       e.foreach { case (_, d) => alive(d) = alive.getOrElse(d, 0L) + 1L }
       for (_ <- 1 to rounds) {
@@ -902,19 +810,12 @@ object Clusters {
       return alive.toSeq.toDF("id", "core_degree")
     }
 
-    var lastDir: Option[Path] = None
-    def roundTrip(df: DataFrame, iter: Int): DataFrame = {
-      val dir = new Path(scratch, s"alive_$iter")
-      df.write.mode("overwrite").parquet(dir.toString)
-      lastDir.foreach(fs.delete(_, true))
-      lastDir = Some(dir)
-      spark.read.parquet(dir.toString)
-    }
+    val slots = new Fixpoint.Rolling(scratch, "alive")
 
     // round 0: every edge endpoint is alive (symmetric list ⇒ dst
     // covers the node set); keeps a degree column so the final round's
     // survivors carry core_degree without an extra pass
-    var alive = roundTrip(
+    var alive = slots(
       edges.groupBy(col("dst")).agg(count(lit(1)).as("d"))
         .select(col("dst").as("id"), col("d")), 0)
     for (i <- 1 to rounds) {
@@ -930,7 +831,7 @@ object Clusters {
       // truncation stands, but the LAST round's output is consumed once
       // by the caller — its plan is one round deep over the previous
       // round's parquet, and the write+read bought nothing
-      alive = if (i < rounds) roundTrip(next, i) else next
+      alive = if (i < rounds) slots(next, i) else next
     }
     alive.select(col("id"), col("d").as("core_degree"))
   }
@@ -961,8 +862,8 @@ object Clusters {
     * center set. The oracle applies the identical cap, so both engines
     * compute the same statistic BY DEFINITION (the cap is part of the
     * operator's contract, like maxDf in the inverted-index family).
-    * Graph tables are multiply referenced → parquet round-trip, the
-    * shared bounded-lineage contract.
+    * Graph tables are multiply referenced, so each is truncated through
+    * [[Fixpoint]].
     *
     * @return (u, v, cn, ra_ppm, jaccard_bp) for non-adjacent u < v
     *         with ≥ 1 sub-cap common neighbor.
@@ -1012,25 +913,18 @@ object Clusters {
                      wedgeCap: Int = 64,
                      scratchDir: Option[String] = None): DataFrame = {
     require(wedgeCap >= 1)
-    val spark = pairs.sparkSession
-    val scratch = new Path(scratchDir.getOrElse(
-      graft.StageDirs.scratch("lp")))
-    def roundTrip(df: DataFrame, name: String): DataFrame = {
-      val dir = new Path(scratch, name)
-      df.write.mode("overwrite").parquet(dir.toString)
-      spark.read.parquet(dir.toString)
-    }
-    val canon = roundTrip(
+    val scratch = scratchDir.getOrElse(graft.StageDirs.scratch("lp"))
+    val canon = Fixpoint.truncate(
       pairs.select(least(col(src), col(dst)).cast("long").as("u"),
           greatest(col(src), col(dst)).cast("long").as("v"))
         .filter(col("u") =!= col("v")).distinct(),
-      "canon")
-    val sym = roundTrip(
+      s"$scratch/canon")
+    val sym = Fixpoint.truncate(
       canon.select(col("u").as("c"), col("v").as("n"))
         .union(canon.select(col("v").as("c"), col("u").as("n"))),
-      "sym")
-    val deg = roundTrip(
-      sym.groupBy(col("c")).agg(count(lit(1)).as("d")), "deg")
+      s"$scratch/sym")
+    val deg = Fixpoint.truncate(
+      sym.groupBy(col("c")).agg(count(lit(1)).as("d")), s"$scratch/deg")
     // wedge sides: edges whose CENTER is sub-cap, carrying the center's
     // degree for the RA contribution
     val cse = sym.join(deg.filter(col("d") <= wedgeCap), "c")

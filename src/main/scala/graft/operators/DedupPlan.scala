@@ -29,8 +29,8 @@ import graft.functions.TextFunctions
   * pair/cluster-sized (bounded by true duplication, not corpus size);
   * both persist MEMORY_AND_DISK through [[CacheRegistry]]. The CC
   * fixpoint inside [[Clusters.memberTable]] already truncates lineage
-  * through parquet round-trips, so the shared plan adds no new
-  * iterative-plan blowup. Call [[graft.Graft.releaseCaches]] when done.
+  * through [[Fixpoint]], so the shared plan adds no new iterative-plan
+  * blowup. Call [[graft.Graft.releaseCaches]] when done.
   */
 final class DedupPlan private (docs: DataFrame, id: String, text: String,
                                k: Int, numHashes: Int, bands: Int,
@@ -59,23 +59,16 @@ final class DedupPlan private (docs: DataFrame, id: String, text: String,
     exactGroups.select(col("keep_id").as(id))
 
   /** The corpus restricted to exact survivors — survivor-bounded
-    * (≤ one row per distinct content) and LINEAGE-TRUNCATED through a
-    * parquet round-trip: the LSH chain references this table from ~6
+    * (≤ one row per distinct content) and LINEAGE-TRUNCATED through
+    * [[Fixpoint]]: the LSH chain references this table from ~6
     * plan positions (two signature sides, two verify sides, sizes), so
     * a mere persist would cache the data but let every downstream job
     * re-analyze the corpus subtree that many times — the dominant
-    * DRIVER cost at rehearsal ×100. After the round-trip the whole
+    * DRIVER cost at rehearsal ×100. After the truncation the whole
     * dedup plan hangs off one flat scan.
     */
-  private lazy val survivorDocs: DataFrame = {
-    val dir = graft.CacheRegistry.registerScratch(
-      graft.StageDirs.stable(s"$scratchTag/survivors"))
-    docs.join(exactSurvivors, Seq(id), "left_semi")
-      .write.mode("overwrite").parquet(dir)
-    CacheRegistry.register(
-      docs.sparkSession.read.parquet(dir)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-  }
+  private lazy val survivorDocs: DataFrame =
+    truncated(docs.join(exactSurvivors, Seq(id), "left_semi"), "survivors")
 
   /** LSH-verified near-dup pairs over exact survivors ONLY — the table
     * every downstream consumer shares. The restriction is applied to
@@ -90,24 +83,24 @@ final class DedupPlan private (docs: DataFrame, id: String, text: String,
     * candidates); shingling survivors keeps the LSH tier priced at the
     * deduplicated corpus.
     *
-    * The result is LINEAGE-TRUNCATED through a pair-bounded parquet
-    * round-trip, not merely persisted: a persist caches data, but each
-    * downstream job would still re-ANALYZE the pair plan, which embeds
-    * the corpus subtree ~6× (two signature sides, two verify sides,
-    * the semi-join) — measured as ~60 s of pure driver plan work per
-    * consumer at rehearsal ×100. After the round-trip every consumer
-    * starts from a flat scan.
+    * The result is LINEAGE-TRUNCATED through a pair-bounded
+    * [[Fixpoint]] write, not merely persisted: a persist caches data,
+    * but each downstream job would still re-ANALYZE the pair plan,
+    * which embeds the corpus subtree ~6× (two signature sides, two
+    * verify sides, the semi-join) — measured as ~60 s of pure driver
+    * plan work per consumer at rehearsal ×100. After the truncation
+    * every consumer starts from a flat scan.
     */
-  lazy val pairs: DataFrame = {
-    val raw = Dedup.lshVerifiedPairs(survivorDocs,
-      id, text, k, numHashes, bands, thresholdPct)
-    val dir = graft.CacheRegistry.registerScratch(
-      graft.StageDirs.stable(s"$scratchTag/pairs"))
-    raw.write.mode("overwrite").parquet(dir)
+  lazy val pairs: DataFrame =
+    truncated(Dedup.lshVerifiedPairs(survivorDocs,
+      id, text, k, numHashes, bands, thresholdPct), "pairs")
+
+  /** `df` truncated into this plan's slot `name`, then persisted. */
+  private def truncated(df: DataFrame, name: String): DataFrame =
     CacheRegistry.register(
-      raw.sparkSession.read.parquet(dir)
+      Fixpoint.truncate(df, CacheRegistry.registerScratch(
+          graft.StageDirs.stable(s"$scratchTag/$name")))
         .persist(StorageLevel.MEMORY_AND_DISK))
-  }
 
   /** (doc_id, cluster_id, cluster_sz) — near-dup pairs closed into
     * connected components, persisted. The one CC fixpoint in the plan.

@@ -72,26 +72,21 @@ object Hierarchy {
       val domain = ids
         .union(edges.select(col("par").as("id")))
         .distinct()
-      // the jump table parquet-round-trips EVERY round: the doubling
-      // join composes cur with itself, so a chained plan holds 2^round
-      // copies of the base subtree — exponential ANALYSIS cost for a
-      // log-round algorithm (the Clusters.materializeEdges lesson,
-      // round 12). One node-bounded write per round keeps each round's
-      // plan one flat self-join.
-      val scratch = graft.StageDirs.scratch("hier_closure")
-      def roundTrip(df: DataFrame, i: Int): DataFrame = {
-        val p = s"$scratch/jump_$i"
-        df.write.mode("overwrite").parquet(p)
-        s.read.parquet(p)
-      }
-      var cur = roundTrip(
+      // the jump table is truncated EVERY round ([[Fixpoint]]): the
+      // doubling join composes cur with itself, so a chained plan holds
+      // 2^round copies of the base subtree — exponential ANALYSIS cost
+      // for a log-round algorithm. One node-bounded write per round
+      // keeps each round's plan one flat self-join.
+      val slots = new Fixpoint.Rolling(
+        graft.StageDirs.scratch("hier_closure"), "jump")
+      var cur = slots(
         domain.join(edges, Seq("id"), "left")
           .select(col("id"), coalesce(col("par"), col("id")).as("anc"),
             when(col("par").isNotNull, 1L).otherwise(0L).as("d")), 0)
       for (i <- 1 to DOUBLE_ROUNDS) {
         val jump = cur.select(col("id").as("j_id"), col("anc").as("j_anc"),
           col("d").as("j_d"))
-        cur = roundTrip(
+        cur = slots(
           cur.join(jump, col("anc") === col("j_id"))
             .select(col("id"), col("j_anc").as("anc"),
               (col("d") + col("j_d")).as("d")), i)
@@ -109,22 +104,18 @@ object Hierarchy {
     // in a forest the pair determines d, so no survivor ambiguity.
     "q_subtree_rollup" -> { (s, dir) =>
       val (_, edges) = forest(s, dir)
-      // same per-round round-trip as q_hierarchy_closure: the doubling
+      // same per-round truncation as q_hierarchy_closure: the doubling
       // union references cl three times per round, so a chained plan
       // grows 3^round subtrees
-      val scratch = graft.StageDirs.scratch("hier_rollup")
-      def roundTrip(df: DataFrame, i: Int): DataFrame = {
-        val p = s"$scratch/cl_$i"
-        df.write.mode("overwrite").parquet(p)
-        s.read.parquet(p)
-      }
-      var cl = roundTrip(
+      val slots = new Fixpoint.Rolling(
+        graft.StageDirs.scratch("hier_rollup"), "cl")
+      var cl = slots(
         edges.select(col("id").as("node"), col("par").as("anc"),
           lit(1L).as("d")), 0)
       for (i <- 1 to CLOSURE_ROUNDS) {
         val up = cl.select(col("node").as("u_node"), col("anc").as("u_anc"),
           col("d").as("u_d"))
-        cl = roundTrip(
+        cl = slots(
           cl.union(
               cl.join(up, col("anc") === col("u_node"))
                 .select(col("node"), col("u_anc").as("anc"),

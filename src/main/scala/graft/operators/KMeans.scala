@@ -14,23 +14,12 @@ import graft.functions.VectorFunctions.l2Sq
   * update is an element-wise mean via posexplode → (cell, pos) avg →
   * array rebuild (per-cell arrays are dimension-bounded, so collect_list
   * here is safe). Each iteration ends by materializing the centroid
-  * table on the DRIVER ([[truncate]]) — iterative plans double in depth
-  * per round otherwise (the classic planning blowup), and the centroid
-  * set is index METADATA (C·dim floats, broadcast downstream anyway),
-  * so the collect is bounded and leaves no persisted blocks behind the
-  * way `localCheckpoint` would.
+  * table on the DRIVER ([[Fixpoint.onDriver]]; [[Fixpoint]] states the
+  * bounded-lineage contract): the centroid set is index METADATA
+  * (C·dim floats, C ≤ ~10⁵ even at 100 TB — the same data every IVF
+  * step broadcasts in one row), so the collect is bounded.
   */
 object KMeans {
-
-  /** Cut the iterative lineage: materialize the (bounded) centroid
-    * table as a local DataFrame. C ≤ ~10⁵ even at 100 TB — the same
-    * data every IVF step broadcasts in one row.
-    */
-  private def truncate(cent: DataFrame): DataFrame = {
-    val spark = cent.sparkSession
-    spark.createDataFrame(
-      java.util.Arrays.asList(cent.collect(): _*), cent.schema)
-  }
 
   /** (vec_id, cell, d2): nearest centroid per vector. */
   def assign(emb: DataFrame, centroids: DataFrame): DataFrame =
@@ -61,7 +50,7 @@ object KMeans {
         .select(col("cell"),
           transform(col("pm"), x => x.getField("m").cast("float"))
             .as("centroid"))
-      cent = truncate(cent)
+      cent = Fixpoint.onDriver(cent)
       i += 1
     }
     cent
@@ -114,7 +103,7 @@ object KMeans {
             .as("m")))).as("pm"))
         .select(col("cell"),
           transform(col("pm"), x => x.getField("m")).as("centroid"))
-      cent = truncate(cent)
+      cent = Fixpoint.onDriver(cent)
       i += 1
     }
     cent

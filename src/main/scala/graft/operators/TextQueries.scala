@@ -1566,14 +1566,13 @@ object TextQueries {
     // DECIMAL(38) headroom q_correlation proves at 20k rows.
     "q_assortativity" -> { (s, dir) =>
       // the pair table feeds three plan positions (the edge scan and
-      // both degree joins); round-trip it through scratch parquet so
-      // the LSH chain is analyzed and EXECUTED once, not per position
-      val vpDir = graft.StageDirs.scratch("assort_pairs")
-      Dedup.lshVerifiedPairs(Tables.load(s, dir, "documents"),
-          "doc_id", "text", K, NUM_HASHES, BANDS, THRESH)
-        .select("doc_a", "doc_b")
-        .write.mode("overwrite").parquet(vpDir)
-      val vp = s.read.parquet(vpDir)
+      // both degree joins); truncate it ([[Fixpoint]]) so the LSH chain
+      // is analyzed and EXECUTED once, not per position
+      val vp = Fixpoint.truncate(
+        Dedup.lshVerifiedPairs(Tables.load(s, dir, "documents"),
+            "doc_id", "text", K, NUM_HASHES, BANDS, THRESH)
+          .select("doc_a", "doc_b"),
+        graft.StageDirs.scratch("assort_pairs"))
       val sym = vp.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(vp.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("d"))
@@ -3391,19 +3390,19 @@ object TextQueries {
     // jobs, 3.5 → 4.3 s) — so the literal form stands, and the raised
     // codegen cache (Graft.sessionConf) absorbs the recompiles across reps.
     val w = Array.fill(k + 1)(BigInt(0))
-    if (logitLocalRows > 0 && n <= logitLocalRows) {
-      // r17 size-adaptive driver mirror (the Clusters.graphLocalEdges
-      // pattern, guide §1.2): below the threshold the fit slice is
-      // ≤ 5·10⁵ rows of k+2 longs (~tens of MB — broadcast-class), so
-      // the descent replays on the driver over ONE collect of the
-      // cached z slice instead of `iters` aggregate jobs whose
-      // per-round fixed cost (job launch + literal-plan codegen)
-      // dominates at any SF where the slice fits. The replay is the
-      // EXACT distributed arithmetic: s and r·x_j in Long (the plan's
-      // BIGINT ops), gradient sums in BigInt (the plan's exact
+    if (Fixpoint.fitsDriver(n,
+        LOGIT_ROW_BYTES + LOGIT_LONG_BYTES * (k + 2))) {
+      // r17 size-adaptive driver mirror (the Clusters graph-mirror
+      // pattern, guide §1.2): when the fit slice of k+2 longs per row
+      // fits the driver budget, the descent replays on the driver over
+      // ONE collect of the cached z slice instead of `iters` aggregate
+      // jobs whose per-round fixed cost (job launch + literal-plan
+      // codegen) dominates at any SF where the slice fits. The replay
+      // is the EXACT distributed arithmetic: s and r·x_j in Long (the
+      // plan's BIGINT ops), gradient sums in BigInt (the plan's exact
       // DECIMAL(38,0) sums — integer addition is order-free), the same
-      // truncating div updates. Above the threshold (any real corpus)
-      // the distributed loop below is untouched; LogitSpec pins
+      // truncating div updates. Above the budget (any real corpus)
+      // the distributed loop below is untouched; LogitFitSpec pins
       // mirror ≡ forced-distributed. The collect doubles as the z
       // cache fill every downstream consumer (scoring, n_correct)
       // reuses.
@@ -3467,18 +3466,14 @@ object TextQueries {
     (LogitModel(means, sds, w.toSeq.map(_.toLong)), z, n)
   }
 
-  /** Fit-slice row threshold below which [[fitLogitModel]]'s descent
-    * runs as an exact driver mirror (one collect, zero per-round jobs)
-    * instead of `iters` distributed aggregates. 5·10⁵ rows × (k+2)
-    * longs ≈ 40 MB — the broadcast-class bound Clusters.graphLocalEdges
-    * uses for graphs. `graft.logit.local.rows` (sys prop, then
-    * SPARK_GRAFT_LOGIT_LOCAL_ROWS) overrides; 0 forces the distributed
-    * path (the spec/probe escape hatch).
+  /** Driver bytes of one collected fit-slice row of [[fitLogitModel]]'s
+    * mirror (the `Row` from `collect` plus its `Array[Long]` copy):
+    * `LOGIT_ROW_BYTES + LOGIT_LONG_BYTES · (k + 2)`. Measured on JDK 17
+    * with compressed oops over 5·10⁵-row collects: 152, 256 and 401 B
+    * per row at k = 1, 4 and 8 (PERF.md §One Fixpoint module).
     */
-  private[graft] def logitLocalRows: Long =
-    sys.props.get("graft.logit.local.rows")
-      .orElse(sys.env.get("SPARK_GRAFT_LOGIT_LOCAL_ROWS"))
-      .map(_.toLong).getOrElse(500000L)
+  private val LOGIT_ROW_BYTES = 48L
+  private val LOGIT_LONG_BYTES = 36L
 
   /** toks + scored CTEs feeding [[langPredSelect]] (reused by the
     * curation funnel; note toks EXCLUDES empty texts, so funnel

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Clusters
+import graft.operators.{Clusters, Fixpoint}
 
 /** Connected-components fixpoint: exact min-labels on chains (the
   * worst diameter case), component separation, determinism under
@@ -109,19 +109,11 @@ class ClustersSpec extends AnyFunSuite with SparkSpec {
     assert(got(2L)._1 === 2L && got(2L)._3 === 0L)
   }
 
-  /** Run `body` with the size-adaptive driver CC disabled, so it
-    * exercises the distributed fixpoint regardless of graph size.
-    */
-  private def forceDistributedCc[T](body: => T): T = {
-    System.setProperty("graft.graph.local.edges", "0")
-    try body finally System.clearProperty("graft.graph.local.edges")
-  }
-
   test("maxIter too small fails loudly, never silently partial") {
-    // distributed path forced: below the r17 size threshold the driver
+    // distributed path forced: within the driver budget the driver
     // union-find needs no rounds, so maxIter cannot trip there
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
-    forceDistributedCc {
+    Fixpoint.withDriverBudget(0) {
       intercept[IllegalStateException] {
         Clusters.connectedComponents(chain.toDF("a", "b"), "a", "b",
           maxIter = 2)
@@ -145,9 +137,7 @@ class ClustersSpec extends AnyFunSuite with SparkSpec {
         .filter { case (a, b) => a != b }
     }
     graphs.zipWithIndex.foreach { case (g, i) =>
-      val local = cc(g)                       // default: driver path
-      val dist = forceDistributedCc(cc(g))    // forced fixpoint
-      assert(local === dist, s"graph $i")
+      mirrorMatchesDistributed(s"graph $i")(cc(g))
     }
   }
 
@@ -163,20 +153,17 @@ class ClustersSpec extends AnyFunSuite with SparkSpec {
         .filter { case (a, b) => a != b }
     }
     graphs.zipWithIndex.foreach { case (g, i) =>
-      assert(lpa(g, 3) === forceDistributedCc(lpa(g, 3)), s"lpa graph $i")
-      def pr(): Map[Long, Long] =
+      mirrorMatchesDistributed(s"lpa graph $i")(lpa(g, 3))
+      mirrorMatchesDistributed(s"pagerank graph $i")(
         Clusters.pageRank(g.toDF("a", "b"), "a", "b", iters = 3)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(pr() === forceDistributedCc(pr()), s"pagerank graph $i")
-      def hits(): Set[(String, Long, Long)] =
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      mirrorMatchesDistributed(s"hits graph $i")(
         Clusters.hits(g.toDF("a", "b"), "a", "b", iters = 2)
           .collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(hits() === forceDistributedCc(hits()), s"hits graph $i")
-      def kcore(): Map[Long, Long] =
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet)
+      mirrorMatchesDistributed(s"kcore graph $i")(
         Clusters.kCore(g.toDF("a", "b"), "a", "b", k = 2, rounds = 3)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(kcore() === forceDistributedCc(kcore()), s"kcore graph $i")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     }
   }
 

@@ -26,13 +26,13 @@ class KnobInventorySpec extends AnyFunSuite {
 
   test("SPARK_GRAFT_* environment names equal the pinned list") {
     assert(scan("SPARK_GRAFT_([A-Z_]+)") === Set(
-      "BENCH_OUT", "CPUS", "EXTRA_CONF", "GRAPH_LOCAL_EDGES",
-      "LOGIT_LOCAL_ROWS", "ONLY", "ORDER", "REPS", "SF_DIR", "STAGE_DIR"))
+      "BENCH_OUT", "CPUS", "EXTRA_CONF", "ONLY", "ORDER", "REPS",
+      "SF_DIR", "STAGE_DIR"))
   }
 
   test("graft.* system properties equal the pinned list") {
     assert(scan("""sys\.props\.get\("(graft\.[A-Za-z0-9_.]+)"\)""") ===
-      Set("graft.graph.local.edges", "graft.logit.local.rows"))
+      Set.empty[String])
   }
 
   test("Bench's full record defaults to this checkout, partial runs to /tmp") {
@@ -42,5 +42,12 @@ class KnobInventorySpec extends AnyFunSuite {
       "/tmp/bench_partial.json")
     assert(Bench.fullRecordPath(Some("/x/out.json"), partial = false) ===
       "/x/out.json")
+    // the stdout record names the file it wrote, relative to the checkout
+    assert(Bench.shownRecordPath(Bench.fullRecordPath(None,
+      partial = false)) === "BENCH_FULL.json")
+    assert(Bench.shownRecordPath(Bench.fullRecordPath(None,
+      partial = true)) === "/tmp/bench_partial.json")
+    assert(Bench.shownRecordPath(Bench.fullRecordPath(Some("/x/out.json"),
+      partial = false)) === "/x/out.json")
   }
 }

@@ -50,21 +50,14 @@ class LogitFitSpec extends AnyFunSuite with SparkSpec {
 
   test("driver-mirror descent ≡ forced-distributed descent (dispatch " +
     "equivalence, full + sampled)") {
-    // `fit` above ran under the default threshold (mirror at this SF);
-    // force the distributed loop and require bit-identical rows
-    System.setProperty("graft.logit.local.rows", "0")
-    try {
-      val dist = TextQueries.queries("q_logit_fit")(spark, sf).collect()
-      assert(fit.toSeq == dist.toSeq,
-        "driver logit mirror diverged from the distributed descent")
-      val distS =
-        TextQueries.queries("q_logit_fit_sampled")(spark, sf).collect()
-      System.clearProperty("graft.logit.local.rows")
-      val mirS =
-        TextQueries.queries("q_logit_fit_sampled")(spark, sf).collect()
-      assert(mirS.toSeq == distS.toSeq,
-        "sampled-fit mirror diverged from the distributed descent")
-    } finally System.clearProperty("graft.logit.local.rows")
+    // the default budget runs the mirror at this SF; the forced
+    // distributed loop must give bit-identical rows
+    mirrorMatchesDistributed(
+        "driver logit mirror diverged from the distributed descent")(
+      TextQueries.queries("q_logit_fit")(spark, sf).collect().toSeq)
+    mirrorMatchesDistributed(
+        "sampled-fit mirror diverged from the distributed descent")(
+      TextQueries.queries("q_logit_fit_sampled")(spark, sf).collect().toSeq)
   }
 
   test("sampled fit: trains on a strict slice, still beats the " +

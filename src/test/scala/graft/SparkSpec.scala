@@ -5,6 +5,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Assertions
+
+import graft.operators.Fixpoint
 
 /** One SparkSession shared by every suite in the forked test JVM. */
 object TestSpark {
@@ -18,8 +21,18 @@ object TestSpark {
 /** Spark jobs and tasks counted by [[SparkSpec.launched]]. */
 final case class Launched(jobs: Int, tasks: Int)
 
-trait SparkSpec {
+trait SparkSpec extends Assertions {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** `op`'s result under the default driver budget (its driver mirror
+    * where the input fits) must equal its result with every mirror
+    * forced off ([[Fixpoint.withDriverBudget]] 0, the distributed loop).
+    */
+  def mirrorMatchesDistributed[T](clue: String)(op: => T): Unit = {
+    val mirror = op
+    val distributed = Fixpoint.withDriverBudget(0)(op)
+    assert(mirror === distributed, clue)
+  }
 
   /** Jobs and tasks launched by the jobs `body` runs on this thread. A
     * job run after `body` drains the listener queue: its end event is
