@@ -127,7 +127,18 @@ object Graft {
     tools.PipelineRunner.runRange(spark, Layout(base),
       tools.PipelineRunner.dateRange(startDate, endDate), fetcher)
 
-  /** Register the gold star schema as SQL views (serving surface). */
+  /** Register the gold star schema as SQL views (serving surface).
+    *
+    * The views answer the version of each table that was live at the
+    * last `serve`: each reads an in-memory copy pinned to that version,
+    * so a later commit neither breaks nor changes them, and calling
+    * `serve` again refreshes the tables whose version moved (an
+    * unchanged star launches no Spark job). A table that fits one scan
+    * split (`spark.sql.files.maxPartitionBytes`) is copied into a single
+    * partition, so its queries need no shuffle. `spark.catalog
+    * .clearCache()` is the one call that un-pins the views. See
+    * [[etl.SilverToGold.registerServingViews]].
+    */
   def serve(spark: SparkSession, base: String): Unit =
     etl.SilverToGold.registerServingViews(spark, Layout(base))
 

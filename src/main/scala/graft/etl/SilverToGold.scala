@@ -1,9 +1,12 @@
 package graft.etl
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{MergeUpsert, VersionedTable}
 import graft.sources.Layout
@@ -151,11 +154,67 @@ object SilverToGold {
       }
     }
 
+  /** A served table's pinned copy: the table path and version it
+    * copies, and the persisted frame.
+    */
+  private final case class Pin(path: String, version: Long, df: DataFrame) {
+    def cached: Boolean = df.storageLevel != StorageLevel.NONE
+    // the match Spark's cache manager makes between two plans
+    def sameEntry(o: Pin): Boolean =
+      df.queryExecution.analyzed.sameResult(o.df.queryExecution.analyzed)
+  }
+
+  // per session: view name -> the pin its view reads. View names are
+  // session-global, so one lake base is served at a time.
+  private val served = mutable.Map.empty[SparkSession, mutable.Map[String, Pin]]
+
   /** Serving surface (reference: src/streamlit_app.py:35-53): register
     * each gold table as a temp view so plain `spark.sql` works over it.
+    *
+    * Snapshot contract: each view reads an in-memory copy of the version
+    * that was live at the last call, so a commit after it neither fails
+    * the view's scans (the commit renames the listed files away) nor
+    * changes its answers. A call re-pins only the tables whose version
+    * moved (or whose copy was dropped): an unchanged star launches no
+    * Spark job. A moved table's new copy is pinned and its view
+    * registered before the superseded copy is unpersisted, so a view
+    * never reads an unpinned table. `spark.catalog.clearCache()` is the
+    * one call that drops the copies; the views then read the pinned
+    * version's files again, and the next call re-pins.
+    *
+    * Each copy is read by file ([[VersionedTable.snapshot]]), so it is
+    * never substituted into a writer's read of the table directory. A
+    * table whose files fit one scan split
+    * (`spark.sql.files.maxPartitionBytes` of on-disk bytes) is copied
+    * into one partition: under `canChangeCachedPlanOutputPartitioning
+    * = false` ([[graft.Graft.sessionConf]]) its scan then reports
+    * `SinglePartition`, which satisfies every aggregate, join and sort
+    * distribution without an exchange, so a dashboard query launches
+    * jobs only for its broadcasts and its result.
     */
   def registerServingViews(spark: SparkSession, layout: Layout): Unit =
-    tables.foreach { case (name, _, _) =>
-      spark.read.parquet(layout.gold(name)).createOrReplaceTempView(name)
+    served.synchronized {
+      val pins = served.getOrElseUpdate(spark, mutable.Map.empty)
+      tables.foreach { case (name, _, _) =>
+        val path = layout.gold(name)
+        val table = VersionedTable(spark, path)
+        val v = table.version()
+        // an unversioned table (0) has no version to compare: re-pinned
+        val pin = pins.get(name)
+          .filter(p => p.path == path && p.cached && v > 0 && p.version == v)
+          .getOrElse(pinned(spark, path, table.snapshot()))
+        pin.df.createOrReplaceTempView(name)
+        pins.put(name, pin).filterNot(_.sameEntry(pin))
+          .foreach(_.df.unpersist(blocking = true))
+      }
     }
+
+  private def pinned(spark: SparkSession, path: String,
+                     snap: VersionedTable.Snapshot): Pin = {
+    val split = spark.sessionState.conf.filesMaxPartitionBytes
+    val copy = (if (snap.bytes <= split) snap.df.coalesce(1) else snap.df)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    copy.count()
+    Pin(path, snap.version, copy)
+  }
 }

@@ -82,14 +82,18 @@ object Bpe {
     val spark = docs.sparkSession
 
     // r17 (guide §1.2 fixed cost per round): iteration state rides a
-    // PERSISTED chain — each round's pair-count job doubles as the
-    // cache fill for that round's token table, so a round is ONE job
-    // instead of the old parquet-write job + commit + re-read. The
-    // fold chain grows the logical plan by one applyMerge per round
-    // (physical reads stay on the previous round's InMemoryRelation
-    // via cache substitution), so lineage is still truncated through
-    // the parquet scratch — but only every TRUNC rounds instead of
-    // every round; the trainer gates (≤ 8 merges) never pay a write.
+    // PERSISTED chain — each round's pair count doubles as the cache
+    // fill for that round's token table, so no round pays the old
+    // parquet-write job + commit + re-read. A round still costs about
+    // three jobs: adaptive execution submits the pair count's shuffle
+    // stage and the top-1 stage as jobs of their own (53 jobs for 17
+    // merges on sf0.001 documents, two of them truncation writes;
+    // BpeSpec bounds it). The fold chain grows the logical plan by one
+    // applyMerge per round (physical reads stay on the previous round's
+    // InMemoryRelation via cache substitution), so lineage is still
+    // truncated through the parquet scratch — but only every TRUNC
+    // rounds instead of every round; the trainer gates (≤ 8 merges)
+    // never pay a write.
     val TRUNC = 8
     val slots = new Fixpoint.Rolling(
       scratchDir.getOrElse(graft.StageDirs.scratch("bpe")), "toks")

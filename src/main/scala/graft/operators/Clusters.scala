@@ -61,8 +61,10 @@ object Clusters {
     (scan, m("n").asInstanceOf[Long])
   }
 
-  /** [[countedEdges]], then CO-LOCATE the cache on the per-round join
-    * key (the q_sssp_hops round-14 contract, PlanShapeSpec-pinned):
+  /** [[countedEdges]], then, for edges too large for a driver mirror
+    * ([[Fixpoint.fitsDriver]]; a mirror gets the flat scan), CO-LOCATE
+    * the cache on the per-round join key (the q_sssp_hops round-14
+    * contract, PlanShapeSpec-pinned):
     * `repartition(key)` before persist makes the InMemoryRelation
     * expose HashPartitioning(key) — under
     * `canChangeCachedPlanOutputPartitioning=false` (set in every engine
@@ -87,7 +89,10 @@ object Clusters {
   private def materializeEdges(df: DataFrame, scratch: String,
                                key: String): (DataFrame, Long) = {
     val (scan, n) = countedEdges(df, scratch)
-    (graft.CacheRegistry.register(
+    // a driver mirror collects the flat scan once; only the round loop
+    // reads the co-located cache
+    if (Fixpoint.fitsDriver(n, EDGE_BYTES)) (scan, n)
+    else (graft.CacheRegistry.register(
       colocated(scan, key)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
       n)

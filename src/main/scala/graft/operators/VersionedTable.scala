@@ -4,7 +4,7 @@ import java.io.IOException
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -75,6 +75,24 @@ final class VersionedTable private (spark: SparkSession, path: String,
     val v = version()
     val df = readParquet(spark, path)
     if (version() == v) df else read()
+  }
+
+  /** The live version opened by its data files rather than by its
+    * directory, with the same footer schema and version re-check as
+    * [[read]]. Spark's cache matches a file scan by its root paths, so
+    * a copy of this frame cached by a reader is never substituted into
+    * the next commit's read of the directory ([[mutate]]); a copy read
+    * through [[read]] would be, and a copy left stale by another writer
+    * would then silently drop that writer's rows.
+    */
+  def snapshot(): VersionedTable.Snapshot = {
+    val v = version()
+    val (summaries, data) = VersionedTable.listing(fs, target)
+    val reader = spark.read.option("basePath", path)
+    val df = VersionedTable.footerSchema(spark, summaries, data)
+      .fold(reader)(reader.schema(_)).parquet(data.map(_.getPath.toString): _*)
+    if (version() == v) VersionedTable.Snapshot(v, data.map(_.getLen).sum, df)
+    else snapshot()
   }
 
   /** Time travel: read version `v` — the live version or any retained
@@ -248,6 +266,11 @@ object VersionedTable {
             retain: Int = 3): VersionedTable =
     new VersionedTable(spark, path, retain)
 
+  /** One version of a table read by its data files, with their total
+    * on-disk bytes.
+    */
+  final case class Snapshot(version: Long, bytes: Long, df: DataFrame)
+
   /** `spark.read.parquet(dir)` without its schema-inference job (a
     * one-task Spark job that ships a Hadoop conf to read one footer).
     * The footer Spark's non-merging inference would read — a
@@ -264,32 +287,42 @@ object VersionedTable {
   private[graft] def readParquet(spark: SparkSession, dir: String,
                                  basePath: Option[String] = None): DataFrame = {
     val reader = basePath.foldLeft(spark.read)(_.option("basePath", _))
-    footerSchema(spark, new Path(dir))
-      .fold(reader.parquet(dir))(reader.schema(_).parquet(dir))
+    val d = new Path(dir)
+    Try(listing(d.getFileSystem(spark.sparkContext.hadoopConfiguration), d))
+      .toOption.flatMap { case (summaries, data) =>
+        footerSchema(spark, summaries, data) }
+      .fold(reader)(reader.schema(_)).parquet(dir)
   }
 
   private val SummaryFiles = Seq("_common_metadata", "_metadata")
   // the key Spark's parquet writer stores its row schema under
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
-  private def footerSchema(spark: SparkSession,
-                           dir: Path): Option[StructType] =
+  /** `dir`'s files under Spark's listing filter (`_`/`.` names are
+    * hidden, except summaries), in path order: (summaries, data files).
+    */
+  private def listing(fs: FileSystem,
+                      dir: Path): (Seq[FileStatus], Seq[FileStatus]) = {
+    def hidden(name: String) =
+      ((name.startsWith("_") && !name.contains("=")) ||
+        name.startsWith(".") || name.endsWith("._COPYING_")) &&
+        !SummaryFiles.exists(name.startsWith)
+    def leaves(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+    leaves(dir).sortBy(_.getPath.toString)
+      .partition(st => SummaryFiles.contains(st.getPath.getName))
+  }
+
+  /** The Spark schema stamped into the footer Spark's non-merging
+    * inference would read: a summary, else the first data file.
+    */
+  private def footerSchema(spark: SparkSession, summaries: Seq[FileStatus],
+                           data: Seq[FileStatus]): Option[StructType] =
     if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean)
       None
     else Try {
       val conf = spark.sparkContext.hadoopConfiguration
-      val fs = dir.getFileSystem(conf)
-      // Spark's listing filter: `_`/`.` names are hidden, except summaries
-      def hidden(name: String) =
-        ((name.startsWith("_") && !name.contains("=")) ||
-          name.startsWith(".") || name.endsWith("._COPYING_")) &&
-          !SummaryFiles.exists(name.startsWith)
-      def leaves(p: Path): Seq[FileStatus] =
-        fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName))
-          .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
-      val files = leaves(dir).sortBy(_.getPath.toString)
-      val (summaries, data) =
-        files.partition(st => SummaryFiles.contains(st.getPath.getName))
       val footer = SummaryFiles
         .flatMap(n => summaries.find(_.getPath.getName == n)) ++ data.take(1)
       footer.headOption.flatMap { st =>

@@ -12,6 +12,8 @@ import graft.operators.Bpe
 class BpeSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
+  private val sf = "/root/testdata/sf0.001"
+
   private def applied(toks: Seq[String], l: String, r: String): Seq[String] =
     Seq(Tuple1(toks)).toDF("toks")
       .select(Bpe.applyMerge(col("toks"), l, r).as("out"))
@@ -100,10 +102,19 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
     assert(total < raw) // every applied merge removed one slot
   }
 
+  test("train: at most three jobs per merge round, plus the truncation " +
+    "writes") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    // 17 rounds truncate at ranks 8 and 16; measured 53 jobs
+    val jobs = launched(Bpe.train(docs, "doc_id", "text", nMerges = 17)).jobs
+    assert(jobs <= 3 * 17 + 2, s"$jobs jobs for 17 merge rounds")
+    graft.CacheRegistry.releaseAll()
+  }
+
   test("q_bpe_sampled gate: slice-trained ranks are dense, counts " +
     "non-increasing, corpus apply surfaces live merged units") {
     val out = graft.operators.TextQueries
-      .queries("q_bpe_sampled")(spark, "/root/testdata/sf0.001")
+      .queries("q_bpe_sampled")(spark, sf)
       .orderBy(col("rank")).collect()
     assert(out.nonEmpty, "sampled trainer learned nothing on sf0.001")
     assert(out.map(_.getAs[Long]("rank")).toSeq ===

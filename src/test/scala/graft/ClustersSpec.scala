@@ -167,6 +167,19 @@ class ClustersSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("driver mirrors read the flat truncated edges: CC, LPA, kCore " +
+    "and PageRank each launch the truncation write and one collect") {
+    val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L),
+      (5L, 6L), (4L, 6L), (6L, 7L)).toDF("a", "b")
+    val jobs = Seq[(String, () => Unit)](
+      "cc" -> (() => Clusters.connectedComponents(g, "a", "b").collect()),
+      "lpa" -> (() => Clusters.labelPropagation(g, "a", "b").collect()),
+      "kCore" -> (() => Clusters.kCore(g, "a", "b", k = 2).collect()),
+      "pageRank" -> (() => Clusters.pageRank(g, "a", "b").collect()))
+      .map { case (name, run) => name -> launched(run()).jobs }
+    assert(jobs.toMap === jobs.map(_._1 -> 2).toMap)
+  }
+
   test("random graphs ≡ driver-side union-find reference (10 seeds)") {
     def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
       val parent = scala.collection.mutable.Map.empty[Long, Long]

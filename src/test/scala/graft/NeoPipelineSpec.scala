@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.{BronzeToSilver, SilverToGold}
@@ -12,7 +13,8 @@ import graft.sources.{BronzeIngest, Layout, NeoFixture}
   * (FIXTURES.md §1): bronze ingest → silver flatten → gold star schema,
   * including the day-2 incremental merge and idempotent re-runs.
   */
-class NeoPipelineSpec extends AnyFunSuite with SparkSpec {
+class NeoPipelineSpec extends AnyFunSuite with SparkSpec
+    with BeforeAndAfterAll {
 
   private lazy val base =
     Files.createTempDirectory("graft-neo").toString
@@ -35,6 +37,9 @@ class NeoPipelineSpec extends AnyFunSuite with SparkSpec {
       runDay(NeoFixture.day2Date, NeoFixture.day2))
 
   private def pipelineRan: Unit = { profiledRows; () }
+
+  // drop the served views' pinned copies once the suite is done
+  override def afterAll(): Unit = spark.catalog.clearCache()
 
   private def gold(name: String) = {
     pipelineRan
