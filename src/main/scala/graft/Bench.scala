@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.operators.Observability
+
 /** Driver-run benchmark: times every SparkEntry query at the given SF.
   *
   * Robustness protocol (round-4, after the round-3 record showed 2-9×
@@ -14,9 +16,12 @@ import org.apache.spark.sql.SparkSession
   *     whoever ran before it — timings are order-independent;
   *   - an explicit GC runs before each timed run, so one query's
   *     garbage is not another query's pause;
-  *   - queries run in sorted-name order (not Map hash order), and
-  *     `SPARK_GRAFT_ORDER=reverse` reruns the suite backwards — the
-  *     order-sensitivity experiment PERF.md reports.
+  *   - queries run in sorted-name order (not Map hash order); PERF.md
+  *     §Bench robustness & the order audit has the reverse-order run;
+  *   - each timed `.count()` runs inside [[Observability.launched]],
+  *     which counts the Spark jobs and tasks it launched (a stream
+  *     gate's micro-batch jobs included); the listener-drain job that
+  *     completes the count runs after the timer stops.
   *
   * Output: ONE JSON line `{"metric":"total","value":<sum of medians>,
   * "unit":"sec","queries":{name:median},"sf":...}` (the driver's
@@ -24,7 +29,9 @@ import org.apache.spark.sql.SparkSession
   * rep-hygiene pair `calib`/`noisy_reps` (per-rep fixed-probe times;
   * a rep whose calibration reads >1.5× the best one ran under
   * external load — discount its rep_total when adjudicating
-  * round-over-round drift). The stdout
+  * round-over-round drift). The full record also carries `jobs` and
+  * `tasks`, `{name: median over reps}` of each query's launched Spark
+  * jobs and tasks. The stdout
   * line carries a fixed 20-query flagship map so it fits the driver's
   * ~2 KB stdout tail; the full 300+-query map is written to
   * BENCH_FULL.json (or /tmp/bench_partial.json for SPARK_GRAFT_ONLY
@@ -35,21 +42,20 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val reverse = sys.env.get("SPARK_GRAFT_ORDER").contains("reverse")
-    // Graft.sessionConf plus the bench-only conf fold, shared with the
-    // measurement probes (tools.BenchSession)
-    val spark = tools.BenchSession.builder(cpus.toString).getOrCreate()
+    val spark = Graft.newSession(s"local[$cpus]", "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     warmup(spark, sfDir)
 
     // dev-only single-query iteration: SPARK_GRAFT_ONLY=q_a,q_b
     // (the driver never sets it, so the recorded suite is always full)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    val names = if (reverse) names0.reverse else names0
     val samples =
       scala.collection.mutable.Map.empty[String, List[Double]]
+        .withDefaultValue(Nil)
+    val launches =
+      scala.collection.mutable.Map.empty[String, List[Observability.Launched]]
         .withDefaultValue(Nil)
     val errors = scala.collection.mutable.Map.empty[String, String]
     // Idle-load calibration (round-15 rep-hygiene protocol): before
@@ -70,13 +76,16 @@ object Bench {
         CacheRegistry.releaseAll()
         spark.catalog.clearCache()
         System.gc()
-        val t0 = System.nanoTime()
         // a failed rep is an ERROR, never a sample: the elapsed time of
         // a crash is not a measurement, and a query that fails every
         // rep must read as -1 in the record, not as a fast median
         try {
-          SparkEntry.queries(name)(spark, sfDir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
+          var sec = 0.0
+          launches(name) ::= Observability.launched(spark) {
+            val t0 = System.nanoTime()
+            SparkEntry.queries(name)(spark, sfDir).count()
+            sec = (System.nanoTime() - t0) / 1e9
+          }
           samples(name) ::= sec
           sec
         } catch {
@@ -93,11 +102,16 @@ object Bench {
       }.sum
     }
 
-    def median(xs: List[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
-    val med = names0.map(n =>
+    def median[T: Ordering](xs: List[T]): T = { val s = xs.sorted; s(s.size / 2) }
+    val med = names.map(n =>
       n -> (if (samples(n).isEmpty) -1.0 else median(samples(n))))
-    val qs = med.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def perQuery[T](f: String => T): String =
+      names.map(n => s"\"$n\":${f(n)}").mkString("{", ",", "}")
+    val qs = perQuery(med.toMap)
+    def launchMedian(count: Observability.Launched => Int)(n: String) =
+      if (launches(n).isEmpty) -1 else median(launches(n).map(count))
+    val jobsJson = perQuery(launchMedian(_.jobs))
+    val tasksJson = perQuery(launchMedian(_.tasks))
     // the headline total sums MEASUREMENTS only: a query that failed
     // every rep reports -1 in `queries` (sentinel) and would otherwise
     // SUBTRACT from the total, mixing sentinel and measurement
@@ -114,7 +128,7 @@ object Bench {
     val noisyReps =
       if (calibs.isEmpty) 0
       else calibs.count(_ > calibs.min * 1.5)
-    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus,"reps":$reps,"rep_totals":$rt,"calib":$calibJson,"noisy_reps":$noisyReps$errJson}"""
+    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus,"reps":$reps,"rep_totals":$rt,"calib":$calibJson,"noisy_reps":$noisyReps,"jobs":$jobsJson,"tasks":$tasksJson$errJson}"""
     // The driver keeps only a ~2 KB TAIL of stdout and parses the last
     // JSON line it finds there. A 337-query map is ~10 KB, so printing
     // the full record decapitated it and BENCH_r08..r10 recorded

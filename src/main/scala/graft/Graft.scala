@@ -19,17 +19,18 @@ import graft.sources.{FeedFetcher, Layout}
 object Graft {
 
   /** The ONE ordered conf list every graft session is built from —
-    * the library, Verify, Bench, the test suite, the pipeline CLI and
-    * every probe fold exactly this onto their builder, so a plan one of
+    * the library, Verify, Bench, PlanAudit, the test suite and the
+    * pipeline CLI fold exactly this onto their builder, so a plan one of
     * them inspects is the plan the others run:
     *   - streaming state: RocksDB provider + join state format v3
     *     (virtual column families — ONE store per partition for a
     *     stream-stream join instead of four; measured 2.5× on the
-    *     stream-stream attribution gates, SpotBench 7.8 → 3.0 s), with
-    *     changelog checkpointing (each commit uploads the batch's
-    *     changelog, not a full snapshot: cumulative state-commit time on
-    *     the dedupe gates −40 %) and no get-before-put row counting for
-    *     the numRowsTotal metric the library never reads. State layout
+    *     stream-stream attribution gates, 7.8 → 3.0 s: PERF.md §Retired
+    *     probe mains), with changelog checkpointing (each commit
+    *     uploads the batch's changelog, not a full snapshot: cumulative
+    *     state-commit time on the dedupe gates −40 %) and no
+    *     get-before-put row counting for the numRowsTotal metric the
+    *     library never reads. State layout
     *     never changes emitted rows — the stream gates' oracle hashes
     *     pin that;
     *   - UTC session time zone;
@@ -83,19 +84,12 @@ object Graft {
   ) ++ localWorkerThreads(master).map(n =>
     "spark.sql.shuffle.partitions" -> n.toString)
 
-  /** [[sessionConf]] on a builder for `master`, before `getOrCreate` —
-    * for an entry point that adds its own confs last (Bench).
-    */
-  private[graft] def sessionBuilder(master: String,
-                                    appName: String): SparkSession.Builder =
-    sessionConf(master).foldLeft(
-      SparkSession.builder().master(master).appName(appName)) {
-      case (b, (k, v)) => b.config(k, v) }
-
   /** A session configured the way the library expects: [[sessionConf]]. */
   def newSession(master: String = "local[*]",
                  appName: String = "graft"): SparkSession =
-    sessionBuilder(master, appName).getOrCreate()
+    sessionConf(master).foldLeft(
+      SparkSession.builder().master(master).appName(appName)) {
+      case (b, (k, v)) => b.config(k, v) }.getOrCreate()
 
   /** Worker-thread count of a LOCAL master string, None for cluster
     * masters. Covers every form Spark's `local` family accepts — a

@@ -3,7 +3,7 @@ package graft.etl
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -214,7 +214,9 @@ object SilverToGold {
     val split = spark.sessionState.conf.filesMaxPartitionBytes
     val copy = (if (snap.bytes <= split) snap.df.coalesce(1) else snap.df)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    copy.count()
+    // fills the cache in one job; count() takes two under AQE, which
+    // fills the table cache in a query stage of its own first
+    copy.foreachPartition((_: Iterator[Row]) => ())
     Pin(path, snap.version, copy)
   }
 }

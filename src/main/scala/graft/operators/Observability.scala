@@ -1,10 +1,15 @@
 package graft.operators
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Pipeline observability via `Dataset.observe`: named metrics (row
@@ -83,5 +88,63 @@ object Observability {
 
     override def close(): Unit =
       spark.listenerManager.unregister(listener)
+  }
+
+  /** Spark jobs and tasks counted by [[launched]]. */
+  final case class Launched(jobs: Int, tasks: Int)
+
+  /** Jobs and tasks launched by `body`: the jobs it runs on this thread,
+    * plus every job of a streaming query that starts while it runs. A
+    * stream runs its micro-batches on its own thread under job group =
+    * the query's run id, not the caller's group, so those groups are
+    * added as their queries start. A job run after `body` drains the
+    * listener queue: its end event is delivered after every event `body`
+    * posted, so the counts are complete when this returns.
+    */
+  def launched(spark: SparkSession)(body: => Unit): Launched = {
+    val sc = spark.sparkContext
+    val group = s"launched-${System.nanoTime()}"
+    val barrier = s"$group-barrier"
+    def groupOf(props: java.util.Properties): String =
+      Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .getOrElse("")
+    val groups = ConcurrentHashMap.newKeySet[String]()
+    groups.add(group)
+    val jobs = new AtomicInteger()
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new AtomicInteger()
+    val barrierJobs = ConcurrentHashMap.newKeySet[Int]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: QueryStartedEvent => groups.add(s.runId.toString)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = groupOf(e.properties)
+        if (groups.contains(g)) jobs.incrementAndGet()
+        else if (g == barrier) barrierJobs.add(e.jobId)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (barrierJobs.contains(e.jobId)) drained.countDown()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (groups.contains(groupOf(e.properties)))
+          stages.add(e.stageInfo.stageId)
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(barrier, "listener barrier")
+      sc.parallelize(Seq(1), 1).count()
+      if (!drained.await(60, TimeUnit.SECONDS))
+        throw new IllegalStateException("listener queue never drained")
+      Launched(jobs.get(), tasks.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

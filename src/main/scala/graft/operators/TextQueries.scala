@@ -3386,9 +3386,10 @@ object TextQueries {
     // literals: an r16 A/B against a one-row-broadcast parameter form
     // (stable codegen text across rounds) measured WORSE wall time —
     // the extra broadcast query-stage job per round cost more than the
-    // per-round literal-plan codegen it saved (JobCountProbe: 42 → 56
-    // jobs, 3.5 → 4.3 s) — so the literal form stands, and the raised
-    // codegen cache (Graft.sessionConf) absorbs the recompiles across reps.
+    // per-round literal-plan codegen it saved (42 → 56 jobs, 3.5 →
+    // 4.3 s: PERF.md §Retired probe mains) — so the literal form
+    // stands, and the raised codegen cache (Graft.sessionConf) absorbs
+    // the recompiles across reps.
     val w = Array.fill(k + 1)(BigInt(0))
     if (Fixpoint.fitsDriver(n,
         LOGIT_ROW_BYTES + LOGIT_LONG_BYTES * (k + 2))) {

@@ -329,24 +329,6 @@ object VectorQueries {
   private[graft] def bruteTopk(s: SparkSession, dir: String): DataFrame =
     bruteTopkFrom(loadEmb(s, dir))
 
-  /** The (query, candidate) set an IVF probe actually scores under
-    * `centroids` — the WORK axis of the recall/cost trade (an
-    * unbalanced index can buy recall at equal nprobe by probing
-    * heavier cells). Used by RecallProbe and AnnSpec, not a query.
-    */
-  private[graft] def ivfCandidates(emb: DataFrame,
-                                   centroids: DataFrame): DataFrame = {
-    val centArr = centroidArray(centroids)
-    val assigned = withCell(
-      emb.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("cvec")),
-      centArr, col("cvec"))
-    assigned.join(broadcast(probeCells(queryVectors(emb), centArr, N_PROBE)),
-        Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
-  }
-
   /** First-N seed centroids — deterministic, zero-cost, and what the
     * fitted index starts from.
     */
@@ -378,10 +360,11 @@ object VectorQueries {
     ivfTopkFrom(emb, seedCentroids(emb))
   }
 
-  /** Lloyd iterations for the fitted index. RecallProbe (PERF.md) shows
-    * recall on the uniform-random testdata is iteration-count NOISE at
-    * the 50-slot granularity (seeds 92, fit1 92, fit2 90, fit4 92 at
-    * sf0.01; scanned volume equal within 7 %) — there is no cluster
+  /** Lloyd iterations for the fitted index. PERF.md §Fitted IVF: recall
+    * vs work shows recall on the uniform-random testdata is
+    * iteration-count NOISE at the 50-slot granularity (seeds 92, fit1
+    * 92, fit2 90, fit4 92 at sf0.01; scanned volume equal within 7 %) —
+    * there is no cluster
     * structure to exploit, so one exact update step is the whole
     * benefit (WCSS does drop, AnnSpec pins it) at the lowest cost.
     */
@@ -450,8 +433,8 @@ object VectorQueries {
     * float loop. At 100 TB the coded table is the index you persist —
     * it fits in a fraction of the vector table's footprint and the ADC
     * scan is bandwidth-bound on ~12 % of the bytes. M is the
-    * compression↔recall dial (RecallProbe: recall@5 = 16/38/48 % at
-    * M = 8/16/32 on these iid-random embeddings — PQ's worst case, no
+    * compression↔recall dial (PERF.md §Fitted IVF: recall@5 =
+    * 16/38/48 % at M = 8/16/32 on these iid-random embeddings — PQ's worst case, no
     * inter-dim correlation to exploit; production codebooks are
     * KMeans-fitted with K = 256, the refineQuantized upgrade path).
     *
@@ -787,7 +770,7 @@ object VectorQueries {
     * centroid row, in-row argmin); scoring reuses the ADC machinery;
     * both stay engine-exact, so the composition sits behind the same
     * DuckDB hash gate. Recall compounds the two approximations
-    * (RecallProbe measures all three side by side).
+    * (PERF.md §Fitted IVF: recall vs work has all three side by side).
     */
   private[graft] def ivfPqTopk(s: SparkSession, dir: String): DataFrame = {
     val emb = loadEmb(s, dir)
@@ -1513,8 +1496,8 @@ object VectorQueries {
       // centroid / MMR-sel class r16 already collected per round. The
       // r16 shape still paid K−1 collect jobs (anti-join + penalty
       // join + union per round, each a multi-stage AQE query over
-      // tiny tables — 48 jobs total on JobCountProbe); the driver
-      // loop replays the identical integer argmin
+      // tiny tables — 48 jobs total, PERF.md §Retired probe mains);
+      // the driver loop replays the identical integer argmin
       // (min ns = ms·3 − rel·7, then min cand_id) with ZERO jobs
       // after the two cache reads, and returns the Q·K-row selection
       // as one LocalRelation. The corpus-scale parts (rel pass,

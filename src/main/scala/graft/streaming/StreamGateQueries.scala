@@ -250,8 +250,8 @@ object StreamGateQueries {
     * staged fixture is one parquet file, so without the repartition
     * every consumer's per-row map work (regex shingling, md5 per
     * shingle, MinHash, model scoring) serialized onto a single core
-    * below the first exchange — StreamProgressProbe measured the
-    * neardup gate's 5.8 s addBatch as exactly that single-task stage.
+    * below the first exchange — the neardup gate's 5.8 s addBatch was
+    * exactly that single-task stage (PERF.md §Retired probe mains).
     * Same rationale (and row-identical semantics) as
     * [[graft.Tables.load]]'s compute-heavy fan-out: a production
     * micro-batch arrives as many files and the exchange moves

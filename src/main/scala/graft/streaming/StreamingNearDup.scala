@@ -105,9 +105,9 @@ object StreamingNearDup {
     * by id AFTER candidate generation. The old single banded table
     * shipped every corpus shingle SET 4× (once per band row) through
     * the join's sort/shuffle; measured on the gate fixture that was
-    * the dominant addBatch term (StreamProgressProbe r17: 10.1 s →
-    * see plans/r17). Both ride ONE persisted `prepared` pass, so the
-    * corpus is tokenized/hashed once, same as before.
+    * the dominant addBatch term (r17: 10.1 s, PERF.md §Retired probe
+    * mains). Both ride ONE persisted `prepared` pass, so the corpus is
+    * tokenized/hashed once, same as before.
     */
   case class CorpusIndex(bands: DataFrame, payload: DataFrame)
 

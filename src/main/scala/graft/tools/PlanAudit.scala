@@ -1,5 +1,9 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.execution.ExplainMode
+
 import graft.SparkEntry
 
 /** Physical-plan inventory over EVERY declared query — the evidence
@@ -13,23 +17,38 @@ import graft.SparkEntry
   * round and diffed, it catches silent regressions PlanShapeSpec's
   * targeted pins don't cover (e.g. a refactor that re-introduces a
   * Window funnel or an accidental BroadcastNestedLoopJoin).
+  *
+  * Usage: `runMain graft.tools.PlanAudit <sf-dir> [<out-dir>]`. With an
+  * out-dir it also writes each query's `.explain("formatted")` to
+  * `<out-dir>/<query>.txt` — the before/after plan evidence an
+  * optimization commits (`plans/rNN/`). `SPARK_GRAFT_ONLY=q_a,q_b`
+  * audits only those queries. Fixpoint and stream queries EXECUTE their
+  * loop jobs while the returned frame is built; the plan is that of the
+  * returned frame, the one the oracle sees.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val outDir = args.lift(1)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.Graft.newSession(s"local[$cpus]", "graft-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
+    outDir.foreach(d => Files.createDirectories(Paths.get(d)))
 
     def countIn(plan: String, marker: String): Int =
       marker.r.findAllMatchIn(plan).size
 
     println(Seq("query", "exchanges", "bhj", "smj", "bnlj", "window",
       "codegen_spans", "sorts").mkString("\t"))
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
+    val rows = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .flatMap { case (name, fn) =>
         try {
-          val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+          val qe = fn(spark, sfDir).queryExecution
+          val plan = qe.executedPlan.toString
+          outDir.foreach(d => Files.writeString(Paths.get(d, s"$name.txt"),
+            qe.explainString(ExplainMode.fromString("formatted"))))
           val r = (name,
             countIn(plan, "Exchange hashpartitioning"),
             countIn(plan, "BroadcastHashJoin"),
@@ -47,7 +66,7 @@ object PlanAudit {
             System.err.println(s"[audit] $name failed: ${e.getMessage}")
             None
         }
-    }
+      }
     val n = rows.size
     def tally(f: ((String, Int, Int, Int, Int, Int, Int, Int)) => Int) =
       rows.map(f).sum

@@ -68,7 +68,7 @@ class AnnSpec extends AnyFunSuite with SparkSpec {
   test("PQ-ADC recall@k: mean ≥ 35 % at sf0.01 (measured 48 %)") {
     // iid-random embeddings are PQ's worst case (no inter-dim
     // correlation); the pin is a floor against code regressions, not a
-    // quality target — RecallProbe records the honest trade per M
+    // quality target — PERF.md §Fitted IVF records the honest trade per M
     val r = VectorQueries.recallOf(
         VectorQueries.bruteTopk(spark, sf),
         VectorQueries.queries("q_ann_pq_topk")(spark, sf))
@@ -98,7 +98,7 @@ class AnnSpec extends AnyFunSuite with SparkSpec {
 
   test("fitted PQ codebook: recall ≥ the first-K-slices codebook") {
     // one per-subspace Lloyd iteration lifts ADC recall 48 → 60 % at
-    // sf0.01 (RecallProbe) — training the codebook matters even on
+    // sf0.01 (PERF.md §Fitted IVF) — training the codebook matters even on
     // iid data; the pin is ≥ so a fit regression cannot hide
     def mean(df: org.apache.spark.sql.DataFrame): Double = {
       val r = df.collect().map(_.getAs[Long]("recall_pct"))
@@ -143,7 +143,7 @@ class AnnSpec extends AnyFunSuite with SparkSpec {
     // Context for the pin: this testdata is uniform random (no cluster
     // structure), so seed-vs-fitted recall differs only by noise at the
     // 50-slot granularity and scanned volume is equal within 7 %
-    // (RecallProbe table in PERF.md) — the inequality asserts fitting
+    // (PERF.md §Fitted IVF: recall vs work) — the inequality asserts fitting
     // never LOSES recall at the chosen operating point; the WCSS pin
     // below asserts what Lloyd provably improves.
     def meanRecall(approx: org.apache.spark.sql.DataFrame): Double = {

@@ -4,12 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
 
-/** Driver-contract invariants: every declared query is oracle-checked
-  * (or explicitly allowlisted rows-only), no orphaned oracle SQL, and no
-  * name collisions across operator modules — `Map ++` would silently
-  * drop a query if two modules reused a key.
+/** Driver-contract invariants: the flagship entry returns rows, every
+  * declared query is oracle-checked (or explicitly allowlisted
+  * rows-only), no orphaned oracle SQL, and no name collisions across
+  * operator modules — `Map ++` would silently drop a query if two
+  * modules reused a key.
   */
-class ContractSpec extends AnyFunSuite {
+class ContractSpec extends AnyFunSuite with SparkSpec {
 
   // empty since round 7: q_profile_approx became oracle-gated by
   // reducing each engine's own sketch-vs-exact check to booleans
@@ -19,6 +20,10 @@ class ContractSpec extends AnyFunSuite {
     val missing = SparkEntry.queries.keySet --
       SparkEntry.oracleSql.keySet -- rowsOnlyAllowlist
     assert(missing.isEmpty, s"queries without oracle: $missing")
+  }
+
+  test("the flagship entry returns rows on sf0.001") {
+    assert(SparkEntry.entry(spark).count() > 0)
   }
 
   test("no orphaned oracle SQL") {

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the settings the library reads: every `SPARK_GRAFT_*` name and
   * every `graft.*` system property in `src/main/scala`. A new knob has to
   * be added here and to the README's Settings table; a deleted one has
-  * to leave both.
+  * to leave both. Also pins the runnable mains: Bench is the one timing
+  * loop, PlanAudit the one plan tool.
   */
 class KnobInventorySpec extends AnyFunSuite {
 
@@ -26,8 +27,19 @@ class KnobInventorySpec extends AnyFunSuite {
 
   test("SPARK_GRAFT_* environment names equal the pinned list") {
     assert(scan("SPARK_GRAFT_([A-Z_]+)") === Set(
-      "BENCH_OUT", "CPUS", "EXTRA_CONF", "ONLY", "ORDER", "REPS",
-      "SF_DIR", "STAGE_DIR"))
+      "BENCH_OUT", "CPUS", "ONLY", "REPS", "SF_DIR", "STAGE_DIR"))
+  }
+
+  test("the objects declaring a main equal the pinned list") {
+    // each `def main(` belongs to the nearest `object` declared above it
+    val mains = mainSources.flatMap { src =>
+      "def main\\(".r.findAllMatchIn(src).map { m =>
+        "\\bobject ([A-Z]\\w*)".r.findAllMatchIn(src.substring(0, m.start))
+          .map(_.group(1)).toSeq.last
+      }
+    }
+    assert(mains.sorted === Seq("Bench", "PipelineRunner", "PlanAudit",
+      "ScaleStage", "Verify"))
   }
 
   test("graft.* system properties equal the pinned list") {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Observability
@@ -51,5 +52,22 @@ class ObservabilitySpec extends AnyFunSuite with SparkSpec {
       }
       assert(latest === Some(1L))
     } finally tap.close()
+  }
+
+  test("launched counts the micro-batch jobs of a stream started in body") {
+    val dir = Files.createTempDirectory("graft_launched_").toString
+    Seq(1L, 2L, 3L).toDF("id").write.parquet(s"$dir/in")
+    val sink = s"launched_${System.nanoTime()}"
+    val counted = launched {
+      val q = spark.readStream.schema("id BIGINT").parquet(s"$dir/in")
+        .writeStream.format("memory").queryName(sink)
+        .option("checkpointLocation", s"$dir/checkpoint")
+        .trigger(Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(60000L), "stream never terminated")
+    }
+    assert(spark.table(sink).count() === 3L)
+    // the batch runs its jobs under the query's own job group
+    assert(counted.jobs > 0)
+    assert(counted.tasks > 0)
   }
 }
