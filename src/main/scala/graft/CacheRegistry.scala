@@ -1,11 +1,15 @@
 package graft
 
+import java.util.UUID
+
 import scala.collection.mutable
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Dataset
 
-/** Tracks every DataFrame the library persists so callers can release
-  * them deterministically.
+/** Tracks every DataFrame the library persists, and owns the scratch
+  * parquet the iterative operators write, so callers can release both
+  * deterministically.
   *
   * Operators like [[operators.Dedup.lshVerifiedPairs]] persist shared
   * intermediates (signatures, shingle sets) because several downstream
@@ -15,6 +19,9 @@ import org.apache.spark.sql.Dataset
   * caller's action ran. The contract instead:
   *
   *   - every `persist` in library code goes through [[register]];
+  *   - every scratch slot (a [[operators.Fixpoint]] truncation's
+  *     parquet) comes from [[scratch]], one fresh slot per operator
+  *     call, so a result outlives any number of later calls;
   *   - callers invoke [[Graft.releaseCaches]] (→ [[releaseAll]]) once
   *     they have materialized what they need;
   *   - a long-lived session that never releases leaks nothing NEW per
@@ -29,6 +36,11 @@ import org.apache.spark.sql.Dataset
   * [[releaseAll]] by design: there is no public handle to free them
   * earlier, and holding the Dataset here would only DELAY the GC that
   * releases them.
+  *
+  * One lifetime for both: a result that reads a scratch slot or a
+  * cache stays valid until [[releaseAll]]. The release is process-wide:
+  * it drops every caller's caches and scratch, so a concurrent caller
+  * still reading a result must not be released under.
   *
   * Thread-safe; unpersist is non-blocking (async block cleanup).
   */
@@ -46,61 +58,47 @@ object CacheRegistry {
     ds
   }
 
-  // scratch directories whose lifetime is "until releaseCaches": used by
-  // per-instance slots (e.g. DedupPlan's lineage-truncation parquet) that
-  // cannot ride StageDirs' two-generation rotation because an older
-  // instance may still be live while newer ones are constructed
-  private val scratchDirs = mutable.LinkedHashSet.empty[String]
+  // one scratch root per JVM: the pid keeps two JVMs on one checkout
+  // apart, the random suffix a reused pid
+  private val jvmId =
+    s"${ProcessHandle.current.pid}_${UUID.randomUUID.toString.take(8)}"
 
-  /** Record a scratch dir for deletion at [[releaseAll]]; returns it. */
-  def registerScratch(dir: String): String = synchronized {
-    scratchDirs += dir
-    dir
+  private[graft] def scratchRoot(base: String): Path =
+    new Path(base, s"scratch/$jvmId")
+
+  /** Slot `n` of `tag` under `base`'s scratch root, as a path string. */
+  private[graft] def slotPath(base: String, tag: String, n: Long): String =
+    new Path(scratchRoot(base), s"${tag}_$n").toString
+
+  private val root = scratchRoot(StageDirs.base)
+  private var slots = 0L
+  private var rootMarked = false
+
+  /** A fresh scratch slot `<StageDirs.base>/scratch/<jvm-id>/<tag>_<n>`
+    * for one operator call. No other call is handed the same slot, and
+    * it lives until [[releaseAll]], like the persisted caches it backs.
+    * The first slot creates the root and marks it for deletion when the
+    * JVM exits, so a process that never releases leaves nothing behind
+    * at a normal exit.
+    */
+  def scratch(tag: String): String = synchronized {
+    if (!rootMarked) {
+      val fs = StageDirs.fs(root)
+      fs.mkdirs(root)
+      fs.deleteOnExit(root)
+      rootMarked = true
+    }
+    slots += 1
+    slotPath(StageDirs.base, tag, slots)
   }
 
-  /** Unpersist every registered Dataset, delete every registered scratch
-    * dir, and clear the registry.
-    *
-    * Deletion goes through the Hadoop FileSystem resolved from each
-    * path — NOT java.nio — because `SPARK_GRAFT_STAGE_DIR` may point at
-    * shared/cluster storage (the documented cluster use) where the
-    * parquet was written through Hadoop FS and a local-FS delete would
-    * silently no-op and leak (ADVICE r13). Empty per-plan parent dirs
-    * (e.g. `dedup_plan_N/` after its `survivors`/`pairs` slots go) are
-    * swept too.
+  /** Unpersist every registered Dataset, delete this JVM's scratch root
+    * with every slot [[scratch]] handed out, and clear the registry.
     */
   def releaseAll(): Unit = synchronized {
     handles.values.foreach(_.unpersist(blocking = false))
     handles.clear()
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    scratchDirs.foreach { d =>
-      // best-effort per dir: a transient FS error (outage, permission,
-      // concurrent delete between exists and listStatus) must not
-      // abort the sweep or crash the caller mid-Verify/Bench — the
-      // contract the pre-r14 java.nio path had (review, round 14)
-      try {
-        val p = new org.apache.hadoop.fs.Path(d)
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p)) fs.delete(p, true)
-        val parent = p.getParent
-        if (parent != null && fs.exists(parent) &&
-            fs.listStatus(parent).isEmpty)
-          fs.delete(parent, false)
-      } catch {
-        // NonFatal, not just IOException: Path() throws
-        // IllegalArgumentException on a malformed dir string and FS
-        // impls surface unchecked RuntimeExceptions — any per-dir
-        // failure must leave the sweep (and scratchDirs.clear()) intact
-        // (ADVICE r14)
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[cache-registry] scratch sweep of $d " +
-            s"failed (left behind): ${e.getMessage}")
-      }
-    }
-    scratchDirs.clear()
+    StageDirs.deleteRecursively(root.toString)
   }
 
   /** Number of currently registered handles (for specs/diagnostics). */

@@ -179,25 +179,22 @@ object Graft {
     * distributed connected components — see [[operators.Clusters]].
     */
   def duplicateClusters(pairs: DataFrame, src: String = "doc_a",
-                        dst: String = "doc_b",
-                        scratchDir: Option[String] = None): DataFrame =
-    Clusters.connectedComponents(pairs, src, dst, scratchDir)
+                        dst: String = "doc_b"): DataFrame =
+    Clusters.connectedComponents(pairs, src, dst)
 
   /** Integer PageRank centrality over a near-dup pair list (canonical-
     * doc selection) — see [[operators.Clusters.pageRank]].
     */
   def pageRank(pairs: DataFrame, src: String = "doc_a",
-               dst: String = "doc_b", iters: Int = 5,
-               scratchDir: Option[String] = None): DataFrame =
-    Clusters.pageRank(pairs, src, dst, iters, scratchDir)
+               dst: String = "doc_b", iters: Int = 5): DataFrame =
+    Clusters.pageRank(pairs, src, dst, iters)
 
   /** Train BPE merges over a document table; apply them with
     * [[operators.Bpe.applyMerges]] — see [[operators.Bpe]].
     */
   def bpeTrain(docs: DataFrame, id: String = "doc_id",
-               text: String = "text", nMerges: Int = 16,
-               scratchDir: Option[String] = None): DataFrame =
-    Bpe.train(docs, id, text, nMerges, scratchDir)
+               text: String = "text", nMerges: Int = 16): DataFrame =
+    Bpe.train(docs, id, text, nMerges)
 
   /** One keep-doc per near-dup cluster by (quality desc, id asc);
     * `quality` carries (doc_id, quality). The keep/drop list a curation
@@ -214,10 +211,12 @@ object Graft {
     RangeJoin.joinPointInInterval(points, ptCol, intervals, loCol, hiCol)
 
   /** Release every intermediate the library has persisted (signatures,
-    * shingle sets, fingerprints). Call after materializing the results
-    * of the dedup/similarity operators — they cache shared intermediates
-    * for the duration of the computation, and only the caller knows when
-    * the last action has run. See [[CacheRegistry]] for the contract.
+    * shingle sets, fingerprints) and delete every scratch slot its
+    * iterative operators wrote (the graph, BPE and hierarchy
+    * fixpoints). Call after materializing the results: they cache shared
+    * intermediates and read their scratch parquet until then, and only
+    * the caller knows when the last action has run. The release is
+    * process-wide. See [[CacheRegistry]] for the contract.
     */
   def releaseCaches(): Unit = CacheRegistry.releaseAll()
 

@@ -1,34 +1,32 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
+import java.nio.file.Paths
 
-/** Process-wide root for operator staging/scratch directories.
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
+
+/** Process-wide root for staging and scratch directories.
   *
-  * Two problems this solves (ADVICE r10):
-  *   - `OpsGate`/`StreamGateQueries` hard-coded `/root/repo/target/...`,
-  *     breaking any checkout outside /root/repo. The base is now derived
-  *     from `user.dir` (the sbt working directory) and overridable with
-  *     `SPARK_GRAFT_STAGE_DIR` for cluster runs where scratch must live
-  *     on shared storage.
-  *   - the iterative graph/BPE operators ([[graft.operators.Clusters]],
-  *     [[graft.operators.Bpe]]) defaulted their lineage-truncation
-  *     scratch ([[graft.operators.Fixpoint]]) to a FRESH `/tmp` dir per
-  *     invocation and deleted only superseded iteration dirs —
-  *     Verify plus 3 Bench reps leaked
-  *     O(nodes) parquet per rep. [[scratch]] hands out a deterministic
-  *     per-operator slot instead and retires old slots itself, bounding
-  *     disk at two generations per operator per JVM.
+  * The base is derived from `user.dir` (the sbt working directory), so a
+  * checkout anywhere works, and is overridable with
+  * `SPARK_GRAFT_STAGE_DIR` for cluster runs where staging and scratch
+  * must live on shared storage (an `hdfs://` or `s3a://` URI).
   *
-  * Contract for [[scratch]] callers: the returned directory (and thus
-  * any DataFrame whose final parquet lives under it) stays valid until
-  * the SAME operator tag has been invoked twice more in this JVM. Every
-  * consumer in this repo (Verify writes results immediately, Bench
-  * counts immediately, specs assert immediately) satisfies that; a
-  * library user who needs longer-lived results passes an explicit
-  * `scratchDir`.
+  * Two kinds of directory live under it:
+  *   - [[stable]] homes, one per component, for the lifecycle gates and
+  *     fixtures that rebuild their contents on every invocation;
+  *   - operator scratch (the lineage-truncation parquet of
+  *     [[graft.operators.Fixpoint]]), handed out per call by
+  *     [[CacheRegistry.scratch]] under `scratch/<jvm-id>/` and deleted
+  *     with the caches at [[Graft.releaseCaches]].
+  *
+  * Every path under the base is built and deleted through Hadoop
+  * `Path`/`FileSystem`, never `java.nio`: a nio path collapses the `//`
+  * of a URI base (`hdfs://nn:8020` becomes `hdfs:/nn:8020`), and a
+  * local-FS delete of a shared-storage path silently does nothing.
   */
 object StageDirs {
 
@@ -39,34 +37,30 @@ object StageDirs {
     "SPARK_GRAFT_STAGE_DIR",
     Paths.get(sys.props("user.dir"), "target", "graft_stage").toString)
 
-  /** Stable per-component staging dir (not generation-rotated): used by
-    * the lifecycle gates that rebuild their fixture from scratch on
-    * every invocation anyway.
+  /** Stable per-component staging dir: used by the lifecycle gates that
+    * rebuild their fixture from scratch on every invocation anyway.
     */
   def stable(tag: String): String = s"$base/$tag"
 
-  private val gen = new ConcurrentHashMap[String, AtomicLong]()
-
-  /** A fresh scratch slot for `tag`, rotating out the grandparent
-    * generation. Keeping the PARENT generation alive lets one query
-    * invoke the same operator twice (e.g. CC for two detectors) while
-    * both results are still being read; anything older is dead by the
-    * caller contract above and is deleted here.
+  /** The FileSystem `p` names, under the running session's Hadoop conf
+    * (a bare Hadoop conf when no session is up).
     */
-  def scratch(tag: String): String = {
-    val n = gen.computeIfAbsent(tag, _ => new AtomicLong(0L))
-      .incrementAndGet()
-    if (n > 2) deleteRecursively(Paths.get(base, tag, s"run_${n - 2}"))
-    val dir = Paths.get(base, tag, s"run_$n")
-    Files.createDirectories(dir)
-    dir.toString
-  }
+  private[graft] def fs(p: Path): FileSystem =
+    p.getFileSystem(SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new Configuration()))
 
-  private[graft] def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      try Files.walk(p)
-        .sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => { val _ = Files.deleteIfExists(f) })
-      catch { case _: java.io.IOException => () } // best-effort cleanup
+  /** Delete `dir` and everything under it; a missing `dir` is a no-op.
+    * Best effort: a failed delete (an outage, a permission, a malformed
+    * path) is reported and left behind, never thrown, so a cleanup can
+    * not fail the query or the release it runs in.
+    */
+  private[graft] def deleteRecursively(dir: String): Unit =
+    try { val p = new Path(dir); fs(p).delete(p, true) }
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[stage-dirs] delete of $dir failed " +
+          s"(left behind): ${e.getMessage}")
     }
 }

@@ -77,8 +77,7 @@ object Bpe {
     *         twice — merging a count-1 pair learns noise.
     */
   def train(docs: DataFrame, idCol: String, textCol: String,
-            nMerges: Int,
-            scratchDir: Option[String] = None): DataFrame = {
+            nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
 
     // r17 (guide §1.2 fixed cost per round): iteration state rides a
@@ -95,8 +94,7 @@ object Bpe {
     // rounds instead of every round; the trainer gates (≤ 8 merges)
     // never pay a write.
     val TRUNC = 8
-    val slots = new Fixpoint.Rolling(
-      scratchDir.getOrElse(graft.StageDirs.scratch("bpe")), "toks")
+    val slots = new Fixpoint.Rolling(graft.CacheRegistry.scratch("bpe"), "toks")
     def persisted(df: DataFrame): DataFrame =
       graft.CacheRegistry.register(df.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))

@@ -27,13 +27,12 @@ import org.apache.spark.sql.functions._
   * Iteration state is truncated through [[Fixpoint]] every round (the
   * bounded-lineage contract is stated there). Unlike the KMeans
   * centroid table the label table is corpus-sized, so the driver-collect
-  * form is not an option. On a cluster pass a `scratchDir` on shared
-  * storage; the default is a generation-rotated slot under
-  * [[graft.StageDirs]] (`target/graft_stage/<op>/run_N`), bounded at two
-  * retained generations per operator per JVM (ADVICE r10: the old
-  * fresh-tmp-per-invocation default leaked O(nodes) parquet per
-  * Verify/Bench rep), valid per StageDirs' caller contract until the
-  * same operator runs twice more.
+  * form is not an option. Each call writes under its own slot from
+  * [[graft.CacheRegistry.scratch]]
+  * (`<stage dir>/scratch/<jvm-id>/<op>_<n>`), so a result stays valid
+  * through any number of later calls until [[graft.Graft.releaseCaches]]
+  * deletes the slots with the caches; on a cluster
+  * `SPARK_GRAFT_STAGE_DIR` puts them on shared storage.
   *
   * Convergence detection is O(1) per round: labels only ever DECREASE
   * under min-propagation, so the label-sum is strictly monotone and
@@ -119,14 +118,13 @@ object Clusters {
     *         Isolated nodes (in no pair) are the caller's singletons.
     */
   def connectedComponents(pairs: DataFrame, src: String, dst: String,
-                          scratchDir: Option[String] = None,
                           maxIter: Int = 25): DataFrame = {
     // symmetric edge list: min-labels must flow BOTH ways. PERSISTED —
     // every propagation round joins against it, and the pair source is
     // typically the whole LSH pipeline (recomputing THAT per round
     // multiplied the clustering cost by the iteration count)
-    val (edges, n) = sharedSymEdges(pairs, src, dst, scratchDir)
-    connectedComponentsOnEdges(edges, scratchDir, maxIter, Some(n))
+    val (edges, n) = sharedSymEdges(pairs, src, dst)
+    connectedComponentsOnEdges(edges, maxIter, Some(n))
   }
 
   /** ONE materialized co-located symmetric edge cache reusable across
@@ -137,16 +135,13 @@ object Clusters {
     * instead of per loop.
     */
   private[graft] def sharedSymEdges(pairs: DataFrame, src: String,
-                                    dst: String,
-                                    scratchDir: Option[String] = None)
-      : (DataFrame, Long) =
+                                    dst: String): (DataFrame, Long) =
     materializeEdges(
       pairs.select(col(src).cast("long").as("src"),
           col(dst).cast("long").as("dst"))
         .union(pairs.select(col(dst).cast("long").as("src"),
           col(src).cast("long").as("dst"))),
-      scratchDir.map(d => s"$d/symedges").getOrElse(
-        graft.StageDirs.scratch("symedges")),
+      graft.CacheRegistry.scratch("symedges"),
       key = "src")
 
   /** Driver bytes per edge of a collected edge list (the `Array[Row]`
@@ -203,8 +198,8 @@ object Clusters {
     * distributed fixpoint.
     */
   private[graft] def connectedComponentsOnEdges(
-      edges: DataFrame, scratchDir: Option[String] = None,
-      maxIter: Int = 25, edgeCount: Option[Long] = None): DataFrame = {
+      edges: DataFrame, maxIter: Int = 25,
+      edgeCount: Option[Long] = None): DataFrame = {
     val spark = edges.sparkSession
     if (edgeCount.exists(Fixpoint.fitsDriver(_, EDGE_BYTES))) {
       // nodes ≤ 2·edges, returned as a LocalRelation that downstream
@@ -214,7 +209,7 @@ object Clusters {
         .toDF("id", "cluster_id")
     }
     val slots = new Fixpoint.Rolling(
-      scratchDir.getOrElse(graft.StageDirs.scratch("cc")), "labels")
+      graft.CacheRegistry.scratch("cc"), "labels")
 
     // The convergence statistic (label sum + row count) rides the WRITE
     // job as observed metrics (CollectMetrics), so each round is ONE
@@ -321,14 +316,12 @@ object Clusters {
     * self-referential join would otherwise stack every prior round into
     * one plan; the 122-exchange plan the unchecked loop produced is the
     * measured failure mode). Iteration count is a CONSTANT, so cost is
-    * O(iters · |edges|) by construction; on a cluster `scratchDir`
-    * goes on shared storage, same as the CC fixpoint.
+    * O(iters · |edges|) by construction.
     */
   def pageRank(pairs: DataFrame, src: String, dst: String,
-               iters: Int = 5,
-               scratchDir: Option[String] = None): DataFrame = {
+               iters: Int = 5): DataFrame = {
     val spark = pairs.sparkSession
-    val scratch = scratchDir.getOrElse(graft.StageDirs.scratch("pr"))
+    val scratch = graft.CacheRegistry.scratch("pr")
 
     val (eScan, nEdges) = countedEdges(
       pairs.select(col(src).cast("long").as("src"),
@@ -426,10 +419,9 @@ object Clusters {
     * Returns (side ∈ {hub, auth}, id, score_ppm) after `iters` rounds.
     */
   def hits(pairs: DataFrame, src: String, dst: String,
-           iters: Int = 2,
-           scratchDir: Option[String] = None): DataFrame = {
+           iters: Int = 2): DataFrame = {
     val spark = pairs.sparkSession
-    val scratch = scratchDir.getOrElse(graft.StageDirs.scratch("hits"))
+    val scratch = graft.CacheRegistry.scratch("hits")
 
     // The HITS half-steps alternate join keys — auth joins on the hub
     // side (c), hub joins on the authority side (p) — so ONE co-located
@@ -550,10 +542,9 @@ object Clusters {
     * [[Fixpoint]] every second round and after the last.
     */
   def labelPropagation(pairs: DataFrame, src: String, dst: String,
-                       iters: Int = 2,
-                       scratchDir: Option[String] = None): DataFrame = {
-    val (edges, n) = sharedSymEdges(pairs, src, dst, scratchDir)
-    labelPropagationOnEdges(edges, iters, scratchDir, Some(n))
+                       iters: Int = 2): DataFrame = {
+    val (edges, n) = sharedSymEdges(pairs, src, dst)
+    labelPropagationOnEdges(edges, iters, Some(n))
   }
 
   /** Driver mirror of the synchronous LPA rounds (the below-threshold
@@ -591,7 +582,6 @@ object Clusters {
     */
   private[graft] def labelPropagationOnEdges(
       edges: DataFrame, iters: Int = 2,
-      scratchDir: Option[String] = None,
       edgeCount: Option[Long] = None): DataFrame = {
     val spark = edges.sparkSession
     if (edgeCount.exists(Fixpoint.fitsDriver(_, EDGE_BYTES))) {
@@ -599,8 +589,7 @@ object Clusters {
       return localLpa(collectEdges(edges, "src", "dst"), iters)
         .toDF("id", "community")
     }
-    val slots = new Fixpoint.Rolling(
-      scratchDir.getOrElse(graft.StageDirs.scratch("lpa")), "lpa")
+    val slots = new Fixpoint.Rolling(graft.CacheRegistry.scratch("lpa"), "lpa")
 
     // round 0 state: every edge endpoint labeled with itself (the edge
     // list is symmetric, so dst alone covers the node set)
@@ -638,9 +627,9 @@ object Clusters {
     *         node appearing in any pair; clustering_bp =
     *         ⌊2·tri·10⁴ / (d·(d−1))⌋, 0 for degree-1 nodes.
     */
-  def triangleClustering(pairs: DataFrame, src: String, dst: String,
-                         scratchDir: Option[String] = None): DataFrame = {
-    val scratch = scratchDir.getOrElse(graft.StageDirs.scratch("tri"))
+  def triangleClustering(pairs: DataFrame, src: String,
+                         dst: String): DataFrame = {
+    val scratch = graft.CacheRegistry.scratch("tri")
     // the graph tables are MULTIPLY REFERENCED (canon: degree +
     // orientation + triangle closing; deg: both arrow sides + output;
     // arrows: both wedge sides), so each is truncated through
@@ -705,11 +694,10 @@ object Clusters {
     * @return (u, v, support, is_bridge) — one row per canonical edge
     *         (u < v); is_bridge = support == 0.
     */
-  def edgeSupport(pairs: DataFrame, src: String, dst: String,
-                  scratchDir: Option[String] = None): DataFrame = {
+  def edgeSupport(pairs: DataFrame, src: String, dst: String): DataFrame = {
     // multiply-referenced graph tables, truncated as in
     // [[triangleClustering]]
-    val scratch = scratchDir.getOrElse(graft.StageDirs.scratch("supp"))
+    val scratch = graft.CacheRegistry.scratch("supp")
     val canon = Fixpoint.truncate(
       pairs.select(least(col(src), col(dst)).cast("long").as("u"),
           greatest(col(src), col(dst)).cast("long").as("v"))
@@ -779,11 +767,10 @@ object Clusters {
     *         ≥ k by construction).
     */
   def kCore(pairs: DataFrame, src: String, dst: String, k: Int,
-            rounds: Int = 3,
-            scratchDir: Option[String] = None): DataFrame = {
+            rounds: Int = 3): DataFrame = {
     require(k >= 1 && rounds >= 1)
     val spark = pairs.sparkSession
-    val scratch = scratchDir.getOrElse(graft.StageDirs.scratch("kcore"))
+    val scratch = graft.CacheRegistry.scratch("kcore")
 
     // co-located on src: the src-side semi-join is then exchange-free;
     // the dst-side filter + count still shuffle the SURVIVING subgraph
@@ -915,10 +902,9 @@ object Clusters {
   }
 
   def linkPrediction(pairs: DataFrame, src: String, dst: String,
-                     wedgeCap: Int = 64,
-                     scratchDir: Option[String] = None): DataFrame = {
+                     wedgeCap: Int = 64): DataFrame = {
     require(wedgeCap >= 1)
-    val scratch = scratchDir.getOrElse(graft.StageDirs.scratch("lp"))
+    val scratch = graft.CacheRegistry.scratch("lp")
     val canon = Fixpoint.truncate(
       pairs.select(least(col(src), col(dst)).cast("long").as("u"),
           greatest(col(src), col(dst)).cast("long").as("v"))

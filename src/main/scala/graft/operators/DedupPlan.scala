@@ -30,23 +30,12 @@ import graft.functions.TextFunctions
   * both persist MEMORY_AND_DISK through [[CacheRegistry]]. The CC
   * fixpoint inside [[Clusters.memberTable]] already truncates lineage
   * through [[Fixpoint]], so the shared plan adds no new iterative-plan
-  * blowup. Call [[graft.Graft.releaseCaches]] when done.
+  * blowup. Call [[graft.Graft.releaseCaches]] when done: it drops the
+  * caches and deletes the truncations' scratch slots together.
   */
 final class DedupPlan private (docs: DataFrame, id: String, text: String,
                                k: Int, numHashes: Int, bands: Int,
                                thresholdPct: Int) {
-
-  /** Per-INSTANCE scratch tag: a shared rotating tag would let
-    * StageDirs' two-generation rotation delete the parquet behind a
-    * still-live older plan once two newer plans were constructed (three
-    * plans in one session is realistic — cf. the ×1/×10/×100 loop of
-    * PERF.md §Round 12). Each plan instead owns a unique stable slot,
-    * registered with [[graft.CacheRegistry]] so
-    * [[graft.Graft.releaseCaches]] deletes it together with the
-    * persisted intermediates it backs — one lifetime, one hook.
-    */
-  private val scratchTag =
-    s"dedup_plan_${DedupPlan.instanceCounter.incrementAndGet()}"
 
   /** Content-hash groups: (fp, keep_id, n_dups) — exact tier. */
   lazy val exactGroups: DataFrame =
@@ -95,11 +84,10 @@ final class DedupPlan private (docs: DataFrame, id: String, text: String,
     truncated(Dedup.lshVerifiedPairs(survivorDocs,
       id, text, k, numHashes, bands, thresholdPct), "pairs")
 
-  /** `df` truncated into this plan's slot `name`, then persisted. */
+  /** `df` truncated into a fresh scratch slot, then persisted. */
   private def truncated(df: DataFrame, name: String): DataFrame =
     CacheRegistry.register(
-      Fixpoint.truncate(df, CacheRegistry.registerScratch(
-          graft.StageDirs.stable(s"$scratchTag/$name")))
+      Fixpoint.truncate(df, CacheRegistry.scratch(s"dedup_$name"))
         .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** (doc_id, cluster_id, cluster_sz) — near-dup pairs closed into
@@ -165,13 +153,12 @@ final class DedupPlan private (docs: DataFrame, id: String, text: String,
 
 object DedupPlan {
 
-  private val instanceCounter =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Build the shared plan over `docs(id, text)` with the same knobs as
-    * the standalone operators (defaults = the gate constants). Each plan
-    * owns a unique scratch slot, deleted by [[graft.Graft.releaseCaches]]
-    * (the same lifetime as the persisted intermediates).
+    * the standalone operators (defaults = the gate constants). Each of
+    * its truncations writes a fresh slot from
+    * [[graft.CacheRegistry.scratch]], deleted by
+    * [[graft.Graft.releaseCaches]] with the persisted intermediates it
+    * backs.
     */
   def apply(docs: DataFrame, id: String = "doc_id",
             text: String = "text", k: Int = 3, numHashes: Int = 16,

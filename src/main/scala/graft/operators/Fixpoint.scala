@@ -2,7 +2,6 @@ package graft.operators
 
 import scala.util.DynamicVariable
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 
 /** The one owner of lineage truncation and of the driver-or-distributed
@@ -26,11 +25,12 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   * frame to a scratch slot and reads it back, so the next round starts
   * from a flat scan. A local checkpoint would cut the plan too, but it
   * leaves persisted RDD blocks that no lifecycle owns (neither
-  * [[graft.CacheRegistry]] nor a scratch rotation can free them) and it
-  * is lost with its executor. A parquet slot lives under a directory
-  * that [[graft.StageDirs]] rotates or [[graft.CacheRegistry]] deletes;
-  * on a cluster the caller passes a `scratchDir` on shared storage, the
-  * same requirement as RDD checkpointing. The read-back names the
+  * [[graft.CacheRegistry]] nor a scratch slot's deletion can free them)
+  * and it is lost with its executor. A parquet slot lives under a
+  * directory from [[graft.CacheRegistry.scratch]], deleted with the
+  * caches at [[graft.Graft.releaseCaches]]; on a cluster
+  * `SPARK_GRAFT_STAGE_DIR` puts it on shared storage, the same
+  * requirement as RDD checkpointing. The read-back names the
   * written frame's own schema, so it runs no schema-inference job: a
   * truncation is exactly one job, and metrics observed on it
   * ([[truncateObserving]]) cost no second scan.
@@ -78,18 +78,12 @@ object Fixpoint {
       val slot = s"$dir/${prefix}_$round"
       val out = truncateObserving(df, slot, metrics: _*)
       dropLast()
-      dropLast = () => delete(df, slot)
+      dropLast = () => graft.StageDirs.deleteRecursively(slot)
       out
     }
 
     /** Delete the last slot, once the loop's result no longer reads it. */
     def close(): Unit = { dropLast(); dropLast = () => () }
-  }
-
-  private def delete(df: DataFrame, slot: String): Unit = {
-    val p = new Path(slot)
-    p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-      .delete(p, true)
   }
 
   /** Collect a bounded table and return it as a local relation. The

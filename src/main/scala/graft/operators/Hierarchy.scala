@@ -78,7 +78,7 @@ object Hierarchy {
       // for a log-round algorithm. One node-bounded write per round
       // keeps each round's plan one flat self-join.
       val slots = new Fixpoint.Rolling(
-        graft.StageDirs.scratch("hier_closure"), "jump")
+        graft.CacheRegistry.scratch("hier_closure"), "jump")
       var cur = slots(
         domain.join(edges, Seq("id"), "left")
           .select(col("id"), coalesce(col("par"), col("id")).as("anc"),
@@ -108,7 +108,7 @@ object Hierarchy {
       // union references cl three times per round, so a chained plan
       // grows 3^round subtrees
       val slots = new Fixpoint.Rolling(
-        graft.StageDirs.scratch("hier_rollup"), "cl")
+        graft.CacheRegistry.scratch("hier_rollup"), "cl")
       var cl = slots(
         edges.select(col("id").as("node"), col("par").as("anc"),
           lit(1L).as("d")), 0)

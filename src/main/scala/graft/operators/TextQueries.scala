@@ -1572,7 +1572,7 @@ object TextQueries {
         Dedup.lshVerifiedPairs(Tables.load(s, dir, "documents"),
             "doc_id", "text", K, NUM_HASHES, BANDS, THRESH)
           .select("doc_a", "doc_b"),
-        graft.StageDirs.scratch("assort_pairs"))
+        graft.CacheRegistry.scratch("assort_pairs"))
       val sym = vp.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(vp.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("d"))

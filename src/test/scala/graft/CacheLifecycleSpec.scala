@@ -2,13 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{Clusters, Dedup, DedupPlan, Fixpoint}
 
 /** Library cache discipline: every operator that persists intermediates
   * registers them, and [[Graft.releaseCaches]] leaves the session with
   * ZERO persisted RDDs — a long-lived session using the facade must not
   * accumulate cache blocks across calls (round-2 finding: four persists
-  * with no unpersist anywhere).
+  * with no unpersist anywhere). The same release deletes the operators'
+  * scratch slots, whose paths keep a URI base's authority.
   */
 class CacheLifecycleSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -39,6 +40,25 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkSpec {
       Thread.sleep(50)
     assert(persisted.isEmpty,
       s"leaked cache entries: ${persisted.values.map(_.name).mkString(", ")}")
+  }
+
+  test("releaseCaches deletes this JVM's scratch root") {
+    val root = CacheRegistry.scratchRoot(StageDirs.base)
+    def onDisk = StageDirs.fs(root).exists(root)
+    Fixpoint.withDriverBudget(0) {
+      Clusters.connectedComponents(
+        Seq((1L, 2L), (2L, 3L)).toDF("a", "b"), "a", "b").count()
+    }
+    DedupPlan(docs).pairs.count()
+    assert(onDisk)
+    Graft.releaseCaches()
+    assert(!onDisk, s"$root left behind")
+  }
+
+  test("a scratch slot under a URI base keeps the base's authority") {
+    val slot = CacheRegistry.slotPath("hdfs://nn:8020/stage", "cc", 1L)
+    assert(slot.startsWith("hdfs://nn:8020/stage/scratch/"), slot)
+    assert(slot.endsWith("/cc_1"), slot)
   }
 
   test("simhashNearDupPairs rejects radii the banding cannot guarantee") {

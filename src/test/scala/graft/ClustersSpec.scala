@@ -121,6 +121,20 @@ class ClustersSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("a distributed result outlives later calls of the operator") {
+    // each call truncates into slots of its own, so later calls never
+    // delete the parquet an earlier result reads
+    Fixpoint.withDriverBudget(0) {
+      val first = Clusters.connectedComponents(
+        Seq((1L, 2L), (2L, 3L)).toDF("a", "b"), "a", "b")
+      val answer = first.collect().toSet
+      for (g <- Seq(Seq((5L, 6L)), Seq((8L, 9L), (9L, 10L))))
+        Clusters.connectedComponents(g.toDF("a", "b"), "a", "b").collect()
+      assert(first.count() === 3L)
+      assert(first.collect().toSet === answer)
+    }
+  }
+
   test("size-adaptive dispatch: driver union-find ≡ distributed " +
     "fixpoint on the same graphs") {
     // the r17 below-threshold driver path must be indistinguishable

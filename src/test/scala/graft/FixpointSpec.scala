@@ -39,7 +39,7 @@ class FixpointSpec extends AnyFunSuite with SparkSpec {
       assert(out.schema.map(f => (f.name, f.dataType)) ===
         df.schema.map(f => (f.name, f.dataType)))
       assert(out.collect().toSet === df.collect().toSet)
-    } finally StageDirs.deleteRecursively(dir)
+    } finally StageDirs.deleteRecursively(dir.toString)
   }
 
   test("after three rolling rounds only the last slot is on disk") {
@@ -54,7 +54,7 @@ class FixpointSpec extends AnyFunSuite with SparkSpec {
       assert(cur.collect().map(_.getLong(0)).toSet === (3L until 8L).toSet)
       slots.close()
       assert(Files.list(dir).count() === 0L)
-    } finally StageDirs.deleteRecursively(dir)
+    } finally StageDirs.deleteRecursively(dir.toString)
   }
 
   test("the driver budget alone picks the mirror or the round jobs " +

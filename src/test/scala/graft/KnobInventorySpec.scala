@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the settings the library reads: every `SPARK_GRAFT_*` name and
   * every `graft.*` system property in `src/main/scala`. A new knob has to
   * be added here and to the README's Settings table; a deleted one has
-  * to leave both. Also pins the runnable mains: Bench is the one timing
-  * loop, PlanAudit the one plan tool.
+  * to leave both. Also pins the runnable mains (Bench is the one timing
+  * loop, PlanAudit the one plan tool) and the one scratch allocator,
+  * [[CacheRegistry.scratch]].
   */
 class KnobInventorySpec extends AnyFunSuite {
 
@@ -45,6 +46,12 @@ class KnobInventorySpec extends AnyFunSuite {
   test("graft.* system properties equal the pinned list") {
     assert(scan("""sys\.props\.get\("(graft\.[A-Za-z0-9_.]+)"\)""") ===
       Set.empty[String])
+  }
+
+  test("operator scratch has one allocator: no scratchDir parameter, " +
+    "no StageDirs.scratch") {
+    assert(scan("""\b(scratchDir)\s*:""") === Set.empty[String])
+    assert(scan("""(StageDirs\.scratch)\b""") === Set.empty[String])
   }
 
   test("Bench's full record defaults to this checkout, partial runs to /tmp") {

@@ -726,7 +726,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     import org.apache.spark.sql.functions._
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val dir = graft.StageDirs.scratch("planshape_scan_colo")
+    val dir = graft.CacheRegistry.scratch("planshape_scan_colo")
     try {
       spark.range(1000)
         .select(pmod(col("id"), lit(97)).as("src"),
@@ -752,7 +752,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       e.unpersist()
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      graft.StageDirs.deleteRecursively(java.nio.file.Paths.get(dir))
+      graft.StageDirs.deleteRecursively(dir)
     }
   }
 

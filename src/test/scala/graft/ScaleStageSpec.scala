@@ -28,8 +28,8 @@ class ScaleStageSpec extends AnyFunSuite with SparkSpec
   private lazy val staged = ScaleStage.stage(spark, src, 2)
 
   override def afterAll(): Unit = {
-    StageDirs.deleteRecursively(Paths.get(staged))
-    StageDirs.deleteRecursively(tmp)
+    StageDirs.deleteRecursively(staged)
+    StageDirs.deleteRecursively(tmp.toString)
     super.afterAll()
   }
 
