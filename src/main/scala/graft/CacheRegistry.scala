@@ -5,11 +5,11 @@ import java.util.UUID
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** Tracks every DataFrame the library persists, and owns the scratch
-  * parquet the iterative operators write, so callers can release both
-  * deterministically.
+/** Tracks every DataFrame the library persists, every stream sink view
+  * it registers, and owns the per-call directories the library writes,
+  * so callers can release all three deterministically.
   *
   * Operators like [[operators.Dedup.lshVerifiedPairs]] persist shared
   * intermediates (signatures, shingle sets) because several downstream
@@ -19,9 +19,12 @@ import org.apache.spark.sql.Dataset
   * caller's action ran. The contract instead:
   *
   *   - every `persist` in library code goes through [[register]];
-  *   - every scratch slot (a [[operators.Fixpoint]] truncation's
-  *     parquet) comes from [[scratch]], one fresh slot per operator
-  *     call, so a result outlives any number of later calls;
+  *   - every per-call directory comes from [[scratch]], one fresh slot
+  *     per call, so a result outlives any number of later calls: a
+  *     [[operators.Fixpoint]] truncation's parquet, a stream gate's
+  *     checkpoint and parquet sink, and the table an ops gate rebuilds;
+  *   - every memory-sink view a stream gate drains into is recorded by
+  *     [[registerView]] and dropped at release, with the rows it holds;
   *   - callers invoke [[Graft.releaseCaches]] (→ [[releaseAll]]) once
   *     they have materialized what they need;
   *   - a long-lived session that never releases leaks nothing NEW per
@@ -37,10 +40,11 @@ import org.apache.spark.sql.Dataset
   * earlier, and holding the Dataset here would only DELAY the GC that
   * releases them.
   *
-  * One lifetime for both: a result that reads a scratch slot or a
-  * cache stays valid until [[releaseAll]]. The release is process-wide:
-  * it drops every caller's caches and scratch, so a concurrent caller
-  * still reading a result must not be released under.
+  * One lifetime for all three: a result that reads a scratch slot, a
+  * sink view or a cache stays valid until [[releaseAll]]. The release
+  * is process-wide: it drops every caller's caches, views and scratch,
+  * so a concurrent caller still reading a result must not be released
+  * under.
   *
   * Thread-safe; unpersist is non-blocking (async block cleanup).
   */
@@ -57,6 +61,14 @@ object CacheRegistry {
     handles.put(ds.queryExecution.analyzed.semanticHash(), ds)
     ds
   }
+
+  private val views = mutable.ArrayBuffer.empty[(SparkSession, String)]
+
+  /** Record a temp view of `spark` to drop at [[releaseAll]]; returns
+    * its name.
+    */
+  def registerView(spark: SparkSession, name: String): String =
+    synchronized { views += spark -> name; name }
 
   // one scratch root per JVM: the pid keeps two JVMs on one checkout
   // apart, the random suffix a reused pid
@@ -75,7 +87,7 @@ object CacheRegistry {
   private var rootMarked = false
 
   /** A fresh scratch slot `<StageDirs.base>/scratch/<jvm-id>/<tag>_<n>`
-    * for one operator call. No other call is handed the same slot, and
+    * for one call's writes. No other call is handed the same slot, and
     * it lives until [[releaseAll]], like the persisted caches it backs.
     * The first slot creates the root and marks it for deletion when the
     * JVM exits, so a process that never releases leaves nothing behind
@@ -92,12 +104,15 @@ object CacheRegistry {
     slotPath(StageDirs.base, tag, slots)
   }
 
-  /** Unpersist every registered Dataset, delete this JVM's scratch root
-    * with every slot [[scratch]] handed out, and clear the registry.
+  /** Unpersist every registered Dataset, drop every registered view,
+    * delete this JVM's scratch root with every slot [[scratch]] handed
+    * out, and clear the registry.
     */
   def releaseAll(): Unit = synchronized {
     handles.values.foreach(_.unpersist(blocking = false))
     handles.clear()
+    views.foreach { case (spark, name) => spark.catalog.dropTempView(name) }
+    views.clear()
     StageDirs.deleteRecursively(root.toString)
   }
 

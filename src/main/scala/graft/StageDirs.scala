@@ -16,12 +16,16 @@ import org.apache.spark.sql.SparkSession
   * must live on shared storage (an `hdfs://` or `s3a://` URI).
   *
   * Two kinds of directory live under it:
-  *   - [[stable]] homes, one per component, for the lifecycle gates and
-  *     fixtures that rebuild their contents on every invocation;
-  *   - operator scratch (the lineage-truncation parquet of
-  *     [[graft.operators.Fixpoint]]), handed out per call by
-  *     [[CacheRegistry.scratch]] under `scratch/<jvm-id>/` and deleted
-  *     with the caches at [[Graft.releaseCaches]].
+  *   - [[stable]] homes, shared by every call and every JVM on the
+  *     checkout: the fixtures [[stageOnce]] writes once and reuses, and
+  *     the two homes the NEO oracle SQL and the backfill fold name
+  *     (`neo_oracle`, `neo_backfill`);
+  *   - per-call state, handed out by [[CacheRegistry.scratch]] under
+  *     `scratch/<jvm-id>/`: operator scratch (the lineage-truncation
+  *     parquet of [[graft.operators.Fixpoint]]), stream checkpoints and
+  *     sinks, and the tables the ops gates rebuild on every call. It is
+  *     deleted with the caches at [[Graft.releaseCaches]], so no call
+  *     ever deletes a directory another call still uses.
   *
   * Every path under the base is built and deleted through Hadoop
   * `Path`/`FileSystem`, never `java.nio`: a nio path collapses the `//`
@@ -37,10 +41,39 @@ object StageDirs {
     "SPARK_GRAFT_STAGE_DIR",
     Paths.get(sys.props("user.dir"), "target", "graft_stage").toString)
 
-  /** Stable per-component staging dir: used by the lifecycle gates that
-    * rebuild their fixture from scratch on every invocation anyway.
-    */
+  /** Stable per-component home `<base>/<tag>`, shared across calls. */
   def stable(tag: String): String = s"$base/$tag"
+
+  private val Marker = "_STAGED"
+
+  /** The fixture `stable(tag)`, written once and then reused by every
+    * call in every JVM. The first caller runs `build` on a fresh
+    * [[CacheRegistry.scratch]] slot of its own, marks the finished copy
+    * and publishes it with one Hadoop rename, so `stable(tag)` only
+    * ever appears complete. Hadoop's rename moves a directory INTO a
+    * target that already exists, so a caller that loses the race to a
+    * concurrent stager deletes its own copy, nested or not, and reads
+    * the winner's.
+    */
+  def stageOnce(tag: String)(build: String => Unit): String = {
+    val out = new Path(stable(tag))
+    val marker = new Path(out, Marker)
+    val fs = this.fs(out)
+    if (!fs.exists(marker)) {
+      val slot = new Path(CacheRegistry.scratch("stage"))
+      build(slot.toString)
+      fs.create(new Path(slot, Marker)).close()
+      fs.mkdirs(out.getParent)
+      val nested = new Path(out, slot.getName)
+      if (fs.exists(out) || !fs.rename(slot, out) || fs.exists(nested)) {
+        deleteRecursively(nested.toString)
+        deleteRecursively(slot.toString)
+      }
+      require(fs.exists(marker), s"$out holds no $Marker marker: a " +
+        "partial copy from an older stager; delete it to re-stage")
+    }
+    out.toString
+  }
 
   /** The FileSystem `p` names, under the running session's Hadoop conf
     * (a bare Hadoop conf when no session is up).

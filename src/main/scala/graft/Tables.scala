@@ -23,7 +23,9 @@ object Tables {
   private val computeHeavy = Set("documents", "embeddings")
 
   /** Load a table, fanning single-split scans out to the session's
-    * parallelism.
+    * parallelism. The schema comes from the table's parquet footer on
+    * the driver ([[operators.VersionedTable.readParquet]]), so a load
+    * runs no schema-inference job.
     *
     * The local testdata ships each table as ONE parquet row group, so the
     * scan yields one input split and every downstream map stage (regex
@@ -35,7 +37,8 @@ object Tables {
     * predicates through RoundRobin repartitions into the scan.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df =
+      operators.VersionedTable.readParquet(spark, s"$dir/$name.parquet")
     val target = spark.sparkContext.defaultParallelism
     lazy val planned = df.rdd.getNumPartitions
     if (computeHeavy.contains(name) && planned < target)

@@ -37,7 +37,10 @@ object NeoQueries {
 
   /** Bronze base for the oracle twin — one runtime constant shared by
     * the Spark readers and the embedded DuckDB SQL (see Scaladoc
-    * above). All artifacts live under `target/graft_stage/neo_oracle`.
+    * above). The shared artifacts live under
+    * `target/graft_stage/neo_oracle`; the per-call partitioned write of
+    * q_neo_partition_prune goes to a [[graft.CacheRegistry.scratch]]
+    * slot.
     */
   private val BASE = graft.StageDirs.stable("neo_oracle")
 
@@ -206,9 +209,8 @@ object NeoQueries {
     // filtered to day 2 — the filter must prune to one partition
     // directory (DppSpec pins the plan shape; this pins the DATA).
     "q_neo_partition_prune" -> { (s, _) =>
-      val dir = s"$BASE/silver_pq"
-      silver(s).write.mode("overwrite").partitionBy("approach_date")
-        .parquet(dir)
+      val dir = graft.CacheRegistry.scratch("neo_silver_pq")
+      silver(s).write.partitionBy("approach_date").parquet(dir)
       s.read.parquet(dir)
         .filter(col("approach_date") === NeoFixture.day2Date)
         .select(col("approach_date").cast("string").as("approach_date"),

@@ -100,16 +100,30 @@ object Observability {
     * added as their queries start. A job run after `body` drains the
     * listener queue: its end event is delivered after every event `body`
     * posted, so the counts are complete when this returns.
+    *
+    * Calls nest: `body` runs under a job group named below the caller's
+    * (`<caller>/launched-<n>`), an outer call counts every group below
+    * its own, and the barrier job is named outside the tree. So an inner
+    * call hides nothing from the outer count, and the caller's job group
+    * is restored on exit.
     */
   def launched(spark: SparkSession)(body: => Unit): Launched = {
     val sc = spark.sparkContext
-    val group = s"launched-${System.nanoTime()}"
-    val barrier = s"$group-barrier"
+    val jobProps = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel")
+    val saved = jobProps.map(k => k -> sc.getLocalProperty(k))
+    val group = Option(sc.getLocalProperty("spark.jobGroup.id"))
+      .fold("")(_ + "/") + s"launched-${System.nanoTime()}"
+    val barrier = s"barrier:$group"
     def groupOf(props: java.util.Properties): String =
       Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
         .getOrElse("")
     val groups = ConcurrentHashMap.newKeySet[String]()
     groups.add(group)
+    def counted(props: java.util.Properties): Boolean = {
+      val g = groupOf(props)
+      groups.contains(g) || g.startsWith(s"$group/")
+    }
     val jobs = new AtomicInteger()
     val stages = ConcurrentHashMap.newKeySet[Int]()
     val tasks = new AtomicInteger()
@@ -120,16 +134,13 @@ object Observability {
         case s: QueryStartedEvent => groups.add(s.runId.toString)
         case _ =>
       }
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val g = groupOf(e.properties)
-        if (groups.contains(g)) jobs.incrementAndGet()
-        else if (g == barrier) barrierJobs.add(e.jobId)
-      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (counted(e.properties)) jobs.incrementAndGet()
+        else if (groupOf(e.properties) == barrier) barrierJobs.add(e.jobId)
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (barrierJobs.contains(e.jobId)) drained.countDown()
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (groups.contains(groupOf(e.properties)))
-          stages.add(e.stageInfo.stageId)
+        if (counted(e.properties)) stages.add(e.stageInfo.stageId)
       override def onTaskStart(e: SparkListenerTaskStart): Unit =
         if (stages.contains(e.stageId)) tasks.incrementAndGet()
     }
@@ -143,7 +154,7 @@ object Observability {
         throw new IllegalStateException("listener queue never drained")
       Launched(jobs.get(), tasks.get())
     } finally {
-      sc.clearJobGroup()
+      saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
       sc.removeSparkListener(listener)
     }
   }

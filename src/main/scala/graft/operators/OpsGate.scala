@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{CacheRegistry, StageDirs, Tables}
 
 /** Table-operations surface under the ORACLE gate: the
   * [[VersionedTable]] Delta-flavored lifecycle (overwrite → MERGE →
@@ -13,12 +13,12 @@ import graft.Tables
   * slice's OUTPUT faces the same rows+schema+hash gate as every
   * relational operator — not only OpsSpec's conformance pins.
   *
-  * Harness (the NeoQueries staging convention): each invocation
-  * REBUILDS the staged table from scratch — delete, then three
-  * committed versions derived deterministically from the orders
-  * parquet — so Verify and every Bench rep gate the identical
-  * lifecycle end-to-end (idempotent by construction: the rebuild IS
-  * the operator under test).
+  * Harness: each invocation BUILDS its table from nothing in a fresh
+  * [[CacheRegistry.scratch]] slot — three committed versions derived
+  * deterministically from the orders parquet — so Verify and every
+  * Bench rep gate the identical lifecycle end-to-end, two concurrent
+  * calls never share a table, and the slot goes with the caches at
+  * [[graft.Graft.releaseCaches]].
   *
   *   v1 = overwrite(orderkey % 3 ∈ {0,1})              — CREATE
   *   v2 = merge(orderkey % 3 ∈ {1,2}, cents+1, by key) — MERGE INTO
@@ -58,23 +58,13 @@ object OpsGate {
   private[graft] def stageSmallFiles(df: DataFrame, path: String): Unit =
     df.coalesce(1).localCheckpoint().repartition(64).write.parquet(path)
 
-  // derived from user.dir (SPARK_GRAFT_STAGE_DIR overrides) so the
-  // gate works on any checkout, not just /root/repo (ADVICE r10)
-  private val STAGE_BASE = graft.StageDirs.stable("ops_gate")
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_time_travel" -> { (s, dir) =>
-      val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      // the table gets its OWN parent dir: VersionedTable keeps
-      // displaced versions as dot-prefixed siblings of the path, so a
-      // full reset must delete the parent — and a SHARED parent would
-      // clobber sibling gates' staged tables mid-plan
-      val path = s"$STAGE_BASE/$key/time_travel/orders_v"
-      val p = new Path(path)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      // rebuild from scratch: the lifecycle is the operator under test
-      if (fs.exists(p.getParent)) fs.delete(p.getParent, true)
+      // a fresh slot per call, so the lifecycle starts from nothing;
+      // VersionedTable keeps displaced versions as siblings of the path,
+      // inside the slot too
+      val path = s"${CacheRegistry.scratch("time_travel")}/orders_v"
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey").cast("long").as("k"),
           expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
@@ -102,14 +92,7 @@ object OpsGate {
     // roundtrip (a row, a sign, an index) shifts a score and breaks
     // the hash against the oracle's twin trainer chains.
     "q_model_registry" -> { (s, dir) =>
-      val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      // own parent dir (version siblings live beside the path; a
-      // shared parent would clobber sibling gates' staged tables)
-      val path = s"$STAGE_BASE/$key/model_registry/quality_logit"
-      val p = new Path(path)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      // rebuild from scratch: the publish lifecycle is under test
-      if (fs.exists(p.getParent)) fs.delete(p.getParent, true)
+      val path = s"${CacheRegistry.scratch("model_registry")}/quality_logit"
       val docs = Tables.load(s, dir, "documents")
       // ONE persisted copy of the quality-feature projection (r16):
       // both trainers and both serving passes below re-derive
@@ -143,11 +126,8 @@ object OpsGate {
     // LOADED cover must equal the direct fit — the q_stream_novelty
     // ground truth, now reached through parquet instead of the JVM.
     "q_novelty_registry" -> { (s, dir) =>
-      val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val path = s"$STAGE_BASE/$key/novelty_registry/novelty_cover"
-      val p = new Path(path)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p.getParent)) fs.delete(p.getParent, true)
+      val path =
+        s"${CacheRegistry.scratch("novelty_registry")}/novelty_cover"
       val emb = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val t = VersionedTable(s, path, retain = 3)
@@ -170,11 +150,9 @@ object OpsGate {
     // byte sizes never enter the projection). Crash windows/locks stay
     // spec-pinned (TableCommitCrashSpec + OpsSpec cover them).
     "q_compaction" -> { (s, dir) =>
-      val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val path = s"$STAGE_BASE/$key/events_small"
+      val path = s"${CacheRegistry.scratch("compaction")}/events_small"
       val p = new Path(path)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true) // rebuild: the lifecycle IS the test
+      val fs = StageDirs.fs(p)
       stageSmallFiles(
         Tables.load(s, dir, "events")
           .select(col("event_id"), col("event_type"),

@@ -5,11 +5,13 @@ import java.io.IOException
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.not
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Delta-flavored table surface and the library's ONE table commit:
   * `merge` / `delete` / `optimize` / `history` / time-travel reads on a
@@ -276,13 +278,15 @@ object VersionedTable {
     * The footer Spark's non-merging inference would read — a
     * `_common_metadata` or `_metadata` summary, else the first data file
     * in path order, over the same hidden-name filter as Spark's listing
-    * — is read on the driver, and the schema Spark stamped into it
-    * becomes the read's schema. Partition columns are still discovered
-    * from the paths (under `basePath` when given), so they stay last and
-    * keep their inferred types. Falls back to the inferring read when
-    * the session merges schemas, when there is no data file, or when
-    * that footer has no Spark schema or it does not parse (files written
-    * by other parquet writers).
+    * — is read on the driver and converted by Spark's own footer rule,
+    * so the schema is the inferring read's for any parquet writer (the
+    * Spark schema stamped into the footer, else the parquet schema
+    * converted under the session's conf). Partition columns are still
+    * discovered from the paths (under `basePath` when given), so they
+    * stay last and keep their inferred types. Falls back to the
+    * inferring read when the session merges schemas, when there is no
+    * data file, or when the footer does not read (the inferring read
+    * then reports why).
     */
   private[graft] def readParquet(spark: SparkSession, dir: String,
                                  basePath: Option[String] = None): DataFrame = {
@@ -295,8 +299,6 @@ object VersionedTable {
   }
 
   private val SummaryFiles = Seq("_common_metadata", "_metadata")
-  // the key Spark's parquet writer stores its row schema under
-  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** `dir`'s files under Spark's listing filter (`_`/`.` names are
     * hidden, except summaries), in path order: (summaries, data files).
@@ -314,8 +316,8 @@ object VersionedTable {
       .partition(st => SummaryFiles.contains(st.getPath.getName))
   }
 
-  /** The Spark schema stamped into the footer Spark's non-merging
-    * inference would read: a summary, else the first data file.
+  /** The schema Spark's non-merging inference reads from `dir`'s
+    * footer: a summary, else the first data file.
     */
   private def footerSchema(spark: SparkSession, summaries: Seq[FileStatus],
                            data: Seq[FileStatus]): Option[StructType] =
@@ -323,13 +325,14 @@ object VersionedTable {
       None
     else Try {
       val conf = spark.sparkContext.hadoopConfiguration
-      val footer = SummaryFiles
-        .flatMap(n => summaries.find(_.getPath.getName == n)) ++ data.take(1)
-      footer.headOption.flatMap { st =>
+      val converter =
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      (SummaryFiles.flatMap(n => summaries.find(_.getPath.getName == n)) ++
+        data.take(1)).headOption.map { st =>
         val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-        val json = try r.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
-          finally r.close()
-        Option(json).map(DataType.fromJson).collect { case s: StructType => s }
+        val footer = try r.getFooter finally r.close()
+        ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, footer), converter)
       }
     }.toOption.flatten
 }

@@ -1,13 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** ORACLE-GATED Structured Streaming — the streaming operators run as
@@ -19,9 +17,13 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   *
   * Harness: each query stages the events parquet into a file-source
   * directory, runs the [[StreamingEvents]] transform under
-  * `Trigger.AvailableNow()` with a FRESH checkpoint (so every
-  * invocation reprocesses from scratch — Verify and each Bench rep get
-  * a full run), asserts the query drained, and returns the sink table.
+  * `Trigger.AvailableNow()` with a FRESH checkpoint in a
+  * [[graft.CacheRegistry.scratch]] slot (so every invocation
+  * reprocesses from scratch — Verify and each Bench rep get a full
+  * run), drains it, and returns the sink table. The staged fixtures
+  * are written once ([[graft.StageDirs.stageOnce]]); checkpoints,
+  * parquet sinks and memory-sink views are per call and go at
+  * [[graft.Graft.releaseCaches]].
   * The memory sink is the conformance harness only — production is the
   * same transform with a parquet/Kafka sink; rows land driver-side
   * here exactly like any gate result does.
@@ -51,73 +53,51 @@ object StreamGateQueries {
 
   private val runCounter = new AtomicInteger(0)
 
-  /** Stage base — under the checkout's git-ignored target/ (derived
-    * from user.dir via [[graft.StageDirs]]; SPARK_GRAFT_STAGE_DIR
-    * overrides for cluster runs), never a hard-coded absolute path.
-    */
-  private val STAGE_BASE = graft.StageDirs.stable("stream_stage")
+  /** The staged-once fixture home of `what` built from `sfDir`. */
+  private def stageTag(sfDir: String, what: String): String =
+    s"stream_stage/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_$what"
 
-  /** Idempotently stage `copies` byte-identical copies of the events
-    * parquet into a directory the file source can list. `copies = 2`
-    * is the dedup fixture: every event arrives exactly twice.
-    */
-  /** List a directory's entries eagerly, closing the underlying
-    * stream (`Files.list` holds a directory fd until closed).
-    */
-  private def listDir(dir: java.nio.file.Path): List[java.nio.file.Path] = {
-    val s = Files.list(dir)
-    try s.iterator().asScala.toList finally s.close()
+  /** Copy the file `from` to `to` through Hadoop's FileSystem. */
+  private def copyFile(from: Path, to: Path): Unit = {
+    val dst = graft.StageDirs.fs(to)
+    FileUtil.copy(graft.StageDirs.fs(from), from, dst, to, false, dst.getConf)
   }
 
-  /** Copy the single part file of a one-partition Spark write out of
-    * its temp dir. REPLACE_EXISTING: a resume after a crash mid-staging
-    * re-copies instead of throwing FileAlreadyExistsException.
+  /** `copies` byte-identical copies of `table`'s parquet in one directory
+    * the file source can list, staged once per (sf dir, table, copies).
+    * `copies = 2` is the dedup fixture: every event arrives exactly
+    * twice. A Spark-written table (a ScaleStage directory) is copied
+    * part file by part file: a shallow copy of its directory would stage
+    * nothing, and the stream would silently drain zero rows.
     */
-  private def copySinglePart(tmp: java.nio.file.Path,
-                             dst: java.nio.file.Path): Unit = {
-    val part = listDir(tmp)
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    Files.copy(part, dst,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
   private def stage(sfDir: String, copies: Int,
-                    table: String = "events"): String = synchronized {
-    val key =
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_") + s"_${table}_x$copies"
-    val dir = Paths.get(s"$STAGE_BASE/$key")
-    if (!Files.exists(dir.resolve("_STAGED"))) {
-      // no marker but files present = a crashed partial staging run
-      // (possibly from an older naming scheme): start clean so the
-      // fixture can never mix two generations of copies
-      if (Files.isDirectory(dir))
-        listDir(dir).foreach(Files.deleteIfExists)
-      Files.createDirectories(dir)
-      val src = Paths.get(s"$sfDir/$table.parquet")
-      (1 to copies).foreach { i =>
-        if (Files.isDirectory(src)) {
-          // a Spark-written table (scale-probe staging dirs): a shallow
-          // copy would stage an EMPTY directory and the stream would
-          // silently drain zero rows — copy every part file instead.
-          // dst is derived from the SOURCE part-file name (Files.list
-          // order is unspecified), so a resume after a partial copy
-          // skips exactly the parts already staged — a positional
-          // index would pair the exists-check with a different part
-          // across runs and silently duplicate/drop files.
-          val parts = listDir(src)
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-          parts.foreach { p =>
-            val dst = dir.resolve(s"${table}_${i}_${p.getFileName}")
-            if (!Files.exists(dst)) Files.copy(p, dst)
-          }
-        } else {
-          val dst = dir.resolve(s"${table}_$i.parquet")
-          if (!Files.exists(dst)) Files.copy(src, dst)
-        }
-      }
-      Files.writeString(dir.resolve("_STAGED"), "ok")
+                    table: String = "events"): String =
+    graft.StageDirs.stageOnce(stageTag(sfDir, s"${table}_x$copies")) { out =>
+      val src = new Path(s"$sfDir/$table.parquet")
+      val fs = graft.StageDirs.fs(src)
+      val parts =
+        if (!fs.getFileStatus(src).isDirectory) Seq(src)
+        else fs.listStatus(src).toSeq.map(_.getPath)
+          .filter(_.getName.endsWith(".parquet"))
+      for (i <- 1 to copies; p <- parts)
+        copyFile(p, new Path(out, s"${table}_${i}_${p.getName}"))
     }
-    dir.toString
+
+  /** Write `df` as the one parquet file `<out>/<name>.parquet`, with
+    * mtime `10^12 ms + i · 10 min`: strictly ordered mtimes pin the
+    * order a `maxFilesPerTrigger = 1` stream reads the slices in.
+    */
+  private def writeSlice(df: DataFrame, out: String, name: String,
+                         i: Int): Unit = {
+    val tmp = new Path(out, s"_$name")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val fs = graft.StageDirs.fs(tmp)
+    val part = fs.listStatus(tmp).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    val dst = new Path(out, s"$name.parquet")
+    fs.rename(part, dst)
+    fs.delete(tmp, true)
+    fs.setTimes(dst, 1000000000000L + i * 600000L, -1)
   }
 
   /** Stage the events table as TWO disjoint parquet files (user_id
@@ -127,26 +107,11 @@ object StreamGateQueries {
     * semantics need (batch 1: even-user counts; batch 2: cumulative).
     */
   private def stageHalves(s: SparkSession, sfDir: String): String =
-    synchronized {
-      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_") + "_halves"
-      val dir = Paths.get(s"$STAGE_BASE/$key")
-      if (!Files.exists(dir.resolve("_STAGED"))) {
-        Files.createDirectories(dir)
-        val ev = s.read.parquet(s"$sfDir/events.parquet")
-        Seq(0, 1).foreach { half =>
-          val tmp = Files.createTempDirectory("graft_half_")
-          ev.filter(pmod(col("user_id"), lit(2)) === half)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val dst = dir.resolve(s"half_$half.parquet")
-          copySinglePart(tmp, dst)
-          // strictly ordered mtimes pin the batch order
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(
-              1000000000000L + half * 600000L))
-        }
-        Files.writeString(dir.resolve("_STAGED"), "ok")
-      }
-      dir.toString
+    graft.StageDirs.stageOnce(stageTag(sfDir, "halves")) { out =>
+      val ev = s.read.parquet(s"$sfDir/events.parquet")
+      Seq(0, 1).foreach(half => writeSlice(
+        ev.filter(pmod(col("user_id"), lit(2)) === half), out,
+        s"half_$half", half))
     }
 
   /** Stage the events table split by EVENT TIME into three ordered
@@ -160,30 +125,14 @@ object StreamGateQueries {
     */
   private val LATE_SPLIT_MS = 3 * 3600000L
   private def stageLate(s: SparkSession, sfDir: String): String =
-    synchronized {
-      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_") + "_late3"
-      val dir = Paths.get(s"$STAGE_BASE/$key")
-      if (!Files.exists(dir.resolve("_STAGED"))) {
-        Files.createDirectories(dir)
-        val ev = s.read.parquet(s"$sfDir/events.parquet")
-        val schema = ev.schema
-        val ms = unix_millis(tsCol(schema))
-        val mx = ev.agg(max(ms)).head().getLong(0)
-        val (c1, c2) = (mx - LATE_SPLIT_MS, mx - 2 * LATE_SPLIT_MS)
-        Seq((0, ms > c1), (1, ms <= c1 && ms > c2), (2, ms <= c2))
-          .foreach { case (i, pred) =>
-            val tmp = Files.createTempDirectory("graft_late_")
-            ev.filter(pred).coalesce(1)
-              .write.mode("overwrite").parquet(tmp.toString)
-            val dst = dir.resolve(s"slice_$i.parquet")
-            copySinglePart(tmp, dst)
-            Files.setLastModifiedTime(dst,
-              java.nio.file.attribute.FileTime.fromMillis(
-                1000000000000L + i * 600000L))
-          }
-        Files.writeString(dir.resolve("_STAGED"), "ok")
-      }
-      dir.toString
+    graft.StageDirs.stageOnce(stageTag(sfDir, "late3")) { out =>
+      val ev = s.read.parquet(s"$sfDir/events.parquet")
+      val ms = unix_millis(tsCol(ev.schema))
+      val mx = ev.agg(max(ms)).head().getLong(0)
+      val (c1, c2) = (mx - LATE_SPLIT_MS, mx - 2 * LATE_SPLIT_MS)
+      Seq(ms > c1, ms <= c1 && ms > c2, ms <= c2).zipWithIndex
+        .foreach { case (pred, i) =>
+          writeSlice(ev.filter(pred), out, s"slice_$i", i) }
     }
 
   /** Event-time column, type-adaptive exactly like [[graft.Tables.epochMs]]
@@ -201,37 +150,27 @@ object StreamGateQueries {
         s"events.ts: unsupported physical type $other")
     }
 
-  /** Run a streaming DataFrame to completion (AvailableNow + fresh
-    * checkpoint) into a uniquely-named memory sink; return the table.
+  /** Wait up to 300 s for `query` (an AvailableNow trigger) to drain,
+    * then stop it.
     */
-  private def runToTable(s: SparkSession, out: DataFrame): DataFrame = {
-    val nm = s"graft_stream_gate_${runCounter.incrementAndGet()}"
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt_")
-    val q = out.writeStream.format("memory").queryName(nm)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").start()
-    try require(q.awaitTermination(300000),
-      s"stream gate $nm did not drain within 300 s")
-    finally q.stop()
-    s.table(nm)
-  }
+  private def drain(query: StreamingQuery, label: String): Unit =
+    try require(query.awaitTermination(300000),
+      s"$label did not drain within 300 s")
+    finally query.stop()
 
-  /** [[runToTable]] in COMPLETE output mode — for unwatermarked
-    * aggregations whose full (bounded-cardinality) result is rewritten
-    * each micro-batch; after drain the sink holds the final state.
+  /** Drain `out` in output mode `mode` into a uniquely named memory sink
+    * and return the sink's table. The checkpoint is a fresh scratch
+    * slot, so every call reprocesses from scratch; the slot and the
+    * sink's view live until [[graft.CacheRegistry.releaseAll]].
     */
-  private def runToTableComplete(s: SparkSession,
-                                 out: DataFrame): DataFrame = {
-    val nm = s"graft_stream_gate_${runCounter.incrementAndGet()}"
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt_")
-    val q = out.writeStream.format("memory").queryName(nm)
+  private def runToTable(s: SparkSession, out: DataFrame,
+                         mode: String = "append"): DataFrame = {
+    val nm = graft.CacheRegistry.registerView(s,
+      s"graft_stream_gate_${runCounter.incrementAndGet()}")
+    drain(out.writeStream.format("memory").queryName(nm)
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("complete").start()
-    try require(q.awaitTermination(300000),
-      s"stream gate $nm did not drain within 300 s")
-    finally q.stop()
+      .option("checkpointLocation", graft.CacheRegistry.scratch("stream_ckpt"))
+      .outputMode(mode).start(), s"stream gate $nm")
     s.table(nm)
   }
 
@@ -653,10 +592,11 @@ object StreamGateQueries {
     // drain must equal the batch per-type max exactly; the head/lag
     // readout derives from the |types|-row result.
     "q_stream_freshness" -> { (s, dir) =>
-      val perType = runToTableComplete(s,
+      val perType = runToTable(s,
         eventsStream(s, dir)
           .select(col("event_type"), unix_millis(col("ts")).as("ms"))
-          .groupBy(col("event_type")).agg(max(col("ms")).as("last_ms")))
+          .groupBy(col("event_type")).agg(max(col("ms")).as("last_ms")),
+        "complete")
       val head = perType.agg(max(col("last_ms")).as("head_ms"))
       perType.crossJoin(broadcast(head))
         .select(col("event_type"), col("last_ms"),
@@ -700,29 +640,23 @@ object StreamGateQueries {
     // Bench rep replay the full two-incarnation lifecycle).
     "q_stream_resume" -> { (s, dir) =>
       val halves = stageHalves(s, dir)
-      val src = Files.createTempDirectory("graft_resume_src_")
-      val sink = Files.createTempDirectory("graft_resume_sink_")
-      val ckpt = Files.createTempDirectory("graft_resume_ckpt_")
+      val Seq(src, sink, ckpt) = Seq("resume_src", "resume_sink",
+        "resume_ckpt").map(graft.CacheRegistry.scratch)
       val schema = s.read.parquet(s"$dir/events.parquet").schema
-      def incarnation(): Unit = {
-        val q = s.readStream.schema(schema).parquet(src.toString)
+      def incarnation(half: Int): Unit = {
+        copyFile(new Path(s"$halves/half_$half.parquet"),
+          new Path(src, s"half_$half.parquet"))
+        drain(s.readStream.schema(schema).parquet(src)
           .select(col("event_id"), col("event_type"))
           .writeStream.format("parquet")
-          .option("path", sink.toString)
-          .option("checkpointLocation", ckpt.toString)
+          .option("path", sink)
+          .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
-          .outputMode("append").start()
-        try require(q.awaitTermination(300000),
-          "resume gate incarnation did not drain within 300 s")
-        finally q.stop()
+          .outputMode("append").start(), "resume gate incarnation")
       }
-      Files.copy(Paths.get(s"$halves/half_0.parquet"),
-        src.resolve("half_0.parquet"))
-      incarnation()
-      Files.copy(Paths.get(s"$halves/half_1.parquet"),
-        src.resolve("half_1.parquet"))
-      incarnation()
-      s.read.parquet(sink.toString)
+      incarnation(0)
+      incarnation(1)
+      s.read.parquet(sink)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("event_id")).as("n_ids"))
@@ -760,19 +694,10 @@ object StreamGateQueries {
     "q_stream_update_counts" -> { (s, dir) =>
       val staged = stageHalves(s, dir)
       val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val nm = s"graft_stream_gate_${runCounter.incrementAndGet()}"
-      val ckpt = Files.createTempDirectory("graft_stream_ckpt_")
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(nm)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("update").start()
-      try require(q.awaitTermination(300000),
-        s"stream gate $nm did not drain within 300 s")
-      finally q.stop()
-      s.table(nm).groupBy(col("event_type"))
+      runToTable(s, s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 1).parquet(staged)
+          .groupBy(col("event_type")).agg(count(lit(1)).as("n")), "update")
+        .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_emissions"),
           min(col("n")).as("n_first"), max(col("n")).as("n_final"))
     },
@@ -787,14 +712,14 @@ object StreamGateQueries {
     // q_kmv_distinct's merge-exactness story, now incremental.
     "q_stream_kmv" -> { (s, dir) =>
       import graft.operators.Sketches.{KMV_K, KMV_RANGE}
-      val perType = runToTableComplete(s,
+      val perType = runToTable(s,
         eventsStream(s, dir)
           .select(col("event_type"),
             conv(substring(md5(concat(lit("kmv:"),
               col("user_id").cast("string"))), 1, 13), 16, 10)
               .cast("long").as("h"))
           .groupBy(col("event_type"))
-          .agg(expr(s"kmv_sketch(h, $KMV_K)").as("sketch")))
+          .agg(expr(s"kmv_sketch(h, $KMV_K)").as("sketch")), "complete")
       perType.select(col("event_type"),
         size(col("sketch")).cast("long").as("sketch_size"),
         when(size(col("sketch")) === KMV_K,
@@ -818,7 +743,7 @@ object StreamGateQueries {
     "q_stream_zone_maps" -> { (s, dir) =>
       import graft.operators.ZOrder
       val schema = s.read.parquet(s"$dir/lineitem.parquet").schema
-      runToTableComplete(s,
+      runToTable(s,
         s.readStream.schema(schema)
           .parquet(stage(dir, 1, table = "lineitem"))
           .select(col("l_partkey").as("x"), col("l_suppkey").as("y"),
@@ -827,7 +752,8 @@ object StreamGateQueries {
           .groupBy(col("zbucket"))
           .agg(count(lit(1)).as("n_rows"),
             min(col("x")).as("x_min"), max(col("x")).as("x_max"),
-            min(col("y")).as("y_min"), max(col("y")).as("y_max")))
+            min(col("y")).as("y_min"), max(col("y")).as("y_max")),
+        "complete")
     },
 
     // ── Count-Min sketch as STREAMING state (complete mode) ────────────
@@ -842,12 +768,12 @@ object StreamGateQueries {
     // ≤ DEPTH·JOIN_WIDTH rows forever, whatever the stream length.
     "q_stream_cms" -> { (s, dir) =>
       import graft.operators.CountMin
-      val cells = runToTableComplete(s,
+      val cells = runToTable(s,
         eventsStream(s, dir)
           .select(CountMin.cellsExploded(
             col("user_id").cast("string"), CountMin.JOIN_WIDTH).as("dc"))
           .groupBy(col("dc.d").as("d"), col("dc.cell").as("cell"))
-          .agg(count(lit(1)).as("c")))
+          .agg(count(lit(1)).as("c")), "complete")
       cells.groupBy(col("d").cast("long").as("d"))
         .agg(count(lit(1)).as("n_cells"),
           sum(col("c")).as("n_events"),
@@ -967,12 +893,9 @@ object StreamGateQueries {
     */
   private def runNeoPipeline(s: SparkSession): Unit = synchronized {
     graft.operators.NeoQueries.materializeBronze(s)
-    val ckpt = Files.createTempDirectory("graft_neo_stream_ckpt_")
-    val q = StreamingPipeline.start(s,
-      graft.operators.NeoQueries.layout, ckpt.toString)
-    try require(q.awaitTermination(300000),
-      "neo streaming pipeline did not drain within 300 s")
-    finally q.stop()
+    drain(StreamingPipeline.start(s, graft.operators.NeoQueries.layout,
+      graft.CacheRegistry.scratch("neo_stream_ckpt")),
+      "neo streaming pipeline")
   }
 
   // ────────────────────────────────────────────────────────────────────

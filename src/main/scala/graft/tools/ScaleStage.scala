@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, LinkOption, Paths}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
@@ -38,17 +38,15 @@ object ScaleStage {
     Seq("region", "nation", "customer", "supplier", "part")
 
   /** The ×k directory for `sfDir`: `sfDir` itself at k = 1, else
-    * `StageDirs.stable("scale/<sf>_x<k>")`, written once (a `_STAGED`
-    * marker, written last, makes later calls reuse it).
+    * `StageDirs.stable("scale/<sf>_x<k>")`, staged once through
+    * [[graft.StageDirs.stageOnce]] and reused by later calls. The links
+    * are `java.nio` symlinks, so the stage base must be local.
     */
   def stage(spark: SparkSession, sfDir: String, k: Int): String = {
     require(k >= 1, s"k must be >= 1, got $k")
     if (k == 1) return sfDir
     val sfName = Paths.get(sfDir).getFileName
-    val out = graft.StageDirs.stable(s"scale/${sfName}_x$k")
-    val marker = Paths.get(out, "_STAGED")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(Paths.get(out))
+    graft.StageDirs.stageOnce(s"scale/${sfName}_x$k") { out =>
       for ((table, keys) <- replicated) {
         val base = spark.read.parquet(s"$sfDir/$table.parquet")
         (0 until k).map { i =>
@@ -58,15 +56,10 @@ object ScaleStage {
           .repartition(32)
           .write.mode("overwrite").parquet(s"$out/$table.parquet")
       }
-      for (table <- linked) {
-        val link = Paths.get(out, s"$table.parquet")
-        if (!Files.exists(link, LinkOption.NOFOLLOW_LINKS))
-          Files.createSymbolicLink(link,
-            Paths.get(sfDir, s"$table.parquet").toAbsolutePath)
-      }
-      Files.writeString(marker, "ok")
+      for (table <- linked)
+        Files.createSymbolicLink(Paths.get(out, s"$table.parquet"),
+          Paths.get(sfDir, s"$table.parquet").toAbsolutePath)
     }
-    out
   }
 
   def main(args: Array[String]): Unit = {

@@ -9,7 +9,8 @@ import graft.operators.{Clusters, Dedup, DedupPlan, Fixpoint}
   * ZERO persisted RDDs — a long-lived session using the facade must not
   * accumulate cache blocks across calls (round-2 finding: four persists
   * with no unpersist anywhere). The same release deletes the operators'
-  * scratch slots, whose paths keep a URI base's authority.
+  * scratch slots, whose paths keep a URI base's authority, and drops the
+  * stream gates' memory-sink views.
   */
 class CacheLifecycleSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -53,6 +54,17 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkSpec {
     assert(onDisk)
     Graft.releaseCaches()
     assert(!onDisk, s"$root left behind")
+  }
+
+  test("releaseCaches drops the stream gates' memory-sink views") {
+    def sinkViews = spark.catalog.listTables().collect().toSeq
+      .filter(t => t.isTemporary && t.name.startsWith("graft_stream_gate_"))
+      .map(_.name)
+    graft.streaming.StreamGateQueries.queries("q_stream_freshness")(
+      spark, "/root/testdata/sf0.001").collect()
+    assert(sinkViews.nonEmpty)
+    Graft.releaseCaches()
+    assert(sinkViews === Nil)
   }
 
   test("a scratch slot under a URI base keeps the base's authority") {

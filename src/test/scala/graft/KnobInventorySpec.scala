@@ -10,18 +10,22 @@ import org.scalatest.funsuite.AnyFunSuite
   * every `graft.*` system property in `src/main/scala`. A new knob has to
   * be added here and to the README's Settings table; a deleted one has
   * to leave both. Also pins the runnable mains (Bench is the one timing
-  * loop, PlanAudit the one plan tool) and the one scratch allocator,
-  * [[CacheRegistry.scratch]].
+  * loop, PlanAudit the one plan tool), the one scratch allocator,
+  * [[CacheRegistry.scratch]], and the one staged-once helper,
+  * [[StageDirs.stageOnce]].
   */
 class KnobInventorySpec extends AnyFunSuite {
 
-  private val mainSources: Seq[String] = {
+  // (file name, source) of every file under src/main/scala
+  private val mainFiles: Seq[(String, String)] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"$root missing")
     Files.walk(root).iterator.asScala
       .filter(_.toString.endsWith(".scala"))
-      .map(Files.readString).toList
+      .map(p => p.getFileName.toString -> Files.readString(p)).toList
   }
+
+  private val mainSources: Seq[String] = mainFiles.map(_._2)
 
   private def scan(pattern: String): Set[String] =
     mainSources.flatMap(pattern.r.findAllMatchIn(_).map(_.group(1))).toSet
@@ -52,6 +56,15 @@ class KnobInventorySpec extends AnyFunSuite {
     "no StageDirs.scratch") {
     assert(scan("""\b(scratchDir)\s*:""") === Set.empty[String])
     assert(scan("""(StageDirs\.scratch)\b""") === Set.empty[String])
+  }
+
+  test("per-call state has one home: no temp directories, one staged-once " +
+    "marker") {
+    def hits(needle: String): Seq[String] =
+      mainFiles.flatMap { case (name, src) =>
+        needle.r.findAllMatchIn(src).map(_ => name) }
+    assert(hits("""Files\.createTempDirectory""") === Nil)
+    assert(hits("\"_STAGED\"").filterNot(_ == "StageDirs.scala") === Nil)
   }
 
   test("Bench's full record defaults to this checkout, partial runs to /tmp") {

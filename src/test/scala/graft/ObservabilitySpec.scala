@@ -70,4 +70,25 @@ class ObservabilitySpec extends AnyFunSuite with SparkSpec {
     assert(counted.jobs > 0)
     assert(counted.tasks > 0)
   }
+
+  test("launched nests and restores the caller's job group") {
+    // a shuffle and a result stage: more than one job and task to count
+    def body(): Unit =
+      spark.range(0, 1000, 1, 4).selectExpr("id % 7 AS k")
+        .groupBy("k").count().collect()
+    val plain = launched(body())
+    assert(plain.jobs > 0)
+    var inner = Observability.Launched(-1, -1)
+    val outer = launched { inner = launched(body()) }
+    assert(outer === plain)
+    assert(inner === plain)
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller", "set before the count")
+    try {
+      launched(body())
+      assert(sc.getLocalProperty("spark.jobGroup.id") === "caller")
+      assert(sc.getLocalProperty("spark.job.description") ===
+        "set before the count")
+    } finally sc.clearJobGroup()
+  }
 }

@@ -18,9 +18,10 @@ import graft.sources.{BronzeIngest, Layout, NeoFixture}
   * the schema from a parquet footer on the driver instead of Spark's
   * one-job schema inference, and the schema it reads equals the one the
   * inferring read would have given, on the daily gold, after
-  * a schema-evolving merge, an optimize and a restore, and on the two
-  * fallbacks (a footer with no Spark schema, and a session that merges
-  * schemas).
+  * a schema-evolving merge, an optimize and a restore, on a footer with
+  * no Spark schema and on the pyarrow-written test tables
+  * [[Tables.load]] opens; a session that merges schemas falls back to
+  * the inferring read.
   */
 class TableOpenSpec extends AnyFunSuite with SparkSpec {
 
@@ -99,7 +100,8 @@ class TableOpenSpec extends AnyFunSuite with SparkSpec {
     assert(t.retainedVersions() === Seq(1L, 2L, 3L))
   }
 
-  test("a footer without Spark's schema falls back to the inferring read") {
+  test("a footer without Spark's schema is converted like the inferring " +
+    "read") {
     val dir = tmp("example")
     val schema = MessageTypeParser.parseMessageType(
       "message m { required int64 id; optional binary name (UTF8); }")
@@ -110,11 +112,21 @@ class TableOpenSpec extends AnyFunSuite with SparkSpec {
     try Seq(1L -> "a", 2L -> "b").foreach { case (id, name) =>
       w.write(groups.newGroup().append("id", id).append("name", name))
     } finally w.close()
-    // the inferring read's one job shows the fallback was taken
-    assert(launched(VersionedTable.readParquet(spark, dir)).jobs === 1)
+    // Spark's footer rule converts the parquet schema on the driver
+    assert(launched(VersionedTable.readParquet(spark, dir)).jobs === 0)
     val df = VersionedTable.readParquet(spark, dir)
     assert(df.schema === spark.read.parquet(dir).schema)
     assert(rows(df) === Seq("[1,a]", "[2,b]"))
+  }
+
+  test("Tables.load opens every test table without a job, with the " +
+    "inferring read's schema") {
+    val sf = "/root/testdata/sf0.001"
+    Tables.all.foreach { name =>
+      assert(launched(Tables.load(spark, sf, name)).jobs === 0, name)
+      assert(Tables.load(spark, sf, name).schema ===
+        spark.read.parquet(s"$sf/$name.parquet").schema, name)
+    }
   }
 
   test("a session that merges schemas falls back to the inferring read") {
