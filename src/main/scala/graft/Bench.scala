@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-import graft.operators.Observability
+import graft.operators.{Observability, VersionedTable}
 
 /** Driver-run benchmark: times every SparkEntry query at the given SF.
   *
@@ -219,11 +219,13 @@ object Bench {
     */
   private def warmup(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
+    def head50(table: String) =
+      VersionedTable.readParquet(spark, s"$sfDir/$table.parquet").limit(50)
     spark.range(1000).selectExpr("sum(id)").collect()
     // text family: tokenize → hash → ObjectHashAggregate(bounded_topk)
     // → posting-list HOF combos (transform/slice/flatten/struct) — the
     // exact jaccard path
-    spark.read.parquet(s"$sfDir/documents.parquet").limit(50)
+    head50("documents")
       .select(col("doc_id"),
         explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
       .select(col("doc_id"),
@@ -238,7 +240,7 @@ object Bench {
       .count()
     // vector + banding family: native cosine_sim/l2_sq loops, in-row
     // argmin over (d2, cell) structs, posexplode band slicing, bit_count
-    spark.read.parquet(s"$sfDir/embeddings.parquet").limit(50)
+    head50("embeddings")
       .select(col("vec_id"), col("embedding"))
       .withColumn("d", expr("cosine_sim(embedding, embedding)"))
       .withColumn("cell",
@@ -265,7 +267,7 @@ object Bench {
     // JIT/interpreter classes; per-query codegen is text-keyed and
     // still paid once per novel plan, which the medians absorb
     locally {
-      val sg = spark.read.parquet(s"$sfDir/documents.parquet").limit(50)
+      val sg = head50("documents")
         .select(col("doc_id"),
           explode(split(lower(col("text")), "\\s+")).as("tok"))
         .select(col("doc_id"),
@@ -298,13 +300,13 @@ object Bench {
         .selectExpr("stack(2, CAST(0 AS BIGINT), c0, " +
           "CAST(1 AS BIGINT), c1) AS (b, c)")
         .count()
-      spark.read.parquet(s"$sfDir/orders.parquet").limit(50)
+      head50("orders")
         .groupBy(col("o_orderpriority"))
         .pivot("o_orderstatus")
         .agg(count(lit(1)))
         .count()
     }
-    spark.read.parquet(s"$sfDir/embeddings.parquet").limit(50)
+    head50("embeddings")
       .select(col("vec_id"),
         expr("transform(embedding, x -> " +
           "CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT))")

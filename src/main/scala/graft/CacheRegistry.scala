@@ -6,6 +6,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Tracks every DataFrame the library persists, every stream sink view
   * it registers, and owns the per-call directories the library writes,
@@ -18,7 +19,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * unpersisting inside the operator would evict the cache before the
   * caller's action ran. The contract instead:
   *
-  *   - every `persist` in library code goes through [[register]];
+  *   - every `persist` in library code is a call to [[persist]], which
+  *     also decides the storage level, for every operator at once (the
+  *     gold serving pin, owned by `spark.catalog.clearCache()`, is the
+  *     one exception);
   *   - every per-call directory comes from [[scratch]], one fresh slot
   *     per call, so a result outlives any number of later calls: a
   *     [[operators.Fixpoint]] truncation's parquet, a stream gate's
@@ -56,8 +60,13 @@ object CacheRegistry {
   // registry itself from growing in a long-lived serving process
   private val handles = mutable.LinkedHashMap.empty[Int, Dataset[_]]
 
-  /** Record a persisted Dataset for later release; returns it unchanged. */
-  def register[T](ds: Dataset[T]): Dataset[T] = synchronized {
+  /** Persist `ds` (memory, spilling to disk) and record it for release
+    * at [[releaseAll]]; returns the persisted Dataset.
+    */
+  def persist[T](ds: Dataset[T]): Dataset[T] =
+    register(ds.persist(StorageLevel.MEMORY_AND_DISK))
+
+  private def register[T](ds: Dataset[T]): Dataset[T] = synchronized {
     handles.put(ds.queryExecution.analyzed.semanticHash(), ds)
     ds
   }

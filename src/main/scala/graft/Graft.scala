@@ -1,20 +1,28 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-import graft.operators._
+import graft.operators.VersionedTable
 import graft.sources.{FeedFetcher, Layout}
 
-/** User-facing façade — the one import a reference user needs to switch.
+/** The reference's user surface: a configured session, the daily
+  * medallion pipeline, SQL serving over the gold star, versioned tables
+  * and the release of what the library persisted.
   *
-  * Everything delegates to the operator modules; this object exists so
-  * the library has a single discoverable entry point mirroring the
-  * reference's capabilities (medallion pipeline + SQL serving) plus the
-  * training-data extensions (dedup, similarity, text, multimodal).
+  *   - [[sessionConf]] / [[newSession]]: every graft session (the
+  *     library, Verify, Bench, PlanAudit, the specs, the pipeline CLI)
+  *     is built from the one conf list, which registers the graft
+  *     extensions (`bounded_topk`, `cosine_sim`, `l2_sq`, among others);
+  *   - [[runPipeline]]: ingest → silver → gold for a date range;
+  *   - [[serve]]: the gold star as version-pinned SQL views;
+  *   - [[table]]: a versioned table (merge, delete, time travel);
+  *   - [[releaseCaches]]: drop every cache, view and scratch slot the
+  *     operators left for their lazy results.
   *
-  * Sessions should come from [[newSession]], which applies the one conf
-  * list [[sessionConf]] (graft extensions registering `bounded_topk`,
-  * `cosine_sim`, `l2_sq`, among others).
+  * Everything below that surface is called on its operator module, one
+  * public name each: `operators.Dedup`, `Clusters`, `TextQueries`,
+  * `VectorQueries`, `EventQueries`, `Curation`, `Sketches`, the
+  * `streaming` objects and the rest.
   */
 object Graft {
 
@@ -46,7 +54,7 @@ object Graft {
     *     §1). Explode drops empty arrays regardless;
     *   - `canChangeCachedPlanOutputPartitioning=false`: cached plans
     *     expose their output partitioning, so the iterative operators'
-    *     repartition(col).persist() rounds stay co-located instead of
+    *     persisted repartition(col) rounds stay co-located instead of
     *     AQE re-shuffling every consumer (PlanShapeSpec pins the
     *     one-exchange-per-round shape);
     *   - a generated-class cache of 20000 entries: the default LRU of
@@ -136,79 +144,13 @@ object Graft {
   def serve(spark: SparkSession, base: String): Unit =
     etl.SilverToGold.registerServingViews(spark, Layout(base))
 
-  // ── deduplication ────────────────────────────────────────────────────
-
-  def exactDuplicates(docs: DataFrame, id: String, text: String): DataFrame =
-    Dedup.exactGroups(docs, id, text)
-
-  def minhashSignatures(docs: DataFrame, id: String, text: String,
-                        k: Int = 3, numHashes: Int = 16): DataFrame =
-    Dedup.minhashSignatures(docs, id, text, k, numHashes)
-
-  /** Scale path: LSH candidates verified with exact Jaccard. */
-  def nearDuplicates(docs: DataFrame, id: String, text: String,
-                     thresholdPct: Int = 60): DataFrame =
-    Dedup.lshVerifiedPairs(docs, id, text, thresholdPct = thresholdPct)
-
-  def simhashNearDuplicates(docs: DataFrame, id: String, text: String,
-                            maxHamming: Int = 3): DataFrame =
-    Dedup.simhashNearDupPairs(docs, id, text, maxHamming)
-
-  /** Signature-only similarity triage: LSH candidates ranked by MinHash
-    * slot agreement (estimated Jaccard, integer percent) — the cheap
-    * middle tier between banding and [[nearDuplicates]]' exact verify.
+  /** Open the versioned table at `path`: merge / delete / optimize /
+    * history / time-travel reads over the [[operators.DirSwap]] commit
+    * protocol — see [[operators.VersionedTable]].
     */
-  def estimatedNearDuplicates(docs: DataFrame, id: String,
-                              text: String): DataFrame =
-    Dedup.estimatedJaccardPairs(docs, id, text)
-
-  /** The SHARED dedup composition a production pipeline runs ONCE:
-    * exact tier → LSH-verified pairs on exact survivors → one CC
-    * fixpoint → persisted member table, with every consumer (keep/drop
-    * list, golden records, removal accounting) one aggregate over the
-    * shared intermediates instead of re-deriving the pipeline per
-    * question — see [[operators.DedupPlan]]. Release with
-    * [[releaseCaches]] when done.
-    */
-  def dedupPlan(docs: DataFrame, id: String = "doc_id",
-                text: String = "text", k: Int = 3, numHashes: Int = 16,
-                bands: Int = 4, thresholdPct: Int = 60): DedupPlan =
-    DedupPlan(docs, id, text, k, numHashes, bands, thresholdPct)
-
-  /** Close near-dup PAIRS into clusters: (id, cluster_id) via
-    * distributed connected components — see [[operators.Clusters]].
-    */
-  def duplicateClusters(pairs: DataFrame, src: String = "doc_a",
-                        dst: String = "doc_b"): DataFrame =
-    Clusters.connectedComponents(pairs, src, dst)
-
-  /** Integer PageRank centrality over a near-dup pair list (canonical-
-    * doc selection) — see [[operators.Clusters.pageRank]].
-    */
-  def pageRank(pairs: DataFrame, src: String = "doc_a",
-               dst: String = "doc_b", iters: Int = 5): DataFrame =
-    Clusters.pageRank(pairs, src, dst, iters)
-
-  /** Train BPE merges over a document table; apply them with
-    * [[operators.Bpe.applyMerges]] — see [[operators.Bpe]].
-    */
-  def bpeTrain(docs: DataFrame, id: String = "doc_id",
-               text: String = "text", nMerges: Int = 16): DataFrame =
-    Bpe.train(docs, id, text, nMerges)
-
-  /** One keep-doc per near-dup cluster by (quality desc, id asc);
-    * `quality` carries (doc_id, quality). The keep/drop list a curation
-    * pipeline executes.
-    */
-  def clusterSurvivors(pairs: DataFrame, quality: DataFrame): DataFrame =
-    Clusters.survivors(pairs, quality)
-
-  /** Point-in-interval range join without a nested-loop plan — the
-    * day-grain equi-join rewrite, see [[operators.RangeJoin]].
-    */
-  def rangeJoin(points: DataFrame, ptCol: String, intervals: DataFrame,
-                loCol: String, hiCol: String): DataFrame =
-    RangeJoin.joinPointInInterval(points, ptCol, intervals, loCol, hiCol)
+  def table(spark: SparkSession, path: String,
+            retain: Int = 3): VersionedTable =
+    VersionedTable(spark, path, retain)
 
   /** Release every intermediate the library has persisted (signatures,
     * shingle sets, fingerprints) and delete every scratch slot its
@@ -219,603 +161,4 @@ object Graft {
     * process-wide. See [[CacheRegistry]] for the contract.
     */
   def releaseCaches(): Unit = CacheRegistry.releaseAll()
-
-  // ── curation (reproducible selection) ────────────────────────────────
-
-  /** Deterministic ~pct% sample keyed on md5 of the id column — same
-    * rows on every engine, run, and partitioning (unlike rand()).
-    * Delegates to [[operators.Curation.hashBucket]], the single
-    * definition the oracle-checked queries also use.
-    */
-  def hashSample(df: DataFrame, idCol: String, pct: Int,
-                 seed: Int = 7): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    df.filter(Curation.hashBucket(col(idCol), seed) < pct)
-  }
-
-  /** Add a reproducible train/valid/test label (80/10/10 hash buckets). */
-  def withSplit(df: DataFrame, idCol: String, seed: Int = 7): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    df.withColumn("split", Curation.splitLabel(col(idCol), seed))
-  }
-
-  /** Concat-then-chunk sequence packing: (shard, seq_in_shard,
-    * offset_tokens) per row from a cumulative token-count window
-    * partitioned by hash shard — parallelism = shard count. `tokenCol`
-    * carries the per-row token count (long).
-    */
-  def packSequences(df: DataFrame, idCol: String, tokenCol: String,
-                    budget: Int = 256, shards: Int = 8,
-                    seed: Int = 7): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val t = df.withColumn("shard", Curation.hashBucket(col(idCol), seed)
-      % shards)
-    val w = Window.partitionBy(col("shard")).orderBy(col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t.withColumn("__cum", sum(col(tokenCol)).over(w))
-      .withColumn("seq_in_shard",
-        expr(s"(__cum - $tokenCol) div $budget"))
-      .withColumn("offset_tokens",
-        (col("__cum") - col(tokenCol)) % budget)
-      .drop("__cum")
-  }
-
-  // ── similarity / text / media ────────────────────────────────────────
-
-  /** Fit IVF centroids: Lloyd refinement from seed centroids. */
-  def fitCentroids(emb: DataFrame, seedCentroids: DataFrame,
-                   iters: Int = 3): DataFrame =
-    KMeans.refine(emb, seedCentroids, iters)
-
-  /** Nearest-centroid cell per row — the blocking/IVF assignment
-    * primitive. Selects the exact flat in-row argmin below the measured
-    * crossover and the join-based coarse-then-fine assignment above it
-    * (APPROXIMATE there — same recall trade LSH banding makes, and the
-    * row set must be distinct; use
-    * [[operators.VectorQueries.withCell]] semantics via a sub-crossover
-    * centroid count when exactness is required).
-    */
-  def assignEmbeddingCells(df: DataFrame, centroids: DataFrame,
-                           vec: Column): DataFrame =
-    operators.VectorQueries.assignCells(df, centroids, vec)
-
-  /** Persisted mergeable distinct-count profile state: one ~2 KB HLL
-    * sketch per unit (day/source/shard); answer any-subset distinct
-    * queries by unioning sketches — O(|sketches|), no rescan. See
-    * [[operators.Sketches]].
-    */
-  def sketchByUnit(df: DataFrame, unitCol: String, keyCol: String,
-                   lgK: Int = 12): DataFrame =
-    Sketches.sketchByUnit(df, unitCol, keyCol, lgK)
-
-  /** Union a (filtered) sketch table into one distinct estimate. */
-  def mergedDistinct(sketches: DataFrame): DataFrame =
-    Sketches.mergedEstimate(sketches)
-
-  /** One mergeable Misra–Gries heavy-hitters sketch per unit — the
-    * persisted top-k profile state (exact when distinct keys fit the
-    * capacity; MG lower-bound guarantees otherwise).
-    */
-  def freqByUnit(df: DataFrame, unitCol: String, keyCol: String,
-                 capacity: Int = 64): DataFrame =
-    Sketches.freqByUnit(df, unitCol, keyCol, capacity)
-
-  /** Union a (filtered) freq-sketch table into one heavy-hitters
-    * summary (PODS'12 MG merge) — O(|sketches|·capacity), no rescan.
-    */
-  def mergedFreq(sketches: DataFrame, capacity: Int = 64): DataFrame =
-    Sketches.mergedFreq(sketches, capacity)
-
-  /** Exchange-aware salted join for skewed keys. */
-  def skewJoin(large: DataFrame, small: DataFrame, keys: Seq[String],
-               salt: Int = 16): DataFrame =
-    SkewJoin.saltedInnerJoin(large, small, keys, salt)
-
-  /** Keep/drop curation verdict per document — see
-    * [[operators.TextQueries.curationFunnel]] (q_curation_funnel).
-    */
-  def curationVerdicts(docs: DataFrame): DataFrame =
-    TextQueries.curationFunnel(docs)
-
-  /** Ordered-funnel user counts over (user_id, event_type, ms) — see
-    * [[operators.EventQueries.funnelCounts]] (q_event_funnel).
-    */
-  def funnel(events: DataFrame, steps: Seq[String]): DataFrame =
-    EventQueries.funnelCounts(events, steps)
-
-  /** Cohort-retention matrix over (user_id, ms) — see
-    * [[operators.EventQueries.cohortRetention]] (q_cohort_retention).
-    */
-  def cohortRetention(events: DataFrame): DataFrame =
-    EventQueries.cohortRetention(events)
-
-  /** Streaming ordered funnel (advancement facts) — see
-    * [[streaming.StreamingEvents.funnelStream]] for the late-data
-    * contract.
-    */
-  def funnelStream(events: org.apache.spark.sql.Dataset[
-        streaming.StreamingEvents.Event],
-      steps: Seq[String]): org.apache.spark.sql.Dataset[
-        streaming.FunnelAdvance] =
-    streaming.StreamingEvents.funnelStream(events, steps)
-
-  /** Incremental sharded heavy hitters (Misra–Gries state). */
-  def heavyHittersStream(events: org.apache.spark.sql.Dataset[
-        streaming.StreamingEvents.Event],
-      capacity: Int = 64, shards: Int = 8)
-      : org.apache.spark.sql.Dataset[streaming.FreqRow] =
-    streaming.StreamingEvents.heavyHittersStream(events, capacity,
-      shards)
-
-  /** Incremental per-type quantile histograms (mergeable fixed bins). */
-  def quantileStream(events: org.apache.spark.sql.Dataset[
-        streaming.StreamingEvents.Event])
-      : org.apache.spark.sql.Dataset[streaming.QuantRow] =
-    streaming.StreamingEvents.quantileStream(events)
-
-  def mediaCatalog(media: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    media.select(col("media_id"),
-      Multimodal.byteSize(col("bytes")).as("n_bytes"),
-      Multimodal.magicMime(col("bytes")).as("mime"),
-      Multimodal.fingerprint(col("bytes")).as("fp"))
-  }
-
-  /** Perceptual near-duplicate media pairs: 60-bit aHash fingerprints
-    * through the generic banded-hamming retrieval.
-    */
-  def mediaNearDuplicates(media: DataFrame,
-                          maxHamming: Int = 3): DataFrame =
-    Dedup.bandedHammingPairs(Multimodal.aHashed(media), "media_id",
-        "ahash", Multimodal.AHASH_BITS, maxHamming)
-      .toDF("media_a", "media_b", "hamming")
-
-  /** Sign-random-projection sketch of an `array<float>` embedding
-    * column: `dims` exact integer components via the native codegen'd
-    * `rp_project` (zero shuffle; srp_sig ≡ its sign bits). Requires a
-    * GraftExtensions session.
-    */
-  def rpProject(df: DataFrame, vecCol: String, dims: Int = 16,
-                outCol: String = "rp"): DataFrame = {
-    import org.apache.spark.sql.functions.expr
-    df.withColumn(outCol, expr(s"rp_project($vecCol, $dims)"))
-  }
-
-  /** Per-document share of distinct k-grams duplicated across the
-    * corpus (basis points) — the exact-substring-dedup signal.
-    */
-  def dupNgramCoverage(docs: DataFrame, id: String, text: String,
-                       k: Int = 3): DataFrame =
-    TextQueries.dupNgramCoverage(docs, id, text, k)
-
-  /** Corpus-trained integer bigram-LM surprisal score per document —
-    * the CCNet/KenLM-style perplexity-filter ranking.
-    */
-  def bigramLmScores(docs: DataFrame, id: String,
-                     text: String): DataFrame =
-    TextQueries.bigramLmScores(docs, id, text)
-
-  /** Deflate compression-ratio quality signal per document (basis
-    * points; null for empty text) — the model-free templating/noise
-    * filter. Zero-shuffle mapPartitions projection.
-    */
-  def compressionRatios(docs: DataFrame, id: String,
-                        text: String): DataFrame =
-    operators.Compression.ratios(docs, id, text)
-
-  /** Exact prefix-filtering similarity join (All-Pairs/PPJoin): the
-    * full Jaccard-threshold pair set without all-pairs enumeration.
-    */
-  def exactSimilarityJoin(docs: DataFrame, id: String, text: String,
-                          k: Int = 3, thresholdPct: Int = 60): DataFrame =
-    Dedup.prefixFilterPairs(docs, id, text, k, thresholdPct)
-
-  /** Recall of the LSH near-dup path vs the exact prefix-filter truth
-    * — one row (n_true, n_found, recall_pct). Run on a sampled slice
-    * to calibrate the banding scheme.
-    */
-  def lshRecall(docs: DataFrame, id: String, text: String,
-                k: Int = 3, numHashes: Int = 16, bands: Int = 4,
-                thresholdPct: Int = 60): DataFrame =
-    Dedup.lshRecall(docs, id, text, k, numHashes, bands, thresholdPct)
-
-  /** Candidate-vs-verified S-curve for every band split of one
-    * signature table — the empirical banding-tuning report.
-    */
-  def lshTuning(docs: DataFrame, id: String, text: String,
-                k: Int = 3, numHashes: Int = 16,
-                bandConfigs: Seq[Int] = Seq(1, 2, 4, 8, 16),
-                thresholdPct: Int = 60): DataFrame =
-    Dedup.lshTuning(docs, id, text, k, numHashes, bandConfigs,
-      thresholdPct)
-
-  /** Dedup ablation ladder: pairs/docs/tokens a near-dup pass would
-    * remove at each threshold.
-    */
-  def dedupAblation(docs: DataFrame, id: String, text: String,
-                    k: Int = 3,
-                    thresholds: Seq[Int] = Seq(50, 60, 70, 80, 90))
-      : DataFrame =
-    Dedup.dedupAblation(docs, id, text, k, thresholds)
-
-  /** Longest duplicated-span per doc (exact-substring-dedup signal). */
-  def dupSpans(docs: DataFrame, id: String, text: String,
-               k: Int = 3, minRun: Int = 2): DataFrame =
-    Dedup.dupSpans(docs, id, text, k, minRun)
-
-  /** Exact token coverage of duplicated spans per doc (the removal
-    * volume an exact-substring dedup pass would excise).
-    */
-  def dupSpanCoverage(docs: DataFrame, id: String, text: String,
-                      k: Int = 3): DataFrame =
-    Dedup.dupSpanCoverage(docs, id, text, k)
-
-  /** Strided byte-diversity stats per media payload — the decode-free
-    * blank/corruption screen.
-    */
-  def mediaByteStats(media: DataFrame): DataFrame =
-    operators.Multimodal.byteStats(media)
-
-  /** Equal-share token-budget mixture allocation per source: milli-
-    * epochs (capped) + planned token volume. `tokenCol` carries the
-    * per-row token count.
-    */
-  def mixtureWeights(rows: DataFrame, srcCol: String, tokenCol: String,
-                     capMilli: Int = 4000): DataFrame =
-    Curation.mixtureWeights(rows, srcCol, tokenCol, capMilli)
-
-  /** 2-D Pareto frontier (maximize both axes) per group, with a point
-    * multiplicity count — O(distinct points), never O(n²).
-    */
-  def skyline(points: DataFrame, partCols: Seq[String], xCol: String,
-              yCol: String, countName: String = "n_rows"): DataFrame =
-    Curation.skyline(points, partCols, xCol, yCol, countName)
-
-  /** Incremental Markov transition facts: one (prev → next) row per
-    * consecutive event pair per user, constant state. Aggregate
-    * downstream for the live matrix. See
-    * [[streaming.StreamingEvents.transitionsStream]].
-    */
-  def transitionsStream(events: org.apache.spark.sql.Dataset[
-      streaming.StreamingEvents.Event]): org.apache.spark.sql.Dataset[
-      streaming.Transition] =
-    streaming.StreamingEvents.transitionsStream(events)
-
-  /** Incremental streaming skyline: per-group frontier folded per
-    * micro-batch in bounded state; emits the updated frontier stamped
-    * with a revision (read the max-rev rows). See
-    * [[streaming.StreamingEvents.skylineStream]].
-    */
-  def skylineStream(points: org.apache.spark.sql.Dataset[
-      streaming.SkyPoint]): org.apache.spark.sql.Dataset[
-      streaming.SkyFrontier] =
-    streaming.StreamingEvents.skylineStream(points)
-
-  // ── versioned table surface (Delta-protocol stand-in) ────────────────
-
-  /** Open the versioned table at `path`: merge / delete / optimize /
-    * history / time-travel reads over the [[operators.DirSwap]] commit
-    * protocol — see [[operators.VersionedTable]].
-    */
-  def table(spark: SparkSession, path: String,
-            retain: Int = 3): VersionedTable =
-    VersionedTable(spark, path, retain)
-
-  /** As-of join: each left row matched to the latest right row with
-    * rightTs ≤ leftTs for the same key — the union-and-carry plan (one
-    * sort per key, no range fan-out). Returns left ids with the matched
-    * right payload struct (null when nothing precedes).
-    */
-  def asOfJoin(leftDf: DataFrame, rightDf: DataFrame, key: String,
-               leftTs: String, rightTs: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val payloadCols = rightDf.columns.filterNot(c => c == key || c == rightTs)
-    val l = leftDf.withColumn("__kind", lit(1))
-      .withColumn("__ts", col(leftTs))
-    val r = rightDf.withColumn("__kind", lit(0))
-      .withColumn("__ts", col(rightTs))
-    val unioned = l.unionByName(r, allowMissingColumns = true)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key))
-      .orderBy(col("__ts").asc, col("__kind").asc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    unioned
-      .withColumn("__matched",
-        last(when(col("__kind") === 0,
-          struct(payloadCols.map(col): _*)), ignoreNulls = true).over(w))
-      .filter(col("__kind") === 1)
-      .drop((payloadCols :+ "__kind" :+ "__ts").toSeq: _*)
-      .withColumnRenamed("__matched", "matched")
-  }
-
-  /** Bloom-pruned semi-join (see [[operators.BloomPrune]]): prefilter
-    * `probe` map-side through a sketch of `build`'s keys, then exact
-    * inner join — same rows as the plain join, shuffle volume bounded
-    * by matches + fpp·|probe|.
-    */
-  def bloomPrunedJoin(probe: DataFrame, build: DataFrame, key: String,
-                      expectedKeys: Long, fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val bloom = operators.BloomPrune.buildBloom(build, col(key),
-      expectedKeys, fpp)
-    probe.filter(operators.BloomPrune.mightContain(bloom, col(key)))
-      .join(build.select(col(key)).distinct(), key)
-  }
-
-  /** Morton z-value of two integral columns (see [[operators.ZOrder]]);
-    * `repartitionByRange` + sorted write on it clusters a table for
-    * two-dimensional min/max file skipping.
-    */
-  def zValue(x: org.apache.spark.sql.Column,
-             y: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    operators.ZOrder.zValue(x, y)
-
-  /** CDC diff of two keyed snapshots (see [[operators.ChangeFeed]]). */
-  def changeFeed(oldSnap: DataFrame, newSnap: DataFrame): DataFrame =
-    operators.ChangeFeed.diff(oldSnap, newSnap)
-
-  /** Per-doc winnowing fingerprint selections (MOSS; see
-    * [[operators.Winnow]]): zero-shuffle, position-robust k-gram
-    * subset with the 2/(w+1)-density guarantee.
-    */
-  def winnowFingerprints(docs: DataFrame, id: String = "doc_id",
-                         text: String = "text", k: Int = 3,
-                         w: Int = 4): DataFrame =
-    operators.Winnow.selections(docs, id, text, k, w)
-
-  /** Partial-overlap pairs via shared winnow fingerprints (see
-    * [[operators.Winnow.matches]]) — catches shared runs ≥ k+w-1
-    * tokens that whole-doc Jaccard thresholds miss.
-    */
-  def winnowMatches(docs: DataFrame, id: String = "doc_id",
-                    text: String = "text", k: Int = 3, w: Int = 4,
-                    maxDf: Int = 100, minShared: Int = 3): DataFrame =
-    operators.Winnow.matches(docs, id, text, k, w, maxDf, minShared)
-
-  /** DSIR-shape hashed-unigram importance weights against a target
-    * membership predicate (see [[operators.Curation.importanceWeights]]).
-    */
-  def importanceWeights(docs: DataFrame,
-                        isTarget: org.apache.spark.sql.Column,
-                        id: String = "doc_id",
-                        text: String = "text"): DataFrame =
-    operators.Curation.importanceWeights(docs, isTarget, id, text)
-
-  /** Per-doc content-defined chunk decomposition (LBFS gear chunking
-    * at token granularity; see [[operators.Chunking]]) — the
-    * storage-dedup complement to the similarity tier.
-    */
-  def cdcChunks(docs: DataFrame, id: String = "doc_id",
-                text: String = "text"): DataFrame =
-    operators.Chunking.decompose(docs, id, text)
-
-  /** DBSCAN roles (core/border/noise) + cluster ids over a PRECOMPUTED
-    * ε-neighborhood pair table — density clustering as the step after
-    * any blocked similarity join ([[nearDuplicates]],
-    * [[Graft.estimatedNearDuplicates]], an embedding cosine join);
-    * see [[operators.Clusters.dbscanRoles]] for the tie rules.
-    */
-  def dbscan(points: DataFrame, idCol: String, pairs: DataFrame,
-             srcCol: String = "doc_a", dstCol: String = "doc_b",
-             minPts: Int = 3): DataFrame =
-    operators.Clusters.dbscanRoles(points, idCol, pairs,
-      srcCol, dstCol, minPts)
-
-  /** Per-cell simplified silhouette (ppm) of a centroid partition —
-    * the cluster-separation gauge for an IVF index or k-means fit;
-    * see [[operators.VectorQueries.partitionSilhouette]].
-    */
-  def partitionSilhouette(emb: DataFrame, vecCol: String,
-                          centroids: DataFrame,
-                          cellCol: String = "cell",
-                          centroidCol: String = "centroid"): DataFrame =
-    operators.VectorQueries.partitionSilhouette(
-      emb, vecCol, centroids, cellCol, centroidCol)
-
-  /** Greedy max-coverage document selection — the submodular
-    * (facility-location) subset-selection primitive: the k documents
-    * that together cover the most of the corpus's top-v-df 3-word
-    * shingles, picked by marginal gain. Deterministic ties; k bounded
-    * corpus-restricted aggregate rounds; see
-    * [[operators.TextQueries.maxCoverage]].
-    */
-  def maxCoverage(docs: DataFrame, id: String = "doc_id",
-                  text: String = "text",
-                  k: Int = operators.TextQueries.MAXCOV_K,
-                  vocabSize: Int = operators.TextQueries.MAXCOV_V): DataFrame =
-    operators.TextQueries.maxCoverage(docs, id, text, k, vocabSize)
-
-  /** [[maxCoverage]] fitted on a deterministic hash slice of the
-    * corpus (vocabulary, projection, and greedy rounds all touch only
-    * `hash(id) % 100 < pct` of the documents — the 100 TB posture),
-    * then scored with ONE full-corpus pass: the extra cov_pairs_full
-    * column reports the picks' cumulative corpus-wide coverage; see
-    * [[operators.TextQueries.maxCoverageSampled]].
-    */
-  def maxCoverageSampled(docs: DataFrame, id: String = "doc_id",
-                         text: String = "text",
-                         k: Int = operators.TextQueries.MAXCOV_K,
-                         vocabSize: Int = operators.TextQueries.MAXCOV_V,
-                         seed: Int = operators.TextQueries.MAXCOV_SAMPLE_SEED,
-                         pct: Int = operators.TextQueries.MAXCOV_SAMPLE_PCT): DataFrame =
-    operators.TextQueries.maxCoverageSampled(docs, id, text, k,
-      vocabSize, seed, pct)
-
-  /** [[maxCoverage]] under a per-source quota (partition matroid): at
-    * most `cap` picks per `src` value — the balanced-selection form;
-    * see [[operators.TextQueries.maxCoverageQuota]].
-    */
-  def maxCoverageQuota(docs: DataFrame, id: String = "doc_id",
-                       text: String = "text", src: String = "source",
-                       k: Int = operators.TextQueries.MAXCOV_K,
-                       vocabSize: Int = operators.TextQueries.MAXCOV_V,
-                       cap: Int = operators.TextQueries.MAXCOV_CAP): DataFrame =
-    operators.TextQueries.maxCoverageQuota(docs, id, text, src,
-      k, vocabSize, cap)
-
-  /** k diverse seed points by Gonzalez maximin k-center seeding —
-    * greedy farthest-point selection over an embedding column, the
-    * coreset/diversity-sampling primitive (picks the outliers a random
-    * sample misses). Deterministic: integer L2² on the 2⁻¹⁰ grid,
-    * min-id start, min-id tie-breaks. K bounded corpus scans; see
-    * [[operators.VectorQueries.diversitySeeds]].
-    */
-  def diversitySeeds(emb: DataFrame, idCol: String = "vec_id",
-                     vecCol: String = "embedding",
-                     k: Int = operators.VectorQueries.KCENTER_K): DataFrame =
-    operators.VectorQueries.diversitySeeds(emb, idCol, vecCol, k)
-
-  /** Train a linear quality filter by integer-exact full-batch
-    * logistic gradient descent: `xs` are integer feature columns,
-    * `yCol` a 0/1 long label, `inFitCol` a boolean gating the training
-    * slice (pass `lit(true)` as a column upstream to fit on
-    * everything). One output row: weights + full-corpus accuracy; see
-    * [[operators.TextQueries.fitLogisticGd]].
-    */
-  def trainQualityFilter(labeled: DataFrame, xs: Seq[String],
-                         yCol: String = "y",
-                         inFitCol: String = "in_fit",
-                         iters: Int = operators.TextQueries.LOGIT_FIT_ITERS): DataFrame =
-    operators.TextQueries.fitLogisticGd(labeled, xs, yCol, inFitCol, iters)
-
-  /** One closed active-learning retrain round: fit on the `inFitCol`
-    * slice, queue the `k` most uncertain non-slice rows (smallest
-    * trained-score margin), refit with the queue folded in, and report
-    * both models' full-frame accuracy in one row (`improved` = the
-    * labeling budget strictly bought accuracy); see
-    * [[operators.TextQueries.activeLearningRound]].
-    */
-  def activeLearningRound(labeled: DataFrame, id: String = "doc_id",
-                          xs: Seq[String] = Seq("len_bp", "stop_bp",
-                            "punct_bp", "uniq_bp"),
-                          yCol: String = "y",
-                          inFitCol: String = "in_fit",
-                          k: Int = operators.TextQueries.REFIT_K): DataFrame =
-    operators.TextQueries.activeLearningRound(labeled, id, xs, yCol,
-      inFitCol, k)
-
-  /** The K documents whose fitted-model score sits closest to the
-    * decision boundary — the margin-based active-learning labeling
-    * queue. Scores with `model` in-row, selects via TakeOrdered (never
-    * a full sort); returns (rank, doc_id, score_m).
-    */
-  def uncertaintySample(docs: DataFrame,
-                        model: operators.TextQueries.LogitModel,
-                        k: Int = operators.TextQueries.UNC_K): DataFrame =
-    operators.TextQueries.marginQueue(docs, model, k)
-
-  /** Band arriving embeddings on the corpus's k-center cover-radius
-    * scale (band 4 = outside the cover — the out-of-distribution
-    * signal); stateless, works on streams; see
-    * [[operators.VectorQueries.noveltyScore]].
-    */
-  def noveltyScore(incoming: DataFrame, corpus: DataFrame,
-                   vecCol: String = "embedding",
-                   k: Int = operators.VectorQueries.KCENTER_K): DataFrame =
-    operators.VectorQueries.noveltyScore(incoming, corpus, vecCol, k)
-
-  /** Fit the quality filter on a (doc_id, text) corpus and return the
-    * serving model (means/sds/weights) — the offline half of
-    * train-offline / score-online; see [[qualityScoreStream]].
-    */
-  def fitQualityModel(docs: DataFrame): operators.TextQueries.LogitModel =
-    operators.TextQueries.fitQualityModel(docs)
-
-  /** Score a document stream (or batch — the projection is stateless)
-    * with a fitted quality model: (doc_id, score_m, verdict) per row,
-    * model constants inlined as literals so no broadcast, state store,
-    * or watermark is needed; see
-    * [[streaming.StreamingQuality.scoreStream]].
-    */
-  def qualityScoreStream(docs: DataFrame,
-                         model: operators.TextQueries.LogitModel): DataFrame =
-    streaming.StreamingQuality.scoreStream(docs, model)
-
-  /** The labeling-queue admission cut a batch fit publishes for online
-    * uncertainty sampling: the k-th smallest (|score|, id) of
-    * [[uncertaintySample]]'s queue, as two longs the streaming filter
-    * inlines as literals; see
-    * [[operators.TextQueries.queueAdmissionCut]].
-    */
-  def queueAdmissionCut(docs: DataFrame,
-                        model: operators.TextQueries.LogitModel,
-                        k: Int = operators.TextQueries.UNC_K): (Long, Long) =
-    operators.TextQueries.queueAdmissionCut(docs, model, k)
-
-  /** Admit arriving documents into the labeling queue online: score
-    * in-row against the fitted model and keep the rows whose margin
-    * beats the published cut (ties by id — the batch queue's own
-    * rule). Stateless like [[qualityScoreStream]]; see
-    * [[streaming.StreamingQuality.queueAdmissionStream]].
-    */
-  def queueAdmissionStream(docs: DataFrame,
-                           model: operators.TextQueries.LogitModel,
-                           thrMilli: Long, tieId: Long): DataFrame =
-    streaming.StreamingQuality.queueAdmissionStream(docs, model,
-      thrMilli, tieId)
-
-  /** The static held-out index the decontamination firewall probes:
-    * the eval split's hashed k-shingles plus a bloom literal over
-    * them; build once offline, reuse across the stream's lifetime.
-    * See [[streaming.StreamingDecontam.heldIndex]].
-    */
-  def decontamIndex(held: DataFrame,
-                    k: Int = operators.Curation.DECON_K)
-      : streaming.StreamingDecontam.HeldIndex =
-    streaming.StreamingDecontam.heldIndex(held, k)
-
-  /** Contamination firewall at ingest: each arriving document's
-    * shingles (at the index's own width) are bloom-prefiltered
-    * map-side and exact-joined against the held index; emits one exact
-    * (doc_id, test_id, shingle) row per hit. Stateless; see
-    * [[streaming.StreamingDecontam.contaminationStream]].
-    */
-  def contaminationStream(docs: DataFrame,
-                          idx: streaming.StreamingDecontam.HeldIndex)
-      : DataFrame =
-    streaming.StreamingDecontam.contaminationStream(docs, idx)
-
-  /** The corpus's banded perceptual-hash index for ingest-time media
-    * dedup — one (band, bkey, match_id, match_hash) row per Hamming
-    * band of each payload's aHash; build once, bucket on (band, bkey)
-    * at scale; see [[streaming.StreamingMediaDedup.corpusIndex]].
-    */
-  def mediaCorpusIndex(media: DataFrame): DataFrame =
-    streaming.StreamingMediaDedup.corpusIndex(media)
-
-  /** Perceptual near-dup matches of arriving media payloads against
-    * the corpus index (in-row aHash + band probe + exact bit_count
-    * verify — stateless); see
-    * [[streaming.StreamingMediaDedup.mediaMatchStream]].
-    */
-  def mediaMatchStream(incoming: DataFrame, index: DataFrame): DataFrame =
-    streaming.StreamingMediaDedup.mediaMatchStream(incoming, index)
-
-  /** Score and bin documents on the drift monitor's fixed integer
-    * grid (stateless — model and grid ride as literals); run over the
-    * fit slice for the published baseline and over the stream for the
-    * observed side; see [[streaming.StreamingQuality.scoreBins]].
-    */
-  def scoreDriftBins(docs: DataFrame,
-                     model: operators.TextQueries.LogitModel): DataFrame =
-    streaming.StreamingQuality.scoreBins(docs, model)
-
-  /** Publish a fitted quality model as the next version of an on-disk
-    * registry table ((param, idx, value) rows on [[table]]'s versioned
-    * protocol); see [[operators.ModelRegistry.publishLogit]].
-    */
-  def publishQualityModel(spark: SparkSession,
-                          registry: operators.VersionedTable,
-                          model: operators.TextQueries.LogitModel): Unit =
-    operators.ModelRegistry.publishLogit(spark, registry, model)
-
-  /** Load the quality model published at `version` (time travel —
-    * rollback and audit read older versions with the same call); see
-    * [[operators.ModelRegistry.loadLogitAt]].
-    */
-  def loadQualityModel(registry: operators.VersionedTable,
-                       version: Long): operators.TextQueries.LogitModel =
-    operators.ModelRegistry.loadLogitAt(registry, version)
 }

@@ -159,13 +159,12 @@ object Association {
       //     file write. Block lifecycle: ContextCleaner frees them when
       //     the per-invocation DataFrames are GC'd (see CacheRegistry's
       //     documented exception).
-      val e = graft.CacheRegistry.register(
+      val e = graft.CacheRegistry.persist(
         p.select(col("ant").as("src"), col("cons").as("dst"))
           .union(p.select(col("cons").as("src"), col("ant").as("dst")))
           .localCheckpoint()
           .repartition(s.sessionState.conf.numShufflePartitions,
-            col("src"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            col("src")))
       // frontier also truncates per round: d is tiny (≤ |reachable|),
       // so the eager materialization is noise while the plan stays
       // O(1)-deep instead of doubling every round

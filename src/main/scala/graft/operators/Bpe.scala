@@ -76,8 +76,8 @@ object Bpe {
     *         (before application). Stops early when no pair occurs
     *         twice — merging a count-1 pair learns noise.
     */
-  def train(docs: DataFrame, idCol: String, textCol: String,
-            nMerges: Int): DataFrame = {
+  def train(docs: DataFrame, idCol: String = "doc_id",
+            textCol: String = "text", nMerges: Int = 16): DataFrame = {
     val spark = docs.sparkSession
 
     // r17 (guide §1.2 fixed cost per round): iteration state rides a
@@ -96,8 +96,7 @@ object Bpe {
     val TRUNC = 8
     val slots = new Fixpoint.Rolling(graft.CacheRegistry.scratch("bpe"), "toks")
     def persisted(df: DataFrame): DataFrame =
-      graft.CacheRegistry.register(df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      graft.CacheRegistry.persist(df)
 
     var toks = persisted(
       docs.select(col(idCol).cast("long").as("doc_id"),

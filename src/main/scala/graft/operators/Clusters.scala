@@ -91,10 +91,7 @@ object Clusters {
     // a driver mirror collects the flat scan once; only the round loop
     // reads the co-located cache
     if (Fixpoint.fitsDriver(n, EDGE_BYTES)) (scan, n)
-    else (graft.CacheRegistry.register(
-      colocated(scan, key)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
-      n)
+    else (graft.CacheRegistry.persist(colocated(scan, key)), n)
   }
 
   /** The pinned partition count for a fixpoint's co-located cache: the
@@ -117,7 +114,8 @@ object Clusters {
     *         pair; cluster_id = min node id of its component.
     *         Isolated nodes (in no pair) are the caller's singletons.
     */
-  def connectedComponents(pairs: DataFrame, src: String, dst: String,
+  def connectedComponents(pairs: DataFrame, src: String = "doc_a",
+                          dst: String = "doc_b",
                           maxIter: Int = 25): DataFrame = {
     // symmetric edge list: min-labels must flow BOTH ways. PERSISTED —
     // every propagation round joins against it, and the pair source is
@@ -318,8 +316,8 @@ object Clusters {
     * measured failure mode). Iteration count is a CONSTANT, so cost is
     * O(iters · |edges|) by construction.
     */
-  def pageRank(pairs: DataFrame, src: String, dst: String,
-               iters: Int = 5): DataFrame = {
+  def pageRank(pairs: DataFrame, src: String = "doc_a",
+               dst: String = "doc_b", iters: Int = 5): DataFrame = {
     val spark = pairs.sparkSession
     val scratch = graft.CacheRegistry.scratch("pr")
 
@@ -358,16 +356,14 @@ object Clusters {
     // corpus-scale operand, so IT is the co-located cache (repartition
     // by src; see [[materializeEdges]] — the raw edge table is no
     // longer cached separately, it feeds ed/nodes exactly once each)
-    val ed = graft.CacheRegistry.register(
+    val ed = graft.CacheRegistry.persist(
       colocated(eScan.join(eScan.groupBy(col("src"))
-          .agg(count(lit(1)).as("d")), "src"), "src")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .agg(count(lit(1)).as("d")), "src"), "src"))
     // nodes co-locate on id: each round's rank update left-joins the
     // dst-keyed contribution sums, and the initial rank table inherits
     // this partitioning, so round 1's join is exchange-free too
-    val nodes = graft.CacheRegistry.register(
-      colocated(eScan.select(col("src").as("id")).distinct(), "id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val nodes = graft.CacheRegistry.persist(
+      colocated(eScan.select(col("src").as("id")).distinct(), "id"))
 
     val slots = new Fixpoint.Rolling(scratch, "ranks")
 
@@ -470,12 +466,8 @@ object Clusters {
           auths.toSeq.map { case (id, s0) => ("auth", id, s0) })
         .toDF("side", "id", "score_ppm")
     }
-    val edgesByC = graft.CacheRegistry.register(
-      colocated(eScan, "c")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val edgesByP = graft.CacheRegistry.register(
-      colocated(eScan, "p")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val edgesByC = graft.CacheRegistry.persist(colocated(eScan, "c"))
+    val edgesByP = graft.CacheRegistry.persist(colocated(eScan, "p"))
 
     val slots = new Fixpoint.Rolling(scratch, "hits")
 
@@ -506,8 +498,7 @@ object Clusters {
       auths = normalized(rawAuth, "p")
       // the final auth table is consumed TWICE (last hub update + the
       // output union) — persist it so the whole auth chain is paid once
-      if (i == iters) auths = graft.CacheRegistry.register(
-        auths.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      if (i == iters) auths = graft.CacheRegistry.persist(auths)
       val nextHubs = normalized(
         edgesByP.join(auths, edgesByP("p") === auths("id"))
           .groupBy(col("c")).agg(sum(col("score")).as("raw")), "c")
@@ -963,8 +954,8 @@ object Clusters {
     * @return (idCol, role ∈ {core,border,noise}, cluster_id)
     */
   def dbscanRoles(points: DataFrame, idCol: String,
-                  pairs: DataFrame, srcCol: String, dstCol: String,
-                  minPts: Int): DataFrame = {
+                  pairs: DataFrame, srcCol: String = "doc_a",
+                  dstCol: String = "doc_b", minPts: Int = 3): DataFrame = {
     val edges = pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .unionByName(
         pairs.select(col(dstCol).as("src"), col(srcCol).as("dst")))

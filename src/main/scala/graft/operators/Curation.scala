@@ -66,7 +66,7 @@ object Curation {
     Tables.load(s, dir, "documents")
 
   /** Uniform hash bucket 0..99 of an id column — THE single definition
-    * of the selection arithmetic; the [[graft.Graft]] facade and the
+    * of the selection arithmetic; library callers and the
     * oracle-checked queries both route through it so they cannot drift.
     */
   def hashBucket(idCol: org.apache.spark.sql.Column,
@@ -968,11 +968,10 @@ object Curation {
     * target-membership predicate — see the query comment above for the
     * DSIR contract and plan-shape argument.
     */
-  private[graft] def importanceWeights(docs: DataFrame, isTarget: Column,
-                                       id: String = "doc_id",
-                                       text: String = "text",
-                                       buckets: Int = IW_BUCKETS,
-                                       seed: Int = IW_SEED): DataFrame = {
+  def importanceWeights(docs: DataFrame, isTarget: Column,
+                        id: String = "doc_id", text: String = "text",
+                        buckets: Int = IW_BUCKETS,
+                        seed: Int = IW_SEED): DataFrame = {
     val bk = docs
       .filter(length(trim(col(text))) > 0)
       .select(col(id), isTarget.as("is_tgt"),
@@ -1004,10 +1003,8 @@ object Curation {
     * `capMilli`. One source-keyed aggregate + one 1-row broadcast; the
     * allocator itself is O(|sources|).
     */
-  private[graft] def mixtureWeights(rows: DataFrame, srcCol: String,
-                                    tokenCol: String,
-                                    capMilli: Int = MAX_EPOCHS_MILLI)
-      : DataFrame = {
+  def mixtureWeights(rows: DataFrame, srcCol: String, tokenCol: String,
+                     capMilli: Int = MAX_EPOCHS_MILLI): DataFrame = {
     val perSrc = rows
       .groupBy(col(srcCol))
       .agg(count(lit(1)).as("n_docs"), sum(col(tokenCol)).as("n_tokens"))
@@ -1060,9 +1057,8 @@ object Curation {
     * the max y within its x value AND beats the max y over all
     * strictly greater x (integer axes; x+1 range frame).
     */
-  private[graft] def skyline(points: DataFrame, partCols: Seq[String],
-                             xCol: String, yCol: String,
-                             countName: String): DataFrame = {
+  def skyline(points: DataFrame, partCols: Seq[String], xCol: String,
+              yCol: String, countName: String = "n_rows"): DataFrame = {
     val part = partCols.map(col)
     val pc = points.groupBy((part :+ col(xCol)) :+ col(yCol): _*)
       .agg(count(lit(1)).as(countName))

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.CacheRegistry
 import graft.functions.TextFunctions
@@ -222,9 +221,8 @@ object Dedup {
   def minhashCandidatePairs(docs: DataFrame, id: String, text: String,
                             k: Int = 3, numHashes: Int = 16,
                             bands: Int = 4): DataFrame = {
-    val sigs = CacheRegistry.register(
-      minhashSignatures(docs, id, text, k, numHashes)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val sigs = CacheRegistry.persist(
+      minhashSignatures(docs, id, text, k, numHashes))
     candidatesFromSigs(sigs, numHashes, bands)
   }
 
@@ -244,9 +242,8 @@ object Dedup {
   def estimatedJaccardPairs(docs: DataFrame, id: String, text: String,
                             k: Int = 3, numHashes: Int = 16,
                             bands: Int = 4): DataFrame = {
-    val sigs = CacheRegistry.register(
-      minhashSignatures(docs, id, text, k, numHashes)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val sigs = CacheRegistry.persist(
+      minhashSignatures(docs, id, text, k, numHashes))
     val cand = candidatesFromSigs(sigs, numHashes, bands)
     def side(as: String): DataFrame =
       sigs.select(col("doc_id").as(s"doc_$as") +:
@@ -274,9 +271,8 @@ object Dedup {
   def bbitEstimatedPairs(docs: DataFrame, id: String, text: String,
                          k: Int = 3, numHashes: Int = 16,
                          bands: Int = 4): DataFrame = {
-    val sigs = CacheRegistry.register(
-      minhashSignatures(docs, id, text, k, numHashes)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val sigs = CacheRegistry.persist(
+      minhashSignatures(docs, id, text, k, numHashes))
     val cand = candidatesFromSigs(sigs, numHashes, bands)
     def side(as: String): DataFrame =
       sigs.select(col("doc_id").as(s"doc_$as") +:
@@ -312,9 +308,7 @@ object Dedup {
   def minhashAccuracy(docs: DataFrame, id: String, text: String,
                       k: Int = 3, numHashes: Int = 16,
                       bands: Int = 4): DataFrame = {
-    val ds = CacheRegistry.register(
-      hashedShingles(docs, id, text, k)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val ds = CacheRegistry.persist(hashedShingles(docs, id, text, k))
     val est = estimatedJaccardPairs(docs, id, text, k, numHashes, bands)
     val exact = exactVerify(
       est.select(col("doc_a"), col("doc_b")), ds, 0)
@@ -431,9 +425,8 @@ object Dedup {
     // get-or-compute lock makes one compute and the other wait — no
     // duplicate work, and no construction-time side-effect job (the
     // round-3 eager .count() was one extra full cached scan)
-    val fps = CacheRegistry.register(
-      fps0.select(col(id).as("id"), col(fp).as("fp"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val fps = CacheRegistry.persist(
+      fps0.select(col(id).as("id"), col(fp).as("fp")))
     val banded = fps.select(col("id"), col("fp"),
         posexplode(hammingBandKeys(col("fp"), bits, maxHamming)))
       .toDF("id", "fp", "band", "bkey")
@@ -522,7 +515,7 @@ object Dedup {
                                   text: String, k: Int,
                                   maxDf: Int): (DataFrame, DataFrame) = {
     val idType = docs.schema(id).dataType
-    val grouped = CacheRegistry.register(
+    val grouped = CacheRegistry.persist(
       hashedShingles(docs, id, text, k)
         .groupBy("shingle")
         .agg(count(lit(1)).as("df_count"),
@@ -530,8 +523,7 @@ object Dedup {
             .as("top"))
         .filter(col("df_count") <= maxDf)
         .select(transform(col("top"), t => t.getField("n").cast(idType))
-          .as("ids"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+          .as("ids")))
     // lazy fill: sizes + combos both read the cache, and the
     // BlockManager's per-partition get-or-compute lock dedups any
     // concurrent fill — the round-3 eager .count() was one extra full
@@ -565,12 +557,9 @@ object Dedup {
     // ds feeds three stages (sizes + two verify-join sides); sigs feeds
     // both band-join sides. Fills are lazy — per-partition
     // get-or-compute locking dedups concurrent stage fills.
-    val ds = CacheRegistry.register(
-      hashedShingles(docs, id, text, k)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val sigs = CacheRegistry.register(
-      minhashSignatures(docs, id, text, k, numHashes)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val ds = CacheRegistry.persist(hashedShingles(docs, id, text, k))
+    val sigs = CacheRegistry.persist(
+      minhashSignatures(docs, id, text, k, numHashes))
     lshPairsFromDs(ds, sigs, numHashes, bands, thresholdPct)
   }
 
@@ -591,12 +580,9 @@ object Dedup {
   def lshBandPairs(docs: DataFrame, id: String, text: String,
                    k: Int = 3, numHashes: Int = 16, bands: Int = 4,
                    loPct: Int = 40, hiPct: Int = 60): DataFrame = {
-    val ds = CacheRegistry.register(
-      hashedShingles(docs, id, text, k)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val sigs = CacheRegistry.register(
-      minhashSignatures(docs, id, text, k, numHashes)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val ds = CacheRegistry.persist(hashedShingles(docs, id, text, k))
+    val sigs = CacheRegistry.persist(
+      minhashSignatures(docs, id, text, k, numHashes))
     val sizes = ds.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val common = candidatesFromSigs(sigs, numHashes, bands)
       .join(ds.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
@@ -671,9 +657,7 @@ object Dedup {
                         k: Int = 3, thresholdPct: Int = 60): DataFrame = {
     // ds feeds the df-count, the prefix projection, and both verify
     // sides — lazy cache fill, per-partition get-or-compute dedup.
-    val ds = CacheRegistry.register(
-      hashedShingles(docs, id, text, k)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val ds = CacheRegistry.persist(hashedShingles(docs, id, text, k))
     prefixPairsFromDs(ds, thresholdPct)
   }
 
@@ -718,12 +702,9 @@ object Dedup {
                 thresholdPct: Int = 60): DataFrame = {
     require(bandConfigs.forall(b => numHashes % b == 0),
       s"every band count must divide numHashes=$numHashes")
-    val ds = CacheRegistry.register(
-      hashedShingles(docs, id, text, k)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val sigs = CacheRegistry.register(
-      minhashSignatures(docs, id, text, k, numHashes)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val ds = CacheRegistry.persist(hashedShingles(docs, id, text, k))
+    val sigs = CacheRegistry.persist(
+      minhashSignatures(docs, id, text, k, numHashes))
     // Nested-split structure: a pair colliding on an r-slot band agrees
     // on each of its slots, so candidates(b) ⊆ candidates(numHashes)
     // for every b dividing numHashes. ONE finest-grain band join
@@ -787,12 +768,9 @@ object Dedup {
     // ONE shingle cache feeds both the truth side (prefix filter) and
     // the LSH side's verify joins — the two pair generators differ
     // only above the shared (doc_id, shingle) table.
-    val ds = CacheRegistry.register(
-      hashedShingles(docs, id, text, k)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val sigs = CacheRegistry.register(
-      minhashSignatures(docs, id, text, k, numHashes)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val ds = CacheRegistry.persist(hashedShingles(docs, id, text, k))
+    val sigs = CacheRegistry.persist(
+      minhashSignatures(docs, id, text, k, numHashes))
     val truth = prefixPairsFromDs(ds, thresholdPct)
     val found = lshPairsFromDs(ds, sigs, numHashes, bands, thresholdPct)
       .select(col("doc_a"), col("doc_b"), lit(1).as("hit"))
@@ -858,7 +836,7 @@ object Dedup {
     */
   def dupSpans(docs: DataFrame, id: String, text: String,
                k: Int = 3, minRun: Int = 2): DataFrame = {
-    val grams = CacheRegistry.register(
+    val grams = CacheRegistry.persist(
       docs.select(col(id).as("doc_id"),
           TextFunctions.tokens(lower(col(text))).as("toks"))
         .filter(size(col("toks")) >= k)
@@ -866,8 +844,7 @@ object Dedup {
           posexplode(TextFunctions.shinglesFromTokens(col("toks"), k)))
         .toDF("doc_id", "pos", "shingle")
         .select(col("doc_id"), col("pos"),
-          shingleHash(col("shingle")).as("g"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+          shingleHash(col("shingle")).as("g")))
     val dupG = grams.select("doc_id", "g").distinct()
       .groupBy("g").agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= 2).select("g")
@@ -895,7 +872,7 @@ object Dedup {
     */
   def dupSpanCoverage(docs: DataFrame, id: String, text: String,
                       k: Int = 3): DataFrame = {
-    val grams = CacheRegistry.register(
+    val grams = CacheRegistry.persist(
       docs.select(col(id).as("doc_id"),
           TextFunctions.tokens(lower(col(text))).as("toks"))
         .filter(size(col("toks")) >= k)
@@ -903,8 +880,7 @@ object Dedup {
           posexplode(TextFunctions.shinglesFromTokens(col("toks"), k)))
         .toDF("doc_id", "n_tokens", "pos", "shingle")
         .select(col("doc_id"), col("n_tokens"), col("pos"),
-          shingleHash(col("shingle")).as("g"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+          shingleHash(col("shingle")).as("g")))
     val dupG = grams.select("doc_id", "g").distinct()
       .groupBy("g").agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= 2).select("g")

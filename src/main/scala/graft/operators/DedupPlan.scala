@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.CacheRegistry
 import graft.functions.TextFunctions
@@ -39,9 +38,7 @@ final class DedupPlan private (docs: DataFrame, id: String, text: String,
 
   /** Content-hash groups: (fp, keep_id, n_dups) — exact tier. */
   lazy val exactGroups: DataFrame =
-    CacheRegistry.register(
-      Dedup.exactGroups(docs, id, text)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    CacheRegistry.persist(Dedup.exactGroups(docs, id, text))
 
   /** One surviving id per identical-content group. */
   lazy val exactSurvivors: DataFrame =
@@ -86,16 +83,14 @@ final class DedupPlan private (docs: DataFrame, id: String, text: String,
 
   /** `df` truncated into a fresh scratch slot, then persisted. */
   private def truncated(df: DataFrame, name: String): DataFrame =
-    CacheRegistry.register(
-      Fixpoint.truncate(df, CacheRegistry.scratch(s"dedup_$name"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    CacheRegistry.persist(
+      Fixpoint.truncate(df, CacheRegistry.scratch(s"dedup_$name")))
 
   /** (doc_id, cluster_id, cluster_sz) — near-dup pairs closed into
     * connected components, persisted. The one CC fixpoint in the plan.
     */
-  lazy val members: DataFrame = CacheRegistry.register(
-    Clusters.memberTable(pairs.select("doc_a", "doc_b"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+  lazy val members: DataFrame = CacheRegistry.persist(
+    Clusters.memberTable(pairs.select("doc_a", "doc_b")))
 
   /** Keep/drop list: one survivor per cluster by (quality desc, id
     * asc). `quality` carries (doc_id, quality). One aggregate over

@@ -151,7 +151,6 @@ object EventQueries {
           element_at(m, "k").cast("long").as("k_val"))
     },
 
-    // ── as-of join: each event matched to the user's most recent order
     // ── temporal train/test split with embargo (leakage audit) ─────────
     // Time-based evaluation needs events split at a cutoff WITH an
     // embargo band (De Prado's purged split): train = first 70 % of the
@@ -190,40 +189,24 @@ object EventQueries {
           expr("n_leaky_users * 1000000 div n_users"))
     },
 
-    // at-or-before the event timestamp. Spark has no native ASOF JOIN;
-    // the scalable shape is the UNION-AND-CARRY trick: tag both tables,
-    // sort once per user (orders before events at equal ts, orderkey
-    // ascending so the LAST qualifying order is the deterministic
-    // max-(date, orderkey) winner), and carry the latest order forward
-    // with last(_, ignoreNulls) — ONE shuffle + sort, no range fan-out
-    // (a naive t1.ts >= t2.ts join explodes into |events|·|orders|/user
-    // intermediate rows; this plan never materializes them).
+    // ── as-of join: each event matched to the user's most recent order
+    // at-or-before the event timestamp, through [[asOfJoin]] (the
+    // library's one union-and-carry); tied order dates resolve to the
+    // greatest o_orderkey, the oracle's max-(date, orderkey) winner.
     "q_asof_join" -> { (s, dir) =>
-      val ev = loadEvents(s, dir).select(
-        col("user_id"), col("ms"), lit(1).as("kind"),
-        col("event_id"),
-        lit(null).cast("long").as("o_orderkey"),
-        lit(null).cast("double").as("o_totalprice"))
+      val ev = loadEvents(s, dir)
+        .select(col("event_id"), col("user_id"), col("ms"))
       val ord = Tables.load(s, dir, "orders").select(
         col("o_custkey").as("user_id"),
         // o_orderdate is TIMESTAMP_NTZ; the session runs UTC, so the
         // cast-to-TIMESTAMP epoch equals DuckDB's epoch_ms on the naive
-        unix_millis(col("o_orderdate").cast("timestamp")).as("ms"),
-        lit(0).as("kind"),
-        lit(null).cast("long").as("event_id"),
+        unix_millis(col("o_orderdate").cast("timestamp")).as("oms"),
         col("o_orderkey"), col("o_totalprice"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ms").asc, col("kind").asc, col("o_orderkey").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.unionByName(ord)
-        .withColumn("last_ord",
-          last(when(col("kind") === 0,
-            struct(col("o_orderkey"), col("o_totalprice"))),
-            ignoreNulls = true).over(w))
-        .filter(col("kind") === 1 && col("last_ord").isNotNull)
+      asOfJoin(ev, ord, "user_id", "ms", "oms")
+        .filter(col("matched").isNotNull)
         .select(col("event_id"), col("user_id"), col("ms"),
-          col("last_ord.o_orderkey").as("o_orderkey"),
-          col("last_ord.o_totalprice").as("o_totalprice"))
+          col("matched.o_orderkey").as("o_orderkey"),
+          col("matched.o_totalprice").as("o_totalprice"))
     },
 
     // ── ordered funnel: view → click → purchase conversion ──────────────
@@ -1056,10 +1039,9 @@ object EventQueries {
     // then a user-keyed self-join whose fan-out is bounded by
     // |types-per-user|² — never |users|² — and a |types|²-row rollup.
     "q_audience_overlap" -> { (s, dir) =>
-      val tu = graft.CacheRegistry.register(
+      val tu = graft.CacheRegistry.persist(
         Tables.load(s, dir, "events")
-          .select(col("event_type"), col("user_id")).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .select(col("event_type"), col("user_id")).distinct())
       val sz = tu.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_users"))
       val common = tu.toDF("type_a", "user_id")
@@ -1085,12 +1067,11 @@ object EventQueries {
     // drop out (n_hours_scored says how many scored). All integer —
     // counts, absolute differences, one floor division at the end.
     "q_seasonal_naive_error" -> { (s, dir) =>
-      val hourly = graft.CacheRegistry.register(
+      val hourly = graft.CacheRegistry.persist(
         loadEvents(s, dir)
           .groupBy(col("event_type"),
             expr("ms div 3600000").as("hour_idx"))
-          .agg(count(lit(1)).as("c"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .agg(count(lit(1)).as("c")))
       hourly
         .join(hourly.select(col("event_type"),
             (col("hour_idx") + 168).as("hour_idx"),
@@ -1228,12 +1209,11 @@ object EventQueries {
     "q_markov_accuracy" -> { (s, dir) =>
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ms").asc, col("event_id").asc)
-      val pairs = graft.CacheRegistry.register(
+      val pairs = graft.CacheRegistry.persist(
         loadEvents(s, dir)
           .withColumn("next_type", lead(col("event_type"), 1).over(w))
           .filter(col("next_type").isNotNull)
-          .select(col("event_type"), col("next_type"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .select(col("event_type"), col("next_type")))
       val model = pairs
         .groupBy(col("event_type"), col("next_type"))
         .agg(count(lit(1)).as("c"))
@@ -1298,7 +1278,7 @@ object EventQueries {
       // the distinct (session, type) table feeds four consumers (total,
       // margins, both pair-join sides) — persist it or each one re-runs
       // the corpus-wide sessionize window
-      val st = graft.CacheRegistry.register(
+      val st = graft.CacheRegistry.persist(
         loadEvents(s, dir)
           .withColumn("prev_ms", lag(col("ms"), 1).over(w))
           .withColumn("new_sess",
@@ -1309,8 +1289,7 @@ object EventQueries {
               w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .select((col("user_id") * 1000000 + col("session_idx"))
             .as("sess"), col("event_type"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .distinct())
       val tot = st.select(col("sess")).distinct()
         .agg(count(lit(1)).as("n_sessions"))
       val per = st.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
@@ -1366,11 +1345,10 @@ object EventQueries {
       .filter(col("prev_type").isNotNull)
     val tot = tr.groupBy(col("prev_type"))
       .agg(count(lit(1)).as("n_from"))
-    val tx = graft.CacheRegistry.register(
+    val tx = graft.CacheRegistry.persist(
       tr.groupBy(col("prev_type"), col("next_type"))
         .agg(count(lit(1)).as("n_trans"))
-        .join(broadcast(tot), "prev_type")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .join(broadcast(tot), "prev_type"))
     val states = tx.select(col("prev_type").as("t"))
       .union(tx.select(col("next_type").as("t"))).distinct()
     var pi = states
@@ -1414,12 +1392,40 @@ object EventQueries {
           |    AS BIGINT) END AS cv2_ppm""".stripMargin)
   }
 
+  /** As-of join: each `left` row with the latest `right` row of the same
+    * `key` whose `rightTs` is at or before its `leftTs`, as a `matched`
+    * struct of that right row's other columns (null when none precedes).
+    * Spark has no native ASOF JOIN; this is the union-and-carry plan:
+    * both sides tagged and sorted once per key (right rows before left
+    * rows at equal timestamps) and the latest right row carried forward
+    * with last(_, ignoreNulls) — ONE shuffle + sort, no range fan-out (a
+    * `leftTs >= rightTs` join materializes every earlier right row per
+    * left row). Right rows tied on the timestamp are ordered by their
+    * payload struct, so the carried one is the greatest payload (first
+    * column first), never an arbitrary pick.
+    */
+  def asOfJoin(left: DataFrame, right: DataFrame, key: String,
+               leftTs: String, rightTs: String): DataFrame = {
+    val payload = right.columns.toSeq
+      .filterNot(c => c == key || c == rightTs).map(col)
+    val r = right.select(col(key), col(rightTs).as("__ts"),
+      lit(0).as("__kind"), struct(payload: _*).as("__payload"))
+    val w = Window.partitionBy(col(key))
+      .orderBy(col("__ts").asc, col("__kind").asc, col("__payload").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    left.withColumn("__ts", col(leftTs)).withColumn("__kind", lit(1))
+      .unionByName(r, allowMissingColumns = true)
+      .withColumn("matched",
+        last(col("__payload"), ignoreNulls = true).over(w))
+      .filter(col("__kind") === 1)
+      .drop("__ts", "__kind", "__payload")
+  }
+
   /** Ordered-funnel user counts over (user_id, event_type, ms): one row
     * per step with the number of users whose FIRST qualifying time for
     * that step follows their previous step's time.
     */
-  private[graft] def funnelCounts(events: DataFrame,
-                                  steps: Seq[String]): DataFrame = {
+  def funnelCounts(events: DataFrame, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     val e = events.select(col("user_id"), col("event_type"), col("ms"))
     // each gate table feeds BOTH its count branch and the next step's
@@ -1435,10 +1441,9 @@ object EventQueries {
                 "user_id")
               .filter(col("ms") >= col("t_prev"))
         }
-        Some(graft.CacheRegistry.register(
+        Some(graft.CacheRegistry.persist(
           gated.groupBy(col("user_id"))
-            .agg(min(col("ms")).as(s"t${i + 1}"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+            .agg(min(col("ms")).as(s"t${i + 1}"))))
     }.flatten
     stepTimes.zip(steps).zipWithIndex.map { case ((t, name), i) =>
       t.agg(count(lit(1)).as("n_users"))
@@ -1451,7 +1456,7 @@ object EventQueries {
     * since-first-seen, cohorted by first-seen week. Week = integer
     * epoch-week (ms div 86400000 div 7).
     */
-  private[graft] def cohortRetention(events: DataFrame): DataFrame = {
+  def cohortRetention(events: DataFrame): DataFrame = {
     val weeks = events
       .select(col("user_id"), expr("ms div 86400000 div 7").as("wk"))
       .distinct()

@@ -34,7 +34,8 @@ object KMeans {
   /** Refine centroids for `iters` Lloyd iterations. Empty cells drop out
     * (standard Lloyd behavior — k can only shrink).
     */
-  def refine(emb: DataFrame, initial: DataFrame, iters: Int): DataFrame = {
+  def refine(emb: DataFrame, initial: DataFrame,
+             iters: Int = 3): DataFrame = {
     var cent = initial
     var i = 0
     while (i < iters) {

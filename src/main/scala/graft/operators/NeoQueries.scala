@@ -211,7 +211,7 @@ object NeoQueries {
     "q_neo_partition_prune" -> { (s, _) =>
       val dir = graft.CacheRegistry.scratch("neo_silver_pq")
       silver(s).write.partitionBy("approach_date").parquet(dir)
-      s.read.parquet(dir)
+      VersionedTable.readParquet(s, dir)
         .filter(col("approach_date") === NeoFixture.day2Date)
         .select(col("approach_date").cast("string").as("approach_date"),
           col("id"), col("name"), col("velocity_km_s"),
@@ -241,7 +241,7 @@ object NeoQueries {
           tiebreak = Seq(col("approach_date").desc,
             col("approach_date_full").asc_nulls_last))
       }
-      s.read.parquet(table)
+      VersionedTable.readParquet(s, table)
         .select(col("sk_asteroid"), col("id"), col("neo_reference_id"),
           col("name"), col("absolute_magnitude_h"),
           col("diam_min_km"), col("diam_max_km"),

@@ -100,9 +100,7 @@ object OpsGate {
       // cache manager substitutes this table into all four and the
       // regex-heavy feature pass over the corpus is paid once, not 4×.
       // Results are unchanged (the projection is deterministic).
-      graft.CacheRegistry.register(
-        TextQueries.qualityBpOf(docs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      graft.CacheRegistry.persist(TextQueries.qualityBpOf(docs))
       val t = VersionedTable(s, path, retain = 3)
       ModelRegistry.publishLogit(s, t,
         TextQueries.fitQualityModelSliced(docs,
@@ -178,7 +176,7 @@ object OpsGate {
       VersionedTable(s, path, retain = 0)
         .optimize(targetBytes = Long.MaxValue / 4)
       val after = parts()
-      s.read.parquet(path)
+      VersionedTable.readParquet(s, path)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("event_id")).as("n_ids"),

@@ -500,8 +500,7 @@ object TextQueries {
           TextFunctions.shinglesFromTokens(col("toks"), K))).as("sh"))
         .select(col("source"), Dedup.shingleHash(col("sh")).as("g"))
         .distinct()
-      val cached = graft.CacheRegistry.register(sg.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val cached = graft.CacheRegistry.persist(sg)
       val sz = cached.groupBy(col("source")).agg(count(lit(1)).as("sz"))
       cached.as("a").join(cached.as("b"),
           col("a.g") === col("b.g") && col("a.source") < col("b.source"))
@@ -1218,8 +1217,7 @@ object TextQueries {
       // one persisted feature projection serves the fit AND the queue
       // scoring pass (plan-match cache substitution; r16 — see
       // q_model_registry for the pattern)
-      graft.CacheRegistry.register(qualityBpOf(docs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      graft.CacheRegistry.persist(qualityBpOf(docs))
       marginQueue(docs, fitQualityModel(docs), UNC_K)
     },
 
@@ -1730,12 +1728,11 @@ object TextQueries {
     // on the same derived j_bp — both engines compare the identical
     // floored basis points, so rung membership is exact.
     "q_jaccard_threshold_sweep" -> { (s, dir) =>
-      val p = graft.CacheRegistry.register(
+      val p = graft.CacheRegistry.persist(
         Dedup.jaccardPairs(Tables.load(s, dir, "documents"),
             "doc_id", "text", K, MAX_DF, 0)
           .withColumn("j_bp",
-            expr("n_common * 10000 div (sz_a + sz_b - n_common)"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            expr("n_common * 10000 div (sz_a + sz_b - n_common)")))
       val sw = p
         .select(explode(array(lit(50), lit(60), lit(70), lit(80)))
           .as("threshold_pct"), col("doc_a"), col("doc_b"),
@@ -1815,12 +1812,11 @@ object TextQueries {
     // fixpoint/round loops; the scoring pass is two node-keyed joins
     // (edge ⋈ label twice) + |communities|-bounded aggregates.
     "q_modularity" -> { (s, dir) =>
-      val vp = graft.CacheRegistry.register(
+      val vp = graft.CacheRegistry.persist(
         Dedup.lshVerifiedPairs(Tables.load(s, dir, "documents"),
             "doc_id", "text", K, NUM_HASHES, BANDS, THRESH)
           .select(col("doc_a").cast("long").as("doc_a"),
-            col("doc_b").cast("long").as("doc_b"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            col("doc_b").cast("long").as("doc_b")))
       // both loops consume the SAME symmetric edge list — materialize
       // (truncate + co-locate + cache) it once, not once per loop (r16)
       val (edges, nEdges) = Clusters.sharedSymEdges(vp, "doc_a", "doc_b")
@@ -1850,13 +1846,12 @@ object TextQueries {
     // broadcast one-row/|Q|-row tables, and the final cut is
     // orderBy+limit (TakeOrdered — no global window).
     "q_bm25_topk" -> { (s, dir) =>
-      val toks = graft.CacheRegistry.register(
+      val toks = graft.CacheRegistry.persist(
         Tables.load(s, dir, "documents")
           .filter(length(trim(col("text"))) > 0)
           .select(col("doc_id"),
             explode(TextFunctions.tokens(lower(col("text"))))
-              .as("term"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+              .as("term")))
       val dlen = toks.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("len"))
       val stats = dlen.agg(count(lit(1)).as("nd"), sum(col("len")).as("tl"))
@@ -1982,14 +1977,13 @@ object TextQueries {
       // margins, col margins, total, agree) — persist it or each one
       // re-derives the corpus scan + marker scoring (measured ~3× the
       // q_lang_confusion cost unpersisted)
-      val cm = graft.CacheRegistry.register(
+      val cm = graft.CacheRegistry.persist(
         Tables.load(s, dir, "documents")
           .filter(length(trim(col("text"))) > 0)
           .select(col("lang"),
             TextFunctions.langId(col("text")).as("lang_pred"))
           .groupBy(col("lang"), col("lang_pred"))
-          .agg(count(lit(1)).as("n"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .agg(count(lit(1)).as("n")))
       val rows = cm.groupBy(col("lang")).agg(sum(col("n")).as("row_n"))
       val cols = cm.groupBy(col("lang_pred"))
         .agg(sum(col("n")).as("col_n"))
@@ -2022,14 +2016,13 @@ object TextQueries {
     // precision 0). All counts from one confusion aggregate; margins
     // are |langs|-row folds joined full-outer then zero-filled.
     "q_labeler_prf" -> { (s, dir) =>
-      val cm = graft.CacheRegistry.register(
+      val cm = graft.CacheRegistry.persist(
         Tables.load(s, dir, "documents")
           .filter(length(trim(col("text"))) > 0)
           .select(col("lang"),
             TextFunctions.langId(col("text")).as("lang_pred"))
           .groupBy(col("lang"), col("lang_pred"))
-          .agg(count(lit(1)).as("n"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .agg(count(lit(1)).as("n")))
       val tp = cm.filter(col("lang") === col("lang_pred"))
         .select(col("lang").as("cls"), col("n").as("tp"))
       val actual = cm.groupBy(col("lang").as("cls"))
@@ -2083,17 +2076,16 @@ object TextQueries {
     "q_source_term_affinity" -> { (s, dir) =>
       // the (source, term) tf table feeds three consumers (margins ×2 +
       // the scored join) — persist it or each re-runs the tokenize
-      val st = graft.CacheRegistry.register(
+      val st = graft.CacheRegistry.persist(
         Tables.load(s, dir, "documents")
           .select(col("source"),
             explode(TextFunctions.tokens(lower(col("text")))).as("term"))
           .groupBy(col("source"), col("term"))
-          .agg(count(lit(1)).as("c_st"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .agg(count(lit(1)).as("c_st")))
       val srcTot = st.groupBy(col("source")).agg(sum(col("c_st")).as("c_s"))
       val termTot = st.groupBy(col("term")).agg(sum(col("c_st")).as("c_t"))
       val tot = srcTot.agg(sum(col("c_s")).as("n_total"))
-      val scored = graft.CacheRegistry.register(
+      val scored = graft.CacheRegistry.persist(
         st.filter(col("c_st") >= AFF_MIN_SUPPORT)
           .join(broadcast(srcTot), "source")
           .join(termTot, "term")
@@ -2105,8 +2097,7 @@ object TextQueries {
           // saturate at 2^53 BEFORE the double cast: exact in double,
           // same constant the oracle least()s against
           .withColumn("lift_sat", least(col("lift_bp"),
-            lit(9007199254740992L)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            lit(9007199254740992L))))
       val cand = scored
         .groupBy(col("source"))
         .agg(expr("bounded_topk(CAST(-lift_sat AS DOUBLE), h, " +
@@ -2131,8 +2122,8 @@ object TextQueries {
     * (count + basis points). Inverted-index economics: one gram-keyed
     * df aggregate, one gram-keyed join back, one doc-keyed fold.
     */
-  private[graft] def dupNgramCoverage(docs: DataFrame, id: String,
-                                      text: String, k: Int): DataFrame = {
+  def dupNgramCoverage(docs: DataFrame, id: String, text: String,
+                       k: Int = 3): DataFrame = {
     val sh = docs
       .select(col(id), TextFunctions.tokens(lower(col(text))).as("toks"))
       .filter(size(col("toks")) >= k)
@@ -2152,8 +2143,8 @@ object TextQueries {
     * the model trained on the corpus itself. Model tables are
     * vocab-bounded and broadcast.
     */
-  private[graft] def bigramLmScores(docs: DataFrame, id: String,
-                                    text: String): DataFrame = {
+  def bigramLmScores(docs: DataFrame, id: String,
+                     text: String): DataFrame = {
     val bi = docs
       .select(col(id), TextFunctions.tokens(lower(col(text))).as("t"))
       .filter(size(col("t")) >= 2)
@@ -2179,7 +2170,7 @@ object TextQueries {
     * Duplicate = any non-first doc (by id) of an exact normalized-text
     * fingerprint group.
     */
-  private[graft] def curationFunnel(docs: DataFrame): DataFrame = {
+  def curationFunnel(docs: DataFrame): DataFrame = {
     val base = docs.select(col("doc_id"),
       TextFunctions.tokenCount(col("text")).as("n_tokens"),
       TextFunctions.qualityScore(col("text")).as("quality"),
@@ -2276,8 +2267,9 @@ object TextQueries {
     * the per-round gains (dedupe upstream if the frame comes from a
     * fan-out join).
     */
-  def maxCoverage(docs: DataFrame, idCol: String, textCol: String,
-                  k: Int, v: Int): DataFrame = {
+  def maxCoverage(docs: DataFrame, idCol: String = "doc_id",
+                  textCol: String = "text", k: Int = MAXCOV_K,
+                  v: Int = MAXCOV_V): DataFrame = {
     import docs.sparkSession.implicits._
     maxcoverGreedy(docs, idCol, textCol, k, v)
       .map { case (rank, id, gain, ncov, _) => (rank, id, gain, ncov) }
@@ -2304,10 +2296,9 @@ object TextQueries {
     // shingle array per row anyway — caching it halves the
     // corpus-linear work; at scale MEMORY_AND_DISK spills and the
     // cache is released with the plan like every dedup index here)
-    val shf = graft.CacheRegistry.register(
+    val shf = graft.CacheRegistry.persist(
       docs.select(col(idCol).cast("long").as("doc_id"),
-          TextFunctions.shingles(col(textCol), K).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          TextFunctions.shingles(col(textCol), K).as("sh")))
     val vocab = maxcoverVocabFromShingled(shf, v)
     // second pass over the CACHED shingles: restrict IN-ROW against
     // the ≤v-string vocab literal (typedlit — corpus text never
@@ -2315,10 +2306,9 @@ object TextQueries {
     // hits and no join runs; array_intersect's contract already
     // de-duplicates, so no array_distinct is needed here (the vocab
     // pass keeps its own — df counts distinct docs per shingle)
-    val dt = graft.CacheRegistry.register(
+    val dt = graft.CacheRegistry.persist(
       shf.select(col("doc_id"),
-          explode(array_intersect(col("sh"), typedlit(vocab))).as("tok"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          explode(array_intersect(col("sh"), typedlit(vocab))).as("tok")))
     var covered = Set.empty[String]
     var picks = Vector.empty[(Long, Long, Long, Long, Set[String])]
     var done = false
@@ -2356,20 +2346,19 @@ object TextQueries {
     * `cap` picks per `srcCol` value (greedy keeps a 1/2 approximation
     * under a matroid). Returns (rank, idCol, srcCol, gain, n_covered).
     */
-  def maxCoverageQuota(docs: DataFrame, idCol: String, textCol: String,
-                       srcCol: String, k: Int, v: Int,
-                       cap: Int): DataFrame = {
+  def maxCoverageQuota(docs: DataFrame, idCol: String = "doc_id",
+                       textCol: String = "text", srcCol: String = "source",
+                       k: Int = MAXCOV_K, v: Int = MAXCOV_V,
+                       cap: Int = MAXCOV_CAP): DataFrame = {
     // same shared shingle cache as [[maxcoverGreedy]] (r17)
-    val shf = graft.CacheRegistry.register(
+    val shf = graft.CacheRegistry.persist(
       docs.select(col(idCol).cast("long").as("doc_id"),
           col(srcCol).as("src"),
-          TextFunctions.shingles(col(textCol), K).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          TextFunctions.shingles(col(textCol), K).as("sh")))
     val vocab = maxcoverVocabFromShingled(shf, v)
-    val dt = graft.CacheRegistry.register(
+    val dt = graft.CacheRegistry.persist(
       shf.select(col("doc_id"), col("src"),
-          explode(array_intersect(col("sh"), typedlit(vocab))).as("tok"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          explode(array_intersect(col("sh"), typedlit(vocab))).as("tok")))
     var covered = Set.empty[String]
     var srcCnt = Map.empty[String, Int]
     var out = Vector.empty[(Long, Long, String, Long, Long)]
@@ -2416,9 +2405,10 @@ object TextQueries {
     * projection + tok-keyed count (≤ v distinct keys — a broadcast-size
     * aggregate). Same precondition as [[maxCoverage]]: one row per doc.
     */
-  def maxCoverageSampled(docs: DataFrame, idCol: String, textCol: String,
-                         k: Int, v: Int, seed: Int,
-                         pct: Int): DataFrame =
+  def maxCoverageSampled(docs: DataFrame, idCol: String = "doc_id",
+                         textCol: String = "text", k: Int = MAXCOV_K,
+                         v: Int = MAXCOV_V, seed: Int = MAXCOV_SAMPLE_SEED,
+                         pct: Int = MAXCOV_SAMPLE_PCT): DataFrame =
     maxCoverageSliced(docs, idCol, textCol, k, v,
       Curation.hashBucket(col(idCol), seed) < pct)
 
@@ -3060,7 +3050,7 @@ object TextQueries {
     * k+1 longs per step, the bounded-collect pattern.
     */
   def fitLogisticGd(labeled: DataFrame, xs: Seq[String],
-                    yCol: String, inFitCol: String,
+                    yCol: String = "y", inFitCol: String = "in_fit",
                     iters: Int = LOGIT_FIT_ITERS): DataFrame = {
     val k = xs.size
     val (model, z, n) = fitLogitModel(labeled, xs, yCol, inFitCol, iters)
@@ -3121,7 +3111,7 @@ object TextQueries {
     * full sort; the rank window runs over ≤ k rows.
     */
   def marginQueue(docs: DataFrame, model: LogitModel,
-                  k: Int): DataFrame = {
+                  k: Int = UNC_K): DataFrame = {
     val sM = model.scoreMilliExpr(
       Seq("len_bp", "stop_bp", "punct_bp", "uniq_bp"))
     val scored = qualityBpOf(docs)
@@ -3146,7 +3136,7 @@ object TextQueries {
     * batch top-k — refuse loudly instead.
     */
   def queueAdmissionCut(docs: DataFrame, model: LogitModel,
-                        k: Int): (Long, Long) = {
+                        k: Int = UNC_K): (Long, Long) = {
     val q = marginQueue(docs, model, k).collect()
     require(q.length == k,
       s"queueAdmissionCut: queue has ${q.length} rows, needs k=$k " +
@@ -3209,9 +3199,11 @@ object TextQueries {
     * aggregates; the queue ids ride the refit gate as an in-plan
     * literal list.
     */
-  def activeLearningRound(labeled: DataFrame, idCol: String,
-                          xs: Seq[String], yCol: String,
-                          inFitCol: String, k: Int): DataFrame = {
+  def activeLearningRound(labeled: DataFrame, idCol: String = "doc_id",
+                          xs: Seq[String] = Seq("len_bp", "stop_bp",
+                            "punct_bp", "uniq_bp"),
+                          yCol: String = "y", inFitCol: String = "in_fit",
+                          k: Int = REFIT_K): DataFrame = {
     val (mA, zA, nA) = fitLogitModel(labeled, xs, yCol, inFitCol,
       LOGIT_FIT_ITERS)
     // the labeling queue: boundary rows the slice model has NOT seen
@@ -3326,10 +3318,8 @@ object TextQueries {
   private def fitLogitModel(labeled: DataFrame, xs: Seq[String],
                             yCol: String, inFitCol: String,
                             iters: Int): (LogitModel, DataFrame, Long) = {
-    import org.apache.spark.storage.StorageLevel
     val k = xs.size
-    val feats = graft.CacheRegistry.register(
-      labeled.persist(StorageLevel.MEMORY_AND_DISK))
+    val feats = graft.CacheRegistry.persist(labeled)
     val fitRows = feats.filter(col(inFitCol))
     // ONE stats pass (r16: was two): n + Σx + Σx² per feature, all
     // DECIMAL(38,0)-exact, then means AND variances on the driver via
@@ -3373,14 +3363,13 @@ object TextQueries {
     // invariant, so results are bit-identical.
     val zParts = math.max(1L,
       (nAll + LOGIT_PART_ROWS - 1) / LOGIT_PART_ROWS).toInt
-    val z = graft.CacheRegistry.register(
+    val z = graft.CacheRegistry.persist(
       feats.selectExpr(
         ("CAST(1000 AS BIGINT) AS x0" +:
           xs.indices.map(i =>
             s"${zScoreExpr(xs(i), means(i), sds(i))} AS x${i + 1}")) ++
           Seq(yCol, inFitCol): _*)
-        .coalesce(zParts)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .coalesce(zParts))
     // the descent: K jobs, weights on the driver, BigInt-exact updates;
     // gradients see only the training slice. Weights ride the plan as
     // literals: an r16 A/B against a one-row-broadcast parameter form

@@ -289,8 +289,8 @@ object VectorQueries {
     * the row set must be DISTINCT (the joined form re-keys rows by
     * their full column tuple).
     */
-  private[graft] def assignCells(df: DataFrame, centroids: DataFrame,
-                                 vec: Column): DataFrame = {
+  def assignCells(df: DataFrame, centroids: DataFrame,
+                  vec: Column): DataFrame = {
     val c = centroids.count()
     if (c >= TWO_LEVEL_MIN_CELLS)
       withCellJoined(df, centroids, vec, df.columns.toSeq,
@@ -809,10 +809,9 @@ object VectorQueries {
     * index. Signature is a zero-shuffle native projection.
     */
   private def srpSigs(emb: DataFrame): DataFrame =
-    graft.CacheRegistry.register(
+    graft.CacheRegistry.persist(
       emb.select(col("vec_id"), col("embedding"),
-          expr(s"srp_sig(embedding, $SRP_BITS)").as("sig"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          expr(s"srp_sig(embedding, $SRP_BITS)").as("sig")))
 
   /** Distinct (query_id, neighbor_id) band-collision candidates — IDS
     * ONLY: the band fan-out and multi-band dedup shuffle bare id pairs,
@@ -1174,16 +1173,13 @@ object VectorQueries {
       // the brute-force truth scan — measured 19.8 s at sf0.1 (9.1× at
       // 10× rows); with the caches the corpus is scanned once per axis
       // and rungs are integer re-filters of the candidate table
-      val scoredAll = graft.CacheRegistry.register(
+      val scoredAll = graft.CacheRegistry.persist(
         assigned.join(broadcast(probes), Seq("cell"))
           .filter(col("query_id") =!= col("neighbor_id"))
           .withColumn("sim", cosine(col("qvec"), col("cvec")))
           .select(col("query_id"), col("neighbor_id"), col("sim"),
-            col("prn"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val truth = graft.CacheRegistry.register(
-        bruteTopk(s, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            col("prn")))
+      val truth = graft.CacheRegistry.persist(bruteTopk(s, dir))
       NPROBE_LADDER.map { p =>
         val sc = scoredAll.filter(col("prn") <= p)
         recallOf(truth, topkByQuery(sc))
@@ -1289,9 +1285,7 @@ object VectorQueries {
     // bounded-collect pattern the logit trainer uses). No pairwise
     // table, no windows, no driver loop over data.
     "q_kcenter_seeds" -> { (s, dir) =>
-      val qv = graft.CacheRegistry.register(
-        quantEmb(s, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val qv = graft.CacheRegistry.persist(quantEmb(s, dir))
       val seeds = kcenterFit(qv)
       import s.implicits._
       seeds.map(k => (k.rank.toLong, k.id, k.selD2))
@@ -1305,9 +1299,7 @@ object VectorQueries {
     // whether the K seeds cover the corpus evenly or one cell is a
     // grab-bag. ONE corpus scan against the in-plan seed literals.
     "q_kcenter_coverage" -> { (s, dir) =>
-      val qv = graft.CacheRegistry.register(
-        quantEmb(s, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val qv = graft.CacheRegistry.persist(quantEmb(s, dir))
       kcenterCoverage(qv, kcenterFit(qv))
     },
 
@@ -1322,9 +1314,7 @@ object VectorQueries {
     // the accepted trade of sampling a coverage problem, and exactly
     // what the coverage columns make visible.
     "q_kcenter_sampled" -> { (s, dir) =>
-      val qv = graft.CacheRegistry.register(
-        quantEmb(s, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val qv = graft.CacheRegistry.persist(quantEmb(s, dir))
       val slice = qv.filter(
         Curation.hashBucket(col("vec_id"), KC_SAMPLE_SEED)
           < KC_SAMPLE_PCT)
@@ -1439,14 +1429,13 @@ object VectorQueries {
     // and the selection rounds touch only Q·C-row tables — all joins
     // query-keyed equi-joins.
     "q_mmr_diversify" -> { (s, dir) =>
-      val qc = graft.CacheRegistry.register(
+      val qc = graft.CacheRegistry.persist(
         loadEmb(s, dir)
           .select(col("vec_id"), posexplode(col("embedding")))
           .toDF("vec_id", "pos", "x")
           .select(col("vec_id"), col("pos"), expr(
             "CAST(floor(CAST(x AS DOUBLE) * 1024.0 + 0.5) AS BIGINT)")
-            .as("qv"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .as("qv")))
       val norms = qc.groupBy(col("vec_id"))
         .agg(sum(expr("qv * qv")).as("n2"))
       val qq = qc.filter(col("vec_id") < N_QUERIES)
@@ -1467,18 +1456,17 @@ object VectorQueries {
         .join(norms.toDF("vec_id", "nc"), "vec_id")
         .select(col("query_id"), col("vec_id").as("cand_id"),
           expr(cos2Ppm("dot", "nq", "nc")).as("rel"))
-      val cand = graft.CacheRegistry.register(
+      val cand = graft.CacheRegistry.persist(
         rel.groupBy(col("query_id"))
           .agg(expr(
             s"bounded_topk(CAST(-rel AS DOUBLE), cand_id, $MMR_C)")
             .as("top"))
           .select(col("query_id"), explode(col("top")).as("t"))
           .select(col("query_id"), col("t.n").as("cand_id"),
-            (-col("t.s")).cast("long").as("rel"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            (-col("t.s")).cast("long").as("rel")))
       val cc = cand.select(col("query_id"), col("cand_id"))
         .join(qc, col("cand_id") === col("vec_id")).drop("vec_id")
-      val ps = graft.CacheRegistry.register(
+      val ps = graft.CacheRegistry.persist(
         cc.toDF("query_id", "a", "pos", "qv_a")
           .join(cc.toDF("query_id", "b", "pos", "qv_b"),
             Seq("query_id", "pos"))
@@ -1488,8 +1476,7 @@ object VectorQueries {
           .join(norms.toDF("a", "na"), "a")
           .join(norms.toDF("b", "nb"), "b")
           .select(col("query_id"), col("a"), col("b"),
-            expr(cos2Ppm("dot", "na", "nb")).as("sim"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            expr(cos2Ppm("dot", "na", "nb")).as("sim")))
       // The greedy rounds run ON THE DRIVER over the two collected
       // candidate tables (r17): cand is ≤ Q·MMR_C rows and ps ≤ Q·C²
       // rows BY CONSTRUCTION — bounded index metadata, the KMeans-
@@ -1581,16 +1568,13 @@ object VectorQueries {
       val simCols = DIM_LADDER.map(d =>
         cosine(slice(col("qvec"), 1, d), slice(col("cvec"), 1, d))
           .as(s"sim_$d"))
-      val scored = graft.CacheRegistry.register(
+      val scored = graft.CacheRegistry.persist(
         emb.select(col("vec_id").as("neighbor_id"),
             col("embedding").as("cvec"))
           .join(broadcast(queryVectors(emb)),
             col("query_id") =!= col("neighbor_id"))
-          .select(Seq(col("query_id"), col("neighbor_id")) ++ simCols: _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val truth = graft.CacheRegistry.register(
-        bruteTopk(s, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .select(Seq(col("query_id"), col("neighbor_id")) ++ simCols: _*))
+      val truth = graft.CacheRegistry.persist(bruteTopk(s, dir))
       DIM_LADDER.map { d =>
         val top = scored
           .filter(!isnan(col(s"sim_$d"))) // zero-norm prefix guard
@@ -1852,12 +1836,11 @@ object VectorQueries {
     */
   private def eigIterate(s: SparkSession,
                          dir: String): (DataFrame, Array[Long]) = {
-    val qv = graft.CacheRegistry.register(
+    val qv = graft.CacheRegistry.persist(
       loadEmb(s, dir).select(col("vec_id"),
           expr("transform(embedding, x -> " +
             "CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT))")
-            .as("q"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .as("q")))
     val dims = qv.select(size(col("q")).as("d")).head().getInt(0)
     var v = Array.fill(dims)(1048576L)
     for (_ <- 1 to EIG_ITERS) {
@@ -1933,9 +1916,8 @@ object VectorQueries {
     val centroids = emb.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cell"),
         col("embedding").as("centroid"))
-    val assigned = graft.CacheRegistry.register(
-      withCell(aug, centroidArray(centroids), col("embedding"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val assigned = graft.CacheRegistry.persist(
+      withCell(aug, centroidArray(centroids), col("embedding")))
     val a = assigned.select(col("vec_id").as("vec_a"),
       col("embedding").as("ea"), col("cell"))
     val b = assigned.select(col("vec_id").as("vec_b"),
@@ -1980,8 +1962,8 @@ object VectorQueries {
     * @return per-cell (cell, n_members, sum_s_ppm, mean_s_ppm)
     */
   def partitionSilhouette(emb: DataFrame, vecCol: String,
-                          centroids: DataFrame, cellCol: String,
-                          centroidCol: String): DataFrame = {
+                          centroids: DataFrame, cellCol: String = "cell",
+                          centroidCol: String = "centroid"): DataFrame = {
     // b = min d² to the best OTHER centroid is undefined for a
     // single-cell partition (the filter empties, array_min → NULL and
     // the NULLs would silently diverge from a rn=2 oracle join) —
@@ -2027,9 +2009,8 @@ object VectorQueries {
   }
 
   private def dbscanRoles(s: SparkSession, dir: String): DataFrame = {
-    val pairs = graft.CacheRegistry.register(
-      blockedCosinePairs(s, dir, DBSCAN_EPS)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val pairs = graft.CacheRegistry.persist(
+      blockedCosinePairs(s, dir, DBSCAN_EPS))
     Clusters.dbscanRoles(augmentedEmb(s, dir), "vec_id",
       pairs, "vec_a", "vec_b", DBSCAN_MIN_PTS)
   }
@@ -2151,9 +2132,8 @@ object VectorQueries {
   def noveltyScore(incoming: DataFrame, corpus: DataFrame,
                    vecCol: String = "embedding",
                    k: Int = KCENTER_K): DataFrame = {
-    val qv = graft.CacheRegistry.register(
-      corpus.select(col("vec_id"), expr(quantExpr(vecCol)).as("vq"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val qv = graft.CacheRegistry.persist(
+      corpus.select(col("vec_id"), expr(quantExpr(vecCol)).as("vq")))
     noveltyScoreWith(incoming, kcenterFit(qv, k), vecCol)
   }
 
@@ -2193,9 +2173,8 @@ object VectorQueries {
     */
   def noveltyModelRows(corpus: DataFrame, vecCol: String = "embedding",
                        k: Int = KCENTER_K): DataFrame = {
-    val qv = graft.CacheRegistry.register(
-      corpus.select(col("vec_id"), expr(quantExpr(vecCol)).as("vq"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val qv = graft.CacheRegistry.persist(
+      corpus.select(col("vec_id"), expr(quantExpr(vecCol)).as("vq")))
     val seeds = kcenterFit(qv, k)
     import corpus.sparkSession.implicits._
     seeds.flatMap(s =>
@@ -2249,13 +2228,13 @@ object VectorQueries {
     * (maximin d² = 0) the fit stops rather than emitting duplicate
     * seeds with sel_d2 = 0 (see [[kcenterFit]]).
     */
-  def diversitySeeds(emb: DataFrame, idCol: String, vecCol: String,
-                     k: Int): DataFrame = {
+  def diversitySeeds(emb: DataFrame, idCol: String = "vec_id",
+                     vecCol: String = "embedding",
+                     k: Int = KCENTER_K): DataFrame = {
     require(k >= 1, s"diversitySeeds: k=$k")
-    val qv = graft.CacheRegistry.register(
+    val qv = graft.CacheRegistry.persist(
       emb.select(col(idCol).cast("long").as("vec_id"),
-          expr(quantExpr(vecCol)).as("vq"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          expr(quantExpr(vecCol)).as("vq")))
     val seeds = kcenterFit(qv, k)
     import emb.sparkSession.implicits._
     seeds.map(s => (s.rank.toLong, s.id, s.selD2))

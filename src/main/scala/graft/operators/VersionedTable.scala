@@ -214,22 +214,14 @@ final class VersionedTable private (spark: SparkSession, path: String,
   /** RESTORE TABLE ... TO VERSION AS OF `v`: commit snapshot `v`'s rows
     * as a NEW version — Delta's RESTORE semantics, where a rollback is
     * itself a commit, so history is preserved and a bad restore is
-    * time-travel recoverable like any other mutation. Runs under the
-    * writer lock, so the snapshot read cannot race a concurrent commit
-    * (unlike lock-free [[readAt]], no re-check dance is needed); the
-    * snapshot is fully copied to the staging directory before the old
-    * live version is displaced, so a crash mid-restore recovers to a
-    * complete table either way.
+    * time-travel recoverable like any other mutation. Reads `v` through
+    * [[readAt]] under the writer lock, so no commit can slide in
+    * between its version check and its read; the snapshot is fully
+    * copied to the staging directory before the old live version is
+    * displaced, so a crash mid-restore recovers to a complete table
+    * either way.
     */
-  def restore(v: Long): Unit = mutate { _ =>
-    val p = retainedPath(v)
-    if (fs.exists(p)) readParquet(spark, p.toString)
-    else if (v == version()) read()
-    else throw new IOException(
-      s"restore: version $v of $path is not retained (available: " +
-        s"${retainedVersions().mkString(",")} + live ${version()}); " +
-        "raise `retain` or restore sooner")
-  }
+  def restore(v: Long): Unit = mutate(_ => readAt(v))
 
   /** Prune retained versions beyond the newest `keepLast`. No default:
     * `keepLast = 0` deletes the ENTIRE time-travel window, and that

@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
+import graft.operators.VersionedTable
+
 /** ORACLE-GATED Structured Streaming — the streaming operators run as
   * real streams (file source → transform → sink) inside `queries()`
   * entries, so their OUTPUT goes through the driver's DuckDB
@@ -108,7 +110,7 @@ object StreamGateQueries {
     */
   private def stageHalves(s: SparkSession, sfDir: String): String =
     graft.StageDirs.stageOnce(stageTag(sfDir, "halves")) { out =>
-      val ev = s.read.parquet(s"$sfDir/events.parquet")
+      val ev = graft.Tables.load(s, sfDir, "events")
       Seq(0, 1).foreach(half => writeSlice(
         ev.filter(pmod(col("user_id"), lit(2)) === half), out,
         s"half_$half", half))
@@ -126,7 +128,7 @@ object StreamGateQueries {
   private val LATE_SPLIT_MS = 3 * 3600000L
   private def stageLate(s: SparkSession, sfDir: String): String =
     graft.StageDirs.stageOnce(stageTag(sfDir, "late3")) { out =>
-      val ev = s.read.parquet(s"$sfDir/events.parquet")
+      val ev = graft.Tables.load(s, sfDir, "events")
       val ms = unix_millis(tsCol(ev.schema))
       val mx = ev.agg(max(ms)).head().getLong(0)
       val (c1, c2) = (mx - LATE_SPLIT_MS, mx - 2 * LATE_SPLIT_MS)
@@ -134,6 +136,13 @@ object StreamGateQueries {
         .foreach { case (pred, i) =>
           writeSlice(ev.filter(pred), out, s"slice_$i", i) }
     }
+
+  /** A test table's schema, read from its parquet footer on the driver
+    * (no Spark job).
+    */
+  private def schemaOf(s: SparkSession, dir: String,
+                       table: String): StructType =
+    VersionedTable.readParquet(s, s"$dir/$table.parquet").schema
 
   /** Event-time column, type-adaptive exactly like [[graft.Tables.epochMs]]
     * (the testdata generator has changed the parquet physical type
@@ -176,7 +185,7 @@ object StreamGateQueries {
 
   private def eventsStream(s: SparkSession, dir: String,
                            copies: Int = 1): DataFrame = {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = schemaOf(s, dir, "events")
     s.readStream.schema(schema).parquet(stage(dir, copies))
       .select(col("event_id"), tsCol(schema).as("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -197,7 +206,7 @@ object StreamGateQueries {
     * batch-sized bytes, never corpus-sized state.
     */
   private def docsStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+    val schema = schemaOf(s, dir, "documents")
     s.readStream.schema(schema)
       .parquet(stage(dir, copies = 1, table = "documents"))
       .select(col("doc_id"), col("text"))
@@ -256,7 +265,7 @@ object StreamGateQueries {
     // dim is re-planned and broadcast per micro-batch, so the gate is
     // the plain batch left join.
     "q_stream_enrich" -> { (s, dir) =>
-      val dim = s.read.parquet(s"$dir/customer.parquet")
+      val dim = graft.Tables.load(s, dir, "customer")
         .select(col("c_custkey").as("user_id"),
           col("c_mktsegment").as("segment"))
       val enriched = runToTable(s, StreamingEvents.enrichStream(
@@ -297,9 +306,8 @@ object StreamGateQueries {
       val corpus = graft.Tables.load(s, dir, "documents")
       // one persisted feature projection serves the fit AND the
       // admission-cut scoring pass (plan-match cache substitution; r16)
-      graft.CacheRegistry.register(
-        graft.operators.TextQueries.qualityBpOf(corpus)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      graft.CacheRegistry.persist(
+        graft.operators.TextQueries.qualityBpOf(corpus))
       val model = graft.operators.TextQueries.fitQualityModel(corpus)
       val (thr, tie) = graft.operators.TextQueries.queueAdmissionCut(
         corpus, model, graft.operators.TextQueries.UNC_K)
@@ -342,17 +350,15 @@ object StreamGateQueries {
       // The slice gate is applied AFTER scoreBins (a row-wise
       // projection preserving doc_id), which is row-for-row identical
       // to filtering first but lets the cached subtree match.
-      graft.CacheRegistry.register(
-        graft.operators.TextQueries.qualityBpOf(corpus)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      graft.CacheRegistry.persist(
+        graft.operators.TextQueries.qualityBpOf(corpus))
       val model =
         graft.operators.TextQueries.fitQualityModelSliced(corpus, gate)
       // the ≤18-row histogram is read twice (join side + nb total) —
       // persist it so the slice scoring pass runs once, not three times
-      val base = graft.CacheRegistry.register(
+      val base = graft.CacheRegistry.persist(
         StreamingQuality.scoreBins(corpus, model).filter(gate)
-          .groupBy(col("bin")).agg(count(lit(1)).as("n_base"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .groupBy(col("bin")).agg(count(lit(1)).as("n_base")))
       val out = runToTable(s,
         StreamingQuality.scoreBins(docsStream(s, dir), model))
       val obs = out.groupBy(col("bin")).agg(count(lit(1)).as("n_obs"))
@@ -617,7 +623,7 @@ object StreamGateQueries {
     // counts with the same emission cut.
     "q_stream_late_drop" -> { (s, dir) =>
       val staged = stageLate(s, dir)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
+      val schema = schemaOf(s, dir, "events")
       val st = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(staged)
         .select(tsCol(schema).as("ts"), col("event_type"), col("value"))
@@ -642,7 +648,7 @@ object StreamGateQueries {
       val halves = stageHalves(s, dir)
       val Seq(src, sink, ckpt) = Seq("resume_src", "resume_sink",
         "resume_ckpt").map(graft.CacheRegistry.scratch)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
+      val schema = schemaOf(s, dir, "events")
       def incarnation(half: Int): Unit = {
         copyFile(new Path(s"$halves/half_$half.parquet"),
           new Path(src, s"half_$half.parquet"))
@@ -656,7 +662,7 @@ object StreamGateQueries {
       }
       incarnation(0)
       incarnation(1)
-      s.read.parquet(sink)
+      VersionedTable.readParquet(s, sink)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("event_id")).as("n_ids"))
@@ -693,7 +699,7 @@ object StreamGateQueries {
     // from the parity split — the emission rule is the thing proven.
     "q_stream_update_counts" -> { (s, dir) =>
       val staged = stageHalves(s, dir)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
+      val schema = schemaOf(s, dir, "events")
       runToTable(s, s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(staged)
           .groupBy(col("event_type")).agg(count(lit(1)).as("n")), "update")
@@ -742,7 +748,7 @@ object StreamGateQueries {
     // q_stream_cms's "incremental ≡ batch" claim.
     "q_stream_zone_maps" -> { (s, dir) =>
       import graft.operators.ZOrder
-      val schema = s.read.parquet(s"$dir/lineitem.parquet").schema
+      val schema = schemaOf(s, dir, "lineitem")
       runToTable(s,
         s.readStream.schema(schema)
           .parquet(stage(dir, 1, table = "lineitem"))
@@ -790,7 +796,7 @@ object StreamGateQueries {
     // the oracle IS the batch q_skyline oracle, point columns only.
     "q_stream_skyline" -> { (s, dir) =>
       import s.implicits._
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val schema = schemaOf(s, dir, "documents")
       val pts = s.readStream.schema(schema)
         .parquet(stage(dir, 1, table = "documents"))
         .select(col("lang").as("group"),
@@ -856,7 +862,8 @@ object StreamGateQueries {
     // is batch-order-free.
     "q_neo_stream_silver" -> { (s, _) =>
       runNeoPipeline(s)
-      s.read.parquet(graft.operators.NeoQueries.layout.silverAsteroids)
+      VersionedTable.readParquet(s,
+        graft.operators.NeoQueries.layout.silverAsteroids)
         .select(col("id"), col("neo_reference_id"), col("name"),
           col("absolute_magnitude_h"), col("is_hazardous"),
           col("is_sentry"), col("nasa_jpl_url"), col("link_self"),
@@ -876,7 +883,7 @@ object StreamGateQueries {
     // days (the identical oracle SQL as q_neo_dim_asteroid).
     "q_neo_stream_gold" -> { (s, _) =>
       runNeoPipeline(s)
-      s.read.parquet(
+      VersionedTable.readParquet(s,
         graft.operators.NeoQueries.layout.gold("dim_asteroid"))
         .select(col("sk_asteroid"), col("id"), col("neo_reference_id"),
           col("name"), col("absolute_magnitude_h"),

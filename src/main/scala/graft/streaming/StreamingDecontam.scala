@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BloomPrune, Dedup}
+import graft.operators.{BloomPrune, Curation, Dedup}
 
 /** Contamination firewall at INGEST — benchmark decontamination
   * (the q_decontaminate semantics) served on a document stream: the
@@ -44,13 +44,12 @@ object StreamingDecontam {
     */
   case class HeldIndex(shingles: DataFrame, bloom: Array[Byte], k: Int)
 
-  def heldIndex(held: DataFrame, k: Int,
+  def heldIndex(held: DataFrame, k: Int = Curation.DECON_K,
                 fpp: Double = 0.03): HeldIndex = {
-    val sh = graft.CacheRegistry.register(
+    val sh = graft.CacheRegistry.persist(
       Dedup.docShingles(held, "doc_id", "text", k)
         .select(col("doc_id").as("test_id"),
-          Dedup.shingleHash(col("shingle")).as("shingle"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          Dedup.shingleHash(col("shingle")).as("shingle")))
     HeldIndex(sh,
       BloomPrune.buildBloom(sh, col("shingle"), sh.count(), fpp), k)
   }

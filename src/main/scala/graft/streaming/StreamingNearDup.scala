@@ -112,9 +112,8 @@ object StreamingNearDup {
   case class CorpusIndex(bands: DataFrame, payload: DataFrame)
 
   def corpusIndex(corpus: DataFrame): CorpusIndex = {
-    val prep = graft.CacheRegistry.register(
-      prepared(corpus.select(col("doc_id"), col("text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val prep = graft.CacheRegistry.persist(
+      prepared(corpus.select(col("doc_id"), col("text"))))
     val bands = banded(prep, "match_id")
       .select(col("match_id"), col("band"), col("bkey"))
     val payload = prep.select(col("doc_id").as("match_id"),

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 
+import graft.operators.VersionedTable
+
 /** Stages a ×k copy of a testdata directory, so any gated query runs at
   * scale through the unchanged [[graft.Bench]]:
   *
@@ -48,7 +50,7 @@ object ScaleStage {
     val sfName = Paths.get(sfDir).getFileName
     graft.StageDirs.stageOnce(s"scale/${sfName}_x$k") { out =>
       for ((table, keys) <- replicated) {
-        val base = spark.read.parquet(s"$sfDir/$table.parquet")
+        val base = VersionedTable.readParquet(spark, s"$sfDir/$table.parquet")
         (0 until k).map { i =>
           keys.foldLeft(base)((df, c) =>
             df.withColumn(c, col(c) + lit(i * keyOffset)))

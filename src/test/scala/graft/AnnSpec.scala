@@ -120,7 +120,7 @@ class AnnSpec extends AnyFunSuite with SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val seeds = emb.filter(col("vec_id") < 16)
       .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
-    val refined = Graft.fitCentroids(emb, seeds, iters = 3)
+    val refined = operators.KMeans.refine(emb, seeds, iters = 3)
     // the fitted centroids are a drop-in for the IVF in-row assignment:
     // every vector lands in a real fitted cell
     val assigned = VectorQueries.withCell(emb,

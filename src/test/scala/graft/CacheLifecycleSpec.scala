@@ -6,7 +6,7 @@ import graft.operators.{Clusters, Dedup, DedupPlan, Fixpoint}
 
 /** Library cache discipline: every operator that persists intermediates
   * registers them, and [[Graft.releaseCaches]] leaves the session with
-  * ZERO persisted RDDs — a long-lived session using the facade must not
+  * ZERO persisted RDDs — a long-lived session using the library must not
   * accumulate cache blocks across calls (round-2 finding: four persists
   * with no unpersist anywhere). The same release deletes the operators'
   * scratch slots, whose paths keep a URI base's authority, and drops the

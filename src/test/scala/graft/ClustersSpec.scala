@@ -388,7 +388,7 @@ class ClustersSpec extends AnyFunSuite with SparkSpec {
       .toDF("a", "b")
     val points = (Seq(5L, 6L, 7L, 8L) ++ (1L to 4L) ++ (10L to 13L))
       .toDF("id")
-    val got = Graft.dbscan(points, "id", pairs, "a", "b", minPts = 4)
+    val got = Clusters.dbscanRoles(points, "id", pairs, "a", "b", minPts = 4)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2))))
       .toMap
     (1L to 4L).foreach(i => assert(got(i) === (("core", 1L)), s"node $i"))
@@ -405,7 +405,7 @@ class ClustersSpec extends AnyFunSuite with SparkSpec {
     // the core must fall back to its own id as cluster.
     val pairs = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("a", "b")
     val points = (1L to 4L).toDF("id")
-    val got = Graft.dbscan(points, "id", pairs, "a", "b", minPts = 4)
+    val got = Clusters.dbscanRoles(points, "id", pairs, "a", "b", minPts = 4)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2))))
       .toMap
     assert(got(1L) === (("core", 1L)))

@@ -50,10 +50,4 @@ class CompressionSpec extends AnyFunSuite with SparkSpec {
     assert(a === b)
     assert(a === c)
   }
-
-  test("facade exposure matches the operator") {
-    val a = byId(Compression.ratios(docs, "doc_id", "text"))
-    val b = byId(Graft.compressionRatios(docs, "doc_id", "text"))
-    assert(a === b)
-  }
 }

@@ -71,7 +71,7 @@ class FixpointSpec extends AnyFunSuite with SparkSpec {
     val labeled = (0L until 200L)
       .map(f => (f, if (f >= 100L) 1L else 0L, true)).toDF("f", "y", "in_fit")
     def fit(iters: Int): Unit =
-      Graft.trainQualityFilter(labeled, Seq("f"), iters = iters).collect()
+      operators.TextQueries.fitLogisticGd(labeled, Seq("f"), iters = iters).collect()
     // (operator, few rounds, more rounds, how many more)
     val cases = Seq[(String, () => Unit, () => Unit, Int)](
       ("cc", () => cc(3), () => cc(9), 6),

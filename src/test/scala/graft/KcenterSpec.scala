@@ -101,7 +101,7 @@ class KcenterSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val emb = Seq((1L, Seq(0.0f)), (2L, Seq(0.1f)), (3L, Seq(1.0f)))
       .toDF("id", "v")
-    val got = Graft.diversitySeeds(emb, "id", "v", k = 2).collect()
+    val got = VectorQueries.diversitySeeds(emb, "id", "v", k = 2).collect()
       .map(r => (r.getAs[Long]("rank"), r.getAs[Long]("id"),
         r.getAs[Long]("sel_d2"))).sortBy(_._1)
     assert(got(0) === ((0L, 1L, 0L)), "seed 0 must be the min id")
@@ -115,7 +115,7 @@ class KcenterSpec extends AnyFunSuite with SparkSpec {
     // two DISTINCT vectors among three points (ids 1,2 coincide)
     val emb = Seq((1L, Seq(0.0f)), (2L, Seq(0.0f)), (3L, Seq(1.0f)))
       .toDF("id", "v")
-    val got = Graft.diversitySeeds(emb, "id", "v", k = 5).collect()
+    val got = VectorQueries.diversitySeeds(emb, "id", "v", k = 5).collect()
       .map(r => (r.getAs[Long]("rank"), r.getAs[Long]("id"),
         r.getAs[Long]("sel_d2"))).sortBy(_._1)
     assert(got.length === 2, s"expected early stop at 2 seeds: ${got.mkString(", ")}")

@@ -11,8 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * be added here and to the README's Settings table; a deleted one has
   * to leave both. Also pins the runnable mains (Bench is the one timing
   * loop, PlanAudit the one plan tool), the one scratch allocator,
-  * [[CacheRegistry.scratch]], and the one staged-once helper,
-  * [[StageDirs.stageOnce]].
+  * [[CacheRegistry.scratch]], the one staged-once helper,
+  * [[StageDirs.stageOnce]], the one parquet reader,
+  * [[operators.VersionedTable.readParquet]], the one persist,
+  * [[CacheRegistry.persist]], and the [[Graft]] surface.
   */
 class KnobInventorySpec extends AnyFunSuite {
 
@@ -29,6 +31,15 @@ class KnobInventorySpec extends AnyFunSuite {
 
   private def scan(pattern: String): Set[String] =
     mainSources.flatMap(pattern.r.findAllMatchIn(_).map(_.group(1))).toSet
+
+  // (file, name of the nearest def above) of every match of `pattern`
+  private def sites(pattern: String): Seq[(String, String)] =
+    mainFiles.flatMap { case (name, src) =>
+      pattern.r.findAllMatchIn(src).map { m =>
+        name -> "\\bdef (\\w+)".r.findAllMatchIn(src.substring(0, m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("")
+      }
+    }
 
   test("SPARK_GRAFT_* environment names equal the pinned list") {
     assert(scan("SPARK_GRAFT_([A-Z_]+)") === Set(
@@ -60,11 +71,29 @@ class KnobInventorySpec extends AnyFunSuite {
 
   test("per-call state has one home: no temp directories, one staged-once " +
     "marker") {
-    def hits(needle: String): Seq[String] =
-      mainFiles.flatMap { case (name, src) =>
-        needle.r.findAllMatchIn(src).map(_ => name) }
-    assert(hits("""Files\.createTempDirectory""") === Nil)
-    assert(hits("\"_STAGED\"").filterNot(_ == "StageDirs.scala") === Nil)
+    assert(sites("""Files\.createTempDirectory""") === Nil)
+    assert(sites("\"_STAGED\"").filterNot(_._1 == "StageDirs.scala") === Nil)
+  }
+
+  test("Graft's public members are the session, pipeline, serving and " +
+    "table surface") {
+    val src = mainFiles.collect { case ("Graft.scala", s) => s }.head
+    val members = "(?m)^  (?:def|val|lazy val|var) (\\w+)".r
+      .findAllMatchIn(src).map(_.group(1)).toSet
+    assert(members === Set("sessionConf", "newSession", "runPipeline",
+      "serve", "table", "releaseCaches"))
+  }
+
+  test("every parquet read goes through VersionedTable.readParquet") {
+    assert(sites("""\.read\.parquet\(""")
+      .filterNot(_._1 == "VersionedTable.scala") === Nil)
+  }
+
+  test("every persist goes through CacheRegistry.persist, bar the serving " +
+    "pin") {
+    assert(sites("""(?<!CacheRegistry)\.persist\(""").filterNot(site =>
+      site._1 == "CacheRegistry.scala" ||
+        site == ("SilverToGold.scala" -> "pinned")) === Nil)
   }
 
   test("Bench's full record defaults to this checkout, partial runs to /tmp") {

@@ -150,8 +150,8 @@ class LogitFitSpec extends AnyFunSuite with SparkSpec {
       .map(f => (f, f, if (f >= 500L) 1L else 0L,
         f < 100L || f >= 900L))
       .toDF("id", "f", "y", "in_fit")
-    val r = Graft.activeLearningRound(labeled, id = "id", xs = Seq("f"),
-      k = 32).collect()
+    val r = TextQueries.activeLearningRound(labeled, idCol = "id",
+      xs = Seq("f"), k = 32).collect()
     assert(r.length === 1)
     val row = r.head
     assert(row.getAs[Long]("n_total") === 1000L)
@@ -170,7 +170,7 @@ class LogitFitSpec extends AnyFunSuite with SparkSpec {
     val labeled = (0L until 1000L)
       .map(f => (f, if (f >= 500L) 1L else 0L, true))
       .toDF("f", "y", "in_fit")
-    val r = Graft.trainQualityFilter(labeled, Seq("f")).collect()
+    val r = TextQueries.fitLogisticGd(labeled, Seq("f")).collect()
     assert(r.length == 1)
     val row = r.head
     assert(row.getAs[Long]("n_fit") === 1000L)

@@ -116,8 +116,8 @@ class MaxcoverSpec extends AnyFunSuite with SparkSpec {
       (5L, "a b c d e x y z w v"),
       (7L, "a b c d e"),
       (9L, "p q r s")).toDF("id", "body")
-    val got = Graft.maxCoverage(docs, "id", "body", k = 3,
-      vocabSize = 100).collect()
+    val got = TextQueries.maxCoverage(docs, "id", "body", k = 3,
+      v = 100).collect()
       .map(r => (r.getAs[Long]("rank"), r.getAs[Long]("id"),
         r.getAs[Long]("gain"))).sortBy(_._1)
     assert(got(0)._2 === 5L, s"superset doc must win: ${got.mkString(", ")}")

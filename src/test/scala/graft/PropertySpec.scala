@@ -91,28 +91,17 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
       .filter(col("rn") === 1)
       .select(col("event_id"), col("o_orderkey"))
       .as[(Long, Long)].collect().toMap
-    // union-and-carry (the q_asof_join shape)
-    val ev = events.select(col("user_id"), col("ms"), lit(1).as("kind"),
-      col("event_id"), lit(null).cast("long").as("o_orderkey"))
-    val ord = orders.select(col("user_id"), col("oms").as("ms"),
-      lit(0).as("kind"), lit(null).cast("long").as("event_id"),
-      col("o_orderkey"))
-    val wc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"))
-      .orderBy(col("ms").asc, col("kind").asc, col("o_orderkey").asc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val carried = ev.unionByName(ord)
-      .withColumn("last_ok",
-        last(when(col("kind") === 0, col("o_orderkey")),
-          ignoreNulls = true).over(wc))
-      .filter(col("kind") === 1 && col("last_ok").isNotNull)
-      .select(col("event_id"), col("last_ok"))
+    val carried = graft.operators.EventQueries
+      .asOfJoin(events, orders, "user_id", "ms", "oms")
+      .filter(col("matched").isNotNull)
+      .select(col("event_id"), col("matched.o_orderkey"))
       .as[(Long, Long)].collect().toMap
     assert(carried === naive)
   }
 
   test("Graft.asOfJoin facade matches the naive range-join + argmax truth") {
+    // the as-of join now lives in EventQueries; this keeps the random-data
+    // check of the public entry point against the naive truth
     val rnd = new scala.util.Random(13)
     val events = Seq.tabulate(80)(i =>
       (i.toLong, rnd.nextInt(6).toLong, rnd.nextInt(30).toLong))
@@ -129,11 +118,27 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
       .filter(col("rn") === 1)
       .select(col("event_id"), col("o_orderkey"))
       .as[(Long, Long)].collect().toMap
-    val facade = Graft.asOfJoin(events, orders, "user_id", "ms", "oms")
+    val got = graft.operators.EventQueries
+      .asOfJoin(events, orders, "user_id", "ms", "oms")
       .filter(col("matched").isNotNull)
       .select(col("event_id"), col("matched.o_orderkey"))
       .as[(Long, Long)].collect().toMap
-    assert(facade === naive)
+    assert(got === naive)
+  }
+
+  test("asOfJoin: orders tied on the timestamp resolve to the greatest key") {
+    // three orders share one timestamp and arrive in DESCENDING key
+    // order; an order-by on (ts, kind) alone carries the last to
+    // arrive (the minimum key), the oracle keeps the maximum
+    val events = Seq((1L, 7L, 10L), (2L, 7L, 4L))
+      .toDF("event_id", "user_id", "ms")
+    val orders = Seq((103L, 7L, 5L), (102L, 7L, 5L), (101L, 7L, 5L))
+      .toDF("o_orderkey", "user_id", "oms").coalesce(1)
+    val got = graft.operators.EventQueries
+      .asOfJoin(events, orders, "user_id", "ms", "oms")
+      .select(col("event_id"), col("matched.o_orderkey"))
+      .as[(Long, Option[Long])].collect().toMap
+    assert(got === Map(1L -> Some(103L), 2L -> None))
   }
 
   test("property: hash split is a disjoint-exhaustive partition") {

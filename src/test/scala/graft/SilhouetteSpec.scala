@@ -45,7 +45,7 @@ class SilhouetteSpec extends AnyFunSuite with SparkSpec {
       .toDF("embedding")
     val cents = Seq((0, Seq(1.0f, 0.0f)), (1, Seq(0.0f, 1.0f)))
       .toDF("cell", "centroid")
-    val got = Graft.partitionSilhouette(emb, "embedding", cents)
+    val got = VectorQueries.partitionSilhouette(emb, "embedding", cents)
       .collect().map(r => r.getLong(0) ->
         ((r.getAs[Long]("n_members"), r.getAs[Long]("sum_s_ppm"),
           r.getAs[Long]("mean_s_ppm")))).toMap
@@ -61,14 +61,14 @@ class SilhouetteSpec extends AnyFunSuite with SparkSpec {
     val emb = Seq(Seq(1.0f, 0.0f), Seq(0.0f, 1.0f)).toDF("embedding")
     val one = Seq((0, Seq(1.0f, 0.0f))).toDF("cell", "centroid")
     val e = intercept[IllegalArgumentException] {
-      Graft.partitionSilhouette(emb, "embedding", one).collect()
+      VectorQueries.partitionSilhouette(emb, "embedding", one).collect()
     }
     assert(e.getMessage.contains(">= 2 distinct cells"), e.getMessage)
     // duplicate cell ids collapse to one distinct cell — same refusal
     val dup = Seq((0, Seq(1.0f, 0.0f)), (0, Seq(0.0f, 1.0f)))
       .toDF("cell", "centroid")
     intercept[IllegalArgumentException] {
-      Graft.partitionSilhouette(emb, "embedding", dup).collect()
+      VectorQueries.partitionSilhouette(emb, "embedding", dup).collect()
     }
   }
 }
