@@ -135,9 +135,9 @@ object Graft {
     * last `serve`: each reads an in-memory copy pinned to that version,
     * so a later commit neither breaks nor changes them, and calling
     * `serve` again refreshes the tables whose version moved (an
-    * unchanged star launches no Spark job). A table that fits one scan
-    * split (`spark.sql.files.maxPartitionBytes`) is copied into a single
-    * partition, so its queries need no shuffle. `spark.catalog
+    * unchanged star launches no Spark job). A table that Spark would
+    * read as one scan split (`VersionedTable.oneSplit`) is copied into
+    * a single partition, so its queries need no shuffle. `spark.catalog
     * .clearCache()` is the one call that un-pins the views. See
     * [[etl.SilverToGold.registerServingViews]].
     */

@@ -33,8 +33,13 @@ import graft.sources.Layout
   *
   * Scale notes: dims are tiny (dates, bodies) or bounded (asteroids) —
   * at 100 TB the fact dominates; its build is a pure projection (no
-  * shuffle), and the upsert shuffles once on the dedup key. Consumption
-  * joins broadcast the dims (see RelationalQueries q_star_join).
+  * shuffle), and above one scan split the upsert shuffles once on the
+  * dedup key. A day whose silver partition and merges each fit one split
+  * ([[VersionedTable.oneSplit]]) plans no shuffle at all: the day is read
+  * as one partition, so the builders' `distinct` and window need no
+  * exchange, and each upsert's union is one partition too, so the stage
+  * runs one single-task job per gold table. Consumption joins broadcast
+  * the dims (see RelationalQueries q_star_join).
   */
 object SilverToGold {
 
@@ -130,16 +135,19 @@ object SilverToGold {
     * Spark task each, so each day would cost O(lake). The schema comes
     * from the partition's parquet footer, read on the driver
     * ([[VersionedTable.readParquet]]), so opening the day runs no Spark
-    * job. `None` when the day has no partition (a feed day with no
-    * approaches).
+    * job. A day that fits one scan split is returned as one partition
+    * ([[VersionedTable.oneSplit]]): the builders' `distinct` and window
+    * then plan no exchange. A larger day keeps its scan partitions and
+    * the builders shuffle. `None` when the day has no partition (a feed
+    * day with no approaches).
     */
   private[graft] def silverDay(spark: SparkSession, layout: Layout,
                                date: String): Option[DataFrame] = {
     val day = new Path(layout.silverPartition(date))
     if (!day.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(day))
       None
-    else Some(VersionedTable.readParquet(spark, day.toString,
-      Some(layout.silverAsteroids)))
+    else Some(VersionedTable.oneSplit(VersionedTable.readParquet(spark,
+      day.toString, Some(layout.silverAsteroids))))
   }
 
   /** Full stage: read the day's silver partition by path ([[silverDay]],
@@ -184,10 +192,10 @@ object SilverToGold {
     *
     * Each copy is read by file ([[VersionedTable.snapshot]]), so it is
     * never substituted into a writer's read of the table directory. A
-    * table whose files fit one scan split
-    * (`spark.sql.files.maxPartitionBytes` of on-disk bytes) is copied
-    * into one partition: under `canChangeCachedPlanOutputPartitioning
-    * = false` ([[graft.Graft.sessionConf]]) its scan then reports
+    * table whose files fit one scan split ([[VersionedTable.oneSplit]])
+    * is copied into one partition: under
+    * `canChangeCachedPlanOutputPartitioning = false`
+    * ([[graft.Graft.sessionConf]]) its scan then reports
     * `SinglePartition`, which satisfies every aggregate, join and sort
     * distribution without an exchange, so a dashboard query launches
     * jobs only for its broadcasts and its result.
@@ -211,8 +219,7 @@ object SilverToGold {
 
   private def pinned(spark: SparkSession, path: String,
                      snap: VersionedTable.Snapshot): Pin = {
-    val split = spark.sessionState.conf.filesMaxPartitionBytes
-    val copy = (if (snap.bytes <= split) snap.df.coalesce(1) else snap.df)
+    val copy = VersionedTable.oneSplit(snap.df)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // fills the cache in one job; count() takes two under AQE, which
     // fills the table cache in a query stage of its own first

@@ -18,10 +18,15 @@ import org.apache.spark.sql.functions._
   *      (correctness hazard); [[saveOrUpdate]] materializes to a temp dir
   *      and swaps.
   *
-  * Scale notes: one shuffle on the dedup keys (window + row_number); the
-  * window frame is per-key so skew is bounded by key cardinality. At
-  * 100 TB this is the same plan shape a Delta/Iceberg MERGE would lower
-  * to when the whole table must be rewritten.
+  * Scale notes: a union that fits one scan split
+  * ([[VersionedTable.oneSplit]]) is planned as one partition, which the
+  * window's clustered distribution accepts as is: the merge runs in one
+  * task with no shuffle. Above one split it shuffles once on the dedup
+  * keys (window + row_number); the window frame is per-key so skew is
+  * bounded by key cardinality. At 100 TB this is the same plan shape a
+  * Delta/Iceberg MERGE would lower to when the whole table must be
+  * rewritten. The survivors are the same under both plans: the
+  * ordering is total.
   */
 object MergeUpsert {
 
@@ -56,9 +61,11 @@ object MergeUpsert {
     val prio = fresh("__merge_priority", taken)
     // existing stays the LEFT operand so the merged column order follows
     // the on-disk table (incoming-only columns append last)
-    val unioned = existing.withColumn(prio, lit(2))
+    // one partition when the union fits one scan split: the window's
+    // clustered distribution is then met without an exchange
+    val unioned = VersionedTable.oneSplit(existing.withColumn(prio, lit(2))
       .unionByName(incoming.withColumn(prio, lit(1)),
-        allowMissingColumns = true)
+        allowMissingColumns = true))
     def containsMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
       case _: org.apache.spark.sql.types.MapType => true
       case s: org.apache.spark.sql.types.StructType => s.fields.exists(f => containsMap(f.dataType))

@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.not
@@ -93,8 +94,7 @@ final class VersionedTable private (spark: SparkSession, path: String,
     val reader = spark.read.option("basePath", path)
     val df = VersionedTable.footerSchema(spark, summaries, data)
       .fold(reader)(reader.schema(_)).parquet(data.map(_.getPath.toString): _*)
-    if (version() == v) VersionedTable.Snapshot(v, data.map(_.getLen).sum, df)
-    else snapshot()
+    if (version() == v) VersionedTable.Snapshot(v, df) else snapshot()
   }
 
   /** Time travel: read version `v` — the live version or any retained
@@ -260,10 +260,37 @@ object VersionedTable {
             retain: Int = 3): VersionedTable =
     new VersionedTable(spark, path, retain)
 
-  /** One version of a table read by its data files, with their total
-    * on-disk bytes.
+  /** One version of a table read by its data files. */
+  final case class Snapshot(version: Long, df: DataFrame)
+
+  /** `df` as one partition when it fits one scan split: when Spark's
+    * file scan would read a file of the size estimate of `df`'s analyzed
+    * plan (for a file scan, its on-disk bytes) as one partition. The
+    * analyzed plan's estimate needs no optimizer pass, and it equals the
+    * optimized plan's to a few bytes on the gold merges. The split is
+    * Spark's own, `FilePartition.maxSplitBytes`:
+    * `spark.sql.files.maxPartitionBytes`, lowered to the bytes per core
+    * of the session's parallelism but not below
+    * `spark.sql.files.openCostInBytes`. With several cores that is the
+    * open cost (4 MB by default), with one core the partition bytes
+    * (128 MB). Otherwise `df` unchanged: a frame Spark would read in
+    * parallel keeps its parallel plan (a one-task merge of a 21 MB union
+    * ran about 1.7 times as long as the shuffled one on 4 cores; PERF.md
+    * §A gold day runs one single-task job per table). One partition
+    * satisfies every clustered distribution, so an aggregate, window or
+    * join over the result plans no exchange, and its scans run in one
+    * task. The one home of this rule: the merge, the gold stage's day
+    * read and the serving pin all call it.
     */
-  final case class Snapshot(version: Long, bytes: Long, df: DataFrame)
+  private[graft] def oneSplit(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    val bytes = df.queryExecution.analyzed.stats.sizeInBytes
+    // Spark's total for one file counts its open cost too
+    val total = (bytes + spark.sessionState.conf.filesOpenCostInBytes)
+      .min(Long.MaxValue).toLong
+    if (bytes <= FilePartition.maxSplitBytes(spark, total)) df.coalesce(1)
+    else df
+  }
 
   /** `spark.read.parquet(dir)` without its schema-inference job (a
     * one-task Spark job that ships a Hadoop conf to read one footer).

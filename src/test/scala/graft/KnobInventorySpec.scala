@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[CacheRegistry.scratch]], the one staged-once helper,
   * [[StageDirs.stageOnce]], the one parquet reader,
   * [[operators.VersionedTable.readParquet]], the one persist,
-  * [[CacheRegistry.persist]], and the [[Graft]] surface.
+  * [[CacheRegistry.persist]], the one reader of the scan split,
+  * [[operators.VersionedTable.oneSplit]], and the [[Graft]] surface.
   */
 class KnobInventorySpec extends AnyFunSuite {
 
@@ -94,6 +95,13 @@ class KnobInventorySpec extends AnyFunSuite {
     assert(sites("""(?<!CacheRegistry)\.persist\(""").filterNot(site =>
       site._1 == "CacheRegistry.scala" ||
         site == ("SilverToGold.scala" -> "pinned")) === Nil)
+  }
+
+  test("the scan split is read in one place, VersionedTable.oneSplit") {
+    val reads = sites("filesMaxPartitionBytes|filesOpenCostInBytes|" +
+      """maxSplitBytes\(|"spark\.sql\.files\.(maxPartitionBytes|""" +
+      """openCostInBytes)"""")
+    assert(reads.distinct === Seq("VersionedTable.scala" -> "oneSplit"))
   }
 
   test("Bench's full record defaults to this checkout, partial runs to /tmp") {

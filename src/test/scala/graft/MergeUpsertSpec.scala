@@ -234,22 +234,29 @@ class MergeUpsertSpec extends AnyFunSuite with SparkSpec {
     def rows() = List.fill(30)((rnd.nextInt(10), rnd.nextInt(101)))
     for (_ <- 1 to 5) {
       val ex = rows(); val in = rows()
-      val existing = ex.toDF("k", "v")
-      val incoming = in.toDF("k", "v")
+      val exOrder = rnd.shuffle(ex); val inOrder = rnd.shuffle(in)
       val tiebreak = Seq(col("v").desc, col("k").asc) // deterministic survivor
-      val once = MergeUpsert.merge(existing, incoming, Seq("k"), tiebreak)
-      val twice = MergeUpsert.merge(once, incoming, Seq("k"), tiebreak)
-      val a = once.orderBy("k", "v").as[(Int, Int)].collect().toSeq
-      val b = twice.orderBy("k", "v").as[(Int, Int)].collect().toSeq
+      // once, twice and shuffled: under the default split the inputs fit
+      // one partition; under a 1-byte split the merge plans an exchange
+      def cases(): (Seq[(Int, Int)], Seq[(Int, Int)], Seq[(Int, Int)]) = {
+        val existing = ex.toDF("k", "v")
+        val incoming = in.toDF("k", "v")
+        val once = MergeUpsert.merge(existing, incoming, Seq("k"), tiebreak)
+        val twice = MergeUpsert.merge(once, incoming, Seq("k"), tiebreak)
+        val shuffled = MergeUpsert.merge(exOrder.toDF("k", "v"),
+          inOrder.toDF("k", "v"), Seq("k"), tiebreak)
+        def sorted(df: org.apache.spark.sql.DataFrame) =
+          df.orderBy("k", "v").as[(Int, Int)].collect().toSeq
+        (sorted(once), sorted(twice), sorted(shuffled))
+      }
+      val (a, b, shuffled) = cases()
       assert(a === b)
       // one row per key, and every key present
       assert(a.map(_._1).distinct.size === a.size)
       assert(a.map(_._1).toSet === (ex ++ in).map(_._1).toSet)
       // shuffled inputs give the identical table
-      val shuffled = MergeUpsert.merge(
-        rnd.shuffle(ex).toDF("k", "v"), rnd.shuffle(in).toDF("k", "v"),
-        Seq("k"), tiebreak).orderBy("k", "v").as[(Int, Int)].collect().toSeq
       assert(shuffled === a)
+      assert(withSplit(1)(cases()) === ((a, b, shuffled)))
     }
   }
 }

@@ -132,11 +132,7 @@ class ServingSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
 
   test("a table above the scan split keeps its scan partitions; merges " +
     "never read the pin") {
-    val key = "spark.sql.files.maxPartitionBytes"
-    val prev = spark.conf.get(key)
     // below every gold file's size, so no table fits one split
-    spark.conf.set(key, "256")
-    try mergesIgnorePins("split", _ > 1)
-    finally spark.conf.set(key, prev)
+    withSplit(256)(mergesIgnorePins("split", _ > 1))
   }
 }

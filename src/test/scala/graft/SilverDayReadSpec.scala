@@ -1,17 +1,25 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.{BronzeToSilver, SilverToGold}
+import graft.operators.Observability
 import graft.sources.{BronzeIngest, Layout, NeoFixture}
 
 /** The gold stage reads only its day's silver partition: its cost does
   * not grow with the number of silver partitions, and the day's frame is
-  * the whole-table read filtered to the day (SURVEY.md S4).
+  * the whole-table read filtered to the day (SURVEY.md S4). A day whose
+  * merges fit one scan split runs one single-task job per gold table;
+  * above the split the merges keep their exchange and their survivors.
   */
 class SilverDayReadSpec extends AnyFunSuite with SparkSpec {
 
@@ -65,5 +73,69 @@ class SilverDayReadSpec extends AnyFunSuite with SparkSpec {
       assert(expected.nonEmpty)
       assert(rows(day) === expected, s"at $n partitions")
     }
+  }
+
+  private val day2 = NeoFixture.day2Date
+
+  /** A fresh layout with the fixture's days 1 and 2 in silver and day 1
+    * in gold, so day 2's gold stage merges into every table.
+    */
+  private def merging(): Layout = {
+    val layout =
+      Layout(Files.createTempDirectory("graft-merge-day").toString)
+    Seq(date -> NeoFixture.day1, day2 -> NeoFixture.day2).foreach {
+      case (d, json) =>
+        BronzeIngest.writeRaw(spark, layout, d, json)
+        BronzeToSilver.run(spark, layout, d)
+    }
+    SilverToGold.run(spark, layout, date)
+    layout
+  }
+
+  /** Day 2's gold stage on `layout`, as committed: its jobs and tasks,
+    * and the executed plan of each table's merge write.
+    */
+  private def goldDay(layout: Layout): (Observability.Launched, Seq[String]) = {
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // launched drains the listener queue, so every plan is in on return
+    try {
+      val day = launched(SilverToGold.run(spark, layout, day2))
+      (day, plans.asScala.toSeq.filter(_.contains("InsertIntoHadoopFs")))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def gold(layout: Layout): Seq[Seq[String]] =
+    SilverToGold.tables.map { case (name, _, _) =>
+      spark.read.parquet(layout.gold(name)).collect().map(_.toString)
+        .toSeq.sorted
+    }
+
+  test("a merging gold day runs one single-task job per table, and its " +
+    "merges plan no exchange") {
+    val (day, writes) = goldDay(merging())
+    assert((day.jobs, day.tasks) === ((4, 4)))
+    assert(writes.size === 4)
+    writes.foreach(p => assert(!p.contains("Exchange"), p))
+  }
+
+  test("above one scan split the merges keep their exchange and write " +
+    "the single-partition gold") {
+    val one = merging()
+    SilverToGold.run(spark, one, day2)
+    val split = merging()
+    // below every silver and gold file's size
+    val (day, writes) = withSplit(256)(goldDay(split))
+    assert(writes.size === 4)
+    writes.foreach(p => assert(p.contains("Exchange"), p))
+    // each table's write job, plus at least its merge's shuffle job
+    assert(day.jobs >= 8)
+    assert(gold(split) === gold(one))
   }
 }

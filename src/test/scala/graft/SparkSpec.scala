@@ -27,6 +27,17 @@ trait SparkSpec extends Assertions {
     assert(mirror === distributed, clue)
   }
 
+  /** `body` with `spark.sql.files.maxPartitionBytes` set to `bytes`,
+    * the scan split that decides when a frame is planned as one
+    * partition; the previous value is restored on exit.
+    */
+  def withSplit[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, bytes.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
   /** [[Observability.launched]] on the shared session. */
   def launched(body: => Unit): Observability.Launched =
     Observability.launched(spark)(body)

@@ -21,7 +21,8 @@ bound, the number of pairs in which the change was better, and the exact
 two-sided sign-test p-value of that count over the pairs that differ
 (ties dropped): how often a change with no effect would split the pairs
 at least this unevenly, so 6 pairs cannot go below 0.031 and 8 pairs
-below 0.0078; and each side's failed and attempted op counts. `seeds`
+below 0.0078; the claim rule's verdict (see `verdict`); and each side's
+failed and attempted op counts. `seeds`
 and the quartile spread come from perfbench/spread.py. Reads
 BENCHMARK.json and perfbench/ without changing them. `--out FILE` also writes every run as
 JSON.
@@ -57,6 +58,32 @@ def sign_test(better, worse):
     if n == 0:
         return float("nan")
     return min(1.0, 2 * sum(math.comb(n, i) for i in range(k + 1)) / 2 ** n)
+
+
+def verdict(a, b, runs, bound, sign, fails_ok):
+    """The claim rule's reading of one metric, from the parent's values
+    `a` and the change's `b` over the complete pairs, out of `runs` pairs
+    run; first match wins. `worse` when the change's median is worse
+    than the parent's by more than `bound` (a fraction of the parent's
+    median). `unresolved` when the parent's Q3 - Q1, as a fraction of its
+    median, exceeds that bound or cannot be read (below 2 pairs), unless
+    every change run beats every parent run. `gain` when at least 10
+    pairs ran, the change is better in at least 9/10 of all of them (a
+    tie or an incomplete pair counts for neither side), the medians
+    differ by more than the parent's Q3 - Q1, and `fails_ok` (the change
+    failed no larger share of its ops than the parent). Otherwise `–`."""
+    pa, pb = statistics.median(a), statistics.median(b)
+    if pa and sign * (pb - pa) / pa > bound:
+        return "worse"
+    iqr = spread(a) * pa if len(a) >= 2 and pa else float("nan")
+    apart = all(sign * (y - x) < 0 for x in a for y in b)
+    if not apart and (not pa or math.isnan(iqr) or iqr / pa > bound):
+        return "unresolved"
+    better = sum(1 for x, y in zip(a, b) if sign * (y - x) < 0)
+    if (runs >= 10 and 10 * better >= 9 * runs and fails_ok
+            and sign * (pa - pb) > (0 if math.isnan(iqr) else iqr)):
+        return "gain"
+    return "–"
 
 
 def run_once(tree, workload, seed, seconds):
@@ -111,7 +138,13 @@ def main():
     print(f"\n{args.workload}: {len(pairs)} complete pairs of {len(runs)}, "
           f"parent {args.parent}")
     print(f"{'metric':<14} {'parent':>10} {'p Q3-Q1':>10} {'change':>10} {'ratio':>7} "
-          f"{'bound':>6}  better  sign-p")
+          f"{'bound':>6}  better  sign-p  verdict")
+    share, done = {}, {}
+    for side in ("parent", "change"):
+        done[side] = [r[side] for r in runs if r[side]]
+        attempted = sum(r["attempted"] for r in done[side])
+        share[side] = (sum(r["failed"] for r in done[side]) / attempted
+                       if attempted else 1.0)
     for m in metrics if pairs else []:
         name = m["name"]
         a = [r["parent"]["metrics"][name]["value"] for r in pairs]
@@ -123,12 +156,13 @@ def main():
         ratio = pb / pa if pa else float("nan")
         iqr = spread(a) * pa if len(a) >= 2 and pa else float("nan")
         print(f"{name:<14} {pa:>10.4g} {iqr:>10.4g} {pb:>10.4g} {ratio:>7.3f} "
-              f"{m['bound']:>6}  {better}/{len(pairs)}  {sign_test(better, worse):.3g}")
+              f"{m['bound']:>6}  {better}/{len(pairs)}  "
+              f"{sign_test(better, worse):<6.3g}  "
+              f"{verdict(a, b, len(runs), m['bound'], sign, share['change'] <= share['parent'])}")
     for side in ("parent", "change"):
-        done = [r[side] for r in runs if r[side]]
-        print(f"{side}: failed ops {sum(r['failed'] for r in done)} of "
-              f"{sum(r['attempted'] for r in done)}; failed runs "
-              f"{len(runs) - len(done)} of {len(runs)}")
+        print(f"{side}: failed ops {sum(r['failed'] for r in done[side])} of "
+              f"{sum(r['attempted'] for r in done[side])}; failed runs "
+              f"{len(runs) - len(done[side])} of {len(runs)}")
     if args.out:
         Path(args.out).write_text(json.dumps(
             {"workload": args.workload, "parent": args.parent,
